@@ -56,6 +56,14 @@ from flink_orc_sink_spark.session import (
     release_local_checkpoint,
 )
 
+# The state-table core calls these helpers, and state_lease,
+# _overwrite_buckets, _latest_per_key, FOLD_MIN_BYTES and the public
+# fold/cleanup functions, through this module's globals at call time —
+# never through a reference bound at import or construction.
+# ``orcbench/trace.py`` rebinds them on this module to time and count
+# them, and the fold crash-prefix tests rebind them to inject a crash
+# at a chosen write; a captured reference would bypass both.
+
 # LSM fold trigger for the retract sinks' delta logs (round 9): the
 # log is folded into the base once it exceeds max(FOLD_MIN_BYTES,
 # fold_ratio x base bytes). The byte floor keeps short test/demo
@@ -63,6 +71,9 @@ from flink_orc_sink_spark.session import (
 # sustained churn folds on the ratio — amortized fold cost is
 # O(batch / fold_ratio) rows per batch, state-size-independent.
 FOLD_MIN_BYTES = 64 * 1024 * 1024
+
+# ORC codec of every state-table write (base, log, deltas, history).
+COMPRESSION = "zstd"
 
 
 def stream_write_orc(
@@ -132,14 +143,7 @@ def stream_write_orc_foreachbatch(
     """
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .option("compression", compression)
-            .partitionBy("batch_id")
-            .orc(path)
-        )
+        _write_batch(batch_df, path, batch_id, compression=compression)
 
     writer = df.writeStream.foreachBatch(write_batch).option(
         "checkpointLocation", checkpoint
@@ -184,14 +188,7 @@ def stream_fanout_orc(
         try:
             for _name, (path, transform) in outputs.items():
                 out = transform(staged) if transform is not None else staged
-                (
-                    out.withColumn("batch_id", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .option("compression", compression)
-                    .partitionBy("batch_id")
-                    .orc(path)
-                )
+                _write_batch(out, path, batch_id, compression=compression)
             # the commit point: one tiny append AFTER all tables —
             # the only write whose visibility readers trust
             (
@@ -228,6 +225,388 @@ def read_committed_fanout(
     )
 
 
+class _DeltaLogTable:
+    """One keyed ORC state table kept as an LSM pair — the single
+    state core behind the CDC, SCD2, retract-agg and retract-join
+    sinks. It is the write-ahead log plus idempotent state store of
+    *Structured Streaming* (SIGMOD 2018), and the reference's
+    in-progress → pending → committed file lifecycle
+    (``RowOrcBucketingSink.java:153-213``) with the log as the pending
+    stage and the base as the committed one.
+
+    Layout under ``state_path`` (unchanged since round 9; every sink
+    also keeps ``layout/<k>=<v>`` markers, and the base partition
+    ``kp = pmod(hash(key), nkp)``)::
+
+        sink          base       log           base parts  extra dirs
+        CDC           state/     state_log/    kp          —
+        SCD2          changes/   changes_log/  kp          history/
+        retract agg   state/     state_log/    kp          agg_deltas/ applied/
+                                                           replay_horizon/
+        retract join  pk_state/  pk_log/       side, kp    jk_state/ view/
+                                                           deltas/ applied/
+                                                           agg_deltas/
+                                                           agg_applied/
+                                                           replay_horizon/
+
+    The log is partitioned ``batch_id=N``. Markers are directory
+    names, so each is one atomic ``mkdirs``.
+
+    The cycle, per micro-batch (:meth:`start`):
+
+    1. take the ``state_path`` single-writer lease, owner-keyed to the
+       checkpoint (a restart reclaims it at once; a maintenance op
+       holding it fails the batch loudly instead of interleaving);
+    2. record the layout on the query's first batch (a conflicting
+       re-record is refused — the layout decides the bucket hash);
+    3. retract sinks only: drop rows below the recorded replay horizon
+       (NULL-safe: cleanup keeps NULL-order rows, so the guard admits
+       them);
+    4. hash ``kp``, run the retract sinks' per-batch extras (deltas,
+       images) on the checkpointed batch, and append it to
+       ``log/batch_id=N`` by dynamic overwrite — the only per-batch
+       state write, O(batch) on any key distribution;
+    5. :func:`_should_fold`: fold once the log outgrows
+       ``max(FOLD_MIN_BYTES, fold_ratio × base)`` — amortized
+       O(batch / fold_ratio) rows per batch;
+    6. fold (:meth:`fold`): collect the touched buckets, union the log
+       with the pruned base, resolve, ``localCheckpoint``, overwrite
+       the touched base buckets, then ``rmtree`` the log;
+    7. retract sinks with ``cleanup_every_n_batches`` + ``horizon_fn``:
+       the horizon tombstone cleanup (:meth:`cleanup`) under the same
+       lease.
+
+    Reads merge on read: resolve(base ∪ log), a plain base read when
+    the log is empty. The resolve is the table's one parameter:
+    latest row per key (CDC and retract agg: ``kc`` by ``oc``; join:
+    ``(side, pk)`` by ``seq``) or full-row DISTINCT (SCD2: the change
+    archive, whose chains ``scd2_history`` rebuilds per bucket). The
+    join table adds its image resolve as a fold step that rewrites
+    ``jk_state/`` and ``view/`` before the base; the SCD2 table
+    rewrites ``history/`` after it.
+
+    Crash contract: a replayed batch rewrites its own log partition,
+    and its extras read only the base and ``log[< batch]`` — neither
+    changes before the append — so they recompute identical output
+    with or without their ``applied/`` marker (a work-skip only). The
+    log is deleted only after everything it says is durably folded,
+    and the resolve absorbs base/log duplicates (latest-per-key keeps
+    one row, DISTINCT one copy), so after any crash prefix of a fold
+    the readers answer exactly and a re-fold converges. Cleanup
+    records its horizon before it rewrites anything."""
+
+    def __init__(self, state_path, base, log, parts=("kp",), keys=None,
+                 order=None, resolve=None, before_fold=None,
+                 after_fold=None, layout=None):
+        self.path = state_path
+        self.base_dir = os.path.join(state_path, base)
+        self.log_dir = os.path.join(state_path, log)
+        self.parts = parts
+        self._keys, self._order, self._resolve = keys, order, resolve
+        self.before_fold, self.after_fold = before_fold, after_fold
+        self._layout = layout
+
+    def layout(self, spark: SparkSession) -> dict:
+        """The sink's constructor layout, else the recorded markers
+        (read once per table object: one ``listStatus``)."""
+        if self._layout is None:
+            self._layout = _read_layout(spark, self.path)
+        return self._layout
+
+    def _marker(self, spark: SparkSession, name: str) -> str:
+        lay = self.layout(spark)
+        if name not in lay:
+            raise ValueError(
+                f"no layout/{name}= marker under {self.path}: not a "
+                f"state dir written by a stateful sink"
+            )
+        return lay[name]
+
+    def keys(self, spark: SparkSession) -> list:
+        return list(self._keys or [self._marker(spark, "kc")])
+
+    def order(self, spark: SparkSession) -> list:
+        return list(self._order or self._marker(spark, "oc").split(","))
+
+    def kp(self, spark: SparkSession):
+        """The base bucket of a row: its last key column, hashed."""
+        nkp = int(self._marker(spark, "nkp"))
+        return F.pmod(F.hash(F.col(self.keys(spark)[-1])), F.lit(nkp))
+
+    def resolve(self, spark: SparkSession, rows: DataFrame) -> DataFrame:
+        if self._resolve is not None:
+            return self._resolve(rows)
+        order = [F.col(c).desc() for c in self.order(spark)]
+        return _latest_per_key(rows, self.keys(spark), order)
+
+    def read_log(self, spark: SparkSession) -> DataFrame:
+        return spark.read.orc(self.log_dir).drop("batch_id")
+
+    def read(self, spark: SparkSession) -> DataFrame:
+        """Merge-on-read snapshot: resolve(base ∪ log)."""
+        if not _orc_files_exist(spark, self.log_dir):
+            return spark.read.orc(self.base_dir)
+        rows = self.read_log(spark)
+        if _orc_files_exist(spark, self.base_dir):
+            rows = rows.unionByName(spark.read.orc(self.base_dir))
+        return self.resolve(spark, rows)
+
+    def merge_touched(self, spark: SparkSession, log: DataFrame):
+        """``(touched buckets, resolve(log ∪ their base rows))`` — the
+        one resolve a fold writes and a merge-on-read reader answers
+        from, so a fold never materializes what the reader didn't
+        answer. Lazy; one job collects the buckets."""
+        touched = [
+            tuple(r) for r in log.select(*self.parts).distinct().collect()
+        ]
+        rows = log
+        if _orc_files_exist(spark, self.base_dir):
+            rows = rows.unionByName(
+                spark.read.orc(self.base_dir).filter(
+                    _bucket_filter(self.parts, touched)
+                )
+            )
+        return touched, self.resolve(spark, rows)
+
+    def lookup(self, spark: SparkSession, keys: DataFrame,
+               upto_batch: int | None = None, buckets=None):
+        """Every stored version of the ``keys`` rows: base buckets
+        (those of ``buckets``' partition columns, else hashed from
+        ``keys``) ∪ log (only ``batch_id < upto_batch`` if given), both
+        semi-joined to ``keys`` — a read-only, partition-pruned lookup,
+        never a shuffle of state. None when no state exists yet."""
+        key_cols = self.keys(spark)
+        cand = None
+        if _orc_files_exist(spark, self.base_dir):
+            if buckets is None:
+                buckets = keys.select(
+                    *self.parts[:-1], self.kp(spark).alias("kp")
+                )
+            touched = [
+                tuple(r)
+                for r in buckets.select(*self.parts).distinct().collect()
+            ]
+            if touched:
+                cand = (
+                    spark.read.orc(self.base_dir)
+                    .filter(_bucket_filter(self.parts, touched))
+                    .join(keys, key_cols, "left_semi")
+                )
+        if _orc_files_exist(spark, self.log_dir):
+            lg = spark.read.orc(self.log_dir)
+            if upto_batch is not None:
+                lg = lg.filter(F.col("batch_id") < upto_batch)
+            lg = lg.drop("batch_id").join(keys, key_cols, "left_semi")
+            cand = lg if cand is None else cand.unionByName(lg)
+        return cand
+
+    def fold(self, spark: SparkSession) -> dict:
+        """Fold the log into the base (the caller holds the lease):
+        the sink's pre-base writes, the touched base buckets, the
+        sink's post-base writes, then the log delete — in that order,
+        which is the crash contract."""
+        if not _orc_files_exist(spark, self.log_dir):
+            return {"log_rows_folded": 0, "buckets_rewritten": 0}
+        log = self.read_log(spark)
+        stats = {}
+        if self.before_fold is not None:
+            stats = self.before_fold(spark, self, log)
+        touched, merged = self.merge_touched(spark, log)
+        n_log = log.count()
+        merged = merged.localCheckpoint(eager=True)
+        try:
+            _dynamic_overwrite(merged, self.base_dir, *self.parts)
+            if self.after_fold is not None:
+                self.after_fold(spark, self, merged)
+        finally:
+            release_local_checkpoint(merged)
+        # folded: every log row is now resolved into the base
+        _hfs_rmtree(spark, self.log_dir)
+        return {
+            "log_rows_folded": n_log,
+            "buckets_rewritten": len(touched),
+            **stats,
+        }
+
+    def cleanup(self, spark: SparkSession, horizon: int) -> dict:
+        """Drop ``op='D'`` base rows whose first order column is below
+        ``horizon`` (the caller holds the lease). The order column
+        comes from the layout the sink recorded — the one its ingest
+        guard enforces the horizon against."""
+        # coerce FIRST so the drop predicate and the recorded marker
+        # use the identical value — a fractional horizon would
+        # otherwise drop tombstones up to h while the guard admits
+        # [int(h), h)
+        horizon = int(horizon)
+        none = {"tombstones_dropped": 0, "buckets_rewritten": 0}
+        # the marker goes first: a crash before the rewrite leaves
+        # tombstones in place (harmless, the next cleanup drops them);
+        # the reverse order would admit below-horizon replays with the
+        # tombstone already gone
+        _record_replay_horizon(spark, self.path, horizon)
+        # fold first so every expired tombstone sits in the base
+        self.fold(spark)
+        if not _orc_files_exist(spark, self.base_dir):
+            return none
+        st = spark.read.orc(self.base_dir)
+        expired = (F.col("op") == "D") & (
+            F.col(self.order(spark)[0]) < F.lit(horizon)
+        )
+        # one scan yields both the touched buckets and the drop count
+        per_bucket = (
+            st.filter(expired).groupBy(*self.parts).count().collect()
+        )
+        if not per_bucket:
+            return none
+        touched = [tuple(r[c] for c in self.parts) for r in per_bucket]
+        # null-safe negation: ~NULL is NULL and would silently DELETE
+        # any row with a NULL op/order value from the rewritten buckets
+        keep = (
+            st.filter(_bucket_filter(self.parts, touched))
+            .filter(~F.coalesce(expired, F.lit(False)))
+            .localCheckpoint(eager=True)
+        )  # materialize BEFORE overwriting the directory being read
+        try:
+            _overwrite_buckets(keep, self.base_dir, list(self.parts), touched)
+        finally:
+            release_local_checkpoint(keep)
+        return {
+            "tombstones_dropped": sum(r["count"] for r in per_bucket),
+            "buckets_rewritten": len(touched),
+        }
+
+    def start(self, changes: DataFrame, checkpoint: str, trigger,
+              fold_ratio: float, fold, extras=None, cleanup=None,
+              every: int | None = None, horizon_fn=None,
+              check=None) -> StreamingQuery:
+        """Start the sink's ``foreachBatch`` query: the per-batch half
+        of the cycle. ``fold(spark)`` and ``cleanup(spark, horizon)``
+        run with the batch's lease held; passing ``cleanup`` also
+        turns on the ingest horizon guard. ``extras(spark, ch,
+        batch_id)`` sees the batch with ``kp``, checkpointed.
+        ``check(spark)`` vets the state dir before the first batch."""
+        owner = f"sink:{checkpoint}"
+        recorded = []
+
+        def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+            spark = batch_df.sparkSession
+            with state_lease(spark, self.path, owner):
+                if not recorded:
+                    if check is not None:
+                        check(spark)
+                    _record_layout(spark, self.path, **self._layout)
+                    recorded.append(True)
+                if cleanup is not None:
+                    # re-read EVERY batch (one listStatus, no Spark
+                    # job): an external cleanup between triggers moves
+                    # the horizon, and a cached value would admit
+                    # below-horizon replays that resurrect cleaned-up
+                    # keys by winning the resolve against a dropped
+                    # tombstone
+                    horizon = _read_replay_horizon(spark, self.path)
+                    if horizon is not None:
+                        batch_df = batch_df.filter(F.coalesce(
+                            F.col(self.order(spark)[0]) >= F.lit(horizon),
+                            F.lit(True),
+                        ))
+                ch = batch_df.withColumn("kp", self.kp(spark))
+                if extras is None:
+                    _write_batch(ch, self.log_dir, batch_id)
+                else:
+                    # read for the buckets, the extras and the log
+                    ch = ch.localCheckpoint(eager=True)
+                    try:
+                        extras(spark, ch, batch_id)
+                        _write_batch(ch, self.log_dir, batch_id)
+                    finally:
+                        # released before the fold, which reads only disk
+                        release_local_checkpoint(ch)
+                if _should_fold(
+                    spark, self.base_dir, self.log_dir, fold_ratio
+                ):
+                    fold(spark)
+                if (
+                    every
+                    and horizon_fn is not None
+                    and (batch_id + 1) % every == 0
+                ):
+                    cleanup(spark, int(horizon_fn()))
+
+        writer = changes.writeStream.foreachBatch(apply_batch).option(
+            "checkpointLocation", checkpoint
+        )
+        if trigger:
+            writer = writer.trigger(**trigger)
+        return writer.start()
+
+
+def _latest_table(state_path: str, layout: dict | None = None):
+    """The CDC and retract-agg table: latest row per ``kc`` by ``oc``."""
+    return _DeltaLogTable(state_path, "state", "state_log", layout=layout)
+
+
+def _scd2_table(state_path: str, layout: dict | None = None):
+    """The SCD2 change archive: full-row DISTINCT, chains at fold."""
+    return _DeltaLogTable(
+        state_path, "changes", "changes_log", layout=layout,
+        resolve=lambda rows: rows.distinct(), after_fold=_scd2_fold_history,
+    )
+
+
+def _join_table(state_path: str, layout: dict | None = None):
+    """The retract-join pk table: latest row per ``(side, pk)`` by
+    ``seq``; jk layer and view rewritten at fold, before the base."""
+    return _DeltaLogTable(
+        state_path, "pk_state", "pk_log", ("side", "kp"),
+        keys=("side", "pk"), order=("seq",), before_fold=_rj_fold_view,
+        layout=layout,
+    )
+
+
+def _dynamic_overwrite(
+    df: DataFrame, path: str, *part_cols: str, compression: str = COMPRESSION
+) -> None:
+    """Replace exactly the ``part_cols`` partitions of the ORC dir
+    ``path`` that ``df`` holds (dynamic partition overwrite), so a
+    repeated write lands in the same state."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .option("compression", compression)
+        .partitionBy(*part_cols)
+        .orc(path)
+    )
+
+
+def _write_batch(
+    df: DataFrame, path: str, batch_id: int, compression: str = COMPRESSION
+) -> None:
+    """Write ``df`` as partition ``batch_id=<batch_id>`` of ``path``:
+    a replayed batch rewrites its own partition instead of
+    duplicating rows."""
+    _dynamic_overwrite(
+        df.withColumn("batch_id", F.lit(batch_id)), path, "batch_id",
+        compression=compression,
+    )
+
+
+def _refuse_pre_r9_cdc(spark: SparkSession, state_path: str) -> None:
+    """pre-round-9 CDC state kept its kp=* dirs directly under
+    state_path; this sink reads/writes state/ + state_log/ only.
+    Silently ignoring the old rows would be data loss (keys not
+    re-delivered vanish, re-delivered keys lose latest-wins against
+    their pre-upgrade seq), so refuse loudly with the migration step
+    instead."""
+    if any(n.startswith("kp=") for n in _hfs_list_names(spark, state_path)):
+        raise ValueError(
+            f"pre-round-9 CDC state layout at {state_path}: kp=* "
+            f"partitions sit at the state root, which this version no "
+            f"longer reads. Migrate by moving them under "
+            f"{os.path.join(state_path, 'state')}/ (one rename) before "
+            f"restarting the sink"
+        )
+
+
 def stream_cdc_apply_orc(
     changes: DataFrame,
     state_path: str,
@@ -236,97 +615,32 @@ def stream_cdc_apply_orc(
     order_cols: list[str],
     n_key_partitions: int = 16,
     trigger: dict | None = None,
-    compression: str = "zstd",
     fold_ratio: float = 0.25,
 ) -> StreamingQuery:
     """Streaming CDC MERGE into a keyed ORC state table — the
     ``foreachBatch`` upsert every warehouse runs on a change feed when
     the sink has no native MERGE.
 
-    Since round 9 the table is the SAME LSM pair the retract sinks
-    use (this sink shares their fold and reader): ``state/`` — the
-    base, latest-per-key rows ``kp``-partitioned (``kp = hash(key) %
-    n_key_partitions``), rewritten only by folds — plus
-    ``state_log/`` — the delta log, each batch appended under its
-    ``batch_id`` partition (dynamic overwrite, so a crash-replayed
-    batch rewrites its own partition: idempotent). Per batch the sink
-    does ONE O(batch) append — no state read, no merge shuffle, no
-    bucket rewrite, on ANY key distribution. The log folds into the
-    base via :func:`fold_retract_state` when it outgrows
-    ``max(64 MB, fold_ratio × base)`` — amortized O(batch/fold_ratio)
-    rows per batch. Read the current table with
-    :func:`read_cdc_table` (latest-per-key over base ∪ log — the
-    merge-on-read resolve; an empty log is a plain base read).
+    The table is a :class:`_DeltaLogTable` (``state/`` +
+    ``state_log/``, resolve = latest ``order_cols`` row per
+    ``key_col``), which states the per-batch cycle, the fold and the
+    crash contract. Per batch the sink does ONE O(batch) log append —
+    no state read, no merge shuffle, no bucket rewrite. Read the
+    current table with :func:`read_cdc_table`; fold explicitly with
+    :func:`fold_retract_state`.
 
     State size is O(live keys + unfolded log), never O(stream
     length). Deletes stay as tombstone rows (``op='D'``) so
-    re-inserts win later batches; readers filter them.
-    Each micro-batch holds the ``state_path`` single-writer lease
-    (round 8): the fold's pruned read + dynamic overwrite is the same
-    read-modify-write cycle the retract sinks protect, so an external
-    writer on the state dir fails loudly instead of interleaving.
-    """
-    lease_owner = f"sink:{checkpoint}"
-    cache: dict = {}
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        with state_lease(batch_df.sparkSession, state_path, lease_owner):
-            _apply(batch_df, batch_id)
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        base_dir = os.path.join(state_path, "state")
-        log_dir = os.path.join(state_path, "state_log")
-        if "layout" not in cache:
-            # pre-round-9 CDC state kept its kp=* dirs directly under
-            # state_path; this sink now reads/writes state/ +
-            # state_log/ only. Silently ignoring the old rows would be
-            # data loss (keys not re-delivered vanish, re-delivered
-            # keys lose latest-wins against their pre-upgrade seq), so
-            # refuse loudly with the migration step instead.
-            if any(
-                n.startswith("kp=")
-                for n in _hfs_list_names(spark, state_path)
-            ):
-                raise ValueError(
-                    f"pre-round-9 CDC state layout at {state_path}: "
-                    f"kp=* partitions sit at the state root, which "
-                    f"this version no longer reads. Migrate by moving "
-                    f"them under {base_dir}/ (one rename) before "
-                    f"restarting the sink"
-                )
-            _record_layout(
-                spark,
-                state_path,
-                kc=key_col,
-                oc=",".join(order_cols),
-                nkp=n_key_partitions,
-            )
-            cache["layout"] = True
-        (
-            batch_df.withColumn(
-                "kp",
-                F.pmod(F.hash(F.col(key_col)), F.lit(n_key_partitions)),
-            )
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .option("compression", compression)
-            .partitionBy("batch_id")
-            .orc(log_dir)
-        )
-        if _should_fold(spark, base_dir, log_dir, fold_ratio):
-            fold_retract_state(
-                spark, state_path, key_col, order_cols, compression,
-                lease=False,  # this batch already holds it
-            )
-
-    writer = changes.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint
+    re-inserts win later batches; readers filter them. A state dir in
+    the pre-round-9 layout (``kp=*`` at the root) is refused."""
+    state = _latest_table(state_path, dict(
+        kc=key_col, oc=",".join(order_cols), nkp=n_key_partitions
+    ))
+    return state.start(
+        changes, checkpoint, trigger, fold_ratio,
+        fold=lambda spark: fold_retract_state(spark, state_path, lease=False),
+        check=lambda spark: _refuse_pre_r9_cdc(spark, state_path),
     )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
 
 
 def read_cdc_table(spark: SparkSession, state_path: str) -> DataFrame:
@@ -346,27 +660,21 @@ def stream_scd2_apply_orc(
     order_cols: list[str],
     n_key_partitions: int = 16,
     trigger: dict | None = None,
-    compression: str = "zstd",
     fold_ratio: float = 0.25,
 ) -> StreamingQuery:
     """Streaming SCD TYPE-2 dimension maintenance — the history-table
     twin of :func:`stream_cdc_apply_orc` (which keeps latest-per-key;
-    this keeps every attribute interval with validity bounds). Each
-    micro-batch:
+    this keeps every attribute interval with validity bounds).
 
-    1. hashes keys into ``n_key_partitions`` buckets (``kp``) and
-       reads ONLY the touched buckets of the ``changes/`` archive,
-    2. merges batch ∪ archive by FULL-ROW DISTINCT — the change
-       archive is the warehouse's CDC source-of-truth table, and
-       row-identity dedup is what makes a crash-replayed batch an
-       exact no-op,
-    3. rebuilds the SCD2 chain (collapse consecutive repeats →
-       version / effective_from / effective_to / is_current) for the
-       touched buckets only, via ``operators/relational.py::
-       scd2_history`` — per-key windows inside a bucket-bounded
-       frame, and
-    4. dynamically overwrites the touched ``kp`` partitions of BOTH
-       ``changes/`` and ``history/``.
+    The state is a :class:`_DeltaLogTable` over the raw change rows:
+    ``changes/`` (the full-row-DISTINCT base — the warehouse's CDC
+    source-of-truth archive; row-identity dedup makes a replayed batch
+    an exact no-op) + ``changes_log/``. Each fold (:func:`fold_scd2_state`)
+    also rebuilds the SCD2 chains (collapse consecutive repeats →
+    version / effective_from / effective_to / is_current, via
+    ``operators/relational.py::scd2_history``) of the touched buckets
+    into ``history/``; :func:`read_scd2_history` rebuilds the
+    log-touched buckets' chains at read time between folds.
 
     Keeping raw change rows (not just collapsed intervals) is what
     buys OUT-OF-ORDER exactness: a late row can split or merge
@@ -376,145 +684,52 @@ def stream_scd2_apply_orc(
     oracle feeds hash-scattered batches and must hash-match the
     one-shot ``SCD2_SQL``). An interval-only state cannot do this:
     consecutive-repeat rows it discarded may become version starts
-    once a late row lands between them.
-
-    Since round 9 the archive is an LSM pair like every other state
-    sink here: ``changes/`` — the full-row-distinct base, rewritten
-    only by folds — plus ``changes_log/`` — each batch appended under
-    its ``batch_id`` partition (idempotent under replay). Per batch
-    the sink does ONE O(batch) append on ANY key distribution; the
-    ``history/`` chain table is materialized at FOLD time
-    (:func:`fold_scd2_state`, triggered when the log outgrows
-    ``max(64 MB, fold_ratio × base)``), and
-    :func:`read_scd2_history` answers between folds by rebuilding
-    only the log-touched buckets' chains at read time (merge-on-read
-    — full-row DISTINCT over base ∪ log absorbs replays and the
-    crash window between a fold's base write and its log delete).
-
-    100 TB shape: per-batch cost is O(batch); fold cost is O(touched
-    buckets), amortized O(batch/fold_ratio); state is the change
-    archive a warehouse already keeps.
-
-    Each micro-batch holds the ``state_path`` single-writer lease
-    (round 8), like every other read-modify-write state sink."""
-    lease_owner = f"sink:{checkpoint}"
-    cache: dict = {}
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        with state_lease(batch_df.sparkSession, state_path, lease_owner):
-            _apply(batch_df, batch_id)
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        base_dir = os.path.join(state_path, "changes")
-        log_dir = os.path.join(state_path, "changes_log")
-        if "layout" not in cache:
-            _record_layout(
-                spark,
-                state_path,
-                kc=key_col,
-                ac=attr_col,
-                tc=ts_col,
-                oc=",".join(order_cols),
-                nkp=n_key_partitions,
-            )
-            cache["layout"] = True
-        (
-            batch_df.withColumn(
-                "kp",
-                F.pmod(F.hash(F.col(key_col)), F.lit(n_key_partitions)),
-            )
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .option("compression", compression)
-            .partitionBy("batch_id")
-            .orc(log_dir)
-        )
-        if _should_fold(spark, base_dir, log_dir, fold_ratio):
-            fold_scd2_state(
-                spark, state_path, compression, lease=False
-            )
-
-    writer = changes.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint
+    once a late row lands between them."""
+    state = _scd2_table(state_path, dict(
+        kc=key_col, ac=attr_col, tc=ts_col, oc=",".join(order_cols),
+        nkp=n_key_partitions,
+    ))
+    return state.start(
+        changes, checkpoint, trigger, fold_ratio,
+        fold=lambda spark: fold_scd2_state(spark, state_path, lease=False),
     )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
 
 
-def _scd2_log_merge(spark: SparkSession, state_path: str):
-    """Shared base∪log resolution of an unfolded SCD2 change log —
-    the byte-equivalence contract between :func:`read_scd2_history`
-    and :func:`fold_scd2_state`: both must rebuild chains from the
-    SAME ``(kps, merged)`` or a fold would materialize history the
-    reader didn't answer. Returns ``(layout, log, kps, merged)``;
-    ``merged`` is lazy (callers checkpoint it if they reuse it)."""
-    base_dir = os.path.join(state_path, "changes")
-    log_dir = os.path.join(state_path, "changes_log")
-    layout = _read_layout(spark, state_path)
-    log = spark.read.orc(log_dir).drop("batch_id")
-    kps = [r.kp for r in log.select("kp").distinct().collect()]
-    allrows = log
-    if _orc_files_exist(spark, base_dir):
-        allrows = allrows.unionByName(
-            spark.read.orc(base_dir).filter(F.col("kp").isin(kps))
-        )
-    return layout, log, kps, allrows.distinct()
+def _scd2_chains(spark: SparkSession, table, merged: DataFrame):
+    """SCD2 chains of the resolved change rows ``merged`` — the same
+    rebuild for the fold and the merge-on-read reader."""
+    from flink_orc_sink_spark.operators import relational
+
+    lay = table.layout(spark)
+    return relational.scd2_history(
+        merged, [lay["kc"]], lay["ac"], lay["tc"], lay["oc"].split(",")
+    )
+
+
+def _scd2_fold_history(spark: SparkSession, table, merged: DataFrame):
+    """After-base fold step of the SCD2 table: rewrite ``history/``
+    for the folded buckets."""
+    _dynamic_overwrite(
+        _scd2_chains(spark, table, merged),
+        os.path.join(table.path, "history"),
+        "kp",
+    )
 
 
 def fold_scd2_state(
-    spark: SparkSession,
-    state_path: str,
-    compression: str = "zstd",
-    lease: bool = True,
+    spark: SparkSession, state_path: str, lease: bool = True
 ) -> dict:
     """Fold a :func:`stream_scd2_apply_orc` change log: full-row
     DISTINCT merge of (touched base buckets ∪ log) into ``changes/``,
     rebuild the ``history/`` SCD2 chains for exactly those buckets,
-    then delete the log. Every crash prefix converges: distinct
-    absorbs base/log duplicates, and the reader rebuilds log-touched
-    buckets from base ∪ log until the log is gone. Layout parameters
-    come from the state dir's markers."""
-    from flink_orc_sink_spark.operators.relational import scd2_history
-
+    then delete the log (:meth:`_DeltaLogTable.fold`). Layout
+    parameters come from the state dir's markers."""
     if lease:
         with state_lease(
             spark, state_path, process_owner("maintenance:fold-scd2")
         ):
-            return fold_scd2_state(
-                spark, state_path, compression, lease=False
-            )
-    base_dir = os.path.join(state_path, "changes")
-    log_dir = os.path.join(state_path, "changes_log")
-    if not _orc_files_exist(spark, log_dir):
-        return {"log_rows_folded": 0, "buckets_rewritten": 0}
-    layout, log, kps, merged = _scd2_log_merge(spark, state_path)
-    key_col, attr_col, ts_col = layout["kc"], layout["ac"], layout["tc"]
-    order_cols = layout["oc"].split(",")
-    n_log = log.count()
-    merged = merged.localCheckpoint(eager=True)
-    try:
-        (
-            merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .option("compression", compression)
-            .partitionBy("kp")
-            .orc(base_dir)
-        )
-        (
-            scd2_history(merged, [key_col], attr_col, ts_col, order_cols)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .option("compression", compression)
-            .partitionBy("kp")
-            .orc(os.path.join(state_path, "history"))
-        )
-    finally:
-        release_local_checkpoint(merged)
-    _hfs_rmtree(spark, log_dir)
-    return {"log_rows_folded": n_log, "buckets_rewritten": len(kps)}
+            return fold_scd2_state(spark, state_path, lease=False)
+    return _scd2_table(state_path).fold(spark)
 
 
 def read_scd2_history(spark: SparkSession, state_path: str) -> DataFrame:
@@ -523,31 +738,27 @@ def read_scd2_history(spark: SparkSession, state_path: str) -> DataFrame:
     bucket as of the last fold; buckets touched by the unfolded
     change log get their chains rebuilt from DISTINCT(base ∪ log) at
     read time."""
-    from flink_orc_sink_spark.operators.relational import scd2_history
-
+    table = _scd2_table(state_path)
     hist_dir = os.path.join(state_path, "history")
-    log_dir = os.path.join(state_path, "changes_log")
-    if not _orc_files_exist(spark, log_dir):
+    if not _orc_files_exist(spark, table.log_dir):
         return spark.read.orc(hist_dir)
-    layout, _log, kps, merged = _scd2_log_merge(spark, state_path)
-    key_col, attr_col, ts_col = layout["kc"], layout["ac"], layout["tc"]
-    order_cols = layout["oc"].split(",")
-    fresh = scd2_history(merged, [key_col], attr_col, ts_col, order_cols)
+    touched, merged = table.merge_touched(spark, table.read_log(spark))
+    fresh = _scd2_chains(spark, table, merged)
     if _orc_files_exist(spark, hist_dir):
         return (
             spark.read.orc(hist_dir)
-            .filter(~F.col("kp").isin(kps))
+            .filter(~_bucket_filter(table.parts, touched))
             .unionByName(fresh)
         )
     return fresh
 
 
 def _record_layout(spark: SparkSession, state_path: str, **kv) -> None:
-    """Persist immutable layout parameters of a retract state dir as
-    marker DIRECTORY NAMES (``layout/<k>=<v>``) — the same atomic
-    ``mkdirs`` encoding as the replay horizon. Written once on the
-    first batch; maintenance ops (fold, cleanup) read them back so an
-    external cleanup never needs the sink's constructor arguments.
+    """Persist immutable layout parameters of a state dir as marker
+    DIRECTORY NAMES (``layout/<k>=<v>``) — the same atomic ``mkdirs``
+    encoding as the replay horizon. Written once on the first batch;
+    maintenance ops (fold, cleanup) and readers read them back so they
+    never need the sink's constructor arguments.
 
     REFUSES a conflicting re-record: the layout params decide how the
     base buckets were HASHED, so a sink restarted with different
@@ -566,20 +777,12 @@ def _record_layout(spark: SparkSession, state_path: str, **kv) -> None:
                 f"restart the sink with the recorded values or fold "
                 f"into a fresh state dir"
             )
-        _hfs_mkdirs(
-            spark, os.path.join(state_path, "layout", f"{k}={v}")
-        )
+        _hfs_mkdirs(spark, os.path.join(state_path, "layout", f"{k}={v}"))
 
 
 def _read_layout(spark: SparkSession, state_path: str) -> dict:
-    out: dict = {}
-    for name in _hfs_list_names(
-        spark, os.path.join(state_path, "layout")
-    ):
-        if "=" in name:
-            k, v = name.split("=", 1)
-            out[k] = v
-    return out
+    names = _hfs_list_names(spark, os.path.join(state_path, "layout"))
+    return dict(n.split("=", 1) for n in names if "=" in n)
 
 
 def _latest_per_key(df: DataFrame, key_cols: list[str], order_desc):
@@ -611,73 +814,22 @@ def _should_fold(
 
 
 def fold_retract_state(
-    spark: SparkSession,
-    state_path: str,
-    key_col: str | None = None,
-    order_cols: list[str] | tuple | None = None,
-    compression: str = "zstd",
-    lease: bool = True,
+    spark: SparkSession, state_path: str, lease: bool = True
 ) -> dict:
-    """Fold a :func:`stream_retract_agg_orc` delta log into its base:
+    """Fold the delta log of a :func:`stream_cdc_apply_orc` or
+    :func:`stream_retract_agg_orc` state dir into its base:
     latest-per-key over (changed base buckets ∪ log), dynamic
     overwrite of exactly the changed ``kp`` partitions, then delete
-    the folded log partitions. Idempotent in every crash window — a
-    partially-folded state resolves identically because the log rows
-    are still present and latest-per-key absorbs the duplicates; a
-    partially-deleted log leaves only already-folded rows behind.
-
-    ``key_col``/``order_cols`` default to the layout markers the sink
-    recorded on its first batch, so external maintenance needs only
-    the state path. Returns ``{"log_rows_folded": n,
-    "buckets_rewritten": k}``."""
+    the log (:meth:`_DeltaLogTable.fold`). Key and order columns come
+    from the layout markers the sink recorded, so external maintenance
+    needs only the state path; a log without them raises. Returns
+    ``{"log_rows_folded": n, "buckets_rewritten": k}``."""
     if lease:
         with state_lease(
             spark, state_path, process_owner("maintenance:fold-retract")
         ):
-            return fold_retract_state(
-                spark, state_path, key_col, order_cols, compression,
-                lease=False,
-            )
-    layout = _read_layout(spark, state_path)
-    key_col = key_col or layout.get("kc")
-    if order_cols is None:
-        order_cols = tuple(layout["oc"].split(",")) if "oc" in layout else ("seq",)
-    if isinstance(order_cols, str):
-        order_cols = (order_cols,)
-    base_dir = os.path.join(state_path, "state")
-    log_dir = os.path.join(state_path, "state_log")
-    if not _orc_files_exist(spark, log_dir):
-        return {"log_rows_folded": 0, "buckets_rewritten": 0}
-    if key_col is None:
-        raise ValueError(
-            f"fold_retract_state({state_path!r}): no key_col given and "
-            f"no layout marker recorded — cannot resolve latest-per-key"
-        )
-    order_desc = [F.col(c).desc() for c in order_cols]
-    log = spark.read.orc(log_dir).drop("batch_id")
-    kps = [r.kp for r in log.select("kp").distinct().collect()]
-    allrows = log
-    if _orc_files_exist(spark, base_dir):
-        allrows = allrows.unionByName(
-            spark.read.orc(base_dir).filter(F.col("kp").isin(kps))
-        )
-    n_log = log.count()
-    merged = _latest_per_key(
-        allrows, [key_col], order_desc
-    ).localCheckpoint(eager=True)
-    try:
-        (
-            merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .option("compression", compression)
-            .partitionBy("kp")
-            .orc(base_dir)
-        )
-    finally:
-        release_local_checkpoint(merged)
-    # folded: the log rows are now (at latest-per-key) in the base
-    _hfs_rmtree(spark, log_dir)
-    return {"log_rows_folded": n_log, "buckets_rewritten": len(kps)}
+            return fold_retract_state(spark, state_path, lease=False)
+    return _latest_table(state_path).fold(spark)
 
 
 def read_retract_state(
@@ -687,19 +839,7 @@ def read_retract_state(
     :func:`stream_retract_agg_orc` state dir — base ⊕ unfolded delta
     log, retained ``op='D'`` tombstones included (what a fold would
     materialize). Key/order columns come from the layout markers."""
-    base_dir = os.path.join(state_path, "state")
-    log_dir = os.path.join(state_path, "state_log")
-    if not _orc_files_exist(spark, log_dir):
-        return spark.read.orc(base_dir)
-    layout = _read_layout(spark, state_path)
-    key_col = layout["kc"]
-    order_desc = [
-        F.col(c).desc() for c in layout.get("oc", "seq").split(",")
-    ]
-    rows = spark.read.orc(log_dir).drop("batch_id")
-    if _orc_files_exist(spark, base_dir):
-        rows = rows.unionByName(spark.read.orc(base_dir))
-    return _latest_per_key(rows, [key_col], order_desc)
+    return _latest_table(state_path).read(spark)
 
 
 def read_retract_pk_state(
@@ -708,14 +848,26 @@ def read_retract_pk_state(
     """Resolved latest-per-(side,pk) snapshot of a
     :func:`stream_retract_join_orc` pk layer — base ⊕ unfolded delta
     log, tombstones included."""
-    base_dir = os.path.join(state_path, "pk_state")
-    log_dir = os.path.join(state_path, "pk_log")
-    if not _orc_files_exist(spark, log_dir):
-        return spark.read.orc(base_dir)
-    rows = spark.read.orc(log_dir).drop("batch_id")
-    if _orc_files_exist(spark, base_dir):
-        rows = rows.unionByName(spark.read.orc(base_dir))
-    return _latest_per_key(rows, ["side", "pk"], _rj_order())
+    return _join_table(state_path).read(spark)
+
+
+def _contrib(df: DataFrame, group_col: str, val_col: str, sign: int):
+    """Signed per-group contribution of resolved key rows: live
+    (``op='U'``) rows add ``(val, 1)``, tombstones nothing."""
+    live = F.col("op") == "U"
+    return df.select(
+        F.col(group_col).alias("grp"),
+        F.when(live, F.col(val_col) * sign)
+        .otherwise(F.lit(0)).cast("long").alias("d_sum"),
+        F.when(live, F.lit(sign))
+        .otherwise(F.lit(0)).cast("long").alias("d_count"),
+    )
+
+
+def _sum_deltas(deltas: DataFrame) -> DataFrame:
+    return deltas.groupBy("grp").agg(
+        F.sum("d_sum").alias("d_sum"), F.sum("d_count").alias("d_count")
+    )
 
 
 def stream_retract_agg_orc(
@@ -728,7 +880,6 @@ def stream_retract_agg_orc(
     order_cols: list[str],
     n_key_partitions: int = 16,
     trigger: dict | None = None,
-    compression: str = "zstd",
     cleanup_every_n_batches: int | None = None,
     horizon_fn=None,
     fold_ratio: float = 0.25,
@@ -740,235 +891,84 @@ def stream_retract_agg_orc(
     retract the key's previous contribution (including moving it
     between groups) and delete tombstones retract it entirely.
 
-    State is an LSM pair (round 9 — this removed the only
-    data-shape-dependent scale cliff):
-
-    - ``state/`` — the BASE: latest-per-key rows, ``kp``-partitioned
-      (``kp = hash(key) % n_key_partitions``), rewritten only by
-      FOLDS;
-    - ``state_log/`` — the DELTA LOG: each batch's raw rows appended
-      under a ``batch_id`` partition (dynamic overwrite, so a replayed
-      batch rewrites its own partition instead of duplicating).
-
-    Per batch:
+    The key state is a :class:`_DeltaLogTable` (``state/`` +
+    ``state_log/``, latest ``order_cols`` row per ``key_col``), which
+    states the lease, append, fold, cleanup and crash contract. The
+    per-batch extra, marker-guarded by ``applied/batch_N``:
 
     1. resolve the batch keys' PRE-images — latest-per-key over
-       (base buckets the batch touches, semi-joined to the batch's
-       keys) ∪ (log rows below this batch id, same semi-join). A
-       read-only, partition-pruned lookup: no shuffle of state, no
-       rewrite;
+       (base buckets the batch touches ∪ log rows below this batch
+       id), both semi-joined to the batch's keys: a read-only,
+       partition-pruned lookup, no shuffle of state, no rewrite;
     2. emit per-group DELTA rows = (new contribution − old
        contribution) for the batch's keys only: +``(val, 1)`` into
        the key's new group, −``(val, 1)`` out of its old one — into a
-       ``batch_id`` partition of ``agg_deltas`` (marker-guarded). No
-       group is ever rescanned;
-    3. APPEND the batch to the log — the only state write, O(batch);
-    4. when the log outgrows ``max(64 MB, fold_ratio × base)``, FOLD
-       it into the base (:func:`fold_retract_state`): latest-per-key
-       over (changed buckets ∪ log), rewrite exactly those buckets,
-       drop the log. Amortized fold cost is O(batch / fold_ratio)
-       rows per batch — state-size-independent.
+       ``batch_id`` partition of ``agg_deltas``. No group is ever
+       rescanned.
 
-    UNDER UNIFORMLY-RANDOM KEY CHURN — the round-8 degenerate case,
-    where every batch touches every bucket and the old merge-on-write
-    design paid a full state read+shuffle+rewrite per batch — the
-    per-batch cost is now a map-side pruned SCAN (the pre-image
-    lookup) plus an O(batch) append; the full pass happens only at
-    fold cadence. The probe
-    (``tools/scale_probe_retract_join.py``) pins per-batch wall ~flat
-    across a 20× state growth for uniform keys.
-
-    The aggregate readback (:func:`read_retract_agg`) sums the delta
-    partitions — O(batches × groups) rows, corpus-size-independent.
-
-    Crash-replay: the pre-image resolve reads ONLY ``batch_id <
-    current`` log partitions and the base, both of which this batch
-    never mutates (the log append is the last step; folds are
-    idempotent) — so a replayed batch recomputes byte-identical
-    deltas even without its marker, and the marker is purely a
-    work-skip. Every crash window converges: delta write and log
-    append are each idempotent per ``batch_id``, and a crash mid-fold
-    leaves base∪log resolving identically (duplicates absorbed by
-    latest-per-key).
+    Under uniformly-random key churn the per-batch cost is that
+    pruned scan plus the O(batch) append; the full pass happens only
+    at fold cadence (``tools/scale_probe_retract_join.py`` pins
+    per-batch wall ~flat across a 20× state growth). The aggregate
+    readback (:func:`read_retract_agg`) sums the delta partitions —
+    O(batches × groups) rows, corpus-size-independent.
 
     Tombstone retention: ``op='D'`` rows are KEPT (in base or log) —
     they mask a replayed pre-delete update (an old ``U`` with a lower
-    seq re-delivered by a feed replay would otherwise win the
-    latest-per-key resolve and resurrect the key). Age them out with
+    order value re-delivered by a feed replay would otherwise win the
+    resolve and resurrect the key). Age them out with
     :func:`cleanup_retract_state` once the source's replay horizon
-    has passed (the recorded horizon is also enforced at ingest).
-    With ``cleanup_every_n_batches`` + ``horizon_fn`` set that
-    state-TTL pass runs on the sink's own cadence, under the batch's
-    lease.
+    has passed; the sink then drops rows below the recorded horizon
+    (on ``order_cols[0]``) at ingest. With ``cleanup_every_n_batches``
+    + ``horizon_fn`` set that pass runs on the sink's own cadence,
+    under the batch's lease."""
+    state = _latest_table(state_path, dict(
+        kc=key_col, oc=",".join(order_cols), nkp=n_key_partitions
+    ))
 
-    Every micro-batch runs under the ``state_path`` single-writer
-    LEASE (``lease.py``), owner-keyed to this checkpoint: a restarted
-    stream reclaims instantly, while an external maintenance op
-    holding the lease makes the batch fail LOUDLY instead of
-    interleaving."""
-    order_desc = [F.col(c).desc() for c in order_cols]
-    lease_owner = f"sink:{checkpoint}"
-    # per-stream-instance caches of immutable/owned state-dir facts
-    # (layout is write-once; the horizon only moves under this very
-    # lease — the sink's own cadence cleanup below invalidates it)
-    cache: dict = {}
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        with state_lease(spark, state_path, lease_owner):
-            _apply(batch_df, batch_id)
-            if (
-                cleanup_every_n_batches
-                and horizon_fn is not None
-                and (batch_id + 1) % cleanup_every_n_batches == 0
-            ):
-                cleanup_retract_state(
-                    spark,
-                    state_path,
-                    int(horizon_fn()),
-                    order_cols,
-                    compression,
-                    lease=False,  # already held by this batch
-                )
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        base_dir = os.path.join(state_path, "state")
-        log_dir = os.path.join(state_path, "state_log")
-        # re-read EVERY batch (one listStatus, no Spark job): an
-        # external cleanup_retract_state between triggers moves the
-        # horizon, and the docstring contract is that the sink
-        # enforces the recorded horizon on every subsequent batch —
-        # a cached value would admit below-horizon replays that can
-        # resurrect cleaned-up keys.
-        horizon = _read_replay_horizon(spark, state_path)
-        if horizon is not None:
-            # rows older than the cleanup horizon can only be replays
-            # of already-retired history; admitting one could win the
-            # latest-per-key resolve against a cleaned-up tombstone.
-            # NULL-safe: cleanup_retract_state deliberately KEEPS
-            # NULL-order rows (coalesce'd negation), so the guard must
-            # admit them too — a bare >= would silently drop them
-            batch_df = batch_df.filter(
-                F.coalesce(
-                    F.col(order_cols[0]) >= F.lit(horizon), F.lit(True)
-                )
-            )
-        if "layout" not in cache:
-            _record_layout(
-                spark,
-                state_path,
-                kc=key_col,
-                oc=",".join(order_cols),
-                nkp=n_key_partitions,
-            )
-            cache["layout"] = True
-        ch = batch_df.withColumn(
-            "kp", F.pmod(F.hash(F.col(key_col)), F.lit(n_key_partitions))
-        ).localCheckpoint(eager=True)  # read for kps, deltas, and log
+    def agg_deltas(spark: SparkSession, ch: DataFrame, batch_id: int):
+        marker = os.path.join(state_path, "applied", f"batch_{batch_id}")
+        if _hfs_exists(spark, marker):
+            return
+        cand = state.lookup(
+            spark, ch.select(key_col).distinct(), batch_id, buckets=ch
+        )
+        if cand is not None:
+            # consumed by BOTH the pre- and post-image resolve:
+            # materialize the (small, semi-joined) lookup once
+            cand = cand.localCheckpoint(eager=True)
         try:
-            marker = os.path.join(
-                state_path, "applied", f"batch_{batch_id}"
+            post = state.resolve(
+                spark, ch if cand is None else cand.unionByName(ch)
             )
-            if not _hfs_exists(spark, marker):
-                bkeys = ch.select(key_col).distinct()
-                # pre-images of the batch's keys: read-only pruned
-                # lookup over base ∪ log[< this batch] — never the
-                # whole state, never a rewrite
-                cand = None
-                if _orc_files_exist(spark, base_dir):
-                    kps = [
-                        r.kp for r in ch.select("kp").distinct().collect()
-                    ]
-                    cand = (
-                        spark.read.orc(base_dir)
-                        .filter(F.col("kp").isin(kps))
-                        .join(bkeys, key_col, "left_semi")
-                    )
-                if _orc_files_exist(spark, log_dir):
-                    lg = (
-                        spark.read.orc(log_dir)
-                        .filter(F.col("batch_id") < batch_id)
-                        .drop("batch_id")
-                        .join(bkeys, key_col, "left_semi")
-                    )
-                    cand = lg if cand is None else cand.unionByName(lg)
-                if cand is not None:
-                    # consumed by BOTH the pre- and post-image resolve:
-                    # materialize the (small, semi-joined) lookup once
-                    cand = cand.localCheckpoint(eager=True)
-                try:
-                    cur = (
-                        _latest_per_key(cand, [key_col], order_desc)
-                        if cand is not None
-                        else None
-                    )
-                    merged = _latest_per_key(
-                        cand.unionByName(ch) if cand is not None else ch,
-                        [key_col],
-                        order_desc,
-                    )
-
-                    def contrib(df: DataFrame, sign: int) -> DataFrame:
-                        live = F.col("op") == "U"
-                        return df.select(
-                            F.col(group_col).alias("grp"),
-                            F.when(live, F.col(val_col) * sign)
-                            .otherwise(F.lit(0))
-                            .cast("long")
-                            .alias("d_sum"),
-                            F.when(live, F.lit(sign))
-                            .otherwise(F.lit(0))
-                            .cast("long")
-                            .alias("d_count"),
-                        )
-
-                    deltas = contrib(merged, 1)
-                    if cur is not None:
-                        deltas = deltas.unionByName(contrib(cur, -1))
-                    (
-                        deltas.groupBy("grp")
-                        .agg(
-                            F.sum("d_sum").alias("d_sum"),
-                            F.sum("d_count").alias("d_count"),
-                        )
-                        .withColumn("batch_id", F.lit(batch_id))
-                        .write.mode("overwrite")
-                        .option("partitionOverwriteMode", "dynamic")
-                        .option("compression", compression)
-                        .partitionBy("batch_id")
-                        .orc(os.path.join(state_path, "agg_deltas"))
-                    )
-                finally:
-                    # release on the failure path too — a retrying
-                    # stream must not leak one block set per attempt
-                    if cand is not None:
-                        release_local_checkpoint(cand)
-                _hfs_mkdirs(spark, marker)
-            # the ONLY per-batch state write: append to the delta log
-            # (idempotent — a replay rewrites its own partition)
-            (
-                ch.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .option("compression", compression)
-                .partitionBy("batch_id")
-                .orc(log_dir)
+            deltas = _contrib(post, group_col, val_col, 1)
+            if cand is not None:
+                pre = state.resolve(spark, cand)
+                deltas = deltas.unionByName(
+                    _contrib(pre, group_col, val_col, -1)
+                )
+            _write_batch(
+                _sum_deltas(deltas),
+                os.path.join(state_path, "agg_deltas"),
+                batch_id,
             )
         finally:
-            release_local_checkpoint(ch)
-        if _should_fold(spark, base_dir, log_dir, fold_ratio):
-            fold_retract_state(
-                spark, state_path, key_col, order_cols, compression,
-                lease=False,  # this batch already holds it
-            )
+            # released on the failure path too — a retrying stream
+            # must not leak one block set per attempt
+            if cand is not None:
+                release_local_checkpoint(cand)
+        _hfs_mkdirs(spark, marker)
 
-    writer = changes.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint
+    return state.start(
+        changes, checkpoint, trigger, fold_ratio,
+        fold=lambda spark: fold_retract_state(spark, state_path, lease=False),
+        extras=agg_deltas,
+        cleanup=lambda spark, h: cleanup_retract_state(
+            spark, state_path, h, lease=False
+        ),
+        every=cleanup_every_n_batches,
+        horizon_fn=horizon_fn,
     )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
 
 
 def read_retract_agg(spark: SparkSession, state_path: str) -> DataFrame:
@@ -1017,183 +1017,60 @@ def _read_replay_horizon(spark: SparkSession, state_path: str):
 
 
 def cleanup_retract_state(
-    spark: SparkSession,
-    state_path: str,
-    horizon: int,
-    order_cols: list[str] | tuple = ("seq",),
-    compression: str = "zstd",
-    lease: bool = True,
+    spark: SparkSession, state_path: str, horizon: int, lease: bool = True
 ) -> dict:
     """Horizon-bounded tombstone cleanup for a
-    :func:`stream_retract_agg_orc` state dir — the state-TTL pass the
-    retention contract in that docstring promises: physically drop
-    ``op='D'`` rows whose ``order_cols[0]`` is below ``horizon``, the
-    caller's guarantee that the source can no longer replay anything
-    older (Kafka retention is the usual horizon). Without this, a
-    delete-heavy feed grows the key state with every key ever deleted.
+    :func:`stream_retract_agg_orc` state dir — the state-TTL pass its
+    retention contract promises: fold the log, then physically drop
+    ``op='D'`` rows whose first order column (the sink's recorded
+    ``order_cols[0]``) is below ``horizon``, the caller's guarantee
+    that the source can no longer replay anything older (Kafka
+    retention is the usual horizon). Without this, a delete-heavy
+    feed grows the key state with every key ever deleted.
 
-    Crash-safe ordering: the horizon marker is recorded BEFORE the
-    rewrite. A crash in between leaves the tombstones in place
-    (harmless — masking still works, the next cleanup re-drops them);
-    the reverse order would open a window where the tombstone is gone
-    but below-horizon replays are still admitted. The sink enforces
-    the recorded horizon on every subsequent batch, so a pre-delete
-    update replayed after cleanup is dropped at ingest instead of
-    resurrecting its key.
+    The horizon marker is recorded BEFORE the rewrite, and the sink
+    enforces it on every later batch, so a pre-delete update replayed
+    after cleanup is dropped at ingest instead of resurrecting its
+    key. Only the ``kp`` buckets holding expired tombstones are
+    rewritten (``_overwrite_buckets``). SINGLE-WRITER: the run takes
+    the ``state_path`` lease and fails loudly with ``LeaseHeldError``
+    if the sink or another maintenance op holds it; the sink's own
+    cadence passes ``lease=False`` under its batch lease.
 
-    Partition-parallel and pruned: only the ``kp`` buckets that
-    actually hold expired tombstones are rewritten (dynamic partition
-    overwrite; a bucket left EMPTY by the rewrite has its directory
-    dropped — the ``_overwrite_buckets`` contract). Cost is O(touched
-    buckets × bucket size), never a full-state rewrite when deletes
-    cluster. SINGLE-WRITER like ``compact_index`` — and since round 8
-    ENFORCED: the run takes the ``state_path`` lease (``lease.py``)
-    and fails loudly with ``LeaseHeldError`` if the sink (or another
-    maintenance op) holds it. Schedule between triggers, while the
-    stream is stopped — or let the sink run it itself on its own
-    cadence (``cleanup_every_n_batches``), which passes ``lease=False``
-    because the batch already holds the lease.
-
-    Pass the SAME ``order_cols`` the sink was started with: the sink
-    enforces the recorded horizon against ``order_cols[0]`` on every
-    batch, so a cleanup keyed to any other column would record the
-    horizon in one column's units and enforce it in another — the
-    replayed-row guard would silently not guard.
-
-    Returns ``{"tombstones_dropped": n, "buckets_rewritten": k}``.
-    """
-    if isinstance(order_cols, str):  # tolerate the scalar form
-        order_cols = (order_cols,)
+    Returns ``{"tombstones_dropped": n, "buckets_rewritten": k}``."""
     if lease:
         with state_lease(
-            spark,
-            state_path,
-            process_owner("maintenance:cleanup-retract"),
+            spark, state_path, process_owner("maintenance:cleanup-retract")
         ):
             return cleanup_retract_state(
-                spark,
-                state_path,
-                horizon,
-                order_cols,
-                compression,
-                lease=False,
+                spark, state_path, horizon, lease=False
             )
-    # coerce FIRST so the drop predicate and the recorded marker use
-    # the identical value — a fractional horizon would otherwise drop
-    # tombstones up to h while the ingest guard admits [int(h), h)
-    horizon = int(horizon)
-    state_dir = os.path.join(state_path, "state")
-    _record_replay_horizon(spark, state_path, horizon)
-    # fold any outstanding delta log first so every expired tombstone
-    # sits in the base the pruned rewrite below operates on
-    fold_retract_state(
-        spark, state_path, None, order_cols, compression, lease=False
-    )
-    if not _orc_files_exist(spark, state_dir):
-        return {"tombstones_dropped": 0, "buckets_rewritten": 0}
-    st = spark.read.orc(state_dir)
-    expired = (F.col("op") == "D") & (
-        F.col(order_cols[0]) < F.lit(horizon)
-    )
-    # one scan yields both the touched buckets and the drop count
-    # (bounded by n_key_partitions rows)
-    per_bucket = (
-        st.filter(expired).groupBy("kp").count().collect()
-    )
-    if not per_bucket:
-        return {"tombstones_dropped": 0, "buckets_rewritten": 0}
-    touched = [(r.kp,) for r in per_bucket]
-    n_doomed = sum(r["count"] for r in per_bucket)
-    kps = [kp for (kp,) in touched]
-    # null-safe negation: ~NULL is NULL and would silently DELETE any
-    # row with a NULL op/order value from the rewritten buckets
-    keep = (
-        st.filter(F.col("kp").isin(kps))
-        .filter(~F.coalesce(expired, F.lit(False)))
-        .localCheckpoint(eager=True)
-    )  # materialize BEFORE overwriting the directory being read
-    try:
-        _overwrite_buckets(keep, state_dir, ["kp"], touched, compression)
-    finally:
-        release_local_checkpoint(keep)
-    return {
-        "tombstones_dropped": n_doomed,
-        "buckets_rewritten": len(touched),
-    }
+    return _latest_table(state_path).cleanup(spark, horizon)
 
 
 def cleanup_retract_join_state(
-    spark: SparkSession,
-    state_path: str,
-    horizon: int,
-    compression: str = "zstd",
-    lease: bool = True,
+    spark: SparkSession, state_path: str, horizon: int, lease: bool = True
 ) -> dict:
     """:func:`cleanup_retract_state`'s twin for a
     :func:`stream_retract_join_orc` state dir. Only the PK layer
     retains ``op='D'`` tombstones (the jk layer and the view hold
-    live images only), so this drops expired ``D`` rows from the
-    ``(side, kp)``-partitioned pk store — same crash-safe ordering
-    (horizon marker recorded FIRST, then a partition-pruned
-    rewrite), same ingest enforcement (the sink drops arriving rows
-    with ``seq`` below the recorded horizon), same ENFORCED
-    single-writer lease as the agg twin (``lease=False`` only from a
-    caller already holding the ``state_path`` lease — the sink's own
-    cadence does).
+    live images only), so this drops expired ``D`` rows (``seq``
+    below ``horizon``) from the ``(side, kp)``-partitioned pk store,
+    with the same ordering, ingest enforcement and lease.
 
-    Returns ``{"tombstones_dropped": n, "buckets_rewritten": k}``.
-    """
+    Returns ``{"tombstones_dropped": n, "buckets_rewritten": k}``."""
     if lease:
         with state_lease(
-            spark,
-            state_path,
-            process_owner("maintenance:cleanup-retract"),
+            spark, state_path, process_owner("maintenance:cleanup-retract")
         ):
             return cleanup_retract_join_state(
-                spark, state_path, horizon, compression, lease=False
+                spark, state_path, horizon, lease=False
             )
-    horizon = int(horizon)  # same coercion contract as the agg twin
-    pk_dir = os.path.join(state_path, "pk_state")
-    _record_replay_horizon(spark, state_path, horizon)
-    # fold the outstanding delta log first so every expired tombstone
-    # sits in the pk base the pruned rewrite below operates on
-    fold_retract_join_state(spark, state_path, compression, lease=False)
-    if not _orc_files_exist(spark, pk_dir):
-        return {"tombstones_dropped": 0, "buckets_rewritten": 0}
-    st = spark.read.orc(pk_dir)
-    expired = (F.col("op") == "D") & (F.col("seq") < F.lit(horizon))
-    # one scan yields both the touched (side, kp) pairs and the drop
-    # count (bounded by 2 x n_key_partitions rows)
-    per_bucket = (
-        st.filter(expired).groupBy("side", "kp").count().collect()
-    )
-    if not per_bucket:
-        return {"tombstones_dropped": 0, "buckets_rewritten": 0}
-    touched = [(r.side, r.kp) for r in per_bucket]
-    n_doomed = sum(r["count"] for r in per_bucket)
-    keep = (
-        st.filter(_pair_filter("kp", touched))
-        .filter(~F.coalesce(expired, F.lit(False)))
-        .localCheckpoint(eager=True)
-    )
-    try:
-        _overwrite_buckets(
-            keep, pk_dir, ["side", "kp"], touched, compression
-        )
-    finally:
-        release_local_checkpoint(keep)
-    return {
-        "tombstones_dropped": n_doomed,
-        "buckets_rewritten": len(touched),
-    }
+    return _join_table(state_path).cleanup(spark, horizon)
 
 
 def _overwrite_buckets(
-    df: DataFrame,
-    path: str,
-    part_cols: list[str],
-    touched: list[tuple],
-    compression: str,
+    df: DataFrame, path: str, part_cols: list[str], touched: list[tuple]
 ) -> None:
     """Overwrite exactly the ``touched`` partitions of ``path`` with
     ``df`` (whose ``part_cols`` tuples are all in ``touched``).
@@ -1207,13 +1084,7 @@ def _overwrite_buckets(
     steps are idempotent, so a crash-replay that repeats them lands
     in the same state."""
     spark = df.sparkSession
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .option("compression", compression)
-        .partitionBy(*part_cols)
-        .orc(path)
-    )
+    _dynamic_overwrite(df, path, *part_cols)
     present = {
         tuple(r) for r in df.select(*part_cols).distinct().collect()
     }
@@ -1225,18 +1096,18 @@ def _overwrite_buckets(
             _hfs_rmtree(spark, os.path.join(path, sub))
 
 
-def _pair_filter(bucket_col: str, pairs: list):
-    """Exact ``(side, bucket)``-pair predicate (grouped per side into
-    one ``isin``) — ONE definition shared by the retract-join sink's
-    partition-pruned reads and the pk-layer tombstone cleanup."""
+def _bucket_filter(cols, touched: list):
+    """Exact predicate for the ``touched`` partition tuples of
+    ``cols`` — ``kp IN (..)``, or per side ``side = s AND kp IN
+    (..)`` — shared by every partition-pruned state read."""
+    if len(cols) == 1:
+        return F.col(cols[0]).isin([t[0] for t in touched])
     by_side: dict = {}
-    for s, b in pairs:
+    for s, b in touched:
         by_side.setdefault(s, []).append(b)
     cond = F.lit(False)
     for s, bs in by_side.items():
-        cond = cond | (
-            (F.col("side") == s) & F.col(bucket_col).isin(bs)
-        )
+        cond = cond | ((F.col(cols[0]) == s) & F.col(cols[1]).isin(bs))
     return cond
 
 
@@ -1282,119 +1153,78 @@ def _rj_bucket_join(sides: DataFrame, how: str) -> DataFrame:
     )
 
 
-def _rj_order():
-    # built lazily: module import must not require a live SparkContext
-    return [F.col("seq").desc()]
+def _rj_jb(n_join_buckets: int):
+    """The join bucket of a row: its ``jk``, hashed."""
+    return F.pmod(F.hash(F.col("jk")), F.lit(n_join_buckets))
 
 
-def _rj_resolve_images(
-    spark: SparkSession,
-    state_path: str,
-    pks: DataFrame,
-    n_key_partitions: int,
-    upto_batch: int | None = None,
-):
-    """Rows (all versions) of the given ``(side, pk)`` keys across
-    pk base ∪ pk log (optionally only log batches below
-    ``upto_batch``) — a read-only, partition-pruned lookup. Resolve
-    with :func:`_latest_per_key` afterwards. Returns None when no
-    state exists yet."""
-    base_dir = os.path.join(state_path, "pk_state")
-    log_dir = os.path.join(state_path, "pk_log")
-    cand = None
-    if _orc_files_exist(spark, base_dir):
-        kpairs = [
-            tuple(r)
-            for r in pks.select(
-                "side",
-                F.pmod(F.hash(F.col("pk")), F.lit(n_key_partitions))
-                .alias("kp"),
-            )
-            .distinct()
-            .collect()
-        ]
-        if kpairs:
-            cand = (
-                spark.read.orc(base_dir)
-                .filter(_pair_filter("kp", kpairs))
-                .join(pks, ["side", "pk"], "left_semi")
-            )
-    if _orc_files_exist(spark, log_dir):
-        lg = spark.read.orc(log_dir)
-        if upto_batch is not None:
-            lg = lg.filter(F.col("batch_id") < upto_batch)
-        lg = lg.drop("batch_id").join(pks, ["side", "pk"], "left_semi")
-        cand = lg if cand is None else cand.unionByName(lg)
-    return cand
-
-
-def _rj_layout(spark: SparkSession, state_path: str) -> dict:
-    layout = _read_layout(spark, state_path)
-    return {
-        "nkp": int(layout.get("nkp", 16)),
-        "njb": int(layout.get("njb", 16)),
-        "how": layout.get("how", "inner"),
-    }
+def _rj_images(df: DataFrame, jb_of) -> DataFrame:
+    return df.select(
+        "side", "pk", "jk", "seq", "op", "val", "attr", jb_of.alias("jb")
+    )
 
 
 def _rj_log_effect(
-    spark: SparkSession,
-    state_path: str,
-    lay: dict,
-    checkpoint_cand: bool = False,
+    spark: SparkSession, table, logpks: DataFrame, cand: DataFrame
 ):
     """Shared resolution of an unfolded delta log's effect on the jk
     layer — the byte-equivalence contract between the MOR reader
-    (:func:`read_retract_join_view`) and :func:`fold_retract_join_state`:
-    both must answer from the SAME ``(aff, sides)`` or a fold would
-    materialize a view the reader didn't answer. Returns
-    ``(log, logpks, cand, aff, sides)``; with ``checkpoint_cand`` the
-    caller owns releasing ``cand``."""
-    jb_of = F.pmod(F.hash(F.col("jk")), F.lit(lay["njb"]))
-    log = spark.read.orc(os.path.join(state_path, "pk_log")).drop(
-        "batch_id"
+    (:func:`read_retract_join_view`) and the fold: both answer from
+    the SAME ``(aff, sides)`` or a fold would materialize a view the
+    reader didn't answer. ``cand`` is every stored version of the
+    logged pks (base rows of logged pks ∪ all log rows). Affected
+    buckets come from the log rows' join keys PLUS the logged pks'
+    base images (the only record of a moved pk's OLD bucket)."""
+    jb_of = _rj_jb(int(table.layout(spark)["njb"]))
+    aff = sorted(
+        r.jb for r in cand.select(jb_of.alias("jb")).distinct().collect()
     )
+    sides = _rj_images(
+        table.resolve(spark, cand).filter(F.col("op") == "U"), jb_of
+    )
+    jk_dir = os.path.join(table.path, "jk_state")
+    if _orc_files_exist(spark, jk_dir):
+        sides = (
+            spark.read.orc(jk_dir)
+            .filter(F.col("jb").isin(aff))
+            .join(logpks, ["side", "pk"], "left_anti")
+            .unionByName(sides)
+        )
+    return aff, sides
+
+
+def _rj_fold_view(spark: SparkSession, table, log: DataFrame) -> dict:
+    """Before-base fold step of the join table: rewrite the jk layer,
+    then the view, for the log-affected join buckets — computed from
+    the still-intact base ∪ log, so after any crash prefix the
+    merge-on-read answer is unchanged (the log goes last)."""
+    lay = table.layout(spark)
     logpks = log.select("side", "pk").distinct()
-    cand = _rj_resolve_images(
-        spark, state_path, logpks, lay["nkp"]
-    )  # = base rows of logged pks ∪ all log rows
-    if checkpoint_cand:
-        cand = cand.localCheckpoint(eager=True)
+    held = []  # every eager checkpoint, released on the failure path too
     try:
-        aff = sorted(
-            r.jb
-            for r in cand.select(jb_of.alias("jb")).distinct().collect()
+        cand = table.lookup(spark, logpks, buckets=log)
+        cand = cand.localCheckpoint(eager=True)
+        held.append(cand)
+        aff, sides = _rj_log_effect(spark, table, logpks, cand)
+        sides = sides.localCheckpoint(eager=True)
+        held.append(sides)
+        _overwrite_buckets(
+            sides,
+            os.path.join(table.path, "jk_state"),
+            ["side", "jb"],
+            [(s, b) for s in ("L", "R") for b in aff],
         )
-        resolved = (
-            _latest_per_key(cand, ["side", "pk"], _rj_order())
-            .filter(F.col("op") == "U")
-            .withColumn("jb", jb_of)
-            .select("side", "pk", "jk", "seq", "op", "val", "attr", "jb")
+        view_aff = _rj_bucket_join(sides, lay["how"])
+        view_aff = view_aff.localCheckpoint(eager=True)
+        held.append(view_aff)
+        _overwrite_buckets(
+            view_aff, os.path.join(table.path, "view"), ["jb"],
+            [(b,) for b in aff],
         )
-        jk_dir = os.path.join(state_path, "jk_state")
-        if _orc_files_exist(spark, jk_dir):
-            kept = (
-                spark.read.orc(jk_dir)
-                .filter(F.col("jb").isin(aff))
-                .join(logpks, ["side", "pk"], "left_anti")
-            )
-            sides = kept.unionByName(resolved)
-        else:
-            sides = resolved
-    except BaseException:
-        # the caller's release-on-failure finally only starts after
-        # this helper RETURNS — if the aff collect (a Spark job) or
-        # plan construction dies here, the eager checkpoint blocks
-        # would leak for the session's lifetime. Release and re-raise.
-        # (Dataset.unpersist() silently NO-OPS on checkpoint blocks —
-        # session.py:235 — so only the helper actually frees them.)
-        if checkpoint_cand:
-            try:
-                release_local_checkpoint(cand)
-            except Exception:
-                pass
-        raise
-    return log, logpks, cand, aff, sides
+    finally:
+        for df in held:
+            release_local_checkpoint(df)
+    return {"jk_buckets": len(aff)}
 
 
 def read_retract_join_view(
@@ -1406,22 +1236,19 @@ def read_retract_join_view(
     every bucket as of the last FOLD; buckets affected by the
     unfolded delta log are recomputed from resolved pk state. With an
     empty log this is a plain read of ``view/``; right after a
-    bootstrap load it is a full join of the resolved log. Affected
-    buckets are found from the log rows' join keys PLUS the logged
-    pks' base images (the only record of a moved pk's OLD bucket)."""
-    lay = _rj_layout(spark, state_path)
-    how = lay["how"]
+    bootstrap load it is a full join of the resolved log."""
+    table = _join_table(state_path)
     view_dir = os.path.join(state_path, "view")
-    log_dir = os.path.join(state_path, "pk_log")
     have_view = _orc_files_exist(spark, view_dir)
-    if not _orc_files_exist(spark, log_dir):
+    if not _orc_files_exist(spark, table.log_dir):
         if have_view:
             return spark.read.orc(view_dir)
         return spark.createDataFrame([], VIEW_SCHEMA)
-    _log, _logpks, _cand, aff, sides = _rj_log_effect(
-        spark, state_path, lay
-    )
-    view_aff = _rj_bucket_join(sides, how)
+    log = table.read_log(spark)
+    logpks = log.select("side", "pk").distinct()
+    cand = table.lookup(spark, logpks, buckets=log)
+    aff, sides = _rj_log_effect(spark, table, logpks, cand)
+    view_aff = _rj_bucket_join(sides, table.layout(spark)["how"])
     if have_view:
         return (
             spark.read.orc(view_dir)
@@ -1432,108 +1259,26 @@ def read_retract_join_view(
 
 
 def fold_retract_join_state(
-    spark: SparkSession,
-    state_path: str,
-    compression: str = "zstd",
-    lease: bool = True,
+    spark: SparkSession, state_path: str, lease: bool = True
 ) -> dict:
     """Fold a :func:`stream_retract_join_orc` delta log: update the
     jk layer and materialized view for the log-affected join buckets,
     fold the pk log into the pk base (latest-per-pk, changed buckets
     only), then drop the log. WRITE ORDER IS THE CRASH CONTRACT —
     jk/view first (computed from the still-intact base ∪ log), pk
-    base second, log delete last: after any prefix of the writes the
-    merge-on-read resolution (base ∪ log with latest-per-pk, jk/view
-    overridden per logged pk) still answers exactly, because the log
-    is only deleted once everything it said is durably folded.
+    base second, log delete last (:meth:`_DeltaLogTable.fold`).
     Layout parameters come from the state dir's markers. Returns
     fold statistics."""
     if lease:
         with state_lease(
             spark, state_path, process_owner("maintenance:fold-retract")
         ):
-            return fold_retract_join_state(
-                spark, state_path, compression, lease=False
-            )
-    log_dir = os.path.join(state_path, "pk_log")
-    if not _orc_files_exist(spark, log_dir):
-        return {"log_rows_folded": 0, "jk_buckets": 0, "pk_buckets": 0}
-    lay = _rj_layout(spark, state_path)
-    how = lay["how"]
-    base_dir = os.path.join(state_path, "pk_state")
-    jk_dir = os.path.join(state_path, "jk_state")
-    view_dir = os.path.join(state_path, "view")
-
-    log, logpks, cand, aff, sides = _rj_log_effect(
-        spark, state_path, lay, checkpoint_cand=True
-    )
-    try:
-        # inside the try: this count is a full Spark job (reads
-        # pk_log) — if it fails outside the release window, cand's
-        # eager checkpoint blocks leak for the session lifetime
-        n_log = log.count()
-        sides = sides.localCheckpoint(eager=True)
-        try:
-            pairs = [(s, b) for s in ("L", "R") for b in aff]
-            _overwrite_buckets(
-                sides, jk_dir, ["side", "jb"], pairs, compression
-            )
-            view_aff = _rj_bucket_join(sides, how).localCheckpoint(
-                eager=True
-            )
-            try:
-                _overwrite_buckets(
-                    view_aff,
-                    view_dir,
-                    ["jb"],
-                    [(b,) for b in aff],
-                    compression,
-                )
-            finally:
-                release_local_checkpoint(view_aff)
-        finally:
-            release_local_checkpoint(sides)
-        # pk base fold: latest-per-pk over (changed buckets ∪ log)
-        changed = [
-            tuple(r)
-            for r in log.select(
-                "side",
-                F.pmod(F.hash(F.col("pk")), F.lit(lay["nkp"]))
-                .alias("kp"),
-            )
-            .distinct()
-            .collect()
-        ]
-        merged = _latest_per_key(cand, ["side", "pk"], _rj_order())
-        # cand already includes every base row of the logged pks, and
-        # unlogged pks' base rows are untouched — only logged pks'
-        # rows change, so the dynamic overwrite below must re-emit
-        # the UNLOGGED rows of the changed buckets too:
-        if _orc_files_exist(spark, base_dir):
-            untouched = (
-                spark.read.orc(base_dir)
-                .filter(_pair_filter("kp", changed))
-                .join(logpks, ["side", "pk"], "left_anti")
-            )
-            merged = merged.unionByName(untouched)
-        merged = merged.localCheckpoint(eager=True)
-        try:
-            (
-                merged.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .option("compression", compression)
-                .partitionBy("side", "kp")
-                .orc(base_dir)
-            )
-        finally:
-            release_local_checkpoint(merged)
-    finally:
-        release_local_checkpoint(cand)
-    _hfs_rmtree(spark, log_dir)
+            return fold_retract_join_state(spark, state_path, lease=False)
+    out = _join_table(state_path).fold(spark)
     return {
-        "log_rows_folded": n_log,
-        "jk_buckets": len(aff),
-        "pk_buckets": len(changed),
+        "log_rows_folded": out["log_rows_folded"],
+        "jk_buckets": out.get("jk_buckets", 0),
+        "pk_buckets": out["buckets_rewritten"],
     }
 
 
@@ -1544,7 +1289,6 @@ def stream_retract_join_orc(
     n_key_partitions: int = 16,
     n_join_buckets: int = 16,
     trigger: dict | None = None,
-    compression: str = "zstd",
     agg_group_col: str | None = None,
     agg_val_col: str | None = None,
     how: str = "inner",
@@ -1569,261 +1313,126 @@ def stream_retract_join_orc(
     Input stream schema: ``side ('L'|'R'), pk, jk, seq, op,
     val (left payload), attr (right payload)``.
 
-    STATE IS AN LSM TRIPLE (round 9 — this removed the only
-    data-shape-dependent scale cliff, the full merge-on-write pass a
-    uniformly-random-key batch used to pay):
-
-    - ``pk_state/`` — pk BASE: latest-per-(side,pk) rows partitioned
-      ``(side, kp)``; rewritten only by FOLDS;
-    - ``pk_log/`` — the DELTA LOG: each batch appended under its
-      ``batch_id`` partition (dynamic overwrite → replay-idempotent);
-    - ``jk_state/`` + ``view/`` — the jk layer and materialized view,
-      both AS OF THE LAST FOLD; between folds the log's effect on
-      them is applied at read time (:func:`read_retract_join_view` —
-      merge-on-read, the Hudi/Paimon MOR shape).
-
-    Per batch (all reads partition-pruned and semi-joined; the ONLY
-    state write is the O(batch) log append):
+    The pk state is a :class:`_DeltaLogTable` (``pk_state/`` +
+    ``pk_log/``, latest ``seq`` per ``(side, pk)``), which states the
+    lease, append, fold, cleanup and crash contract. ``jk_state/``
+    (live images by ``(side, jb)``, ``jb = hash(jk) %
+    n_join_buckets``) and ``view/`` hold the join AS OF THE LAST FOLD;
+    between folds :func:`read_retract_join_view` applies the log at
+    read time (merge-on-read, the Hudi/Paimon MOR shape). The
+    per-batch extras, all reads partition-pruned and semi-joined:
 
     1. resolve the batch pks' PRE- and POST-images over
-       base ∪ log[< batch] ∪ batch — from which the RETRACTION
-       STREAM (``deltas/batch_id=N``: pre-image → retract, post-image
-       → add) is derived, marker-guarded;
+       base ∪ log[< batch] ∪ batch, and write the RETRACTION STREAM
+       (``deltas/batch_id=N``: pre-image → retract, post-image → add),
+       marker-guarded by ``applied/``;
     2. with ``agg_group_col`` set, land additive per-group aggregate
        deltas: the view diff of the batch-AFFECTED join buckets,
        computed from (jk layer ⊕ log overrides) old vs new — never a
-       group rescan, never a view rewrite (marker-guarded,
-       ``agg_deltas/batch_id=N``; readback :func:`read_retract_agg`);
-    3. append the batch to ``pk_log``;
-    4. FOLD when the log outgrows ``max(64 MB, fold_ratio × base)``
-       (:func:`fold_retract_join_state`): jk/view updated for the
-       log-affected buckets, pk base folded, log dropped — amortized
-       O(batch / fold_ratio) rows per batch, state-size-independent.
+       group rescan, never a view rewrite (marker-guarded by
+       ``agg_applied/``, ``agg_deltas/batch_id=N``; readback
+       :func:`read_retract_agg`).
+
+    ``how="left"`` maintains the left outer join, null-extension flips
+    included. Tombstones are kept to mask below-horizon replays until
+    :func:`cleanup_retract_join_state` (or the sink's own cadence,
+    ``cleanup_every_n_batches`` + ``horizon_fn``) ages them out; the
+    sink then drops rows with ``seq`` below the recorded horizon at
+    ingest.
 
     COST MODEL (measured, ``tools/scale_probe_retract_join.py``):
-    clustered churn (the production CDC shape) reads only the key- and
-    join-buckets the batch touches; UNIFORMLY-RANDOM churn — the
-    round-8 degenerate case that used to pay a full
-    read+shuffle+rewrite per batch — now pays a map-side pruned scan
-    for the image lookups plus the O(batch) append, with the full
-    pass deferred to fold cadence. Per-batch wall stays ~flat across
-    a 20× state growth on BOTH key distributions.
-
-    Crash-replay: the image resolves read only ``batch_id < current``
-    log partitions and the base — neither is mutated before the log
-    append, so a replayed batch recomputes byte-identical deltas with
-    or without its marker; the log append and both delta writes are
-    idempotent per ``batch_id``; folds converge from any crash prefix
-    (the log is deleted last — see :func:`fold_retract_join_state`).
-    A full feed replay through a fresh checkpoint against populated
-    state also converges: every step is a pure function of
-    authoritative (base ∪ log) state.
-
-    Tombstone retention mirrors :func:`stream_retract_agg_orc`:
-    ``op='D'`` rows are kept (base or log) to mask below-horizon
-    replays; age them out with :func:`cleanup_retract_join_state`
-    (which folds first), after which the sink also drops
-    below-horizon arrivals at ingest.
-
-    Lease + cadence: every micro-batch holds the ``state_path``
-    single-writer lease (owner-keyed to the checkpoint — restart
-    reclaims instantly, a concurrent maintenance op fails loudly),
-    and with ``cleanup_every_n_batches`` + ``horizon_fn`` set the
-    sink runs :func:`cleanup_retract_join_state` itself every Nth
-    batch under that same lease."""
-    lease_owner = f"sink:{checkpoint}"
-    jb_of = F.pmod(F.hash(F.col("jk")), F.lit(n_join_buckets))
+    clustered churn reads only the key- and join-buckets the batch
+    touches; uniformly-random churn pays a map-side pruned scan for
+    the image lookups plus the O(batch) append, with the full pass
+    deferred to fold cadence. Per-batch wall stays ~flat across a 20×
+    state growth on BOTH key distributions. A full feed replay
+    through a fresh checkpoint against populated state also
+    converges: every step is a pure function of authoritative
+    (base ∪ log) state."""
+    state = _join_table(state_path, dict(
+        nkp=n_key_partitions, njb=n_join_buckets, how=how
+    ))
+    jb_of = _rj_jb(n_join_buckets)
     live = F.col("op") == "U"
-    cache: dict = {}
+    jk_dir = os.path.join(state_path, "jk_state")
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        with state_lease(spark, state_path, lease_owner):
-            _apply(batch_df, batch_id)
-            if (
-                cleanup_every_n_batches
-                and horizon_fn is not None
-                and (batch_id + 1) % cleanup_every_n_batches == 0
-            ):
-                cleanup_retract_join_state(
-                    spark,
-                    state_path,
-                    int(horizon_fn()),
-                    compression,
-                    lease=False,  # already held by this batch
-                )
-
-    def _img_cols(df: DataFrame) -> DataFrame:
-        return df.select(
-            "side", "pk", "jk", "seq", "op", "val", "attr",
-            jb_of.alias("jb"),
+    def images(spark: SparkSession, ch: DataFrame, batch_id: int) -> None:
+        marker = os.path.join(state_path, "applied", f"batch_{batch_id}")
+        agg_marker = os.path.join(
+            state_path, "agg_applied", f"batch_{batch_id}"
         )
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        base_dir = os.path.join(state_path, "pk_state")
-        log_dir = os.path.join(state_path, "pk_log")
-        jk_dir = os.path.join(state_path, "jk_state")
-        deltas_root = os.path.join(state_path, "deltas")
-
-        # re-read EVERY batch (one listStatus, no Spark job): an
-        # external cleanup_retract_state between triggers moves the
-        # horizon, and the docstring contract is that the sink
-        # enforces the recorded horizon on every subsequent batch —
-        # a cached value would admit below-horizon replays that can
-        # resurrect cleaned-up keys.
-        horizon = _read_replay_horizon(spark, state_path)
-        if horizon is not None:
-            # same ingest guard as the retract-agg sink, NULL-safe
-            batch_df = batch_df.filter(
-                F.coalesce(F.col("seq") >= F.lit(horizon), F.lit(True))
-            )
-        if "layout" not in cache:
-            _record_layout(
-                spark,
-                state_path,
-                nkp=n_key_partitions,
-                njb=n_join_buckets,
-                how=how,
-            )
-            cache["layout"] = True
-
-        ch = batch_df.withColumn(
-            "kp", F.pmod(F.hash(F.col("pk")), F.lit(n_key_partitions))
-        ).localCheckpoint(eager=True)
+        need_deltas = not _hfs_exists(spark, marker)
+        need_agg = agg_group_col is not None and not _hfs_exists(
+            spark, agg_marker
+        )
+        if not (need_deltas or need_agg):
+            return
+        # every eager checkpoint below materializes INSIDE the try: a
+        # failure building a later image must still release the
+        # earlier ones, or a restarting stream leaks one block set per
+        # crash
+        held = []
         try:
-            marker = os.path.join(
-                state_path, "applied", f"batch_{batch_id}"
+            cand = state.lookup(
+                spark, ch.select("side", "pk").distinct(), batch_id,
+                buckets=ch,
             )
-            marker2 = os.path.join(
-                state_path, "agg_applied", f"batch_{batch_id}"
-            )
-            need_deltas = not _hfs_exists(spark, marker)
-            need_agg = agg_group_col is not None and not _hfs_exists(
-                spark, marker2
-            )
-            if need_deltas or need_agg:
-                S = ch.select("side", "pk").distinct()
-                # every eager checkpoint in this block materializes
-                # INSIDE the try: a failure building any later image
-                # must still release the earlier ones in the finally,
-                # or a restarting stream leaks one block set per crash
-                cand_S = pre_S = post_S = None
-                try:
-                    cand_S = _rj_resolve_images(
-                        spark, state_path, S, n_key_partitions,
-                        upto_batch=batch_id,
+            # the images are batch-pk-sized and consumed by up to FOUR
+            # downstream DAGs (the deltas write, the affected-bucket
+            # collect, both sides of the aggregate diff): materialize
+            # each window ONCE (stream_retract_join_agg at sf0.1:
+            # 78 -> 68 Spark jobs, 21.3 -> 11.8 s for the drain)
+            pre = None
+            if cand is not None:
+                cand = cand.localCheckpoint(eager=True)
+                held.append(cand)
+                pre = state.resolve(spark, cand).localCheckpoint(eager=True)
+                held.append(pre)
+            post = state.resolve(
+                spark, ch if cand is None else cand.unionByName(ch)
+            ).localCheckpoint(eager=True)
+            held.append(post)
+            if need_deltas:
+                deltas = (
+                    post.filter(live).drop("kp")
+                    .withColumn("kind", F.lit("add"))
+                )
+                if pre is not None:
+                    deltas = deltas.unionByName(
+                        pre.filter(live).drop("kp")
+                        .withColumn("kind", F.lit("retract"))
                     )
-                    if cand_S is not None:
-                        cand_S = cand_S.localCheckpoint(eager=True)
-                    # the pre/post images are batch-pk-sized and
-                    # consumed by up to FOUR downstream DAGs (the
-                    # deltas write, the affected-bucket collect, and
-                    # both sides of the aggregate diff): materialize
-                    # each window ONCE instead of re-running the
-                    # shuffle+sort subtree per consumer (measured on
-                    # stream_retract_join_agg at sf0.1: 78 -> 68 Spark
-                    # jobs, 21.3 -> 11.8 s same-session for the
-                    # three-batch drain)
-                    if cand_S is not None:
-                        pre_S = _latest_per_key(
-                            cand_S, ["side", "pk"], _rj_order()
-                        ).localCheckpoint(eager=True)
-                    post_S = _latest_per_key(
-                        cand_S.unionByName(ch)
-                        if cand_S is not None
-                        else ch,
-                        ["side", "pk"],
-                        _rj_order(),
-                    ).localCheckpoint(eager=True)
-                    if need_deltas:
-                        deltas = (
-                            post_S.filter(live)
-                            .drop("kp")
-                            .withColumn("kind", F.lit("add"))
-                        )
-                        if pre_S is not None:
-                            deltas = deltas.unionByName(
-                                pre_S.filter(live)
-                                .drop("kp")
-                                .withColumn("kind", F.lit("retract"))
-                            )
-                        (
-                            deltas.withColumn(
-                                "batch_id", F.lit(batch_id)
-                            )
-                            .write.mode("overwrite")
-                            .option("partitionOverwriteMode", "dynamic")
-                            .option("compression", compression)
-                            .partitionBy("batch_id")
-                            .orc(deltas_root)
-                        )
-                        _hfs_mkdirs(spark, marker)
-                    if need_agg:
-                        self_aff = post_S.filter(live).select(
-                            jb_of.alias("jb")
-                        )
-                        if pre_S is not None:
-                            self_aff = self_aff.unionByName(
-                                pre_S.filter(live).select(
-                                    jb_of.alias("jb")
-                                )
-                            )
-                        aff = sorted(
-                            r.jb
-                            for r in self_aff.distinct().collect()
-                        )
-                        if aff:
-                            _agg_diff(
-                                spark, ch, pre_S, post_S, aff,
-                                batch_id, marker2,
-                            )
-                finally:
-                    for img in (cand_S, pre_S, post_S):
-                        if img is not None:
-                            release_local_checkpoint(img)
-            # the ONLY per-batch state write: the log append
-            (
-                ch.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .option("compression", compression)
-                .partitionBy("batch_id")
-                .orc(log_dir)
-            )
+                _write_batch(
+                    deltas, os.path.join(state_path, "deltas"), batch_id
+                )
+                _hfs_mkdirs(spark, marker)
+            if need_agg:
+                self_aff = post.filter(live).select(jb_of.alias("jb"))
+                if pre is not None:
+                    self_aff = self_aff.unionByName(
+                        pre.filter(live).select(jb_of.alias("jb"))
+                    )
+                aff = sorted(r.jb for r in self_aff.distinct().collect())
+                if aff:
+                    agg_diff(spark, ch, pre, post, aff, batch_id)
+                    _hfs_mkdirs(spark, agg_marker)
         finally:
-            # released before the fold below — the fold reads only
-            # on-disk state, so holding the batch blocks through it
-            # would be pure executor-storage pressure
-            release_local_checkpoint(ch)
-        if _should_fold(spark, base_dir, log_dir, fold_ratio):
-            fold_retract_join_state(
-                spark, state_path, compression, lease=False
-            )
+            for df in held:
+                release_local_checkpoint(df)
 
-    def _agg_diff(
-        spark: SparkSession,
-        ch: DataFrame,
-        pre_S: DataFrame | None,
-        post_S: DataFrame,
-        aff: list,
-        batch_id: int,
-        marker2: str,
-    ) -> None:
+    def agg_diff(spark, ch, pre, post, aff, batch_id) -> None:
         """Additive per-group aggregate deltas of batch ``batch_id``:
         view diff of the affected join buckets, OLD = (jk layer ⊕
         log[<batch] overrides), NEW = same ⊕ batch. Never rewrites
         state; reads are bucket-pruned and semi-joined."""
-        log_dir = os.path.join(state_path, "pk_log")
-        jk_dir = os.path.join(state_path, "jk_state")
+        in_aff = jb_of.isin(aff)
         S = ch.select("side", "pk").distinct()
         # log pks that can override the jk layer inside the affected
         # buckets: any logged pk with a row whose jk lands there
-        anti_pks = S
-        imgs_P = None
-        if _orc_files_exist(spark, log_dir):
+        anti_pks, imgs_P = S, None
+        if _orc_files_exist(spark, state.log_dir):
             lg = (
-                spark.read.orc(log_dir)
+                spark.read.orc(state.log_dir)
                 .filter(F.col("batch_id") < batch_id)
                 .drop("batch_id")
             )
@@ -1838,24 +1447,20 @@ def stream_retract_join_orc(
             # is logged. Pruning by log rows alone dropped the live
             # image of a folded pk whose only unfolded log rows hash
             # to other buckets, silently skewing the aggregate.
-            in_aff = lg.filter(jb_of.isin(aff)).select("side", "pk")
+            P = lg.filter(in_aff).select("side", "pk")
             if _orc_files_exist(spark, jk_dir):
-                in_aff = in_aff.unionByName(
+                P = P.unionByName(
                     spark.read.orc(jk_dir)
                     .filter(F.col("jb").isin(aff))
                     .join(logpks, ["side", "pk"], "left_semi")
                     .select("side", "pk")
                 )
-            P = in_aff.distinct().join(S, ["side", "pk"], "left_anti")
-            cand_P = _rj_resolve_images(
-                spark, state_path, P, n_key_partitions,
-                upto_batch=batch_id,
-            )
+            P = P.distinct().join(S, ["side", "pk"], "left_anti")
+            cand_P = state.lookup(spark, P, batch_id)
             if cand_P is not None:
-                imgs_P = (
-                    _latest_per_key(cand_P, ["side", "pk"], _rj_order())
-                    .filter(live)
-                    .filter(jb_of.isin(aff))
+                imgs_P = _rj_images(
+                    state.resolve(spark, cand_P).filter(live).filter(in_aff),
+                    jb_of,
                 )
         base_part = None
         if _orc_files_exist(spark, jk_dir):
@@ -1865,64 +1470,46 @@ def stream_retract_join_orc(
                 .join(anti_pks, ["side", "pk"], "left_anti")
             )
 
-        def _side(images) -> DataFrame | None:
-            parts = [
-                p for p in (base_part, imgs_P) if p is not None
-            ]
-            if images is not None:
-                parts.append(images)
+        def sides(img):
+            parts = [p for p in (base_part, imgs_P) if p is not None]
+            if img is not None:
+                parts.append(_rj_images(img.filter(live).filter(in_aff), jb_of))
             if not parts:
                 return None
-            out = None
-            for p in parts:
-                p = _img_cols(p) if "jb" not in p.columns else p
-                out = p if out is None else out.unionByName(p)
+            out = parts[0]
+            for p in parts[1:]:
+                out = out.unionByName(p)
             return out.filter(F.col("jb").isin(aff))
 
-        old_imgs = (
-            pre_S.filter(live).filter(jb_of.isin(aff))
-            if pre_S is not None
-            else None
-        )
-        new_imgs = post_S.filter(live).filter(jb_of.isin(aff))
-        old_sides = _side(old_imgs)
-        new_sides = _side(new_imgs)
-
-        def gd(view_df: DataFrame, sign: int) -> DataFrame:
-            return view_df.select(
+        def gd(view: DataFrame, sign: int) -> DataFrame:
+            return view.select(
                 F.col(agg_group_col).alias("grp"),
                 (F.coalesce(F.col(agg_val_col), F.lit(0)) * sign)
-                .cast("long")
-                .alias("d_sum"),
+                .cast("long").alias("d_sum"),
                 F.lit(sign).cast("long").alias("d_count"),
             )
 
-        dparts = gd(_rj_bucket_join(new_sides, how), 1)
+        deltas = gd(_rj_bucket_join(sides(post), how), 1)
+        old_sides = sides(pre)
         if old_sides is not None:
-            dparts = dparts.unionByName(
-                gd(_rj_bucket_join(old_sides, how), -1)
-            )
-        (
-            dparts.groupBy("grp")
-            .agg(
-                F.sum("d_sum").alias("d_sum"),
-                F.sum("d_count").alias("d_count"),
-            )
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .option("compression", compression)
-            .partitionBy("batch_id")
-            .orc(os.path.join(state_path, "agg_deltas"))
+            deltas = deltas.unionByName(gd(_rj_bucket_join(old_sides, how), -1))
+        _write_batch(
+            _sum_deltas(deltas), os.path.join(state_path, "agg_deltas"),
+            batch_id,
         )
-        _hfs_mkdirs(spark, marker2)
 
-    writer = changes.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint
+    return state.start(
+        changes, checkpoint, trigger, fold_ratio,
+        fold=lambda spark: fold_retract_join_state(
+            spark, state_path, lease=False
+        ),
+        extras=images,
+        cleanup=lambda spark, h: cleanup_retract_join_state(
+            spark, state_path, h, lease=False
+        ),
+        every=cleanup_every_n_batches,
+        horizon_fn=horizon_fn,
     )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
 
 
 def stream_quarantine_orc(
@@ -1953,14 +1540,9 @@ def stream_quarantine_orc(
                 (valid_path, expectation),
                 (quarantine_path, ~F.coalesce(expectation, F.lit(False))),
             ):
-                (
-                    staged.filter(pred)
-                    .withColumn("batch_id", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .option("compression", compression)
-                    .partitionBy("batch_id")
-                    .orc(target)
+                _write_batch(
+                    staged.filter(pred), target, batch_id,
+                    compression=compression,
                 )
         finally:
             # Checkpointed blocks otherwise linger until the JVM

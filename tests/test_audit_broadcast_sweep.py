@@ -95,3 +95,4 @@ def test_sweep_clean_on_package():
         "flink_orc_sink_spark",
     )
     assert audit_plans._audit_forced_broadcasts(pkg) == []
+    assert audit_plans._audit_checkpoint_hygiene(pkg) == []

@@ -20,8 +20,10 @@ from flink_orc_sink_spark.streaming import (
     stream_write_orc,
 )
 
-# slow tier: 35 crash/replay/convergence integration tests, ~520 s alone — excluded from the default (driver) gate, see pytest.ini
-pytestmark = pytest.mark.slow
+# Tiers: one test per stateful sink, the plain fold's crash window, the
+# tombstone-cleanup order column and the state-dir layout run by
+# default; the other crash/replay/convergence integration tests carry
+# the `slow` mark (see pytest.ini).
 
 
 def _write_input(spark, path: str, ids: range) -> None:
@@ -30,6 +32,7 @@ def _write_input(spark, path: str, ids: range) -> None:
     ).coalesce(1).write.mode("append").parquet(path)
 
 
+@pytest.mark.slow
 def test_exactly_once_across_restart(spark, tmp_path):
     src = str(tmp_path / "in")
     out = str(tmp_path / "out")
@@ -64,6 +67,7 @@ def test_exactly_once_across_restart(spark, tmp_path):
     assert read_committed_orc(spark, out).count() == 250
 
 
+@pytest.mark.slow
 def test_partitioned_streaming_sink(spark, tmp_path):
     """Bucketer parity: partition column routes rows to k=v dirs
     (RowOrcBucketingSink.java:41,111) under streaming commit."""
@@ -83,6 +87,7 @@ def test_partitioned_streaming_sink(spark, tmp_path):
     assert back.filter(F.col("user") == "u1").count() == 10
 
 
+@pytest.mark.slow
 def test_watermark_tracking(spark, tmp_path):
     """T4/T6 parity: withWatermark + windowed agg; the listener
     observes the event-time watermark advancing (UTC, no −8h hack —
@@ -120,6 +125,7 @@ def test_watermark_tracking(spark, tmp_path):
         spark.streams.removeListener(tracker)
 
 
+@pytest.mark.slow
 def test_csv_parse_demo_parity(spark):
     """P1: the reference demo's map (OrcSinkTest.java:32-37)."""
     lines = spark.createDataFrame([("1,2",), ("3,4",), ("bad",)], "value string")
@@ -131,6 +137,7 @@ def test_csv_parse_demo_parity(spark):
     assert (None, None) in got
 
 
+@pytest.mark.slow
 def test_foreachbatch_sink_idempotent_replay(spark, tmp_path):
     """The foreachBatch custom sink's exactly-once mechanism is
     idempotence: (1) a restart on a drained checkpoint writes nothing
@@ -270,6 +277,7 @@ def test_stream_cdc_apply_incremental_and_restart(spark, tmp_path):
     assert live() == {(1, 2, 11), (2, 3, 22), (3, 1, 30), (4, 1, 40)}
 
 
+@pytest.mark.slow
 def test_stream_cdc_apply_no_storage_leak(spark, tmp_path):
     """The CDC sink localCheckpoints every micro-batch; without the
     paired unpersist each trigger leaks one executor-storage block —
@@ -329,6 +337,7 @@ def test_stream_cdc_apply_no_storage_leak(spark, tmp_path):
     assert rows == {(k, 200 + k) for k in range(5)}
 
 
+@pytest.mark.slow
 def test_backfill_to_live_handoff_exactly_once(spark, tmp_path):
     """The reference's replay story (README.md:19-22: rebuild state,
     rewind Kafka offsets) as the Spark-native BACKFILL → LIVE handoff:
@@ -397,6 +406,7 @@ def test_backfill_to_live_handoff_exactly_once(spark, tmp_path):
     assert got.filter(F.col("v") != F.col("id") * 10).count() == 0
 
 
+@pytest.mark.slow
 def test_socket_demo_pipeline_end_to_end(spark, tmp_path):
     """The reference demo VERBATIM (OrcSinkTest.java:16-40): a live
     TCP socket text source → CSV parse → exactly-once ORC sink —
@@ -447,6 +457,7 @@ def test_socket_demo_pipeline_end_to_end(spark, tmp_path):
     assert sorted((r.x, r.y) for r in got) == sent
 
 
+@pytest.mark.slow
 def test_stream_quarantine_splits_and_replays(spark, tmp_path):
     """Streaming DLQ: every input row lands on exactly one side
     (NULL-expectation rows quarantine), and both sides are batch-id
@@ -488,6 +499,7 @@ def test_stream_quarantine_splits_and_replays(spark, tmp_path):
     )
 
 
+@pytest.mark.slow
 def test_stream_fanout_atomic_across_tables(spark, tmp_path):
     """Multi-table fan-out commit protocol: (1) a committed batch is
     visible in BOTH tables; (2) a torn batch — one table written, no
@@ -856,6 +868,7 @@ def test_stream_retract_join_moves_deletes_replay(spark, tmp_path):
     assert view() == want
 
 
+@pytest.mark.slow
 def test_stream_retract_join_agg_deltas_replay(spark, tmp_path):
     """The maintained aggregate over the retraction join: summed
     per-batch deltas equal the aggregate of the materialized view
@@ -971,6 +984,7 @@ def test_stream_retract_join_agg_deltas_replay(spark, tmp_path):
     assert agg() == want
 
 
+@pytest.mark.slow
 def test_stream_retract_join_left_null_extension_flips(spark, tmp_path):
     """Outer-join IVM: an order with no live customer shows up
     null-extended; the customer ARRIVING retracts the null-extended
@@ -1053,6 +1067,7 @@ def test_stream_retract_join_left_null_extension_flips(spark, tmp_path):
     assert agg() == {(None, 10, 1)}
 
 
+@pytest.mark.slow
 def test_dedup_ttl_state_bounded(spark, tmp_path):
     """dropDuplicatesWithinWatermark state must EVICT expired keys:
     after draining three time-ordered files spanning hours with a
@@ -1117,6 +1132,7 @@ def test_dedup_ttl_state_bounded(spark, tmp_path):
     assert ttl_state <= 2 * n_per  # expired windows evicted
 
 
+@pytest.mark.slow
 def test_stream_retract_join_tombstone_first_batch(spark, tmp_path):
     """A fresh state whose FIRST micro-batch is pure tombstones (a
     legitimate CDC shape) must not crash on schema inference over
@@ -1182,6 +1198,7 @@ def test_stream_retract_join_tombstone_first_batch(spark, tmp_path):
     assert rows == {(10, "s")}
 
 
+@pytest.mark.slow
 def test_orc_probe_uri_schemes_and_depths(spark, tmp_path):
     """session.orc_data_files_exist: bounded-depth globs find data at
     layouts 0-2 levels deep, the recursive fallback still covers
@@ -1230,6 +1247,7 @@ def test_orc_probe_uri_schemes_and_depths(spark, tmp_path):
     assert not fs_exists(spark, uri)
 
 
+@pytest.mark.slow
 def test_stream_retract_agg_file_scheme_state_path(spark, tmp_path):
     """stream_retract_agg_orc with a ``file:``-schemed state_path: the
     replay markers and state probes must resolve through the Hadoop
@@ -1308,6 +1326,7 @@ def test_stream_retract_agg_file_scheme_state_path(spark, tmp_path):
     assert agg() == want
 
 
+@pytest.mark.slow
 def test_stream_retract_agg_tombstone_cleanup(spark, tmp_path):
     """cleanup_retract_state: the horizon-bounded state-TTL pass the
     retention contract promises. After deletes, the key state carries
@@ -1419,6 +1438,7 @@ def test_stream_retract_agg_tombstone_cleanup(spark, tmp_path):
     assert state_rows() == 4
 
 
+@pytest.mark.slow
 def test_stream_retract_join_tombstone_cleanup(spark, tmp_path):
     """cleanup_retract_join_state: the pk layer's D tombstones expire
     below the horizon (state shrinks to live rows + newer tombstones)
@@ -1528,6 +1548,7 @@ def test_stream_retract_join_tombstone_cleanup(spark, tmp_path):
     }
 
 
+@pytest.mark.slow
 def test_orc_probe_glob_metachar_path(spark, tmp_path):
     """A state path containing glob metacharacters must probe
     correctly: the glob arm is skipped (an unclosed bracket would
@@ -1543,6 +1564,7 @@ def test_orc_probe_glob_metachar_path(spark, tmp_path):
     assert orc_data_files_exist(spark, str(tmp_path / "state[2024]"))
 
 
+@pytest.mark.slow
 def test_stream_retract_agg_random_feed_converges(spark, tmp_path):
     """Randomized (seeded) end-to-end convergence: a shuffled CDC
     feed with group moves, deletes and out-of-order seqs, split
@@ -1638,6 +1660,7 @@ def test_stream_retract_agg_random_feed_converges(spark, tmp_path):
     assert agg() == want
 
 
+@pytest.mark.slow
 def test_stream_retract_join_random_feed_converges(spark, tmp_path):
     """Randomized (seeded) IVM convergence for the retraction JOIN:
     shuffled two-sided CDC (join-key moves, deletes, out-of-order
@@ -1748,6 +1771,7 @@ def test_stream_retract_join_random_feed_converges(spark, tmp_path):
     assert view() == want
 
 
+@pytest.mark.slow
 def test_retract_agg_cleanup_cadence_long_replay(spark, tmp_path):
     """cleanup_every_n_batches + horizon_fn: the sink runs the
     state-TTL pass on its OWN cadence, under the same per-batch
@@ -1847,6 +1871,7 @@ def test_retract_agg_cleanup_cadence_long_replay(spark, tmp_path):
         assert not os.path.exists(os.path.join(state, "_lease")), cycle
 
 
+@pytest.mark.slow
 def test_retract_join_cleanup_cadence(spark, tmp_path):
     """The JOIN sink's cleanup cadence (cleanup_every_n_batches +
     horizon_fn under the batch's lease): the pk-layer tombstone is
@@ -1940,6 +1965,7 @@ def test_retract_join_cleanup_cadence(spark, tmp_path):
     assert not os.path.exists(os.path.join(state, "_lease"))
 
 
+@pytest.mark.slow
 def test_retract_agg_fold_preserves_resolution(spark, tmp_path):
     """LSM fold (round 9): folding the delta log into the base must
     change NOTHING observable — resolved state, aggregate readback —
@@ -2037,6 +2063,7 @@ def test_retract_agg_fold_preserves_resolution(spark, tmp_path):
     assert scenario("manual", False) == scenario("auto", True)
 
 
+@pytest.mark.slow
 def test_retract_join_fold_preserves_view_and_agg(spark, tmp_path):
     """Join-sink fold: jk layer + materialized view are brought up to
     the log, the pk base is folded, the log dropped — and the MOR
@@ -2139,6 +2166,7 @@ def test_retract_join_fold_preserves_view_and_agg(spark, tmp_path):
     assert scenario("manual", False) == scenario("auto", True)
 
 
+@pytest.mark.slow
 def test_stream_retract_join_agg_late_row_other_bucket_after_fold(
     spark, tmp_path
 ):
@@ -2240,6 +2268,7 @@ def test_stream_retract_join_agg_late_row_other_bucket_after_fold(
     assert agg() == view_agg()
 
 
+@pytest.mark.slow
 def test_retract_layout_conflict_refused(spark, tmp_path):
     """Restarting a retract sink with different layout parameters
     against existing state must fail loudly (the params decide how
@@ -2290,6 +2319,7 @@ def test_retract_layout_conflict_refused(spark, tmp_path):
     assert exc is not None and "layout conflict" in str(exc)
 
 
+@pytest.mark.slow
 def test_cdc_pre_r9_layout_refused(spark, tmp_path):
     """A CDC state dir in the pre-round-9 layout (kp=* partitions at
     the state root) must be refused loudly, not silently ignored —
@@ -2324,6 +2354,7 @@ def test_cdc_pre_r9_layout_refused(spark, tmp_path):
     assert exc is not None and "pre-round-9" in str(exc)
 
 
+@pytest.mark.slow
 def test_fold_retract_join_crash_prefixes_converge(spark, tmp_path):
     """The fold's write order (jk -> view -> pk base -> log delete) IS
     its crash contract: after ANY prefix of the writes, the
@@ -2455,6 +2486,7 @@ def test_fold_retract_join_crash_prefixes_converge(spark, tmp_path):
     assert view() == want
 
 
+@pytest.mark.slow
 def test_fold_scd2_crash_prefixes_converge(spark, tmp_path):
     """Same contract for the SCD2 fold (changes -> history -> log
     delete): every crash prefix leaves the merge-on-read history
@@ -2637,3 +2669,159 @@ def test_fold_retract_state_crash_before_log_delete_converges(
     assert table() == want
     assert fold_retract_state(spark, state)["log_rows_folded"] == 0
     assert table() == want
+
+
+def test_cleanup_retract_state_uses_recorded_order_cols(spark, tmp_path):
+    """cleanup_retract_state folds and expires tombstones by the order
+    columns the sink recorded, not by a caller default: with
+    ``order_cols=["ts"]`` a cleanup that resolved by ``seq`` would
+    bring back the stale ``a`` row (higher seq, older ts) and leave
+    the aggregate counting group ``b`` for a key that is gone from
+    the state."""
+    from flink_orc_sink_spark.streaming import (
+        cleanup_retract_state,
+        read_retract_agg,
+        read_retract_state,
+        stream_from_files,
+        stream_retract_agg_orc,
+    )
+
+    src, state = str(tmp_path / "in"), str(tmp_path / "state")
+    schema = "k long, g string, v long, ts long, seq long, op string"
+
+    def run(rows):
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+        q = stream_retract_agg_orc(
+            stream_from_files(spark, src, schema, max_files_per_trigger=1),
+            state,
+            checkpoint=str(tmp_path / "ckpt"),
+            key_col="k",
+            group_col="g",
+            val_col="v",
+            order_cols=["ts"],
+            trigger={"availableNow": True},
+        )
+        assert q.awaitTermination(120), "stream did not drain"
+
+    run([(1, "a", 5, 1, 9, "U")])
+    run([(1, "b", 6, 2, 1, "U")])
+    cleanup_retract_state(spark, state, horizon=0)
+    rows = read_retract_state(spark, state).collect()
+    assert [(r.g, r.ts) for r in rows] == [("b", 2)]
+    run([(2, "c", 1, 1, 1, "U")])
+    agg = {
+        r.grp: (r.sum_val, r.n_keys)
+        for r in read_retract_agg(spark, state).collect()
+    }
+    assert agg == {"b": (6, 1), "c": (1, 1)}
+
+
+def test_stateful_sinks_state_dir_layout(spark, tmp_path):
+    """The on-disk layout of every stateful sink is a compatibility
+    surface — state dirs written by an earlier version must still
+    read. Feed each sink two batches, fold, and pin the directory
+    tree under ``state_path`` (part-file names ignored)."""
+    import os
+
+    from flink_orc_sink_spark import streaming as S
+
+    def run(name, sink, schema, batches, fold, **kw):
+        d = tmp_path / name
+        for rows in batches:
+            spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+                "append"
+            ).parquet(str(d / "in"))
+        q = sink(
+            S.stream_from_files(
+                spark, str(d / "in"), schema, max_files_per_trigger=1
+            ),
+            str(d / "state"),
+            checkpoint=str(d / "ckpt"),
+            trigger={"availableNow": True},
+            **kw,
+        )
+        assert q.awaitTermination(120), "stream did not drain"
+        fold(spark, str(d / "state"))
+        return sorted(
+            os.path.relpath(dp, d / "state")
+            for dp, _dirs, _files in os.walk(d / "state")
+            if dp != str(d / "state")
+        )
+
+    layout = ["layout", "layout/kc=k", "layout/nkp=16", "layout/oc=seq"]
+    state = ["state", "state/kp=13", "state/kp=3", "state/kp=8"]
+    assert run(
+        "cdc",
+        S.stream_cdc_apply_orc,
+        "k long, v long, seq long, op string",
+        [
+            [(1, 10, 1, "U"), (2, 20, 1, "U"), (3, 30, 1, "U")],
+            [(1, 11, 2, "U"), (2, None, 2, "D")],
+        ],
+        S.fold_retract_state,
+        key_col="k",
+        order_cols=["seq"],
+    ) == layout + state
+    assert run(
+        "agg",
+        S.stream_retract_agg_orc,
+        "k long, grp string, v long, seq long, op string",
+        [
+            [(1, "a", 5, 1, "U"), (2, "a", 7, 1, "U"), (3, "b", 1, 1, "U")],
+            [(1, "b", 6, 2, "U"), (2, "a", None, 2, "D")],
+        ],
+        S.fold_retract_state,
+        key_col="k",
+        group_col="grp",
+        val_col="v",
+        order_cols=["seq"],
+    ) == sorted(
+        ["agg_deltas", "agg_deltas/batch_id=0", "agg_deltas/batch_id=1",
+         "applied", "applied/batch_0", "applied/batch_1"]
+        + layout + state
+    )
+    assert run(
+        "scd2",
+        S.stream_scd2_apply_orc,
+        "k long, attr string, ts long, seq long",
+        [[(1, "a", 10, 1), (2, "p", 10, 1)], [(1, "b", 20, 2), (2, "p", 30, 2)]],
+        S.fold_scd2_state,
+        key_col="k",
+        attr_col="attr",
+        ts_col="ts",
+        order_cols=["seq"],
+    ) == [
+        "changes", "changes/kp=13", "changes/kp=8",
+        "history", "history/kp=13", "history/kp=8",
+        "layout", "layout/ac=attr", "layout/kc=k", "layout/nkp=16",
+        "layout/oc=seq", "layout/tc=ts",
+    ]
+    assert run(
+        "join",
+        S.stream_retract_join_orc,
+        "side string, pk long, jk long, seq long, op string, val long,"
+        " attr string",
+        [
+            [("L", 101, 1, 1, "U", 10, None), ("L", 102, 2, 1, "U", 20, None),
+             ("R", 1, 1, 1, "U", None, "x"), ("R", 2, 2, 1, "U", None, "y")],
+            [("L", 101, 2, 2, "U", 11, None), ("R", 1, 1, 2, "D", None, None)],
+        ],
+        S.fold_retract_join_state,
+        agg_group_col="r_attr",
+        agg_val_col="l_val",
+        how="left",
+    ) == [
+        "agg_applied", "agg_applied/batch_0", "agg_applied/batch_1",
+        "agg_deltas", "agg_deltas/batch_id=0", "agg_deltas/batch_id=1",
+        "applied", "applied/batch_0", "applied/batch_1",
+        "deltas", "deltas/batch_id=0", "deltas/batch_id=1",
+        "jk_state", "jk_state/side=L", "jk_state/side=L/jb=8",
+        "jk_state/side=R", "jk_state/side=R/jb=8",
+        "layout", "layout/how=left", "layout/njb=16", "layout/nkp=16",
+        "pk_state", "pk_state/side=L", "pk_state/side=L/kp=1",
+        "pk_state/side=L/kp=5", "pk_state/side=R", "pk_state/side=R/kp=13",
+        "pk_state/side=R/kp=8",
+        "view", "view/jb=8",
+    ]

@@ -88,11 +88,6 @@ ALLOW_CHECKPOINT_NO_UNPERSIST = {
     "bfs_hops",             # lazy-loop (fixed max_hops)
     "pagerank_fixed",       # lazy-loop (fixed iterations)
     "kmeans_fixedpoint",    # lazy-loop (fixed iterations)
-    # caller-owned: checkpoints only when checkpoint_cand=True and
-    # RETURNS cand — fold_retract_join_state releases it in its
-    # finally (the fold crash-prefix tests exercise that path); the
-    # reader path never checkpoints
-    "_rj_log_effect",
 }
 
 
