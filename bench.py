@@ -4,50 +4,43 @@ Runs each headline query end-to-end (plan + execute + collect-count)
 on local[$SPARK_GRAFT_CPUS] and prints ONE SHORT JSON line:
 
     {"metric": "headline_wall_sec", "value": <total>, "unit": "sec",
-     "queries": {<per-family wall sums>}, "n_queries": 90,
+     "queries": {<per-family wall sums>}, "n_queries": 134,
+     "host_steal_pct": <steal % over the loop>,
      "detail_file": "BENCH_DETAIL.json", "sf": 0.1}
 
 The full per-query map is deliberately NOT on the printed line: at
 90 headline queries it overflowed the driver's tail capture in round
-3 (BENCH_r03.json parsed=null). It goes to ``BENCH_DETAIL.json`` at
-the repo root instead (same flat shape, committed per round as
-``BENCH_DETAIL_r{N}.json``); ``tools/bench_regression.py`` follows
-the ``detail_file`` pointer automatically.
+3 (BENCH_r03.json parsed=null). It goes to ``BENCH_DETAIL.json`` next
+to this file instead. Per query, ``telemetry`` holds the wall time
+``sec`` and what the query ran, read by :class:`Telemetry`: the
+counters Spark's status store reports (``jobs``, ``stages``,
+``tasks``, ``python_tasks``, ``shuffle_bytes``, ``task_cpu_ms``),
+Python worker CPU and spawns from /proc, and the hypervisor steal
+over the query. The run records ``cpus`` and ``sf``.
+
+A run is judged against an earlier one on those counters:
+
+    python tools/bench_regression.py BENCH_DETAIL.json base.json
+
+The plan counters repeat exactly for the same code, so a rise fails
+(the gate exempts one query that polls its stream). Wall and CPU times
+only show a direction on a host that loses CPU to hypervisor steal;
+the gate prints them as advisory.
 
 The headline set covers every operator family: scan-agg, multi-join,
 window, events (sessionize/as-of), dedup (minhash), similarity
 (brute-force cosine), and text stats — the queries a user of the
 reference-plus-north-star surface actually runs.
-
-Chunked pin runs (round-11 verdict #1): healthy host windows on this
-VM are shorter than the ~8-minute monolithic bench, so a certifiable
-pin must be ASSEMBLED from per-family chunks, each run inside its own
-verified window:
-
-    python bench.py --families tpch,window,agg --out BENCH_CHUNK_a.json
-    python tools/assemble_pin.py BENCH_CHUNK_*.json --out BENCH_PIN_rN.json
-
-``--families`` runs only the headline queries of those families (the
-HEADLINE order within the subset is preserved — chained queries like
-docs_index_build -> docs_index_probe share a family by construction).
-``--pin-intent`` adds the health discipline (round-11 verdict #5):
-a LOADED steal pre-flight refuses to start inside a degraded window
-(steal on this VM only appears under load — idle samples read 0.1%
-while the same host steals 5-12% from running vCPUs), and at every
-family boundary the steal measured over the JUST-FINISHED family
-aborts the run if the window degraded mid-chunk — the finished
-families still land in the artifact (exit 3), so a killed window
-costs one family, not the run.
 """
 
 from __future__ import annotations
 
-import argparse
 import json
 import os
-import subprocess
 import sys
 import time
+
+from orcbench.probes import SparkLedger, jvm_pid, python_workers
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -221,364 +214,81 @@ HEADLINE = [
 ]
 
 
-# Calibration probes: FIXED, data-independent jobs run immediately
-# before and after the headline loop. Their wall times depend only on
-# host health along three distinct paths — so a contended or sick
-# driver run (round-6/7 adjudication pattern: external load made 2-4x
-# "regressions" the judge had to re-run by hand; round-9 pattern:
-# Python-worker/file-I/O degradation the JVM-only probe was blind to)
-# is visible IN THE ARTIFACT, per path: tools/bench_regression.py
-# compares these values against the pin's and normalizes each query
-# by the probe matching its execution path.
-#
-#   jvm    — hash reduction over a generated range: pure whole-stage
-#            codegen, no I/O, no Python worker, no shuffle
-#            materialization. CPU availability only.
-#   python — fixed mapInPandas job: Python worker spawn/reuse + Arrow
-#            serialization, the path the JVM probe cannot see (the
-#            r9 driver run read calib 1.00x while emb/multimodal/pyds
-#            inflated 4-6x).
-#   io     — fixed ORC write + read-back on local disk: page cache /
-#            filesystem health, the path orc_*/stream-state queries
-#            pay and the CPU probe cannot see.
-CALIB_ROWS = 1_500_000_000
-PY_CALIB_ROWS = 8_000_000
-IO_CALIB_ROWS = 3_000_000
-
-
-def calibration_sec(spark, rows: int = CALIB_ROWS, parts: int = 64) -> float:
-    import time as _t
-
-    t0 = _t.time()
-    # pmod keeps the running sum < 2^63 under ANSI mode; the cost is
-    # still dominated by the per-row xxhash64
-    spark.range(0, rows, 1, parts).selectExpr(
-        "sum(pmod(xxhash64(id), 1000000)) as h"
-    ).collect()
-    return round(_t.time() - t0, 3)
-
-
-def calibration_python_sec(spark, rows: int = PY_CALIB_ROWS) -> float:
-    """Fixed Arrow-batched Python-worker job (mapInPandas hash-sum):
-    measures worker spawn/reuse + Arrow transfer health. 32 input
-    partitions so the probe exercises the same worker-pool fan-out
-    the pandas-UDF headline queries do."""
-    import time as _t
-
-    import pandas as pd
-
-    def batches(it):
-        for pdf in it:
-            yield pd.DataFrame({"s": [int(pdf["id"].sum())]})
-
-    t0 = _t.time()
-    spark.range(0, rows, 1, 32).mapInPandas(
-        batches, "s long"
-    ).selectExpr("sum(s) as t").collect()
-    return round(_t.time() - t0, 3)
-
-
-def calibration_io_sec(
-    spark, rows: int = IO_CALIB_ROWS, parts: int = 16
-) -> float:
-    """Fixed ORC write + read-back probe on the same filesystem the
-    orc_*/stream-state queries use (tempdir): measures file-I/O and
-    page-cache health. Dir is removed afterwards so repeated probes
-    never accumulate."""
-    import shutil
-    import tempfile
-    import time as _t
-
-    d = tempfile.mkdtemp(prefix="bench_io_probe_")
-    try:
-        t0 = _t.time()
-        (
-            spark.range(0, rows, 1, parts)
-            .selectExpr(
-                "id",
-                "xxhash64(id) as h",
-                "cast(id % 1000 as string) as s",
-            )
-            .write.mode("overwrite")
-            .orc(d)
-        )
-        n = spark.read.orc(d).count()
-        sec = round(_t.time() - t0, 3)
-        if n != rows:
-            raise RuntimeError(f"io probe row mismatch: {n}")
-        return sec
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-def mini_probe(spark) -> dict[str, float]:
-    """ONE cheap sample of all three paths (~0.5 s total) — run at
-    every family boundary so a flagged query carries a host-health
-    sample from its own neighborhood (round-10 verdict #2: a 9.5x
-    jobs-flat stall on events_hourly_anomaly was invisible to the
-    start/end probe pairs 300 s away). Sized ~10x smaller than the
-    full probes and sampled ONCE (no min-of-two): these are locality
-    witnesses, not calibration — the gate compares each sample to the
-    run's own median, so absolute scale cancels. Same probe BODIES as
-    the full calibration (parameterized row counts), so a sample
-    witnesses exactly the path it claims to (round-11 review
-    finding: a separately-maintained copy would silently diverge)."""
-    return {
-        "jvm": calibration_sec(spark, rows=CALIB_ROWS // 15, parts=32),
-        "python": calibration_python_sec(spark, rows=PY_CALIB_ROWS // 16),
-        "io": calibration_io_sec(spark, rows=IO_CALIB_ROWS // 20, parts=8),
-    }
-
-
-def run_probes(spark) -> dict[str, float]:
-    """One pass of all three calibration probes. Each probe is
-    measured as the MIN of two consecutive runs — the python probe in
-    particular shows 1.5-2× sample-to-sample scatter (32-worker
-    dispatch jitter), and the min is the standard least-contended
-    estimator for a fixed workload; without it, first-vs-last drift
-    conflates probe noise with genuine path degradation."""
-    return {
-        "jvm": min(calibration_sec(spark), calibration_sec(spark)),
-        "python": min(
-            calibration_python_sec(spark),
-            calibration_python_sec(spark),
-        ),
-        "io": min(calibration_io_sec(spark), calibration_io_sec(spark)),
-    }
-
-
-# ---------------------------------------------------------------- #
-# Per-query telemetry: Spark job counts, JVM GC time, JVM file I/O, #
-# Python-worker spawns and Python-worker CPU. Lets the regression   #
-# gate separate "plan changed" (job counts moved vs pin) from "host #
-# degraded" (job counts flat, walls inflated, probes drifted) —     #
-# round-9 verdict task 1b.                                          #
-# ---------------------------------------------------------------- #
-
-
-def _spark_job_counter(spark) -> int:
-    """Monotonic count of Spark jobs submitted this session (covers
-    every thread, including streaming micro-batches — unlike
-    job-group tracking). -1 when the internal accessor is missing."""
-    try:
-        return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
-    except Exception:
-        return -1
-
-
-def _gc_ms(spark) -> int:
-    try:
-        beans = (
-            spark._jvm.java.lang.management.ManagementFactory
-            .getGarbageCollectorMXBeans()
-        )
-        return int(sum(b.getCollectionTime() for b in beans))
-    except Exception:
-        return -1
-
-
-def _jvm_pid(spark) -> int:
-    try:
-        return int(spark._jvm.java.lang.ProcessHandle.current().pid())
-    except Exception:
-        return -1
-
-
-def _proc_io_bytes(pid: int) -> tuple[int, int]:
-    """(read_bytes, write_bytes) actually hitting the block layer for
-    ``pid`` — page-cache hits don't count, which is exactly right for
-    detecting cold-cache/IO-starved hosts."""
-    try:
-        rd = wr = 0
-        with open(f"/proc/{pid}/io") as f:
-            for line in f:
-                if line.startswith("read_bytes:"):
-                    rd = int(line.split()[1])
-                elif line.startswith("write_bytes:"):
-                    wr = int(line.split()[1])
-        return rd, wr
-    except OSError:
-        return -1, -1
+_TICK_MS = 1000.0 / os.sysconf("SC_CLK_TCK")
 
 
 def _cpu_ticks() -> tuple[int, int]:
     """(steal_ticks, total_ticks) from the aggregate /proc/stat cpu
-    line. Steal is time the HYPERVISOR ran someone else while this
-    (otherwise idle) guest had runnable vCPUs — the one counter that
-    mechanically separates external host contention from anything the
-    repo's own code could cause. Measured on this VM 2026-08-16:
-    guest 91-96% idle, steal 5-12% and rising while same-code queries
-    ran 2-8x their pin with FLAT job counts — the r9/r10 'host
-    degradation' pattern, now attributable in-artifact. (-1, -1)
-    when /proc/stat is unreadable."""
+    line. Steal is time the hypervisor ran someone else while this
+    guest had runnable vCPUs: external contention that the repo's own
+    code cannot cause. (-1, -1) when /proc/stat is unreadable."""
     try:
         with open("/proc/stat") as f:
-            parts = f.readline().split()
-        vals = [int(x) for x in parts[1:]]
+            vals = [int(x) for x in f.readline().split()[1:]]
         # user nice system idle iowait irq softirq steal ...
-        steal = vals[7] if len(vals) > 7 else 0
-        return steal, sum(vals)
-    except (OSError, ValueError, IndexError):
+        return (vals[7] if len(vals) > 7 else 0), sum(vals)
+    except (OSError, ValueError):
         return -1, -1
 
 
-def loaded_steal_pct(seconds: float = 5.0) -> float:
-    """Hypervisor steal% sampled while this process SATURATES the
-    guest's vCPUs with short-lived busy-loop children. On this VM the
-    hypervisor only deschedules the guest when it actually runs
-    (idle samples read ~0.1% in the same minute that under-load
-    samples read 5-12%), so an idle pre-flight would green-light a
-    window that degrades the moment the bench starts — the round-11
-    failure mode (two certified-at-idle windows died mid-run).
-    Returns -1.0 where /proc/stat is unreadable."""
-    n = min(os.cpu_count() or 8, 32)
-    body = (
-        "import time\n"
-        f"t=time.time()+{seconds + 1.0}\n"
-        "x=0\n"
-        "while time.time()<t: x+=1\n"
-    )
-    procs = [
-        subprocess.Popen(
-            [sys.executable, "-c", body],
-            stdout=subprocess.DEVNULL,
-            stderr=subprocess.DEVNULL,
-        )
-        for _ in range(n)
-    ]
-    try:
-        time.sleep(0.5)  # let the burners reach their loops
-        s0, t0 = _cpu_ticks()
-        time.sleep(seconds)
-        s1, t1 = _cpu_ticks()
-    finally:
-        for p in procs:
-            p.kill()
-        for p in procs:
-            p.wait()
-    if s0 < 0 or s1 < 0:
+def _steal_pct(before: tuple[int, int], after: tuple[int, int]) -> float:
+    if before[0] < 0 or after[0] < 0:
         return -1.0
-    return round(100.0 * (s1 - s0) / max(t1 - t0, 1), 1)
+    return round(100.0 * (after[0] - before[0]) / max(after[1] - before[1], 1), 1)
 
 
-def _py_workers(jvm_pid: int = -1) -> dict[int, int]:
-    """{pid: cpu_ticks} for live pyspark daemon/worker processes
-    belonging to THIS session's JVM (ancestor filter on ``jvm_pid``,
-    so a concurrent Spark session on the host doesn't pollute the
-    numbers; -1 disables the filter). CPU is utime+stime in clock
-    ticks (100/s)."""
-    # (pid -> (ppid, cpu)) for every pyspark daemon/worker on the host
-    procs: dict[int, tuple[int, int]] = {}
-    try:
-        entries = os.listdir("/proc")
-    except OSError:
-        return {}
-    for p in entries:
-        if not p.isdigit():
-            continue
+def _worker_cpu_ms(pid: int) -> dict[int, float]:
+    """{pid: own cpu ms} of this session's live Python daemons and
+    workers. A worker that exits during a query takes the CPU it used
+    since the last reading with it; workers are reused, so few do."""
+    out = {}
+    for w in python_workers(pid):
         try:
-            with open(f"/proc/{p}/cmdline", "rb") as f:
-                cmd = f.read()
-            if b"pyspark.daemon" not in cmd and b"pyspark.worker" not in cmd:
-                continue
-            with open(f"/proc/{p}/stat") as f:
-                parts = f.read().rsplit(")", 1)[1].split()
-            # post-comm fields: [state, ppid, ...]; utime/stime are
-            # 1-based stat fields 14/15 → indexes 11/12 here
-            procs[int(p)] = (
-                int(parts[1]),
-                int(parts[11]) + int(parts[12]),
-            )
-        except (OSError, IndexError, ValueError):
+            with open(f"/proc/{w}/stat") as f:
+                fields = f.read().rsplit(")", 1)[1].split()
+        except OSError:
             continue
-    if jvm_pid < 0:
-        return {pid: cpu for pid, (_, cpu) in procs.items()}
-    # daemons are direct children of the JVM; workers are forked from
-    # daemons — walk the parent links until they leave the scanned set
-    ours: set[int] = set()
-    for pid, (ppid, _) in procs.items():
-        chain = []
-        cur, cur_ppid = pid, ppid
-        while True:
-            if cur_ppid == jvm_pid or cur_ppid in ours:
-                ours.add(cur)
-                ours.update(chain)
-                break
-            chain.append(cur)
-            if cur_ppid not in procs:
-                break
-            cur = cur_ppid
-            cur_ppid = procs[cur_ppid][0]
-    return {pid: procs[pid][1] for pid in ours}
+        # utime + stime: 1-based stat fields 14 and 15
+        out[w] = (int(fields[11]) + int(fields[12])) * _TICK_MS
+    return out
 
 
 class Telemetry:
-    """Snapshots host/session counters around each query."""
+    """Times a query and counts what it ran: Spark's plan counters from
+    the status store (:class:`orcbench.probes.SparkLedger`), Python
+    worker CPU and spawns from /proc, and hypervisor steal."""
 
     def __init__(self, spark):
-        self.spark = spark
-        self.jvm_pid = _jvm_pid(spark)
-        self.seen_worker_pids: set[int] = set(_py_workers(self.jvm_pid))
+        self.ledger = SparkLedger(spark)
+        self.jvm_pid = jvm_pid(spark)
+        self.seen_workers = set(python_workers(self.jvm_pid))
+        self.ledger_sec = 0.0  # time spent collecting counters
 
-    def snap(self) -> dict:
-        rd, wr = _proc_io_bytes(self.jvm_pid)
-        steal, total = _cpu_ticks()
+    def measure(self, run) -> dict:
+        """``sec`` is the wall of ``run()`` and nothing else. The mark
+        comes before it, because a streaming query runs inside the
+        query function; the counters are collected after ``sec``."""
+        mark = self.ledger.mark()
+        py0, ticks0 = _worker_cpu_ms(self.jvm_pid), _cpu_ticks()
+        t0 = time.time()
+        run()
+        sec = round(time.time() - t0, 3)
+        py1, ticks1 = _worker_cpu_ms(self.jvm_pid), _cpu_ticks()
+        c = self.ledger.since(mark)
+        self.ledger_sec += time.time() - t0 - sec
+        spawns = len(set(py1) - self.seen_workers)
+        self.seen_workers |= set(py1)
         return {
-            "jobs": _spark_job_counter(self.spark),
-            "gc_ms": _gc_ms(self.spark),
-            "rd": rd,
-            "wr": wr,
-            "steal": steal,
-            "cpu_total": total,
-            "pyw": _py_workers(self.jvm_pid),
-        }
-
-    def delta(self, before: dict, after: dict) -> dict:
-        pyw0, pyw1 = before["pyw"], after["pyw"]
-        new_pids = set(pyw1) - self.seen_worker_pids
-        self.seen_worker_pids |= set(pyw1)
-        # CPU across workers alive at both snapshots + full CPU of new
-        # ones; workers that died mid-query lose their tail — fine for
-        # a "was Python involved and how hard" classifier signal
-        py_ticks = sum(
-            pyw1[p] - pyw0.get(p, 0) for p in pyw1
-        )
-        return {
-            "jobs": (
-                after["jobs"] - before["jobs"]
-                if after["jobs"] >= 0 and before["jobs"] >= 0
-                else -1
-            ),
-            "gc_ms": (
-                after["gc_ms"] - before["gc_ms"]
-                if after["gc_ms"] >= 0 and before["gc_ms"] >= 0
-                else -1
-            ),
-            "jvm_rd_mb": (
-                round((after["rd"] - before["rd"]) / 1e6, 1)
-                if after["rd"] >= 0 and before["rd"] >= 0
-                else -1
-            ),
-            "jvm_wr_mb": (
-                round((after["wr"] - before["wr"]) / 1e6, 1)
-                if after["wr"] >= 0 and before["wr"] >= 0
-                else -1
-            ),
-            "py_spawns": len(new_pids),
-            "py_cpu_ms": py_ticks * 10,
-            # % of this query's window the hypervisor stole from the
-            # guest (all vCPUs aggregated) — >0 on an idle guest is
-            # EXTERNAL contention, provable without re-running
-            "steal_pct": (
-                round(
-                    100.0
-                    * (after["steal"] - before["steal"])
-                    / max(after["cpu_total"] - before["cpu_total"], 1),
-                    1,
-                )
-                if after["steal"] >= 0 and before["steal"] >= 0
-                else -1.0
-            ),
+            "sec": sec,
+            "jobs": c["jobs"],
+            "stages": c["stages"],
+            "tasks": c["tasks"],
+            "python_tasks": c["python_tasks"],
+            "shuffle_bytes": c["shuffle_bytes"],
+            "task_cpu_ms": round(c["task_cpu_ms"]),
+            "py_cpu_ms": round(sum(v - py0.get(w, 0) for w, v in py1.items())),
+            "py_spawns": spawns,
+            "steal_pct": _steal_pct(ticks0, ticks1),
         }
 
 
@@ -590,7 +300,16 @@ def _family(name: str) -> str:
     )
 
 
-def warm_session(spark, queries, sf_dir: str, families=None) -> None:
+def _family_sums(per_query: dict[str, float]) -> dict[str, float]:
+    """{family: wall sum}, families in the order they first run."""
+    families: dict[str, float] = {}
+    for name, sec in per_query.items():
+        fam = _family(name)
+        families[fam] = round(families.get(fam, 0.0) + sec, 3)
+    return families
+
+
+def warm_session(spark, queries, sf_dir: str) -> None:
     """Warm the JVM/session on the smallest scale so per-query numbers
     measure the query, not one-time codegen/session init. The second
     warm-up primes the Python UDF daemon/worker pool — the first
@@ -601,9 +320,8 @@ def warm_session(spark, queries, sf_dir: str, families=None) -> None:
     per-query numbers — deliberate (a production session pays them
     once, not per query), but it means a host where warm state decays
     mid-run (worker churn under memory pressure — the r9 driver
-    pattern) re-pays them inside query walls. That is what the
-    python/io calibration probes + per-query py_spawns telemetry now
-    detect, instead of the warm-up silently hiding the pathology.
+    pattern) re-pays them inside query walls. The per-query
+    ``py_spawns`` and ``py_cpu_ms`` show it when that happens.
     """
     queries["q1_pricing_summary"](spark, sf_dir).count()
     # Prefer the smallest available scale for the UDF-daemon warm-up;
@@ -632,335 +350,54 @@ def warm_session(spark, queries, sf_dir: str, families=None) -> None:
     # compact shapes (measured 51.5 → 25.7 → 16.4 s across three
     # same-session runs at sf0.1, Spark job count constant at 54);
     # warming it on sf0.001 compiles the same plans in ~3 s.
-    # Chunked runs (--families) warm only the runtimes their families
-    # use — a tpch-only chunk must not burn its short healthy window
-    # on ~25 s of streaming/pyds warm-up it never measures.
-    warm_by_family = {
-        "stream_running_totals": {"stream"},
-        "stream_retract_agg": {"stream"},
-        "stream_retract_join_agg": {"stream"},
-        "pyds_source_agg": {"stream", "pyds"},
-        "stream_index_forget_ingest": {"stream"},
-        # NOT warmed: stream_emb_index_ingest / stream_media_index_
-        # ingest — their sf0.001 warm costs ~180 s (IVF k-means build
-        # and the fixed 200-PNG decode corpus are scale-independent)
-        # for only 3-5 s of headline savings; the forget warm above
-        # is the opposite trade (~15 s warm for ~35 s of one-time
-        # codegen otherwise landing in the measured number).
-    }
-    for warm_q, needed_by in warm_by_family.items():
-        if families is not None and not (needed_by & families):
-            continue
+    # NOT warmed: stream_emb_index_ingest / stream_media_index_ingest
+    # — their sf0.001 warm costs ~180 s (IVF k-means build and the
+    # fixed 200-PNG decode corpus are scale-independent) for only
+    # 3-5 s of headline savings; the forget warm is the opposite trade
+    # (~15 s warm for ~35 s of one-time codegen otherwise landing in
+    # the measured number).
+    for warm_q in (
+        "stream_running_totals",
+        "stream_retract_agg",
+        "stream_retract_join_agg",
+        "pyds_source_agg",
+        "stream_index_forget_ingest",
+    ):
         try:
             queries[warm_q](spark, warm_dir).count()
         except Exception:
             pass
-    # Probe warm-up runs UNTIL each path hits its healthy target (or
-    # the try budget): the Python-worker pool warms asymptotically,
-    # not in one pass — consecutive identical python probes measured
-    # 15.5 -> 8.7 -> 6.6 -> 1.1 s in one session (daemon fork + Arrow
-    # allocator init, paid once per worker across the 32-worker
-    # fan-out), and one warm pass left chunk runs whose families
-    # never exercise the full pool reading probes_first ~3.3 s — a
-    # pool artifact masquerading as host degradation. Targets are
-    # ~1.4x the documented healthy floor (BENCH_PIN_r10 probes_first:
-    # jvm 0.94, python 0.55, io 0.62); on a genuinely degraded host
-    # the loop exhausts its budget and the probes still read high —
-    # warm-up must never hide real contention, only pool state.
-    for warm_fn, target in (
-        (calibration_sec, 1.3),
-        (calibration_python_sec, 0.8),
-        (calibration_io_sec, 0.9),
-    ):
-        for _ in range(5):
-            if warm_fn(spark) <= target:
-                break
-    mini_probe(spark)  # ... and for the family-boundary samples
+    # Last, one Python task per core at once, so the worker pool is at
+    # full size when the loop starts: the warm-ups above may not run
+    # that many Python tasks side by side.
+    import pandas as pd
 
+    def batch_sums(it):
+        for pdf in it:
+            yield pd.DataFrame({"s": [int(pdf["id"].sum())]})
 
-# A chunk whose finished-family steal reaches this aborts a
-# --pin-intent run at the boundary (and the pre-flight refuses to
-# start above it): tools/bench_regression.py --certify and
-# tools/assemble_pin.py use the same 2% line.
-PIN_STEAL_MAX = 2.0
-
-# Headline entries that CHAIN through persisted side effects (a probe
-# reads the index its build wrote). A --families slice must keep each
-# chain whole — a split one measures a probe with no index under it.
-CHAINS = (
-    ("stream_fidx_build", "stream_fidx_ingest",
-     "stream_fidx_forget", "stream_fidx_probe"),
-    ("docs_index_build", "docs_index_probe"),
-    ("docs_bm25_index_build", "docs_bm25_index_probe"),
-)
-
-
-def select_headline(tokens: set[str] | None) -> list[str]:
-    """HEADLINE subset for --families tokens, order preserved.
-    A token is either a family name ("stream") or a contiguous slice
-    of a family's headline subsequence ("stream:0:13", python slice
-    semantics on the within-family index) — the stream family alone
-    is ~130 s measured, longer than most healthy windows on this VM.
-    Raises ValueError on unknown families or slices splitting a
-    chained sequence."""
-    if tokens is None:
-        return list(HEADLINE)
-    all_fams = {_family(n) for n in HEADLINE}
-    plain: set[str] = set()
-    slices: dict[str, list[tuple[int, int]]] = {}
-    for tok in tokens:
-        if ":" in tok:
-            fam, lo, hi = (tok.split(":") + [""])[:3]
-            if fam not in all_fams:
-                raise ValueError(f"unknown family {fam!r} in {tok!r}")
-            fam_n = sum(1 for n in HEADLINE if _family(n) == fam)
-            a = int(lo) if lo else 0
-            b = int(hi) if hi else fam_n
-            slices.setdefault(fam, []).append((a, b))
-        elif tok in all_fams:
-            plain.add(tok)
-        else:
-            raise ValueError(
-                f"unknown family {tok!r}; known: {sorted(all_fams)}"
-            )
-    within: dict[str, int] = {}
-    out = []
-    for n in HEADLINE:
-        fam = _family(n)
-        i = within.get(fam, 0)
-        within[fam] = i + 1
-        if fam in plain or any(
-            a <= i < b for a, b in slices.get(fam, [])
-        ):
-            out.append(n)
-    chosen = set(out)
-    for chain in CHAINS:
-        hit = [q for q in chain if q in chosen]
-        if hit and len(hit) != len(chain):
-            raise ValueError(
-                f"slice splits the chained sequence {chain}: only"
-                f" {hit} selected — widen the slice"
-            )
-    return out
+    n = spark.sparkContext.defaultParallelism
+    spark.range(0, 1_000_000, 1, n).mapInPandas(batch_sums, "s long").collect()
 
 
 def main() -> int:
-    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument(
-        "--families",
-        default=os.environ.get("SPARK_GRAFT_BENCH_FAMILIES", ""),
-        help="comma list: run only these headline families (chunked"
-        " pin run); default all",
-    )
-    ap.add_argument(
-        "--out",
-        default=None,
-        help="detail artifact path (default BENCH_DETAIL.json next to"
-        " bench.py); chunk runs should use BENCH_CHUNK_<x>.json",
-    )
-    ap.add_argument(
-        "--pin-intent",
-        action="store_true",
-        help="pin-quality discipline: loaded-steal pre-flight gate +"
-        " abort at a family boundary when the window degrades",
-    )
-    ap.add_argument(
-        "--wait-secs",
-        type=int,
-        default=0,
-        help="with --pin-intent: keep re-sampling for up to this many"
-        " seconds for a healthy window instead of refusing at once",
-    )
-    ap.add_argument(
-        "--list-families",
-        action="store_true",
-        help="print family -> headline-query counts and exit",
-    )
-    args = ap.parse_args()
-
-    if args.list_families:
-        fams: dict[str, int] = {}
-        for n in HEADLINE:
-            fams[_family(n)] = fams.get(_family(n), 0) + 1
-        for fam, cnt in sorted(fams.items()):
-            print(f"{fam}\t{cnt}")
-        return 0
-
-    want_tokens = (
-        {f.strip() for f in args.families.split(",") if f.strip()}
-        if args.families
-        else None
-    )
-    try:
-        headline = select_headline(want_tokens)
-    except ValueError as exc:
-        print(str(exc), file=sys.stderr)
-        return 2
-    # warm-up scoping works on family names (slice bounds don't
-    # change which runtimes a family needs warm)
-    want_families = (
-        {t.split(":")[0] for t in want_tokens}
-        if want_tokens is not None
-        else None
-    )
-
-    if args.pin_intent:
-        # refuse to burn a window the host has already degraded: the
-        # steal sample runs UNDER LOAD (idle steal reads ~0 on this
-        # VM even inside windows that steal 5-12% from running vCPUs)
-        deadline = time.time() + args.wait_secs
-        while True:
-            pct = loaded_steal_pct()
-            print(
-                f"pin-intent pre-flight: loaded steal {pct:.1f}%",
-                file=sys.stderr,
-            )
-            if 0 <= pct < PIN_STEAL_MAX:
-                break
-            if time.time() >= deadline:
-                print(
-                    "pin-intent: refusing to start — loaded steal"
-                    f" {pct:.1f}% >= {PIN_STEAL_MAX}% (degraded window;"
-                    " retry later or raise --wait-secs)",
-                    file=sys.stderr,
-                )
-                return 2
-            time.sleep(20)
-
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    # "family": stop + rebuild the SparkSession (and re-warm) between
-    # headline families — the r9-verdict experiment isolating whether
-    # a single 129-query session mismeasures late families via
-    # accumulated session debris. Comparison recorded in BASELINE.md.
-    restart_mode = os.environ.get("SPARK_GRAFT_BENCH_RESTART", "")
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
     from flink_orc_sink_spark.queries import all_queries
+    from flink_orc_sink_spark.queries.engine import BENCH_ONLY as ENGINE_BENCH
+    from flink_orc_sink_spark.queries.llm import BENCH_ONLY
     from flink_orc_sink_spark.session import get_spark
 
     spark = get_spark("bench")
-    from flink_orc_sink_spark.queries.engine import BENCH_ONLY as ENGINE_BENCH
-    from flink_orc_sink_spark.queries.llm import BENCH_ONLY
-
     queries = {**all_queries(), **BENCH_ONLY, **ENGINE_BENCH}
+    warm_session(spark, queries, sf_dir)
 
-    warm_session(spark, queries, sf_dir, families=want_families)
-    probes_first = run_probes(spark)
-    if args.pin_intent:
-        # Start-of-run probes must measure the window the QUERIES will
-        # run in. On this VM the host grants the guest an increasing
-        # share as load sustains: every chunk attempt measured
-        # probes_first ~2-8x the floor decaying to healthy by run end
-        # (jvm 1.93->0.96, python 4.26->0.50, io 0.63->0.36 with
-        # steal 0.2%) — a ramp, not contention, and it failed
-        # certification every time. Re-probe until the sample
-        # converges to the healthy floor (x1.4); a genuinely degraded
-        # window never converges and the run proceeds to fail
-        # certification honestly on its recorded probes.
-        for _ in range(4):
-            nxt = run_probes(spark)
-            plateaued = all(
-                probes_first.get(p, 0) > 0
-                and nxt.get(p, 0) > 0
-                and max(probes_first[p], nxt[p])
-                / min(probes_first[p], nxt[p])
-                <= 1.25
-                for p in ("jvm", "python", "io")
-            )
-            probes_first = nxt  # the later sample describes the
-            # conditions the measured loop actually starts under
-            if plateaued:
-                break
-    steal0, cpu_total0 = _cpu_ticks()
-
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    per_query: dict[str, float] = {}
-    telemetry: dict[str, dict] = {}
-    family_probes: list[dict] = []
     tel = Telemetry(spark)
-    prev_family = None
-    loop_t0 = time.time()
-    aborted_family = None
-    fam_ticks = _cpu_ticks()  # steal over the family being measured
-    for name in headline:
-        if args.pin_intent and prev_family is not None and (
-            _family(name) != prev_family
-        ):
-            # the window degraded while the JUST-FINISHED family ran:
-            # its numbers cannot certify — drop them, keep the clean
-            # families, and let the next invocation resume from here
-            # (round-11 verdict #5: a killed window costs one family,
-            # not the run)
-            s1, t1 = _cpu_ticks()
-            fam_steal = (
-                100.0 * (s1 - fam_ticks[0]) / max(t1 - fam_ticks[1], 1)
-                if s1 >= 0 and fam_ticks[0] >= 0
-                else -1.0
-            )
-            if fam_steal >= PIN_STEAL_MAX:
-                aborted_family = prev_family
-                print(
-                    f"pin-intent: steal {fam_steal:.1f}% during family"
-                    f" '{prev_family}' — dropping its queries and"
-                    " aborting at the boundary",
-                    file=sys.stderr,
-                )
-                for q in list(per_query):
-                    if _family(q) == prev_family:
-                        del per_query[q]
-                        telemetry.pop(q, None)
-                break
-            fam_ticks = (s1, t1)
-        if (
-            restart_mode == "family"
-            and prev_family is not None
-            and _family(name) != prev_family
-        ):
-            spark.stop()
-            spark = get_spark("bench")
-            warm_session(spark, queries, sf_dir, families=want_families)
-            tel = Telemetry(spark)
-        # family-boundary host-health sample (round-10 verdict #2),
-        # rate-limited to one per ~20 s of run time: 66 boundaries at
-        # ~0.6 s each would cost 15% of the run, while a 20 s cadence
-        # (~3% overhead) still puts a sample inside every flagged
-        # query's neighborhood — the gate matches by timestamp, not by
-        # family identity.
-        now = time.time() - loop_t0
-        # chunk runs sample on the time cadence alone: a single-family
-        # chunk has no boundaries, and certification needs >=2
-        # interior samples to judge loop stability (assemble_pin.py)
-        if (want_tokens is not None or _family(name) != prev_family) and (
-            not family_probes or now - family_probes[-1]["t"] >= 20
-        ):
-            # a failed probe sample must never abort a half-finished
-            # bench run (same rule as the warm-ups): skip the sample,
-            # keep the per-query results
-            try:
-                sample = mini_probe(spark)
-            except Exception:
-                sample = {}
-            if sample:
-                family_probes.append(
-                    {
-                        "family": _family(name),
-                        "t": round(now, 1),
-                        **sample,
-                    }
-                )
-        prev_family = _family(name)
+    ticks0 = _cpu_ticks()
+    telemetry: dict[str, dict] = {}
+    for name in HEADLINE:
         fn = queries[name]
-        before = tel.snap()
-        t0 = time.time()
-        fn(spark, sf_dir).count()
-        wall = round(time.time() - t0, 3)
-        after = tel.snap()
-        per_query[name] = wall
-        telemetry[name] = {
-            "sec": wall,
-            "t0": round(t0 - loop_t0, 1),
-            **tel.delta(before, after),
-        }
+        telemetry[name] = tel.measure(lambda: fn(spark, sf_dir).count())
         # Measure each query, not the session debris of the previous
         # ones: memory-sink tables and cached blocks accumulate across
         # the 40+ headline queries and show up as GC noise in later
@@ -969,76 +406,23 @@ def main() -> int:
             if t.isTemporary:
                 spark.catalog.dropTempView(t.name)
         spark.catalog.clearCache()
+    host_steal_pct = _steal_pct(ticks0, _cpu_ticks())
 
-    if want_tokens is not None and not aborted_family:
-        # one closing interior sample so certification's stability
-        # judgment covers the tail of the measured loop too
-        try:
-            sample = mini_probe(spark)
-        except Exception:
-            sample = {}
-        if sample:
-            family_probes.append(
-                {
-                    "family": prev_family or "-",
-                    "t": round(time.time() - loop_t0, 1),
-                    **sample,
-                }
-            )
-
-    if args.pin_intent and aborted_family is None and prev_family:
-        # the LAST family has no following boundary: same check
-        s1, t1 = _cpu_ticks()
-        fam_steal = (
-            100.0 * (s1 - fam_ticks[0]) / max(t1 - fam_ticks[1], 1)
-            if s1 >= 0 and fam_ticks[0] >= 0
-            else -1.0
-        )
-        if fam_steal >= PIN_STEAL_MAX:
-            aborted_family = prev_family
-            print(
-                f"pin-intent: steal {fam_steal:.1f}% during final"
-                f" family '{prev_family}' — dropping its queries",
-                file=sys.stderr,
-            )
-            for q in list(per_query):
-                if _family(q) == prev_family:
-                    del per_query[q]
-                    telemetry.pop(q, None)
-
-    probes_last = run_probes(spark)
-    calib_first, calib_last = probes_first["jvm"], probes_last["jvm"]
-    steal1, cpu_total1 = _cpu_ticks()
-    host_steal_pct = (
-        round(100.0 * (steal1 - steal0) / max(cpu_total1 - cpu_total0, 1), 1)
-        if steal0 >= 0 and steal1 >= 0
-        else -1.0
-    )
-
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
+    per_query = {name: t["sec"] for name, t in telemetry.items()}
     detail = {
         "metric": "headline_wall_sec",
         "value": round(sum(per_query.values()), 3),
         "unit": "sec",
         "queries": per_query,
         "telemetry": telemetry,
-        "probes_first": probes_first,
-        "probes_last": probes_last,
-        "family_probes": family_probes,
         "host_steal_pct": host_steal_pct,
-        "calibration_first_sec": calib_first,
-        "calibration_last_sec": calib_last,
-        "restart_mode": restart_mode or "single-session",
+        "ledger_sec": round(tel.ledger_sec, 1),
+        "cpus": spark.sparkContext.defaultParallelism,
         "sf": sf_val,
     }
-    if want_tokens is not None:
-        detail["families"] = sorted(want_tokens)
-        detail["headline_total"] = len(HEADLINE)
-    if args.pin_intent:
-        detail["pin_intent"] = True
-    if aborted_family is not None:
-        detail["aborted_family"] = aborted_family
-    detail_path = args.out or os.path.join(
+    detail_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
     )
     with open(detail_path, "w") as f:
@@ -1047,34 +431,18 @@ def main() -> int:
     # Per-family wall sums keep the printed line short enough for the
     # driver's tail capture (round-3 lesson: 90 per-query entries
     # overflowed it and the official artifact lost its parsed form).
-    families: dict[str, float] = {}
-    for name, sec in per_query.items():
-        fam = _family(name)
-        families[fam] = round(families.get(fam, 0.0) + sec, 3)
     out = {
         "metric": "headline_wall_sec",
         "value": detail["value"],
         "unit": "sec",
-        "queries": families,
+        "queries": _family_sums(per_query),
         "n_queries": len(per_query),
-        "calib": [calib_first, calib_last],
-        # same key names as BENCH_DETAIL.json so tools/bench_regression
-        # can normalize contention from EITHER artifact (the headline
-        # line only carries family sums, so per-query gating still
-        # needs BENCH_DETAIL.json)
-        "calibration_first_sec": calib_first,
-        "calibration_last_sec": calib_last,
-        # per-path probe pairs (jvm/python/io before+after): the
-        # one-line summary of host health along each execution path
-        "probes": {
-            k: [probes_first[k], probes_last[k]] for k in probes_first
-        },
         "host_steal_pct": host_steal_pct,
         "detail_file": os.path.basename(detail_path),
         "sf": sf_val,
     }
     print(json.dumps(out))
-    return 3 if aborted_family is not None else 0
+    return 0
 
 
 if __name__ == "__main__":

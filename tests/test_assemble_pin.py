@@ -1,389 +1,28 @@
-"""Tests for the composite-pin assembly path (round-11 verdict #1):
-bench.py chunk selection invariants + tools/assemble_pin.py
-certification and merge logic. No SparkSession needed."""
+"""bench.py's headline families."""
 
 from __future__ import annotations
 
-import json
-import os
-import subprocess
-import sys
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-sys.path.insert(0, os.path.join(REPO, "tools"))
-
-import assemble_pin  # noqa: E402
-import bench  # noqa: E402
-
-GOOD_PROBES = {"jvm": 1.0, "python": 0.6, "io": 0.7}
-REF = {"jvm": 1.0, "python": 0.6, "io": 0.7}
-
-
-def _chunk(queries, steal=0.5, pf=None, pl=None, **extra):
-    return {
-        "metric": "headline_wall_sec",
-        "value": round(sum(queries.values()), 3),
-        "unit": "sec",
-        "queries": queries,
-        "telemetry": {q: {"sec": s, "jobs": 3} for q, s in queries.items()},
-        "probes_first": dict(pf or GOOD_PROBES),
-        "probes_last": dict(pl or GOOD_PROBES),
-        "host_steal_pct": steal,
-        "sf": 0.1,
-        **extra,
-    }
-
-
-# ---------------- certification ----------------
-
-
-def test_certify_clean_chunk_passes():
-    assert assemble_pin.certify_chunk(_chunk({"q1": 1.0}), REF) == []
-
-
-def test_certify_rejects_high_steal():
-    probs = assemble_pin.certify_chunk(_chunk({"q1": 1.0}, steal=2.4), REF)
-    assert any("steal 2.4%" in p for p in probs)
-
-
-def test_certify_rejects_unmeasured_steal():
-    probs = assemble_pin.certify_chunk(_chunk({"q1": 1.0}, steal=-1.0), REF)
-    assert any("not measured" in p for p in probs)
-
-
-def test_certify_rejects_midrun_probe_movement():
-    pl = dict(GOOD_PROBES, python=GOOD_PROBES["python"] * 2)
-    probs = assemble_pin.certify_chunk(_chunk({"q1": 1.0}, pl=pl), REF)
-    assert any("python probe moved mid-run" in p for p in probs)
-
-
-def test_certify_rejects_consistently_slow_window():
-    # both samples 2x the healthy floor: stable, but the window is
-    # degraded — certification must refuse (the six-failed-attempts
-    # host was exactly this when it wasn't spiking)
-    slow = {k: v * 2 for k, v in GOOD_PROBES.items()}
-    probs = assemble_pin.certify_chunk(
-        _chunk({"q1": 1.0}, pf=slow, pl=slow), REF
-    )
-    assert any("healthy floor" in p for p in probs)
-
-
-def _minis(vals):
-    """family_probes entries from (jvm, python, io) triples."""
-    return [
-        {"family": "x", "t": 20.0 * i, "jvm": j, "python": p, "io": o}
-        for i, (j, p, o) in enumerate(vals)
-    ]
-
-
-def test_certify_interior_minis_override_pair_movement():
-    """A ramp-poisoned first pair (or aging-poisoned last pair) must
-    NOT fail a chunk whose interior mini-probes show the measured
-    loop ran healthy — the r12 lesson: every early chunk attempt had
-    healthy minis throughout and still failed on pair movement."""
-    c = _chunk(
-        {"q1": 1.0},
-        pf={"jvm": 1.93, "python": 4.26, "io": 0.63},  # the ramp
-        pl=GOOD_PROBES,
-        family_probes=_minis([(0.41, 0.46, 0.29), (0.33, 0.50, 0.32)]),
-    )
-    assert assemble_pin.certify_chunk(c, REF) == []
-
-
-def test_certify_rejects_interior_transient_stall():
-    """One interior mini above 2x its floor = a transient stall hit
-    the measured loop; some query measured inflated — reject."""
-    c = _chunk(
-        {"q1": 1.0},
-        family_probes=_minis([(0.33, 0.46, 0.27), (0.78, 0.67, 0.88)]),
-    )
-    probs = assemble_pin.certify_chunk(c, REF)
-    assert any("transient stall" in p for p in probs)
-
-
-def test_certify_rejects_degraded_interior_median():
-    c = _chunk(
-        {"q1": 1.0},
-        family_probes=_minis(
-            [(0.55, 0.80, 0.45), (0.60, 0.85, 0.50), (0.58, 0.82, 0.48)]
-        ),
-    )
-    probs = assemble_pin.certify_chunk(c, REF)
-    assert any("loop ran degraded" in p for p in probs)
-
-
-def test_certify_pair_min_still_enforces_floor_with_minis():
-    """Healthy minis can't excuse a pair whose MIN never reached the
-    floor: both full samples 2x = consistently-slow window."""
-    slow = {k: v * 2 for k, v in GOOD_PROBES.items()}
-    c = _chunk(
-        {"q1": 1.0},
-        pf=slow,
-        pl=slow,
-        family_probes=_minis([(0.33, 0.46, 0.27), (0.33, 0.46, 0.27)]),
-    )
-    probs = assemble_pin.certify_chunk(c, REF)
-    assert any("healthy floor" in p for p in probs)
-
-
-def test_certify_aborted_chunk_judged_on_survivor_steal():
-    """An aborted chunk's run-level steal includes the dropped
-    family's degradation; the SURVIVING queries are judged on their
-    own per-query steal stamps so partial coverage accumulates."""
-    c = _chunk({"q1": 1.0}, steal=2.5, aborted_family="stream")
-    c["telemetry"]["q1"]["steal_pct"] = 0.3
-    assert assemble_pin.certify_chunk(c, REF) == []
-    # a survivor that itself saw steal >= 2% rejects
-    c["telemetry"]["q1"]["steal_pct"] = 2.4
-    probs = assemble_pin.certify_chunk(c, REF)
-    assert any("surviving query saw steal" in p for p in probs)
-    # survivors without stamps cannot certify
-    del c["telemetry"]["q1"]["steal_pct"]
-    probs = assemble_pin.certify_chunk(c, REF)
-    assert any("lack steal stamps" in p for p in probs)
-
-
-def test_certify_rejects_missing_probe_path():
-    pf = {"jvm": 1.0, "python": 0.6}  # io missing
-    probs = assemble_pin.certify_chunk(
-        _chunk({"q1": 1.0}, pf=pf, pl=pf), REF
-    )
-    assert any("io probe pair missing" in p for p in probs)
-
-
-# ---------------- assembly (CLI) ----------------
-
-
-def _run_assemble(tmp_path, chunks, *extra_args):
-    ref = tmp_path / "ref_pin.json"
-    ref.write_text(
-        json.dumps(
-            {"probes_first": REF, "probes_last": REF, "queries": {}}
-        )
-    )
-    paths = []
-    for i, c in enumerate(chunks):
-        p = tmp_path / f"BENCH_CHUNK_{i}.json"
-        p.write_text(json.dumps(c))
-        paths.append(str(p))
-    out = tmp_path / "BENCH_PIN_test.json"
-    proc = subprocess.run(
-        [
-            sys.executable,
-            os.path.join(REPO, "tools", "assemble_pin.py"),
-            *paths,
-            "--ref-pin",
-            str(ref),
-            "--out",
-            str(out),
-            *extra_args,
-        ],
-        capture_output=True,
-        text=True,
-    )
-    return proc, out
-
-
-def _full_coverage_chunks():
-    """Split the real HEADLINE into two chunks along family lines."""
-    fams = sorted({bench._family(q) for q in bench.HEADLINE})
-    half = set(fams[: len(fams) // 2])
-    a = {q: 1.0 for q in bench.HEADLINE if bench._family(q) in half}
-    b = {q: 2.0 for q in bench.HEADLINE if bench._family(q) not in half}
-    return a, b
-
-
-def test_assemble_full_coverage_writes_pin(tmp_path):
-    a, b = _full_coverage_chunks()
-    pf_b = {"jvm": 0.9, "python": 0.7, "io": 0.6}
-    proc, out = _run_assemble(
-        tmp_path, [_chunk(a), _chunk(b, pf=pf_b, pl=pf_b)]
-    )
-    assert proc.returncode == 0, proc.stdout + proc.stderr
-    pin = json.loads(out.read_text())
-    assert set(pin["queries"]) == set(bench.HEADLINE)
-    assert pin["composite"] is True
-    assert len(pin["chunks"]) == 2
-    # element-wise min across chunks on each probe side
-    assert pin["probes_first"] == {"jvm": 0.9, "python": 0.6, "io": 0.6}
-    # worst certified window's steal
-    assert pin["host_steal_pct"] == 0.5
-    # gate-compatible: bench_regression can read it as a baseline
-    sys.path.insert(0, os.path.join(REPO, "tools"))
-    import bench_regression
-
-    probes = bench_regression._probe_means(pin, "min")
-    assert probes == {"jvm": 0.9, "python": 0.6, "io": 0.6}
-
-
-def test_assemble_refuses_incomplete_coverage(tmp_path):
-    a, _b = _full_coverage_chunks()
-    proc, out = _run_assemble(tmp_path, [_chunk(a)])
-    assert proc.returncode == 1
-    assert "coverage incomplete" in proc.stdout
-    assert not out.exists()
-
-
-def test_assemble_overlap_takes_per_query_min(tmp_path):
-    """When certified chunks overlap (partial artifacts accumulate
-    across windows), each query takes its MIN across the certified
-    samples — the least-contended estimator, uniform in both
-    directions (the first r11 assembly pinned a 10.35s idle-bounce
-    sample of stream_scd2_apply where a second certified window
-    measured 4.12s)."""
-    a, b = _full_coverage_chunks()
-    dup_q = next(iter(a))
-    dup = dict(b)
-    dup[dup_q] = 9.9  # same query, slower certified sample
-    proc, out = _run_assemble(
-        tmp_path, [_chunk(a, steal=0.2), _chunk(dup, steal=1.5)]
-    )
-    assert proc.returncode == 0, proc.stdout + proc.stderr
-    pin = json.loads(out.read_text())
-    assert pin["queries"][dup_q] == 1.0  # the min sample
-    # ... and in the other direction: a faster later sample wins too
-    dup2 = dict(dup)
-    dup2[dup_q] = 0.4
-    proc, out = _run_assemble(
-        tmp_path, [_chunk(a, steal=0.2), _chunk(dup2, steal=1.5)]
-    )
-    assert proc.returncode == 0
-    assert json.loads(out.read_text())["queries"][dup_q] == 0.4
-
-
-def test_assemble_skips_uncertified_chunk(tmp_path):
-    """An uncertified file contributes nothing: with it as the only
-    source of half the coverage, assembly refuses on coverage."""
-    a, b = _full_coverage_chunks()
-    proc, out = _run_assemble(tmp_path, [_chunk(a), _chunk(b, steal=3.0)])
-    assert proc.returncode == 1
-    assert "coverage incomplete" in proc.stdout
-    assert not out.exists()
-
-
-def test_assemble_accepts_certified_partial_plus_fill(tmp_path):
-    """A certified-partial (aborted) chunk plus a later fill chunk
-    assemble to full coverage."""
-    a, b = _full_coverage_chunks()
-    part_keys = list(b)[: len(b) // 2]
-    rest_keys = list(b)[len(b) // 2:]
-    partial = _chunk(
-        {q: b[q] for q in part_keys}, steal=2.5,
-        aborted_family="whatever",
-    )
-    for q in part_keys:
-        partial["telemetry"][q]["steal_pct"] = 0.4
-    fill = _chunk({q: b[q] for q in rest_keys}, steal=0.9)
-    proc, out = _run_assemble(
-        tmp_path, [_chunk(a), partial, fill]
-    )
-    assert proc.returncode == 0, proc.stdout + proc.stderr
-    pin = json.loads(out.read_text())
-    assert set(pin["queries"]) == set(bench.HEADLINE)
-
-
-def test_status_mode_reports_missing_without_writing(tmp_path):
-    a, _b = _full_coverage_chunks()
-    proc, out = _run_assemble(tmp_path, [_chunk(a)], "--status")
-    assert proc.returncode == 1
-    assert "still missing" in proc.stdout
-    assert not out.exists()
-
-
-# ---------------- bench chunking invariants ----------------
+import bench
+from test_registry_window import HEADLINE_CHAINS
 
 
 def test_order_dependent_headline_chains_share_a_family():
-    """Family chunking relies on chained headline entries (a probe
-    reading the index its build persisted) living in ONE family so a
-    chunk never splits them. Pin the known chains."""
-    chains = [
-        ["stream_fidx_build", "stream_fidx_ingest",
-         "stream_fidx_forget", "stream_fidx_probe"],
-        ["docs_index_build", "docs_index_probe"],
-        ["docs_bm25_index_build", "docs_bm25_index_probe"],
-    ]
-    for chain in chains:
+    """The printed line sums the headline walls per family. A chained
+    build and probe share a family, so one family's sum holds the whole
+    chain however the work shifts between them. Their order is checked
+    in ``test_registry_window``."""
+    for chain in HEADLINE_CHAINS:
         fams = {bench._family(q) for q in chain}
         assert len(fams) == 1, f"chain {chain} spans families {fams}"
-        idx = [bench.HEADLINE.index(q) for q in chain]
-        assert idx == sorted(idx), f"chain {chain} out of order"
 
 
 def test_family_selection_preserves_headline_order():
+    """The printed line's family sums over a selection of headline
+    queries hold each selected family once, in headline order."""
     fams = {"docs", "stream"}
     sub = [q for q in bench.HEADLINE if bench._family(q) in fams]
-    idx = [bench.HEADLINE.index(q) for q in sub]
-    assert idx == sorted(idx)
-
-
-def test_missing_tokens_round_trip_to_missing_set(tmp_path):
-    """--missing-tokens must emit bench --families tokens that select
-    EXACTLY the headline queries certified chunks don't provide."""
-    a, b = _full_coverage_chunks()
-    # drop a contiguous run and a whole family from coverage
-    fams = sorted({bench._family(q) for q in b})
-    drop_fam = fams[0]
-    kept = {q: s for q, s in b.items() if bench._family(q) != drop_fam}
-    ref = tmp_path / "ref.json"
-    ref.write_text(
-        json.dumps({"probes_first": REF, "probes_last": REF, "queries": {}})
-    )
-    paths = []
-    for i, c in enumerate([_chunk(a), _chunk(kept)]):
-        p = tmp_path / f"BENCH_CHUNK_{i}.json"
-        p.write_text(json.dumps(c))
-        paths.append(str(p))
-    proc = subprocess.run(
-        [
-            sys.executable,
-            os.path.join(REPO, "tools", "assemble_pin.py"),
-            *paths,
-            "--ref-pin",
-            str(ref),
-            "--missing-tokens",
-        ],
-        capture_output=True,
-        text=True,
-    )
-    assert proc.returncode == 1  # still missing
-    toks = {t for t in proc.stdout.strip().split(",") if t}
-    sel = bench.select_headline(toks)
-    want = [q for q in bench.HEADLINE if bench._family(q) == drop_fam]
-    assert sel == want
-
-
-def test_select_headline_family_slices_partition_cleanly():
-    """stream alone is ~130s measured — longer than most healthy
-    windows — so slices must partition it without loss or overlap."""
-    a = bench.select_headline({"stream:0:13"})
-    b = bench.select_headline({"stream:13:20"})
-    c = bench.select_headline({"stream:20:26", "pyds"})
-    want = {
-        q
-        for q in bench.HEADLINE
-        if bench._family(q) in ("stream", "pyds")
-    }
-    assert set(a) | set(b) | set(c) == want
-    assert not (set(a) & set(b) | set(b) & set(c) | set(a) & set(c))
-    # order preserved within each slice
-    for sub in (a, b, c):
-        idx = [bench.HEADLINE.index(q) for q in sub]
-        assert idx == sorted(idx)
-
-
-def test_select_headline_guards_chains_and_unknowns():
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="chained sequence"):
-        bench.select_headline({"stream:2:9"})  # splits the fidx chain
-    with _pytest.raises(ValueError, match="unknown family"):
-        bench.select_headline({"nosuch"})
-    assert bench.select_headline(None) == list(bench.HEADLINE)
-
-
-def test_loaded_steal_sampler_returns_pct():
-    pct = bench.loaded_steal_pct(seconds=1.0)
-    assert isinstance(pct, float)
-    assert pct == -1.0 or 0.0 <= pct <= 100.0
+    sums = bench._family_sums({q: 1.0 for q in sub})
+    order = list(dict.fromkeys(bench._family(q) for q in bench.HEADLINE))
+    assert list(sums) == [f for f in order if f in fams]
+    for fam, total in sums.items():
+        assert total == sum(bench._family(q) == fam for q in sub)

@@ -1,348 +1,58 @@
-"""Unit tests for tools/bench_regression.py — the per-path
-normalization logic added in round 10 (round-9 verdict #1): queries
-are classified to the jvm/python/io execution path from the PIN's
-measured telemetry and normalized by the matching probe's drift, so
-a host whose Python-worker or file-I/O path degraded (the r9 driver
-failure mode, invisible to the JVM-only calibration) adjudicates
-itself instead of flagging phantom regressions — while a genuine
-plan regression (job counts moved, no probe drift on its path)
-still fails the gate.
+"""tools/bench_regression.py on whole runs: a clean repeat, a host
+that slowed every query down, and a base written before the gate read
+plan counters. The per-rule cases are in ``test_bench_gate.py``.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import subprocess
-import sys
 
-GATE = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "tools",
-    "bench_regression.py",
-)
-
-
-def _tel(sec, jobs, py_cpu=0, spawns=0, rd=0.0, wr=0.0):
-    return {
-        "sec": sec,
-        "jobs": jobs,
-        "gc_ms": 10,
-        "jvm_rd_mb": rd,
-        "jvm_wr_mb": wr,
-        "py_spawns": spawns,
-        "py_cpu_ms": py_cpu,
-    }
-
-
-def _base():
-    return {
-        "queries": {
-            "q1_pricing_summary": 1.0,
-            "multimodal_decode_stats": 1.0,
-            "orc_roundtrip_events": 1.0,
-            "docs_token_stats": 1.0,
-        },
-        "telemetry": {
-            "q1_pricing_summary": _tel(1.0, 2),
-            "multimodal_decode_stats": _tel(1.0, 3, py_cpu=900, spawns=2),
-            "orc_roundtrip_events": _tel(1.0, 4, rd=30.0, wr=40.0),
-            "docs_token_stats": _tel(1.0, 2),
-        },
-        "probes_first": {"jvm": 1.0, "python": 1.0, "io": 1.0},
-        "probes_last": {"jvm": 1.0, "python": 1.0, "io": 1.0},
-    }
-
-
-def _run(fresh, base, tmp_path, *flags):
-    fp = tmp_path / "fresh.json"
-    bp = tmp_path / "base.json"
-    fp.write_text(json.dumps(fresh))
-    bp.write_text(json.dumps(base))
-    r = subprocess.run(
-        [sys.executable, GATE, *flags, str(fp), str(bp)],
-        capture_output=True,
-        text=True,
-    )
-    return r.returncode, r.stdout
-
-
-def test_path_degradation_normalizes_not_fails(tmp_path):
-    """python probe 5x + io probe 2x drifted: queries ON those paths
-    inflate accordingly but must normalize to ok; the pure-JVM query
-    that genuinely regressed 3x (jvm probe flat) must still FAIL."""
-    fresh = _base()
-    fresh["queries"] = {
-        "q1_pricing_summary": 1.1,
-        "multimodal_decode_stats": 5.0,  # 5x wall, python path
-        "orc_roundtrip_events": 2.0,  # 2x wall, io path
-        "docs_token_stats": 3.0,  # 3x wall, jvm path -> genuine
-    }
-    fresh["telemetry"] = {
-        "q1_pricing_summary": _tel(1.1, 2),
-        "multimodal_decode_stats": _tel(5.0, 3, py_cpu=4000, spawns=8),
-        "orc_roundtrip_events": _tel(2.0, 4, rd=60.0, wr=80.0),
-        "docs_token_stats": _tel(3.0, 5),
-    }
-    fresh["probes_first"] = {"jvm": 1.0, "python": 5.0, "io": 2.0}
-    fresh["probes_last"] = {"jvm": 1.05, "python": 5.2, "io": 2.1}
-    rc, out = _run(fresh, _base(), tmp_path)
-    assert rc == 1
-    assert "FAIL docs_token_stats" in out
-    assert "ok   multimodal_decode_stats" in out
-    assert "ok   orc_roundtrip_events" in out
-    assert "CONTENTION DETECTED [python]" in out
-    assert "CONTENTION DETECTED [io]" in out
-    # the genuine regression carries its job-count evidence
-    assert "[jobs 2->5]" in out
-
-
-def test_flat_probes_flag_real_regressions(tmp_path):
-    """No probe drift: a 2x python-path regression is code, not host,
-    and must FAIL — normalization never applies without drift."""
-    fresh = _base()
-    fresh["queries"] = dict(
-        _base()["queries"], multimodal_decode_stats=2.2
-    )
-    fresh["telemetry"] = dict(
-        _base()["telemetry"],
-        multimodal_decode_stats=_tel(2.2, 3, py_cpu=2000, spawns=2),
-    )
-    rc, out = _run(fresh, _base(), tmp_path)
-    assert rc == 1
-    assert "FAIL multimodal_decode_stats" in out
-    assert "[jobs flat at 3]" in out
+from test_bench_gate import GATE, _entry, _gate, _run
 
 
 def test_clean_run_passes(tmp_path):
-    rc, out = _run(_base(), _base(), tmp_path)
-    assert rc == 0
-    assert "bench regression gate: clean" in out
-
-
-def test_legacy_pin_without_probes_still_gates(tmp_path):
-    """A pre-r10 pin (jvm calibration only, no telemetry) must still
-    gate on raw numbers with the legacy jvm normalization."""
-    base = {
-        "queries": {"q1_pricing_summary": 1.0, "docs_token_stats": 1.0},
-        "calibration_first_sec": 1.0,
-        "calibration_last_sec": 1.0,
-    }
-    fresh = _base()
-    fresh["queries"] = {
-        "q1_pricing_summary": 1.0,
-        "docs_token_stats": 2.5,
-    }
-    rc, out = _run(fresh, base, tmp_path)
-    assert rc == 1
-    assert "FAIL docs_token_stats" in out
-
-
-def test_single_sample_legacy_pin_does_not_crash(tmp_path):
-    """A baseline carrying only calibration_first_sec (or a probe pair
-    with one non-positive entry) reaches _probe_means('min') as a
-    single-element list; min(1.5) raised TypeError and crashed the
-    gate exactly on the older pins the fallback exists to support
-    (round-11 advice #1)."""
-    base = {
-        "queries": {"q1_pricing_summary": 1.0, "docs_token_stats": 1.0},
-        "calibration_first_sec": 1.0,
-        # one non-positive probe entry -> single-element vals list
-        "probes": {"io": [0.5, 0]},
-    }
-    fresh = _base()
-    fresh["queries"] = {
-        "q1_pricing_summary": 1.0,
-        "docs_token_stats": 2.5,
-    }
-    rc, out = _run(fresh, base, tmp_path)
-    assert rc == 1  # still gates — no TypeError crash
-    assert "FAIL docs_token_stats" in out
-    assert "Traceback" not in out
+    run = _run({"q": _entry(), "r": _entry(python_tasks=0)})
+    proc = _gate(tmp_path, run, run)
+    assert proc.returncode == 0, proc.stdout + proc.stderr
+    assert proc.stdout.splitlines() == [
+        "2 queries compared; wall 4.0 -> 4.0 s (advisory); pass"
+    ]
 
 
 def test_host_degradation_summary_line(tmp_path):
-    """All failures jobs-flat + a drifted probe pair => the gate
-    prints the HOST-DEGRADATION adjudication line (still exit 1)."""
-    fresh = _base()
-    # jvm probe drifted 2x; docs_token_stats inflates 3x with flat
-    # jobs -> normalization (x0.5) leaves 1.5x+0.5s which still fails
-    fresh["queries"] = dict(_base()["queries"], docs_token_stats=4.0)
-    fresh["telemetry"] = dict(
-        _base()["telemetry"], docs_token_stats=_tel(4.0, 2)
-    )
-    fresh["probes_first"] = {"jvm": 2.0, "python": 1.0, "io": 1.0}
-    fresh["probes_last"] = {"jvm": 2.1, "python": 1.0, "io": 1.0}
-    rc, out = _run(fresh, _base(), tmp_path)
-    assert rc == 1
-    assert "HOST-DEGRADATION SUSPECTED" in out
-    assert "[jobs flat at 2]" in out
+    """A host losing CPU to steal runs the same plans 3x slower: each
+    query gets an advisory line with its steal, the summary line shows
+    the wall as advisory, and the gate passes."""
+    names = ("q1_pricing_summary", "docs_token_stats", "stream_cdc_apply")
+    base = _run({n: _entry() for n in names})
+    slow = _entry(sec=6.0, task_cpu_ms=4500, py_cpu_ms=2400, steal_pct=18.0)
+    fresh = _run({n: slow for n in names})
+    proc = _gate(tmp_path, fresh, base)
+    assert proc.returncode == 0, proc.stdout
+    lines = proc.stdout.splitlines()
+    assert lines[-1] == "3 queries compared; wall 6.0 -> 18.0 s (advisory); pass"
+    info = [x for x in lines if x.startswith("info ")]
+    assert len(info) == len(names), lines
+    assert all(x.endswith("(steal 0.5% -> 18.0%)") for x in info), info
 
 
-def test_healthy_path_never_borrows_jvm_drift(tmp_path):
-    """A python-path query whose OWN probe pair measured no drift must
-    NOT be normalized by a drifted jvm probe — that would mask a
-    genuine regression on a path the probes proved healthy (round-10
-    review finding)."""
-    fresh = _base()
-    fresh["queries"] = dict(
-        _base()["queries"], multimodal_decode_stats=2.0
-    )
-    fresh["telemetry"] = dict(
-        _base()["telemetry"],
-        multimodal_decode_stats=_tel(2.0, 5, py_cpu=1800, spawns=2),
-    )
-    # jvm drifted 2x; python probe flat
-    fresh["probes_first"] = {"jvm": 2.0, "python": 1.0, "io": 1.0}
-    fresh["probes_last"] = {"jvm": 2.0, "python": 1.05, "io": 1.0}
-    rc, out = _run(fresh, _base(), tmp_path)
-    assert rc == 1
-    assert "FAIL multimodal_decode_stats" in out
-    assert "[jobs 3->5]" in out
-
-
-def test_r10_driver_artifact_adjudicates_host(tmp_path):
-    """Replay the LITERAL committed round-10 driver bench artifact
-    (BENCH_DETAIL_r10.json, the 349.5 s run whose 20 flagged queries
-    were all jobs-flat) against BENCH_PIN_r10.json: with min-of-pair
-    base probes (the pin's python pair is 0.55/2.28 s — in-session
-    aging that mean-of-pair let mask the fresh run's real drift) the
-    gate must detect the python+io drift, normalize, and print the
-    HOST-DEGRADATION adjudication line (round-10 verdict #1)."""
+def test_single_sample_legacy_pin_does_not_crash(tmp_path):
+    """A base written before the gate read plan counters cannot be
+    compared: the committed BENCH_PIN_r11.json (wall pin with probes)
+    and a single-sample calibration pin both exit 2 with a reason, not
+    a traceback."""
+    fresh = _run({"q1_pricing_summary": _entry()})
     root = os.path.dirname(os.path.dirname(GATE))
-    fresh_p = os.path.join(root, "BENCH_DETAIL_r10.json")
-    base_p = os.path.join(root, "BENCH_PIN_r10.json")
-    r = subprocess.run(
-        [sys.executable, GATE, fresh_p, base_p],
-        capture_output=True,
-        text=True,
-    )
-    assert r.returncode == 1
-    assert "HOST-DEGRADATION SUSPECTED" in r.stdout
-    assert "CONTENTION DETECTED [python]" in r.stdout
-    assert "CONTENTION DETECTED [io]" in r.stdout
-    # every surviving failure carries its jobs-flat evidence
-    for line in r.stdout.splitlines():
-        if line.startswith("FAIL "):
-            assert "jobs flat" in line
-
-
-def test_adjudication_fires_without_probe_drift(tmp_path):
-    """All failures jobs-flat but NO probe pair crossed the threshold
-    (a transient stall between point samples): the adjudication line
-    must still fire, stating the probes were inconclusive."""
-    fresh = _base()
-    fresh["queries"] = dict(_base()["queries"], docs_token_stats=4.0)
-    fresh["telemetry"] = dict(
-        _base()["telemetry"], docs_token_stats=_tel(4.0, 2)
-    )
-    rc, out = _run(fresh, _base(), tmp_path)
-    assert rc == 1
-    assert "HOST-DEGRADATION SUSPECTED" in out
-    assert "probes inconclusive" in out
-
-
-def test_masked_by_normalization_warns(tmp_path):
-    """A raw >THRESHOLD regression absorbed by a drifted probe's
-    normalization must print a masked-by-normalization warning
-    (round-10 advice #1) — the ok verdict alone would hide what the
-    scaling ate."""
-    fresh = _base()
-    # python probe drifts 2.5x; the python-path query inflates 2.0x
-    # raw -> normalized 0.8x = ok, but the raw ratio exceeded 1.5x
-    fresh["queries"] = dict(
-        _base()["queries"], multimodal_decode_stats=2.0
-    )
-    fresh["telemetry"] = dict(
-        _base()["telemetry"],
-        multimodal_decode_stats=_tel(2.0, 3, py_cpu=1800, spawns=2),
-    )
-    fresh["probes_first"] = {"jvm": 1.0, "python": 2.5, "io": 1.0}
-    fresh["probes_last"] = {"jvm": 1.0, "python": 2.5, "io": 1.0}
-    rc, out = _run(fresh, _base(), tmp_path)
-    assert rc == 0
-    assert "masked-by-normalization: multimodal_decode_stats" in out
-    assert "host suspected, not proven" in out
-
-
-def test_base_probes_use_min_of_pair(tmp_path):
-    """An aged pin probe pair (healthy start, inflated end — the r10
-    pin's python 0.55/2.28 s shape) must contribute its MIN to the
-    base: a fresh run at 2x the pin's healthy sample is drift even
-    though it sits below the pin's aged mean."""
-    base = _base()
-    base["probes_first"] = {"jvm": 1.0, "python": 0.5, "io": 1.0}
-    base["probes_last"] = {"jvm": 1.0, "python": 2.3, "io": 1.0}
-    fresh = _base()
-    # fresh python probe steady at 1.0 — 2x the pin's min, well below
-    # the pin's 1.4 mean that the old gate used as the base
-    rc, out = _run(fresh, base, tmp_path)
-    assert "CONTENTION DETECTED [python]" in out
-
-
-def test_near_probe_cited_on_failures(tmp_path):
-    """When the fresh artifact carries family-boundary mini-probes,
-    a flagged query's line must cite the nearest sample (round-10
-    verdict #2) and call out a local host stall when that sample is
-    an outlier vs the run median."""
-    fresh = _base()
-    fresh["queries"] = dict(_base()["queries"], docs_token_stats=4.0)
-    fresh["telemetry"] = dict(
-        _base()["telemetry"], docs_token_stats=dict(_tel(4.0, 2), t0=100.0)
-    )
-    fresh["family_probes"] = [
-        {"family": "q1", "t": 10.0, "jvm": 0.1, "python": 0.2, "io": 0.1},
-        {"family": "docs", "t": 98.0, "jvm": 0.5, "python": 0.2, "io": 0.1},
-        {"family": "orc", "t": 200.0, "jvm": 0.1, "python": 0.2, "io": 0.1},
-    ]
-    rc, out = _run(fresh, _base(), tmp_path)
-    assert rc == 1
-    assert "[near-probe jvm 0.50s @t=98s" in out
-    assert "local host stall" in out
-
-
-def test_certify_clean_run(tmp_path):
-    """--certify passes only a run with a clean gate, healthy probes
-    vs pin and mid-run, and <2% hypervisor steal (round-10 verdict
-    #7's re-pin criteria made mechanical)."""
-    fresh = _base()
-    fresh["host_steal_pct"] = 0.4
-    rc, out = _run(fresh, _base(), tmp_path, "--certify")
-    assert rc == 0
-    assert "PIN-QUALITY: CERTIFIED" in out
-
-
-def test_certify_rejects_steal(tmp_path):
-    """External hypervisor steal blocks certification even when every
-    query beats the pin — a stolen-cycles run is not a baseline."""
-    fresh = _base()
-    fresh["host_steal_pct"] = 7.3
-    rc, out = _run(fresh, _base(), tmp_path, "--certify")
-    assert rc == 1
-    assert "PIN-QUALITY: NOT CERTIFIED" in out
-    assert "steal 7.3%" in out
-
-
-def test_steal_cited_on_failures(tmp_path):
-    """Per-query steal_pct telemetry must appear on FAIL lines and
-    strengthen the adjudication sentence (external contention proof)."""
-    fresh = _base()
-    fresh["queries"] = dict(_base()["queries"], docs_token_stats=4.0)
-    fresh["telemetry"] = dict(
-        _base()["telemetry"],
-        docs_token_stats=dict(_tel(4.0, 2), steal_pct=23.5),
-    )
-    rc, out = _run(fresh, _base(), tmp_path)
-    assert rc == 1
-    assert "[steal 24%]" in out or "[steal 23%]" in out
-    assert "contention is EXTERNAL to the guest" in out
-
-
-def test_midrun_drift_warns_on_nonjvm_paths(tmp_path):
-    """The python probe moving mid-run must print a contention
-    warning — the r9 failure mode is invisible to the jvm pair."""
-    fresh = _base()
-    fresh["probes_first"] = {"jvm": 1.0, "python": 1.0, "io": 1.0}
-    fresh["probes_last"] = {"jvm": 1.0, "python": 4.0, "io": 1.0}
-    rc, out = _run(fresh, _base(), tmp_path)
-    assert "CONTENTION WARNING: [python]" in out
+    with open(os.path.join(root, "BENCH_PIN_r11.json")) as f:
+        pin_r11 = json.load(f)
+    single = {
+        "queries": {"q1_pricing_summary": 1.0},
+        "calibration_first_sec": 1.0,
+        "probes": {"io": [0.5, 0]},
+    }
+    for base in (pin_r11, single):
+        proc = _gate(tmp_path, fresh, base)
+        assert proc.returncode == 2, proc.stdout + proc.stderr
+        assert proc.stderr.startswith("cannot compare: ")
+        assert "Traceback" not in proc.stderr

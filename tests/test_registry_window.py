@@ -39,10 +39,21 @@ def test_every_oracle_names_a_registered_query():
     assert set(reg.all_oracles()) <= q
 
 
+# bench.py HEADLINE entries where each probe reads what its build
+# persisted
+HEADLINE_CHAINS = (
+    ["stream_fidx_build", "stream_fidx_ingest",
+     "stream_fidx_forget", "stream_fidx_probe"],
+    ["docs_index_build", "docs_index_probe"],
+    ["docs_bm25_index_build", "docs_bm25_index_probe"],
+)
+
+
 def test_bench_headline_names_resolve():
     """Every bench.py HEADLINE name must resolve in the registry or a
     BENCH_ONLY map — a typo would kill the whole bench run at minute
-    four (same failure mode the _PRIORITY guard closes)."""
+    four (same failure mode the _PRIORITY guard closes) — and the
+    chained build/probe entries must stay in order."""
     import bench
     from flink_orc_sink_spark.queries import engine, llm
 
@@ -54,3 +65,8 @@ def test_bench_headline_names_resolve():
     missing = [n for n in bench.HEADLINE if n not in known]
     assert not missing, missing
     assert len(set(bench.HEADLINE)) == len(bench.HEADLINE)
+    # each probe reads what its build persisted, so a chain must run
+    # in order
+    for chain in HEADLINE_CHAINS:
+        idx = [bench.HEADLINE.index(q) for q in chain]
+        assert idx == sorted(idx), f"chain {chain} out of order"

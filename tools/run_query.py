@@ -9,14 +9,19 @@ Prints the result (first --show rows) or, with --out, writes the full
 result as ORC through the engine's batch sink (atomic commit,
 optional partitioning) — the end-to-end path a user of the reference
 would actually run: query → partitioned, warehouse-readable ORC.
+
+Then prints one JSON line with what the run cost, keyed by the query
+name: the wall ``sec`` and the counters ``bench.py`` records per query
+(jobs, stages, tasks, Python tasks, shuffle bytes, task and Python
+worker CPU, worker spawns, hypervisor steal).
 """
 
 from __future__ import annotations
 
 import argparse
+import json
 import os
 import sys
-import time
 
 
 def main() -> int:
@@ -44,22 +49,26 @@ def main() -> int:
         print(f"unknown query {args.query!r}; use --list", file=sys.stderr)
         return 2
 
+    from bench import Telemetry
     from flink_orc_sink_spark.session import get_spark
 
     spark = get_spark(f"run-{args.query}")
-    t0 = time.time()
-    df = qs[args.query](spark, args.sf)
-    if args.explain:
-        df.explain("formatted")
-    if args.out:
-        from flink_orc_sink_spark.sources.orc_sink import write_orc
+    tel = Telemetry(spark)
 
-        write_orc(df, args.out, partition_cols=args.partition_by)
-        n = spark.read.orc(args.out).count()
-        print(f"wrote {n} rows to {args.out} in {time.time() - t0:.1f}s")
-    else:
-        df.show(args.show, truncate=False)
-        print(f"({time.time() - t0:.1f}s at {args.sf})")
+    def run() -> None:
+        df = qs[args.query](spark, args.sf)
+        if args.explain:
+            df.explain("formatted")
+        if args.out:
+            from flink_orc_sink_spark.sources.orc_sink import write_orc
+
+            write_orc(df, args.out, partition_cols=args.partition_by)
+            n = spark.read.orc(args.out).count()
+            print(f"wrote {n} rows to {args.out}")
+        else:
+            df.show(args.show, truncate=False)
+
+    print(json.dumps({args.query: tel.measure(run)}))
     return 0
 
 
