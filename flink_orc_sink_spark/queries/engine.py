@@ -2821,7 +2821,7 @@ def stream_pyds_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly once — no partition starved, none replayed. The restart/
     rebalance half of the contract (resume cursors, add a partition
     mid-stream) is pytest-pinned in tests/test_pydatasource.py."""
-    import time
+    import threading
 
     from flink_orc_sink_spark.sources.pydatasource import register
 
@@ -2863,24 +2863,21 @@ def stream_pyds_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(processingTime="0 seconds")
             .start()
         )
-        deadline = time.time() + 120
-        done = 0
-        while time.time() < deadline:
-            done = spark.sql(
-                f"SELECT COALESCE(SUM(n_events), 0) AS t FROM {name}"
-            ).collect()[0].t
-            if done >= 3 * per_part:
-                break
-            time.sleep(0.25)
+        # Drain to exhaustion, not to a wall-clock poll: the query's
+        # micro-batches, and so its jobs, are the same in every run. A
+        # stuck stream is stopped after 120 s, which ends the wait and
+        # leaves the count short.
+        stuck = threading.Timer(120, q.stop)
+        stuck.start()
+        try:
+            q.processAllAvailable()
+        finally:
+            stuck.cancel()
         q.stop()
         q.awaitTermination(30)
-        if done < 3 * per_part:
-            # the last poll can be one interval stale and stop()
-            # lets an in-flight batch land in the memory sink —
-            # re-read once before declaring failure
-            done = spark.sql(
-                f"SELECT COALESCE(SUM(n_events), 0) AS t FROM {name}"
-            ).collect()[0].t
+        done = spark.sql(
+            f"SELECT COALESCE(SUM(n_events), 0) AS t FROM {name}"
+        ).collect()[0].t
         if done < 3 * per_part:
             # Fail loudly: a partial complete-mode aggregate would
             # otherwise surface as a confusing oracle hash mismatch

@@ -263,15 +263,18 @@ class _DeltaLogTable:
        (NULL-safe: cleanup keeps NULL-order rows, so the guard admits
        them);
     4. hash ``kp``, run the retract sinks' per-batch extras (deltas,
-       images) on the checkpointed batch, and append it to
-       ``log/batch_id=N`` by dynamic overwrite — the only per-batch
-       state write, O(batch) on any key distribution;
+       images) on the checkpointed batch, and append it to the log
+       (:meth:`append`: a plain path overwrite of
+       ``log/batch_id=N``) — the only per-batch state write, one Spark
+       job, O(batch) on any key distribution;
     5. :func:`_should_fold`: fold once the log outgrows
        ``max(FOLD_MIN_BYTES, fold_ratio × base)`` — amortized
-       O(batch / fold_ratio) rows per batch;
-    6. fold (:meth:`fold`): collect the touched buckets, union the log
-       with the pruned base, resolve, ``localCheckpoint``, overwrite
-       the touched base buckets, then ``rmtree`` the log;
+       O(batch / fold_ratio) rows per batch; below the byte floor the
+       log's size is the only filesystem call;
+    6. fold (:meth:`fold`): one scan of the log collects the touched
+       buckets and the row count, then union the log with the pruned
+       base, resolve, ``localCheckpoint``, overwrite the touched base
+       buckets, and ``rmtree`` the log;
     7. retract sinks with ``cleanup_every_n_batches`` + ``horizon_fn``:
        the horizon tombstone cleanup (:meth:`cleanup`) under the same
        lease.
@@ -289,6 +292,15 @@ class _DeltaLogTable:
     and its extras read only the base and ``log[< batch]`` — neither
     changes before the append — so they recompute identical output
     with or without their ``applied/`` marker (a work-skip only). The
+    log append needs no atomic swap: only the last, uncommitted batch
+    is ever replayed, so while its directory is deleted and rewritten
+    a reader sees ``log[< N]``, a consistent earlier snapshot, and
+    the rewrite drops whatever a crashed attempt left in it. The
+    extras keep :func:`_write_batch`'s dynamic swap, as do fan-out,
+    quarantine and the ``foreachBatch`` sink: their readers read
+    every batch or trust a commit or ``applied/`` marker, not a
+    prefix, so a replay's delete-then-write would show them a batch
+    that is missing or torn. The
     log is deleted only after everything it says is durably folded,
     and the resolve absorbs base/log duplicates (latest-per-key keeps
     one row, DISTINCT one copy), so after any crash prefix of a fold
@@ -352,13 +364,13 @@ class _DeltaLogTable:
         return self.resolve(spark, rows)
 
     def merge_touched(self, spark: SparkSession, log: DataFrame):
-        """``(touched buckets, resolve(log ∪ their base rows))`` — the
-        one resolve a fold writes and a merge-on-read reader answers
-        from, so a fold never materializes what the reader didn't
-        answer. Lazy; one job collects the buckets."""
-        touched = [
-            tuple(r) for r in log.select(*self.parts).distinct().collect()
-        ]
+        """``(touched buckets, log rows, resolve(log ∪ their base
+        rows))`` — the one resolve a fold writes and a merge-on-read
+        reader answers from, so a fold never materializes what the
+        reader didn't answer. Lazy, but for one scan of the log that
+        collects its buckets with their row counts."""
+        per_bucket = log.groupBy(*self.parts).count().collect()
+        touched = [tuple(r[c] for c in self.parts) for r in per_bucket]
         rows = log
         if _orc_files_exist(spark, self.base_dir):
             rows = rows.unionByName(
@@ -366,7 +378,8 @@ class _DeltaLogTable:
                     _bucket_filter(self.parts, touched)
                 )
             )
-        return touched, self.resolve(spark, rows)
+        n_log = sum(r["count"] for r in per_bucket)
+        return touched, n_log, self.resolve(spark, rows)
 
     def lookup(self, spark: SparkSession, keys: DataFrame,
                upto_batch: int | None = None, buckets=None):
@@ -404,15 +417,21 @@ class _DeltaLogTable:
         """Fold the log into the base (the caller holds the lease):
         the sink's pre-base writes, the touched base buckets, the
         sink's post-base writes, then the log delete — in that order,
-        which is the crash contract."""
+        which is the crash contract. A log of empty batches folds to
+        nothing; it is kept while the base has no file to carry the
+        table's schema."""
+        none = {"log_rows_folded": 0, "buckets_rewritten": 0}
         if not _orc_files_exist(spark, self.log_dir):
-            return {"log_rows_folded": 0, "buckets_rewritten": 0}
+            return none
         log = self.read_log(spark)
+        touched, n_log, merged = self.merge_touched(spark, log)
+        if not n_log:
+            if _orc_files_exist(spark, self.base_dir):
+                _hfs_rmtree(spark, self.log_dir)
+            return none
         stats = {}
         if self.before_fold is not None:
             stats = self.before_fold(spark, self, log)
-        touched, merged = self.merge_touched(spark, log)
-        n_log = log.count()
         merged = merged.localCheckpoint(eager=True)
         try:
             _dynamic_overwrite(merged, self.base_dir, *self.parts)
@@ -475,6 +494,18 @@ class _DeltaLogTable:
             "buckets_rewritten": len(touched),
         }
 
+    def append(self, batch: DataFrame, batch_id: int) -> None:
+        """Write ``batch`` as the log's ``batch_id=<batch_id>``
+        directory by a plain path overwrite: a replay replaces its own
+        batch and no other, without the staging, delete and rename of
+        a dynamic partition swap (the crash contract says why the log
+        needs none)."""
+        (
+            batch.write.mode("overwrite")
+            .option("compression", COMPRESSION)
+            .orc(os.path.join(self.log_dir, f"batch_id={batch_id}"))
+        )
+
     def start(self, changes: DataFrame, checkpoint: str, trigger,
               fold_ratio: float, fold, extras=None, cleanup=None,
               every: int | None = None, horizon_fn=None,
@@ -511,13 +542,13 @@ class _DeltaLogTable:
                         ))
                 ch = batch_df.withColumn("kp", self.kp(spark))
                 if extras is None:
-                    _write_batch(ch, self.log_dir, batch_id)
+                    self.append(ch, batch_id)
                 else:
                     # read for the buckets, the extras and the log
                     ch = ch.localCheckpoint(eager=True)
                     try:
                         extras(spark, ch, batch_id)
-                        _write_batch(ch, self.log_dir, batch_id)
+                        self.append(ch, batch_id)
                     finally:
                         # released before the fold, which reads only disk
                         release_local_checkpoint(ch)
@@ -742,7 +773,7 @@ def read_scd2_history(spark: SparkSession, state_path: str) -> DataFrame:
     hist_dir = os.path.join(state_path, "history")
     if not _orc_files_exist(spark, table.log_dir):
         return spark.read.orc(hist_dir)
-    touched, merged = table.merge_touched(spark, table.read_log(spark))
+    touched, _, merged = table.merge_touched(spark, table.read_log(spark))
     fresh = _scd2_chains(spark, table, merged)
     if _orc_files_exist(spark, hist_dir):
         return (
@@ -756,7 +787,8 @@ def read_scd2_history(spark: SparkSession, state_path: str) -> DataFrame:
 def _record_layout(spark: SparkSession, state_path: str, **kv) -> None:
     """Persist immutable layout parameters of a state dir as marker
     DIRECTORY NAMES (``layout/<k>=<v>``) — the same atomic ``mkdirs``
-    encoding as the replay horizon. Written once on the first batch;
+    encoding as the replay horizon. Each marker is made once: a
+    query's first batch lists them and makes only the missing ones;
     maintenance ops (fold, cleanup) and readers read them back so they
     never need the sink's constructor arguments.
 
@@ -777,7 +809,10 @@ def _record_layout(spark: SparkSession, state_path: str, **kv) -> None:
                 f"restart the sink with the recorded values or fold "
                 f"into a fresh state dir"
             )
-        _hfs_mkdirs(spark, os.path.join(state_path, "layout", f"{k}={v}"))
+        if k not in existing:
+            _hfs_mkdirs(
+                spark, os.path.join(state_path, "layout", f"{k}={v}")
+            )
 
 
 def _read_layout(spark: SparkSession, state_path: str) -> dict:
@@ -804,10 +839,12 @@ def _should_fold(
     spark: SparkSession, base_dir: str, log_dir: str, fold_ratio: float
 ) -> bool:
     """LSM size-ratio fold trigger: fold when the delta log outgrows
-    ``max(FOLD_MIN_BYTES, fold_ratio x base bytes)``. Two
-    getContentSummary calls — no data files are read to decide."""
+    ``max(FOLD_MIN_BYTES, fold_ratio x base bytes)``. One
+    getContentSummary call for the log, and a second for the base only
+    once the log has passed the byte floor — no data files are read to
+    decide."""
     log_bytes = _hfs_dir_size(spark, log_dir)
-    if log_bytes == 0:
+    if log_bytes == 0 or log_bytes < FOLD_MIN_BYTES:
         return False
     base_bytes = _hfs_dir_size(spark, base_dir)
     return log_bytes >= max(FOLD_MIN_BYTES, fold_ratio * base_bytes)

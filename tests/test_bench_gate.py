@@ -118,14 +118,6 @@ def test_advisory_blowup_passes(tmp_path):
     assert "steal 0.5% -> 14.0%" in proc.stdout
 
 
-def test_timed_query_rise_is_advisory(tmp_path):
-    base = _run({"stream_pyds_partitioned": _entry()})
-    fresh = _run({"stream_pyds_partitioned": _entry(jobs=8, stages=9)})
-    proc = _gate(tmp_path, fresh, base)
-    assert proc.returncode == 0, proc.stdout
-    assert "info stream_pyds_partitioned: jobs 5 -> 8, stages 6 -> 9" in proc.stdout
-
-
 def test_dropped_query_fails_and_new_query_is_listed(tmp_path):
     base = _run({"q": _entry(), "r": _entry()})
     fresh = _run({"q": _entry(), "s": _entry()})

@@ -1,0 +1,163 @@
+"""The delta-log state table's per-cycle work, pinned as exact counts.
+
+A CDC stream's batch is one Spark job and one filesystem size probe;
+a restarted query records no layout marker twice; a fold is five
+Spark jobs. Jobs are counted from the DAG scheduler's next job id,
+filesystem calls by rebinding the sink module's ``_hfs_*`` helpers.
+The replay tests pin the log append's contract: a batch id delivered
+twice leaves exactly its replayed rows, and an empty batch reads and
+folds to nothing.
+"""
+
+from __future__ import annotations
+
+import os
+
+import pytest
+from pyspark.sql import functions as F
+
+from flink_orc_sink_spark.streaming import orc_sink
+
+SCHEMA = "k long, v long, seq long, op string"
+FS_HELPERS = [n for n in vars(orc_sink) if n.startswith("_hfs_")]
+
+
+def _next_job(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+@pytest.fixture
+def fs_calls(monkeypatch):
+    """Per-helper call counts of the sink's filesystem helpers."""
+    calls = dict.fromkeys(FS_HELPERS, 0)
+
+    def counted(name, fn):
+        def wrapper(*args, **kwargs):
+            calls[name] += 1
+            return fn(*args, **kwargs)
+
+        return wrapper
+
+    for name in FS_HELPERS:
+        monkeypatch.setattr(orc_sink, name, counted(name, getattr(orc_sink, name)))
+    return calls
+
+
+def _feed(spark, src, name, rows):
+    spark.createDataFrame(rows, SCHEMA).coalesce(1).write.parquet(
+        os.path.join(src, name)
+    )
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.select("k", "v", "seq", "op").collect())
+
+
+def _run(spark, src, state, ckpt, fs_calls) -> tuple[int, int, dict]:
+    """(batches, Spark jobs, filesystem calls) of one availableNow run."""
+    before = dict(fs_calls)
+    job0 = _next_job(spark)
+    q = orc_sink.stream_cdc_apply_orc(
+        orc_sink.stream_from_files(
+            spark, os.path.join(src, "*"), SCHEMA, max_files_per_trigger=1
+        ),
+        state, ckpt, "k", ["seq"], trigger={"availableNow": True},
+    )
+    assert q.awaitTermination(120), "stream did not drain"
+    jobs = _next_job(spark) - job0
+    batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
+    return batches, jobs, {n: fs_calls[n] - before[n] for n in fs_calls}
+
+
+def test_cdc_cycle_work_is_exact(spark, tmp_path, fs_calls):
+    src, state, ckpt = (str(tmp_path / d) for d in ("in", "state", "ckpt"))
+    feed = [
+        [(1, 10, 1, "U"), (2, 20, 1, "U"), (3, 30, 1, "U")],
+        [(1, 11, 2, "U"), (2, None, 2, "D"), (4, 40, 2, "U")],
+        [(5, 50, 3, "U"), (3, 31, 3, "U")],
+    ]
+    for i, rows in enumerate(feed[:2]):
+        _feed(spark, src, f"f{i}", rows)
+    batches, jobs, calls = _run(spark, src, state, ckpt, fs_calls)
+    assert batches == 2
+    assert jobs == batches
+    assert calls["_hfs_dir_size"] == batches
+    assert calls["_hfs_mkdirs"] == 3  # kc, nkp and oc, once each
+
+    # a restarted query finds every marker recorded and makes none
+    _feed(spark, src, "f2", feed[2])
+    batches, jobs, calls = _run(spark, src, state, ckpt, fs_calls)
+    assert batches == 1
+    assert jobs == batches
+    assert calls["_hfs_dir_size"] == batches
+    assert calls["_hfs_mkdirs"] == 0
+
+    job0 = _next_job(spark)
+    out = orc_sink.fold_retract_state(spark, state)
+    assert _next_job(spark) - job0 == 5
+    # keys 1-5 hash to kp 13, 8, 3, 4 and 12
+    assert out == {"log_rows_folded": 8, "buckets_rewritten": 5}
+    assert _rows(orc_sink.read_cdc_table(spark, state)) == [
+        (1, 11, 2, "U"), (2, None, 2, "D"), (3, 31, 3, "U"),
+        (4, 40, 2, "U"), (5, 50, 3, "U"),
+    ]
+
+
+def _apply_batch(spark, state, ckpt):
+    """The CDC sink's ``foreachBatch`` body, taken from a writer that
+    is never started."""
+    from pyspark.sql.streaming import DataStreamWriter
+
+    bodies = []
+    real = DataStreamWriter.foreachBatch
+
+    def capture(self, fn):
+        bodies.append(fn)
+        return real(self, fn)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(DataStreamWriter, "foreachBatch", capture)
+        mp.setattr(DataStreamWriter, "start", lambda self: None)
+        orc_sink.stream_cdc_apply_orc(
+            spark.readStream.format("rate").load(), state, ckpt, "k", ["seq"]
+        )
+    (body,) = bodies
+    return body
+
+
+def test_replayed_batch_replaces_its_log_partition(spark, tmp_path):
+    state = str(tmp_path / "state")
+    apply_batch = _apply_batch(spark, state, str(tmp_path / "ckpt"))
+    first = [(1, 10, 1, "U"), (2, 20, 1, "U"), (3, 30, 1, "U")]
+    second = [(1, 11, 2, "U"), (2, None, 2, "D")]
+    apply_batch(spark.createDataFrame(first, SCHEMA), 0)
+    apply_batch(spark.createDataFrame(second, SCHEMA), 1)
+    # the crashed first attempt of batch 1 also left a part file whose
+    # row would win the resolve for key 3
+    stray = str(tmp_path / "stray")
+    spark.createDataFrame([(3, 99, 9, "U")], SCHEMA).withColumn(
+        "kp", F.lit(0)
+    ).coalesce(1).write.orc(stray)
+    (part,) = [n for n in os.listdir(stray) if n.endswith(".orc")]
+    part_dir = os.path.join(state, "state_log", "batch_id=1")
+    os.rename(os.path.join(stray, part), os.path.join(part_dir, "part-09999-stale.orc"))
+    assert _rows(spark.read.orc(part_dir)) == sorted(second + [(3, 99, 9, "U")])
+
+    apply_batch(spark.createDataFrame(second, SCHEMA), 1)  # the replay
+    assert _rows(spark.read.orc(part_dir)) == sorted(second)
+    latest = {}
+    for row in first + second:
+        if row[0] not in latest or row[2] > latest[row[0]][2]:
+            latest[row[0]] = row
+    assert _rows(orc_sink.read_cdc_table(spark, state)) == sorted(latest.values())
+
+
+def test_empty_batch_reads_and_folds_to_nothing(spark, tmp_path):
+    state = str(tmp_path / "state")
+    apply_batch = _apply_batch(spark, state, str(tmp_path / "ckpt"))
+    apply_batch(spark.createDataFrame([], SCHEMA), 0)
+    assert orc_sink.read_cdc_table(spark, state).count() == 0
+    assert orc_sink.fold_retract_state(spark, state) == {
+        "log_rows_folded": 0, "buckets_rewritten": 0,
+    }
+    assert orc_sink.read_cdc_table(spark, state).count() == 0

@@ -9,8 +9,6 @@ For every query of ``base``:
   all. They repeat exactly from run to run of the same plan.
 - FAIL when ``shuffle_bytes`` rose by more than 10 % and by more than
   1 MiB. Streaming queries move it by about 0.2 % between runs.
-- Except for the ``TIMED`` query, whose counters follow its wall; a
-  rise of its counters is advisory.
 - Print task CPU, Python worker CPU and wall time as advisory lines
   when one grew 1.5x, with the query's hypervisor steal. They never
   fail: on a shared VM they move with the host.
@@ -33,11 +31,6 @@ SHUFFLE_REL, SHUFFLE_ABS = 0.10, 1 << 20
 ADVISORY = {"task_cpu_ms": 500, "py_cpu_ms": 500, "sec": 0.5}
 ADVISORY_RATIO = 1.5
 COUNTERS = HARD + ("shuffle_bytes", "steal_pct", *ADVISORY)
-# This query's function polls its stream every 0.25 s until it drains,
-# under a processingTime trigger, so its polls and micro-batches follow
-# the wall: 23-30 jobs over twelve runs of the same code. A rise of its
-# counters is advisory until the polling goes.
-TIMED = {"stream_pyds_partitioned"}
 
 
 def load(path: str) -> dict:
@@ -66,9 +59,7 @@ def compare(fresh: dict, base: dict) -> tuple[list[str], bool]:
         sb, fb = b["shuffle_bytes"], f["shuffle_bytes"]
         if fb - sb > max(SHUFFLE_REL * sb, SHUFFLE_ABS):
             rose.append(f"shuffle_bytes {sb} -> {fb}")
-        if rose and name in TIMED:
-            lines.append(f"info {name}: {', '.join(rose)} (timed by its polls)")
-        elif rose:
+        if rose:
             lines.append(f"FAIL {name}: {', '.join(rose)}")
             failed = True
         grew = [
