@@ -22,8 +22,8 @@ A run is judged against an earlier one on those counters:
 
     python tools/bench_regression.py BENCH_DETAIL.json base.json
 
-The plan counters repeat exactly for the same code, so a rise fails
-(the gate exempts one query that polls its stream). Wall and CPU times
+The plan counters repeat exactly for the same code, so a rise fails.
+Wall and CPU times
 only show a direction on a host that loses CPU to hypervisor steal;
 the gate prints them as advisory.
 

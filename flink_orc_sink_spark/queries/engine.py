@@ -20,9 +20,13 @@ value level:
 
 from __future__ import annotations
 
+import contextlib
+import glob
+import itertools
 import os
+import shutil
 import tempfile
-from contextlib import contextmanager
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,48 +42,44 @@ from flink_orc_sink_spark.sources.catalog import normalize_events_ts, table
 from flink_orc_sink_spark.sources.orc_sink import read_orc, write_orc
 
 
-STREAM_STATE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8")
-)
+# State-store overhead is per partition per operator per micro-batch
+# (open + commit + snapshot), so a stream's partition count must be
+# sized to its sustained throughput, NOT inherited from the batch
+# shuffle default: these bounded local replays want 8 (32 wastes ~4x
+# the commit work on near-empty stores — measured 12.2 s -> 3.3 s on
+# the running-totals replay); a production 100 TB/day stream wants
+# hundreds, chosen ONCE before the first checkpoint (the count is
+# frozen into the checkpoint thereafter). Results are partition-count
+# independent by the engine's determinism rules.
+STREAM_STATE_PARTITIONS = 8
+# Every registry replay drains in well under this; past it, fail loudly.
+_DRAIN_SECS = 180
+
+_SEQ = itertools.count(1)
 
 
-@contextmanager
-def stream_partitions(spark: SparkSession, n: int | None = None):
-    """Pin ``spark.sql.shuffle.partitions`` (= the stream's STATE
-    partition count, captured at first checkpoint) for the duration of
-    a stream start, then restore the batch setting.
-
-    State-store overhead is per partition per operator per micro-batch
-    (open + commit + snapshot), so a stream's partition count must be
-    sized to its sustained throughput, NOT inherited from the batch
-    shuffle default: these bounded local replays want 8 (32 wastes
-    ~4x the commit work on near-empty stores — measured 12.2 s -> 3.3 s
-    on the running-totals replay); a production 100 TB/day stream
-    wants hundreds, chosen ONCE before the first checkpoint (the
-    count is frozen into the checkpoint thereafter). Results are
-    partition-count independent by the engine's determinism rules.
-    """
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(n or STREAM_STATE_PARTITIONS)
-    )
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
-_STREAM_SEQ = 0
-
-
-
-def _drain_or_fail(q, secs: int, what: str) -> None:
-    """``awaitTermination`` with LOUD failure: a silently partial
-    drain would surface as a confusing oracle mismatch, and a
-    still-running query would leak past its checkpoint tempdir and
-    into later (exclusively-timed) bench queries. Shared by every
-    bounded availableNow drain in this module."""
-    if q.awaitTermination(secs):
+def _drain_or_fail(q, secs: int, what: str, live: bool = False) -> None:
+    """Drain ``q`` or fail LOUDLY: a silently partial drain would
+    surface as a confusing oracle mismatch, and a still-running query
+    would leak past its checkpoint dir into later (timed) bench
+    queries. An ``availableNow`` query ends on its own:
+    ``awaitTermination(secs)``. A ``live`` (``processingTime``) query
+    never does: ``processAllAvailable`` under a timer that stops it
+    after ``secs``; once drained it is stopped. A query not drained in time is stopped
+    BEFORE the ``TimeoutError``, and an error it raises while stopping
+    does not mask that diagnostic."""
+    if live:
+        stuck = []
+        timer = threading.Timer(secs, lambda: (stuck.append(1), q.stop()))
+        timer.start()
+        try:
+            q.processAllAvailable()
+        finally:
+            timer.cancel()
+        if not stuck:
+            q.stop()
+            return
+    elif q.awaitTermination(secs):
         return
     try:
         q.stop()
@@ -91,59 +91,145 @@ def _drain_or_fail(q, secs: int, what: str) -> None:
     raise TimeoutError(f"{what} did not drain in {secs}s")
 
 
-def _run_feed_stream(
-    spark: SparkSession,
-    feed: str,
-    schema,
-    on_batch,
-    what: str,
-    owner_cell: list | None = None,
-    ckpt: str | None = None,
-) -> None:
-    """The shared harness of every index-ingest stream: one
-    ``availableNow`` ``foreachBatch`` pass over a parquet feed
-    directory, one file per trigger, loud on a stuck drain. Keeping
-    it single-sourced keeps the replay contract (checkpointed batch
-    ids driving per-batch markers inside ``on_batch``) from drifting
-    between the four ingest queries.
+class _Replay:
+    """The harness every registry stream query replays through — the
+    reference's one test shape, a replayed feed pushed through a
+    checkpointed sink (``OrcSinkTest.java``). Used as ``with
+    _Replay(spark, sf_dir, tag) as r:``, it owns
 
-    ``owner_cell``: pass a one-element list and the harness fills
-    ``owner_cell[0]`` with the CHECKPOINT-DERIVED lease owner before
-    the first trigger, demonstrating the owner rule the stateful
-    sinks use (``lease.py`` rule 2): a PRODUCTION stream with a
-    stable checkpoint reclaims its own orphan lease instantly after
-    a crash-restart. In THESE bounded demo harnesses the checkpoint
-    is a fresh tempdir per invocation (and the state dir is rebuilt
-    from scratch), so the reclaim path isn't what protects reruns
-    here — the rebuild is; the owner plumbing exists so the
-    registered queries exercise the same call shape production code
-    should use.
+    - ``r.stage``, the scratch feed dir the query's file source reads
+      (:meth:`events`, :meth:`write_files`, or a Spark write into it);
+    - ``r.ckpt``, the checkpoint, and ``r.owner``, the lease owner
+      derived from it (``lease.py`` rule 2: a production stream with a
+      stable checkpoint reclaims its own orphan lease after a crash);
+    - ``r.out``, the persistent dir a sink writes and the returned
+      DataFrame reads lazily:
+      ``<tempdir>/spark_graft_stream_<tag>_<sf>_<seq>``, emptied here;
+    - :meth:`run`, the one bounded, loud drain.
 
-    ``ckpt``: an explicit, PERSISTENT checkpoint dir — pass it to
-    resume the same stream across calls (the bench-only phase split of
-    the forget lifecycle drains its add and control batches in
-    separate timed calls over one source WAL). Default stays a fresh
-    tempdir per invocation."""
-    import contextlib
+    Stage and checkpoint are made on entry and removed on exit, also
+    when the query fails. ``base`` instead resumes ``base/feed`` and ``base/ckpt``
+    across calls and keeps them: the bench-only phase split of the
+    forget lifecycle drains its add and control batches in separate
+    timed calls over one source WAL."""
 
-    if ckpt is None:
-        ckpt_cm = tempfile.TemporaryDirectory(prefix="stream_feed_ckpt_")
-    else:
-        os.makedirs(ckpt, exist_ok=True)
-        ckpt_cm = contextlib.nullcontext(ckpt)
-    with ckpt_cm as ckpt_dir, stream_partitions(spark):
-        if owner_cell is not None:
-            owner_cell[0] = f"sink:{ckpt_dir}"
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
-            .writeStream.foreachBatch(on_batch)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
+    def __init__(self, spark: SparkSession, sf_dir: str, tag: str,
+                 base: str | None = None):
+        self.spark, self.sf_dir, self.tag = spark, sf_dir, tag
+        self.seq = next(_SEQ)
+        self.out = os.path.join(
+            tempfile.gettempdir(),
+            f"spark_graft_stream_{tag}_"
+            f"{os.path.basename(os.path.normpath(sf_dir))}_{self.seq}",
         )
-        _drain_or_fail(q, 180, what)
+        shutil.rmtree(self.out, ignore_errors=True)
+        self._base = base
+        self._events_schema = None
+
+    def __enter__(self) -> _Replay:
+        if self._base is None:
+            self.stage = tempfile.mkdtemp(prefix=f"stream_{self.tag}_src_")
+            self.ckpt = tempfile.mkdtemp(prefix=f"stream_{self.tag}_ckpt_")
+        else:
+            self.stage = os.path.join(self._base, "feed")
+            self.ckpt = os.path.join(self._base, "ckpt")
+            os.makedirs(self.stage, exist_ok=True)
+            os.makedirs(self.ckpt, exist_ok=True)
+        self.owner = f"sink:{self.ckpt}"
+        return self
+
+    def __exit__(self, *exc) -> None:
+        if self._base is None:
+            shutil.rmtree(self.stage, ignore_errors=True)
+            shutil.rmtree(self.ckpt, ignore_errors=True)
+
+    def run(self, start, what: str, live: bool = False) -> None:
+        """``start()`` a query and drain it (:func:`_drain_or_fail`),
+        with ``spark.sql.shuffle.partitions`` — which the checkpoint
+        freezes as the STATE partition count — pinned to
+        ``STREAM_STATE_PARTITIONS`` until the drain ends. The query is
+        stopped on every exit path."""
+        conf = self.spark.conf
+        prev = conf.get("spark.sql.shuffle.partitions")
+        conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
+        q = None
+        try:
+            q = start()
+            _drain_or_fail(q, _DRAIN_SECS, what, live)
+        finally:
+            conf.set("spark.sql.shuffle.partitions", prev)
+            if q is not None:
+                with contextlib.suppress(Exception):
+                    q.stop()
+
+    def events(self, copies: int = 1) -> DataFrame:
+        """The events file as a normalized stream over the stage. The
+        first call stages ``copies`` symlinks to it (each replays every
+        row); a later call opens another, independent source."""
+        if self._events_schema is None:
+            table(self.spark, self.sf_dir, "events")  # pin nanosAsLong + UTC
+            src = os.path.join(self.sf_dir, "events.parquet")
+            for i in range(copies):
+                os.symlink(src, os.path.join(self.stage, f"events_{i}.parquet"))
+            self._events_schema = self.spark.read.parquet(src).schema
+        return normalize_events_ts(
+            self.spark.readStream.schema(self._events_schema).parquet(self.stage)
+        )
+
+    def write_files(self, parts: list[DataFrame]) -> None:
+        """Stage each frame as ONE parquet file, name- and
+        mtime-ordered, so the file source (which orders by mtime)
+        drains them oldest first."""
+        tmp = os.path.join(self.stage, "_tmp")
+        for i, part in enumerate(parts):
+            part.coalesce(1).write.mode("overwrite").parquet(tmp)
+            dst = os.path.join(self.stage, f"{i:03d}.parquet")
+            shutil.move(glob.glob(os.path.join(tmp, "part-*.parquet"))[0], dst)
+            os.utime(dst, (1_000_000_000 + 100 * i,) * 2)
+        shutil.rmtree(tmp, ignore_errors=True)
+
+    def memory(self, df: DataFrame, mode: str, live: bool = False,
+               min_events: int = 0) -> DataFrame:
+        """Replay ``df`` into a memory sink and return its table. A
+        ``live`` source is drained to exhaustion; ``min_events`` then
+        checks the drained ``n_events`` total, failing loudly rather
+        than as a confusing oracle mismatch."""
+        name = f"stream_{self.tag}_{self.seq}"
+        trigger = (
+            {"processingTime": "0 seconds"} if live else {"availableNow": True}
+        )
+        self.run(
+            lambda: df.writeStream.outputMode(mode)
+            .format("memory")
+            .queryName(name)
+            .option("checkpointLocation", self.ckpt)
+            .trigger(**trigger)
+            .start(),
+            name,
+            live=live,
+        )
+        if min_events:
+            done = self.spark.sql(
+                f"SELECT COALESCE(SUM(n_events), 0) AS t FROM {name}"
+            ).collect()[0].t
+            if done < min_events:
+                raise TimeoutError(f"{name} drained {done}/{min_events} rows")
+        return self.spark.table(name)
+
+    def feed(self, schema, on_batch, what: str) -> None:
+        """One ``availableNow`` ``foreachBatch`` pass over the stage,
+        one file per trigger; ``on_batch`` keys its per-batch markers
+        on the checkpointed batch ids."""
+        self.run(
+            lambda: self.spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(self.stage)
+            .writeStream.foreachBatch(on_batch)
+            .option("checkpointLocation", self.ckpt)
+            .trigger(availableNow=True)
+            .start(),
+            what,
+        )
 
 
 def orc_roundtrip_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -190,8 +276,6 @@ def orc_partition_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark_graft_orc_upsert_"
         f"{os.path.basename(os.path.normpath(sf_dir))}",
     )
-    import shutil
-
     shutil.rmtree(out, ignore_errors=True)
     write_orc(e, out, partition_cols=["dt"])
     # Bounded driver-side read by design: ONE scalar (the latest date).
@@ -227,9 +311,6 @@ def orc_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     asserts the file count actually shrank — the property that keeps
     a 100 TB streaming table readable (NameNode/manifest pressure and
     per-file open cost scale with file count, not bytes)."""
-    import glob
-    import shutil
-
     from flink_orc_sink_spark.sources.orc_sink import compact_orc
 
     e = table(spark, sf_dir, "events")
@@ -277,8 +358,6 @@ def orc_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract (``sources/orc_sink.py::snapshot_write``); v2
     readability and orphan invisibility are pytest-asserted in
     tests/test_maintenance.py."""
-    import shutil
-
     from flink_orc_sink_spark.sources.orc_sink import (
         snapshot_read,
         snapshot_write,
@@ -313,8 +392,6 @@ def orc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     logical table delta exactly. The 100 TB lever — append-only diffs
     prune the ``from`` side to zero files off the manifests alone —
     is pytest-asserted on inputFiles in tests/test_maintenance.py."""
-    import shutil
-
     from flink_orc_sink_spark.sources.orc_sink import (
         snapshot_diff,
         snapshot_write,
@@ -408,8 +485,6 @@ def orc_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark_graft_orc_zorder_"
         f"{os.path.basename(os.path.normpath(sf_dir))}",
     )
-    import shutil
-
     shutil.rmtree(out, ignore_errors=True)
     write_orc_zordered(o, out, ["o_custkey", "o_orderdate"])
     return read_orc(spark, out).select(
@@ -450,8 +525,6 @@ def orc_stats_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark_graft_orc_statsidx_"
         f"{os.path.basename(os.path.normpath(sf_dir))}",
     )
-    import shutil
-
     shutil.rmtree(base, ignore_errors=True)
     data, idx = os.path.join(base, "data"), os.path.join(base, "index")
     write_orc_zordered(o, data, ["o_custkey", "o_orderdate"])
@@ -500,8 +573,6 @@ def orc_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark_graft_orc_incragg_"
         f"{os.path.basename(os.path.normpath(sf_dir))}",
     )
-    import shutil
-
     shutil.rmtree(base, ignore_errors=True)
     fact, agg_path = os.path.join(base, "fact"), os.path.join(base, "agg")
     # cluster rows into their partition before writing: one file per
@@ -565,53 +636,23 @@ def stream_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     store, and the memory sink holds the complete result. Must equal
     ``events_tumbling_hourly``'s batch oracle exactly.
     """
-    global _STREAM_SEQ
-    # table() pins nanosAsLong + UTC on this session (events ts is a
-    # nanosecond parquet timestamp; the streaming reader needs the
-    # same ingestion contract).
-    table(spark, sf_dir, "events")
-    src = os.path.join(sf_dir, "events.parquet")
-    raw_schema = spark.read.parquet(src).schema
-    # The file stream source wants a directory; stage a symlink to the
-    # (read-only) source file in a scratch dir.
-    stage = tempfile.mkdtemp(prefix="stream_q_src_")
-    os.symlink(src, os.path.join(stage, "events.parquet"))
-    sdf = normalize_events_ts(
-        spark.readStream.schema(raw_schema).parquet(stage)
-    )
-    agg = (
-        sdf.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum(F.col("value").cast("decimal(18,6)")), 4)
-            .cast("double")
-            .alias("sum_value"),
+    with _Replay(spark, sf_dir, "tumbling") as r:
+        agg = (
+            r.events().groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+            .agg(
+                F.count("*").alias("n_events"),
+                F.round(F.sum(F.col("value").cast("decimal(18,6)")), 4)
+                .cast("double")
+                .alias("sum_value"),
+            )
+            .select(
+                F.col("w.start").alias("window_start"),
+                "event_type",
+                "n_events",
+                "sum_value",
+            )
         )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-    _STREAM_SEQ += 1
-    name = f"stream_tumbling_hourly_{_STREAM_SEQ}"
-    with tempfile.TemporaryDirectory(prefix="stream_q_ckpt_") as ckpt, stream_partitions(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    # Memory-sink table is fully materialized once the replay
-    # terminates.
-    import shutil
-
-    shutil.rmtree(stage, ignore_errors=True)
-    return spark.table(name)
+        return r.memory(agg, "complete")
 
 
 def orc_roundtrip_typeedge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -691,51 +732,28 @@ def stream_sessionize_10m(spark: SparkSession, sf_dir: str) -> DataFrame:
     agree: ``session_window``'s half-open [ts, ts+gap) merge means a
     gap of exactly 10 min starts a new session, same as the batch
     ``>= gap`` rule."""
-    global _STREAM_SEQ
-    table(spark, sf_dir, "events")  # pin nanosAsLong + UTC
-    src = os.path.join(sf_dir, "events.parquet")
-    raw_schema = spark.read.parquet(src).schema
-    stage = tempfile.mkdtemp(prefix="stream_sess_src_")
-    os.symlink(src, os.path.join(stage, "events.parquet"))
-    sdf = normalize_events_ts(
-        spark.readStream.schema(raw_schema).parquet(stage)
-    )
-    agg = (
-        sdf.groupBy(
-            F.session_window("ts", "10 minutes").alias("w"), "user_id"
+    with _Replay(spark, sf_dir, "sessionize_10m") as r:
+        agg = (
+            r.events().groupBy(
+                F.session_window("ts", "10 minutes").alias("w"), "user_id"
+            )
+            .agg(
+                F.count("*").alias("n_events"),
+                F.min("ts").alias("session_start"),
+                F.max("ts").alias("session_end"),
+                F.round(F.sum(F.col("value").cast("decimal(18,6)")), 4)
+                .cast("double")
+                .alias("session_value"),
+            )
+            .select(
+                "user_id",
+                "session_start",
+                "session_end",
+                "n_events",
+                "session_value",
+            )
         )
-        .agg(
-            F.count("*").alias("n_events"),
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-            F.round(F.sum(F.col("value").cast("decimal(18,6)")), 4)
-            .cast("double")
-            .alias("session_value"),
-        )
-        .select(
-            "user_id",
-            "session_start",
-            "session_end",
-            "n_events",
-            "session_value",
-        )
-    )
-    _STREAM_SEQ += 1
-    name = f"stream_sessionize_10m_{_STREAM_SEQ}"
-    with tempfile.TemporaryDirectory(prefix="stream_sess_ckpt_") as ckpt, stream_partitions(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    import shutil
-
-    shutil.rmtree(stage, ignore_errors=True)
-    return spark.table(name)
+        return r.memory(agg, "complete")
 
 
 STREAM_SESSIONIZE_SQL = """
@@ -766,49 +784,26 @@ def stream_sliding_1h_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``stream_tumbling_hourly``; the oracle is the batch sliding-window
     SQL, so a hash match proves overlap assignment and the exact-
     decimal average agree with the batch engine."""
-    global _STREAM_SEQ
-    table(spark, sf_dir, "events")  # pin nanosAsLong + UTC
-    src = os.path.join(sf_dir, "events.parquet")
-    raw_schema = spark.read.parquet(src).schema
-    stage = tempfile.mkdtemp(prefix="stream_slide_src_")
-    os.symlink(src, os.path.join(stage, "events.parquet"))
-    sdf = normalize_events_ts(
-        spark.readStream.schema(raw_schema).parquet(stage)
-    )
-    agg = (
-        sdf.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
-        .agg(
-            F.count("*").alias("n_events"),
-            (
-                F.floor(
-                    F.sum(F.col("value").cast("decimal(18,6)")).cast("double")
-                    / F.count(F.lit(1))
-                    * 10000
-                    + 0.5
+    with _Replay(spark, sf_dir, "sliding") as r:
+        agg = (
+            r.events().groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
+            .agg(
+                F.count("*").alias("n_events"),
+                (
+                    F.floor(
+                        F.sum(F.col("value").cast("decimal(18,6)")).cast("double")
+                        / F.count(F.lit(1))
+                        * 10000
+                        + 0.5
+                    )
+                    / 10000
                 )
-                / 10000
+                .cast("double")
+                .alias("avg_value"),
             )
-            .cast("double")
-            .alias("avg_value"),
+            .select(F.col("w.start").alias("window_start"), "n_events", "avg_value")
         )
-        .select(F.col("w.start").alias("window_start"), "n_events", "avg_value")
-    )
-    _STREAM_SEQ += 1
-    name = f"stream_sliding_{_STREAM_SEQ}"
-    with tempfile.TemporaryDirectory(prefix="stream_slide_ckpt_") as ckpt, stream_partitions(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    import shutil
-
-    shutil.rmtree(stage, ignore_errors=True)
-    return spark.table(name)
+        return r.memory(agg, "complete")
 
 
 def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -822,35 +817,11 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     provides at file level (`README.md:3`), asserted at row level
     through the state store. Append mode, bounded replay; state is
     dropped with the checkpoint."""
-    global _STREAM_SEQ
-    table(spark, sf_dir, "events")  # pin nanosAsLong + UTC
-    src = os.path.join(sf_dir, "events.parquet")
-    raw_schema = spark.read.parquet(src).schema
-    stage = tempfile.mkdtemp(prefix="stream_dedup_src_")
-    os.symlink(src, os.path.join(stage, "events_a.parquet"))
-    os.symlink(src, os.path.join(stage, "events_b.parquet"))
-    sdf = normalize_events_ts(
-        spark.readStream.schema(raw_schema).parquet(stage)
-    )
-    deduped = sdf.dropDuplicates(["event_id"]).select(
-        "event_id", "ts", "user_id", "event_type", "value", "props"
-    )
-    _STREAM_SEQ += 1
-    name = f"stream_dedup_{_STREAM_SEQ}"
-    with tempfile.TemporaryDirectory(prefix="stream_dedup_ckpt_") as ckpt, stream_partitions(spark):
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    with _Replay(spark, sf_dir, "dedup") as r:
+        deduped = r.events(copies=2).dropDuplicates(["event_id"]).select(
+            "event_id", "ts", "user_id", "event_type", "value", "props"
         )
-        q.awaitTermination()
-    import shutil
-
-    shutil.rmtree(stage, ignore_errors=True)
-    return spark.table(name)
+        return r.memory(deduped, "append")
 
 
 def _ts_quartile(e: DataFrame):
@@ -865,23 +836,6 @@ def _ts_quartile(e: DataFrame):
     step = (hi - lo) // 4 + 1
     q_of = ((F.unix_micros("ts") - F.lit(lo)) / F.lit(step)).cast("int")
     return lo, step, q_of
-
-
-def _stage_ordered_files(parts: list[DataFrame], stage: str) -> None:
-    """Write each frame as ONE parquet file under ``stage`` with
-    name- and mtime-ordered filenames, so the file stream source
-    drains them oldest-first deterministically."""
-    import glob as _glob
-    import shutil
-
-    build = tempfile.mkdtemp(prefix="stage_build_")
-    for i, part in enumerate(parts):
-        part.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(build, f"f{i}")
-        )
-        pf = _glob.glob(os.path.join(build, f"f{i}", "part-*.parquet"))
-        shutil.copy(pf[0], os.path.join(stage, f"{i:03d}.parquet"))
-    shutil.rmtree(build, ignore_errors=True)
 
 
 def stream_dedup_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -901,17 +855,12 @@ def stream_dedup_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     rather than re-emitting them). Output must therefore hash-match
     plain ``SELECT * FROM events``: exactly-once survives BOTH the
     in-window duplicates and the expired-state replay."""
-    global _STREAM_SEQ
-    import glob as _glob
-    import shutil
-
     table(spark, sf_dir, "events")  # pin nanosAsLong + UTC
     src = os.path.join(sf_dir, "events.parquet")
     # staged files carry the NORMALIZED schema (µs timestamps) — the
     # stream reads them back with e.schema, no re-normalize
     e = normalize_events_ts(spark.read.parquet(src))
     _, _, q_of = _ts_quartile(e)
-    stage = tempfile.mkdtemp(prefix="stream_dedupttl_src_")
     parts = []
     for i in range(4):
         part = e.filter(q_of == i)
@@ -928,31 +877,17 @@ def stream_dedup_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
         parts.append(part)
-    _stage_ordered_files(parts, stage)
-    deduped = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-        .withWatermark("ts", "30 minutes")
-        .dropDuplicatesWithinWatermark(["event_id"])
-        .select("event_id", "ts", "user_id", "event_type", "value", "props")
-    )
-    _STREAM_SEQ += 1
-    name = f"stream_dedupttl_{_STREAM_SEQ}"
-    with tempfile.TemporaryDirectory(
-        prefix="stream_dedupttl_ckpt_"
-    ) as ckpt, stream_partitions(spark):
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    with _Replay(spark, sf_dir, "dedupttl") as r:
+        r.write_files(parts)
+        deduped = (
+            spark.readStream.schema(e.schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(r.stage)
+            .withWatermark("ts", "30 minutes")
+            .dropDuplicatesWithinWatermark(["event_id"])
+            .select("event_id", "ts", "user_id", "event_type", "value", "props")
         )
-        q.awaitTermination()
-    shutil.rmtree(stage, ignore_errors=True)
-    return spark.table(name)
+        return r.memory(deduped, "append")
 
 
 def stream_temporal_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -969,9 +904,6 @@ def stream_temporal_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     version (a static-enrich plan would weight every event with one
     version and hash-mismatch). Scale: the dim is broadcast per batch
     (dims are small by definition); events never shuffle."""
-    global _STREAM_SEQ
-    import shutil
-
     table(spark, sf_dir, "events")  # pin nanosAsLong + UTC
     src = os.path.join(sf_dir, "events.parquet")
     e = normalize_events_ts(spark.read.parquet(src)).select(
@@ -979,19 +911,9 @@ def stream_temporal_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _, _, q_of = _ts_quartile(e)
     etypes = [
-        r[0] for r in e.select("event_type").distinct().collect()
+        row[0] for row in e.select("event_type").distinct().collect()
     ]
-    stage = tempfile.mkdtemp(prefix="stream_tenrich_src_")
-    _stage_ordered_files(
-        [e.filter(q_of == i) for i in range(4)], stage
-    )
-    _STREAM_SEQ += 1
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_stream_tenrich_"
-        f"{os.path.basename(os.path.normpath(sf_dir))}_{_STREAM_SEQ}",
-    )
-    shutil.rmtree(out, ignore_errors=True)
+    r = _Replay(spark, sf_dir, "tenrich")
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
         bspark = batch_df.sparkSession
@@ -1015,25 +937,14 @@ def stream_temporal_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch_id")
-            .parquet(out)
+            .parquet(r.out)
         )
 
-    with tempfile.TemporaryDirectory(
-        prefix="stream_tenrich_ckpt_"
-    ) as ckpt, stream_partitions(spark):
-        q = (
-            spark.readStream.schema(e.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(stage)
-            .writeStream.foreachBatch(on_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain_or_fail(q, 180, "temporal-enrich stream")
-    shutil.rmtree(stage, ignore_errors=True)
+    with r:
+        r.write_files([e.filter(q_of == i) for i in range(4)])
+        r.feed(e.schema, on_batch, "temporal-enrich stream")
     return (
-        spark.read.parquet(out)
+        spark.read.parquet(r.out)
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -1081,8 +992,6 @@ def orc_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark_graft_orc_evolution_"
         f"{os.path.basename(os.path.normpath(sf_dir))}",
     )
-    import shutil
-
     shutil.rmtree(out, ignore_errors=True)
     write_orc(gen0, os.path.join(out, "gen=0"))
     write_orc(gen1, os.path.join(out, "gen=1"))
@@ -1114,40 +1023,20 @@ def stream_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     is bit-for-bit regardless of how micro-batches split the stream.
     Update-mode memory sink emits one row per key per micro-batch; the
     final state is selected by max event count (monotone per key)."""
-    global _STREAM_SEQ
     from pyspark.sql import Window
 
     from flink_orc_sink_spark.streaming.stateful import running_totals_exact
 
-    table(spark, sf_dir, "events")  # pin nanosAsLong + UTC
-    src = os.path.join(sf_dir, "events.parquet")
-    raw_schema = spark.read.parquet(src).schema
-    stage = tempfile.mkdtemp(prefix="stream_rt_src_")
-    os.symlink(src, os.path.join(stage, "events.parquet"))
-    sdf = normalize_events_ts(
-        spark.readStream.schema(raw_schema).parquet(stage)
-    ).withColumn(
-        "value_us", F.floor(F.col("value") * 1e6 + 0.5).cast("long")
-    )
-    totals = running_totals_exact(sdf, "user_id", "value_us")
-    _STREAM_SEQ += 1
-    name = f"stream_running_totals_{_STREAM_SEQ}"
-    with tempfile.TemporaryDirectory(prefix="stream_rt_ckpt_") as ckpt, stream_partitions(spark):
-        q = (
-            totals.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    with _Replay(spark, sf_dir, "running_totals") as r:
+        sdf = r.events().withColumn(
+            "value_us", F.floor(F.col("value") * 1e6 + 0.5).cast("long")
         )
-        q.awaitTermination()
-    import shutil
-
-    shutil.rmtree(stage, ignore_errors=True)
+        totals = r.memory(
+            running_totals_exact(sdf, "user_id", "value_us"), "update"
+        )
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
-        spark.table(name)
+        totals
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select(
@@ -1176,42 +1065,21 @@ def stream_topk_per_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking happens on read, because rank is not an incremental
     aggregate). Ties broken by user_id, so the result is
     deterministic and value-checkable against the batch oracle."""
-    global _STREAM_SEQ
     from pyspark.sql import Window
 
-    table(spark, sf_dir, "events")  # pin nanosAsLong + UTC
-    src = os.path.join(sf_dir, "events.parquet")
-    raw_schema = spark.read.parquet(src).schema
-    stage = tempfile.mkdtemp(prefix="stream_topk_src_")
-    os.symlink(src, os.path.join(stage, "events.parquet"))
-    sdf = normalize_events_ts(
-        spark.readStream.schema(raw_schema).parquet(stage)
-    )
-    agg = (
-        sdf.groupBy(F.window("ts", "1 hour").alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "user_id", "n_events")
-    )
-    _STREAM_SEQ += 1
-    name = f"stream_topk_per_window_{_STREAM_SEQ}"
-    with tempfile.TemporaryDirectory(prefix="stream_topk_ckpt_") as ckpt, stream_partitions(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    with _Replay(spark, sf_dir, "topk") as r:
+        counts = r.memory(
+            r.events()
+            .groupBy(F.window("ts", "1 hour").alias("w"), "user_id")
+            .agg(F.count("*").alias("n_events"))
+            .select(F.col("w.start").alias("window_start"), "user_id", "n_events"),
+            "complete",
         )
-        q.awaitTermination()
-    import shutil
-
-    shutil.rmtree(stage, ignore_errors=True)
     w = Window.partitionBy("window_start").orderBy(
         F.col("n_events").desc(), F.col("user_id").asc()
     )
     return (
-        spark.table(name)
+        counts
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= 3)
         .select("window_start", "user_id", "n_events", "rank")
@@ -1246,61 +1114,38 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     join shape.) Watermarks are generous (24 h) because correctness
     here is value parity, not eviction timing — eviction is bounded
     state, covered by the interval condition itself at scale."""
-    global _STREAM_SEQ
-    table(spark, sf_dir, "events")  # pin nanosAsLong + UTC
-    src = os.path.join(sf_dir, "events.parquet")
-    raw_schema = spark.read.parquet(src).schema
-    stage_c = tempfile.mkdtemp(prefix="stream_ij_clicks_")
-    stage_v = tempfile.mkdtemp(prefix="stream_ij_views_")
-    os.symlink(src, os.path.join(stage_c, "events.parquet"))
-    os.symlink(src, os.path.join(stage_v, "events.parquet"))
-    clicks = (
-        normalize_events_ts(spark.readStream.schema(raw_schema).parquet(stage_c))
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            "user_id",
-            F.col("ts").alias("click_ts"),
+    with _Replay(spark, sf_dir, "ij") as r:
+        clicks = (
+            r.events()
+            .filter(F.col("event_type") == "click")
+            .select(
+                F.col("event_id").alias("click_id"),
+                "user_id",
+                F.col("ts").alias("click_ts"),
+            )
+            .withWatermark("click_ts", "24 hours")
         )
-        .withWatermark("click_ts", "24 hours")
-    )
-    views = (
-        normalize_events_ts(spark.readStream.schema(raw_schema).parquet(stage_v))
-        .filter(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id").alias("v_user_id"),
-            F.col("ts").alias("view_ts"),
+        views = (
+            r.events()
+            .filter(F.col("event_type") == "view")
+            .select(
+                F.col("event_id").alias("view_id"),
+                F.col("user_id").alias("v_user_id"),
+                F.col("ts").alias("view_ts"),
+            )
+            .withWatermark("view_ts", "24 hours")
         )
-        .withWatermark("view_ts", "24 hours")
-    )
-    joined = clicks.join(
-        views,
-        (F.col("user_id") == F.col("v_user_id"))
-        & (F.col("view_ts") <= F.col("click_ts"))
-        & (F.col("view_ts") >= F.col("click_ts") - F.expr("INTERVAL 10 MINUTES")),
-    ).select(
-        "click_id",
-        "view_id",
-        (F.unix_micros("click_ts") - F.unix_micros("view_ts")).alias("gap_us"),
-    )
-    _STREAM_SEQ += 1
-    name = f"stream_interval_join_{_STREAM_SEQ}"
-    with tempfile.TemporaryDirectory(prefix="stream_ij_ckpt_") as ckpt, stream_partitions(spark):
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        joined = clicks.join(
+            views,
+            (F.col("user_id") == F.col("v_user_id"))
+            & (F.col("view_ts") <= F.col("click_ts"))
+            & (F.col("view_ts") >= F.col("click_ts") - F.expr("INTERVAL 10 MINUTES")),
+        ).select(
+            "click_id",
+            "view_id",
+            (F.unix_micros("click_ts") - F.unix_micros("view_ts")).alias("gap_us"),
         )
-        q.awaitTermination()
-    import shutil
-
-    shutil.rmtree(stage_c, ignore_errors=True)
-    shutil.rmtree(stage_v, ignore_errors=True)
-    return spark.table(name)
+        return r.memory(joined, "append")
 
 
 STREAM_INTERVAL_JOIN_SQL = """
@@ -1326,67 +1171,45 @@ def stream_interval_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     compares exactly the decidable region. A hash match proves the
     runtime's eviction emits every unmatched click exactly once with
     the right nulls."""
-    global _STREAM_SEQ
-    table(spark, sf_dir, "events")  # pin nanosAsLong + UTC
-    src = os.path.join(sf_dir, "events.parquet")
-    raw_schema = spark.read.parquet(src).schema
-    stage_c = tempfile.mkdtemp(prefix="stream_loj_clicks_")
-    stage_v = tempfile.mkdtemp(prefix="stream_loj_views_")
-    os.symlink(src, os.path.join(stage_c, "events.parquet"))
-    os.symlink(src, os.path.join(stage_v, "events.parquet"))
-    clicks = (
-        normalize_events_ts(spark.readStream.schema(raw_schema).parquet(stage_c))
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            "user_id",
-            F.col("ts").alias("click_ts"),
+    with _Replay(spark, sf_dir, "loj") as r:
+        clicks = (
+            r.events()
+            .filter(F.col("event_type") == "click")
+            .select(
+                F.col("event_id").alias("click_id"),
+                "user_id",
+                F.col("ts").alias("click_ts"),
+            )
+            .withWatermark("click_ts", "1 hour")
         )
-        .withWatermark("click_ts", "1 hour")
-    )
-    views = (
-        normalize_events_ts(spark.readStream.schema(raw_schema).parquet(stage_v))
-        .filter(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id").alias("v_user_id"),
-            F.col("ts").alias("view_ts"),
+        views = (
+            r.events()
+            .filter(F.col("event_type") == "view")
+            .select(
+                F.col("event_id").alias("view_id"),
+                F.col("user_id").alias("v_user_id"),
+                F.col("ts").alias("view_ts"),
+            )
+            .withWatermark("view_ts", "1 hour")
         )
-        .withWatermark("view_ts", "1 hour")
-    )
-    joined = clicks.join(
-        views,
-        (F.col("user_id") == F.col("v_user_id"))
-        & (F.col("view_ts") <= F.col("click_ts"))
-        & (F.col("view_ts") >= F.col("click_ts") - F.expr("INTERVAL 10 MINUTES")),
-        "left_outer",
-    ).select(
-        "click_id",
-        "click_ts",
-        "view_id",
-        (F.unix_micros("click_ts") - F.unix_micros("view_ts")).alias("gap_us"),
-    )
-    _STREAM_SEQ += 1
-    name = f"stream_interval_join_left_{_STREAM_SEQ}"
-    with tempfile.TemporaryDirectory(prefix="stream_loj_ckpt_") as ckpt, stream_partitions(spark):
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        joined = clicks.join(
+            views,
+            (F.col("user_id") == F.col("v_user_id"))
+            & (F.col("view_ts") <= F.col("click_ts"))
+            & (F.col("view_ts") >= F.col("click_ts") - F.expr("INTERVAL 10 MINUTES")),
+            "left_outer",
+        ).select(
+            "click_id",
+            "click_ts",
+            "view_id",
+            (F.unix_micros("click_ts") - F.unix_micros("view_ts")).alias("gap_us"),
         )
-        q.awaitTermination()
-    import shutil
-
-    shutil.rmtree(stage_c, ignore_errors=True)
-    shutil.rmtree(stage_v, ignore_errors=True)
+        out = r.memory(joined, "append")
     max_ts = (
         table(spark, sf_dir, "events").agg(F.max("ts").alias("m"))
     )
     return (
-        spark.table(name)
+        out
         .crossJoin(F.broadcast(max_ts))
         .filter(F.col("click_ts") <= F.col("m") - F.expr("INTERVAL 2 HOURS"))
         .select("click_id", "view_id", "gap_us")
@@ -1418,61 +1241,39 @@ def stream_interval_join_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose match/no-match verdict the final watermark has settled. A
     hash match proves the runtime emits every match once AND every
     unmatched row of either side once with the right nulls."""
-    global _STREAM_SEQ
-    table(spark, sf_dir, "events")  # pin nanosAsLong + UTC
-    src = os.path.join(sf_dir, "events.parquet")
-    raw_schema = spark.read.parquet(src).schema
-    stage_c = tempfile.mkdtemp(prefix="stream_foj_clicks_")
-    stage_v = tempfile.mkdtemp(prefix="stream_foj_views_")
-    os.symlink(src, os.path.join(stage_c, "events.parquet"))
-    os.symlink(src, os.path.join(stage_v, "events.parquet"))
-    clicks = (
-        normalize_events_ts(spark.readStream.schema(raw_schema).parquet(stage_c))
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            "user_id",
-            F.col("ts").alias("click_ts"),
+    with _Replay(spark, sf_dir, "foj") as r:
+        clicks = (
+            r.events()
+            .filter(F.col("event_type") == "click")
+            .select(
+                F.col("event_id").alias("click_id"),
+                "user_id",
+                F.col("ts").alias("click_ts"),
+            )
+            .withWatermark("click_ts", "1 hour")
         )
-        .withWatermark("click_ts", "1 hour")
-    )
-    views = (
-        normalize_events_ts(spark.readStream.schema(raw_schema).parquet(stage_v))
-        .filter(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id").alias("v_user_id"),
-            F.col("ts").alias("view_ts"),
+        views = (
+            r.events()
+            .filter(F.col("event_type") == "view")
+            .select(
+                F.col("event_id").alias("view_id"),
+                F.col("user_id").alias("v_user_id"),
+                F.col("ts").alias("view_ts"),
+            )
+            .withWatermark("view_ts", "1 hour")
         )
-        .withWatermark("view_ts", "1 hour")
-    )
-    joined = clicks.join(
-        views,
-        (F.col("user_id") == F.col("v_user_id"))
-        & (F.col("view_ts") <= F.col("click_ts"))
-        & (F.col("view_ts") >= F.col("click_ts") - F.expr("INTERVAL 10 MINUTES")),
-        "full_outer",
-    ).select("click_id", "click_ts", "view_id", "view_ts")
-    _STREAM_SEQ += 1
-    name = f"stream_interval_join_full_{_STREAM_SEQ}"
-    with tempfile.TemporaryDirectory(prefix="stream_foj_ckpt_") as ckpt, stream_partitions(spark):
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    import shutil
-
-    shutil.rmtree(stage_c, ignore_errors=True)
-    shutil.rmtree(stage_v, ignore_errors=True)
+        joined = clicks.join(
+            views,
+            (F.col("user_id") == F.col("v_user_id"))
+            & (F.col("view_ts") <= F.col("click_ts"))
+            & (F.col("view_ts") >= F.col("click_ts") - F.expr("INTERVAL 10 MINUTES")),
+            "full_outer",
+        ).select("click_id", "click_ts", "view_id", "view_ts")
+        out = r.memory(joined, "append")
     max_ts = table(spark, sf_dir, "events").agg(F.max("ts").alias("m"))
     cutoff = F.col("m") - F.expr("INTERVAL 3 HOURS")
     return (
-        spark.table(name)
+        out
         .crossJoin(F.broadcast(max_ts))
         .filter(
             (F.col("click_ts").isNull() | (F.col("click_ts") <= cutoff))
@@ -1515,37 +1316,17 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the standard streaming dimension-enrichment pattern; the
     oracle is the plain batch join. At 100 TB/day the static side
     refreshes by swapping the broadcast table between restarts."""
-    global _STREAM_SEQ
-    table(spark, sf_dir, "events")  # pin nanosAsLong + UTC
-    src = os.path.join(sf_dir, "events.parquet")
-    raw_schema = spark.read.parquet(src).schema
-    stage = tempfile.mkdtemp(prefix="stream_enrich_src_")
-    os.symlink(src, os.path.join(stage, "events.parquet"))
     nation = table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("nk"), F.col("n_name").alias("nation_name")
     )
-    sdf = normalize_events_ts(
-        spark.readStream.schema(raw_schema).parquet(stage)
-    ).withColumn("nk", F.col("user_id") % 25)
-    joined = sdf.join(F.broadcast(nation), "nk").select(
-        "event_id", "user_id", "event_type", "nation_name"
-    )
-    _STREAM_SEQ += 1
-    name = f"stream_static_enrich_{_STREAM_SEQ}"
-    with tempfile.TemporaryDirectory(prefix="stream_enrich_ckpt_") as ckpt, stream_partitions(spark):
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    with _Replay(spark, sf_dir, "enrich") as r:
+        joined = (
+            r.events()
+            .withColumn("nk", F.col("user_id") % 25)
+            .join(F.broadcast(nation), "nk")
+            .select("event_id", "user_id", "event_type", "nation_name")
         )
-        q.awaitTermination()
-    import shutil
-
-    shutil.rmtree(stage, ignore_errors=True)
-    return spark.table(name)
+        return r.memory(joined, "append")
 
 
 STREAM_STATIC_ENRICH_SQL = """
@@ -1565,35 +1346,25 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     CDC oracle's latest-per-key state exactly, proving the incremental
     merge composes across batches (latest-wins is associative) and
     tombstones suppress deleted keys."""
-    global _STREAM_SEQ
+    from flink_orc_sink_spark.streaming import read_cdc_table
     from flink_orc_sink_spark.streaming.orc_sink import (
         stream_cdc_apply_orc,
         stream_from_files,
     )
 
-    e = table(spark, sf_dir, "events")
+    table(spark, sf_dir, "events")
     src = os.path.join(sf_dir, "events.parquet")
     raw_schema = spark.read.parquet(src).schema
-    # 3-file stage so availableNow + maxFilesPerTrigger=1 replays the
-    # feed as three genuine micro-batches (a symlinked single file
-    # would merge everything in one batch and never exercise the
-    # state-table read-back path).
-    stage = tempfile.mkdtemp(prefix="stream_cdc_src_")
-    spark.read.parquet(src).repartitionByRange(3, "event_id").write.mode(
-        "overwrite"
-    ).parquet(stage)
-    _STREAM_SEQ += 1
-    state = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_stream_cdc_"
-        f"{os.path.basename(os.path.normpath(sf_dir))}_{_STREAM_SEQ}",
-    )
-    import shutil
-
-    shutil.rmtree(state, ignore_errors=True)
-    with tempfile.TemporaryDirectory(prefix="stream_cdc_ckpt_") as ckpt, stream_partitions(spark):
+    with _Replay(spark, sf_dir, "cdc") as r:
+        # 3-file stage so availableNow + maxFilesPerTrigger=1 replays
+        # the feed as three genuine micro-batches (a symlinked single
+        # file would merge everything in one batch and never exercise
+        # the state-table read-back path).
+        spark.read.parquet(src).repartitionByRange(3, "event_id").write.mode(
+            "overwrite"
+        ).parquet(r.stage)
         sdf = normalize_events_ts(
-            stream_from_files(spark, stage, raw_schema, max_files_per_trigger=1)
+            stream_from_files(spark, r.stage, raw_schema, max_files_per_trigger=1)
         ).select(
             "user_id",
             F.unix_micros("ts").alias("ts_us"),
@@ -1605,20 +1376,19 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("value_micro"),
         )
-        q = stream_cdc_apply_orc(
-            sdf,
-            state,
-            checkpoint=ckpt,
-            key_col="user_id",
-            order_cols=["ts_us", "event_id"],
-            trigger={"availableNow": True},
+        r.run(
+            lambda: stream_cdc_apply_orc(
+                sdf,
+                r.out,
+                checkpoint=r.ckpt,
+                key_col="user_id",
+                order_cols=["ts_us", "event_id"],
+                trigger={"availableNow": True},
+            ),
+            "cdc stream",
         )
-        q.awaitTermination()
-    shutil.rmtree(stage, ignore_errors=True)
-    from flink_orc_sink_spark.streaming import read_cdc_table
-
     return (
-        read_cdc_table(spark, state)
+        read_cdc_table(spark, r.out)
         .filter(F.col("op") == "U")
         .select(
             "user_id",
@@ -1662,9 +1432,7 @@ def stream_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     interval-splicing design cannot give (a late change can split an
     existing interval or turn a discarded consecutive-repeat into a
     version start; see the sink docstring)."""
-    global _STREAM_SEQ
-    import shutil
-
+    from flink_orc_sink_spark.streaming import read_scd2_history
     from flink_orc_sink_spark.streaming.orc_sink import (
         stream_from_files,
         stream_scd2_apply_orc,
@@ -1672,25 +1440,16 @@ def stream_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = os.path.join(sf_dir, "events.parquet")
     raw_schema = spark.read.parquet(src).schema
-    # hash-scatter (not range-split) so micro-batches interleave each
-    # key's timeline — the out-of-order arrival the sink must absorb
-    stage = tempfile.mkdtemp(prefix="stream_scd2_src_")
-    spark.read.parquet(src).repartition(4, "event_id").write.mode(
-        "overwrite"
-    ).parquet(stage)
-    _STREAM_SEQ += 1
-    state = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_stream_scd2_"
-        f"{os.path.basename(os.path.normpath(sf_dir))}_{_STREAM_SEQ}",
-    )
-    shutil.rmtree(state, ignore_errors=True)
-    with tempfile.TemporaryDirectory(
-        prefix="stream_scd2_ckpt_"
-    ) as ckpt, stream_partitions(spark):
+    with _Replay(spark, sf_dir, "scd2") as r:
+        # hash-scatter (not range-split) so micro-batches interleave
+        # each key's timeline — the out-of-order arrival the sink must
+        # absorb
+        spark.read.parquet(src).repartition(4, "event_id").write.mode(
+            "overwrite"
+        ).parquet(r.stage)
         sdf = normalize_events_ts(
             stream_from_files(
-                spark, stage, raw_schema, max_files_per_trigger=1
+                spark, r.stage, raw_schema, max_files_per_trigger=1
             )
         ).select(
             "user_id",
@@ -1698,21 +1457,20 @@ def stream_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.unix_micros("ts").alias("ts_us"),
             "event_id",
         )
-        q = stream_scd2_apply_orc(
-            sdf,
-            state,
-            checkpoint=ckpt,
-            key_col="user_id",
-            attr_col="event_type",
-            ts_col="ts_us",
-            order_cols=["ts_us", "event_id"],
-            trigger={"availableNow": True},
+        r.run(
+            lambda: stream_scd2_apply_orc(
+                sdf,
+                r.out,
+                checkpoint=r.ckpt,
+                key_col="user_id",
+                attr_col="event_type",
+                ts_col="ts_us",
+                order_cols=["ts_us", "event_id"],
+                trigger={"availableNow": True},
+            ),
+            "scd2 stream",
         )
-        q.awaitTermination()
-    shutil.rmtree(stage, ignore_errors=True)
-    from flink_orc_sink_spark.streaming import read_scd2_history
-
-    return read_scd2_history(spark, state).select(
+    return read_scd2_history(spark, r.out).select(
         "user_id",
         F.col("event_type").alias("status"),
         "version",
@@ -1737,9 +1495,6 @@ def stream_retract_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     latest-wins merge retracts only when the batch actually changes a
     key's latest). This is the Flink dynamic-table → retract-stream →
     upsert-sink triangle the reference sink serves, value-checked."""
-    global _STREAM_SEQ
-    import shutil
-
     from flink_orc_sink_spark.streaming.orc_sink import (
         read_retract_agg,
         stream_from_files,
@@ -1748,23 +1503,13 @@ def stream_retract_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = os.path.join(sf_dir, "events.parquet")
     raw_schema = spark.read.parquet(src).schema
-    stage = tempfile.mkdtemp(prefix="stream_retract_src_")
-    spark.read.parquet(src).repartition(4, "event_id").write.mode(
-        "overwrite"
-    ).parquet(stage)
-    _STREAM_SEQ += 1
-    state = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_stream_retract_"
-        f"{os.path.basename(os.path.normpath(sf_dir))}_{_STREAM_SEQ}",
-    )
-    shutil.rmtree(state, ignore_errors=True)
-    with tempfile.TemporaryDirectory(
-        prefix="stream_retract_ckpt_"
-    ) as ckpt, stream_partitions(spark):
+    with _Replay(spark, sf_dir, "retract") as r:
+        spark.read.parquet(src).repartition(4, "event_id").write.mode(
+            "overwrite"
+        ).parquet(r.stage)
         sdf = normalize_events_ts(
             stream_from_files(
-                spark, stage, raw_schema, max_files_per_trigger=1
+                spark, r.stage, raw_schema, max_files_per_trigger=1
             )
         ).select(
             "user_id",
@@ -1778,19 +1523,20 @@ def stream_retract_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("value_micro"),
         )
-        q = stream_retract_agg_orc(
-            sdf,
-            state,
-            checkpoint=ckpt,
-            key_col="user_id",
-            group_col="event_type",
-            val_col="value_micro",
-            order_cols=["ts_us", "event_id"],
-            trigger={"availableNow": True},
+        r.run(
+            lambda: stream_retract_agg_orc(
+                sdf,
+                r.out,
+                checkpoint=r.ckpt,
+                key_col="user_id",
+                group_col="event_type",
+                val_col="value_micro",
+                order_cols=["ts_us", "event_id"],
+                trigger={"availableNow": True},
+            ),
+            "retract-agg stream",
         )
-        q.awaitTermination()
-    shutil.rmtree(stage, ignore_errors=True)
-    return read_retract_agg(spark, state).select(
+    return read_retract_agg(spark, r.out).select(
         F.col("grp").alias("status"),
         F.col("sum_val").alias("sum_value_micro"),
         F.col("n_keys").alias("n_users"),
@@ -1885,9 +1631,6 @@ def _run_retract_join_stream(
     """Stage the shared CDC feed hash-scattered into four out-of-order
     micro-batches, drain it through ``stream_retract_join_orc``, and
     return the state path."""
-    global _STREAM_SEQ
-    import shutil
-
     from flink_orc_sink_spark.streaming.orc_sink import (
         stream_from_files,
         stream_retract_join_orc,
@@ -1895,43 +1638,34 @@ def _run_retract_join_stream(
 
     # bucket counts are a layout knob sized to state (see the sink's
     # cost model + tools/scale_probe_retract_join.py); 8 suits the
-    # bounded local replays exactly as stream_partitions pins 8 state
-    # partitions (measured 25.8 s -> 15.0 s at sf0.01 vs 16 buckets)
+    # bounded local replays exactly as STREAM_STATE_PARTITIONS does
+    # (measured 25.8 s -> 15.0 s at sf0.01 vs 16 buckets)
     sink_kwargs.setdefault("n_key_partitions", 8)
     sink_kwargs.setdefault("n_join_buckets", 8)
     feed = _retract_join_feed(spark, sf_dir)
-    stage = tempfile.mkdtemp(prefix=f"stream_{tag}_src_")
-    # scatter each key's VERSIONS across batches (seq in the hash) —
-    # out-of-order arrival is the property under test; three batches
-    # exercise it fully (split versions + interleaved sides) at 3/4
-    # the per-batch fixed cost of four
-    feed.repartition(3, "side", "pk", "seq").write.mode(
-        "overwrite"
-    ).parquet(stage)
-    _STREAM_SEQ += 1
-    state = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_stream_{tag}_"
-        f"{os.path.basename(os.path.normpath(sf_dir))}_{_STREAM_SEQ}",
-    )
-    shutil.rmtree(state, ignore_errors=True)
-    with tempfile.TemporaryDirectory(
-        prefix=f"stream_{tag}_ckpt_"
-    ) as ckpt, stream_partitions(spark):
-        raw_schema = spark.read.parquet(stage).schema
+    with _Replay(spark, sf_dir, tag) as r:
+        # scatter each key's VERSIONS across batches (seq in the hash)
+        # — out-of-order arrival is the property under test; three
+        # batches exercise it fully (split versions + interleaved
+        # sides) at 3/4 the per-batch fixed cost of four
+        feed.repartition(3, "side", "pk", "seq").write.mode(
+            "overwrite"
+        ).parquet(r.stage)
         sdf = stream_from_files(
-            spark, stage, raw_schema, max_files_per_trigger=1
+            spark, r.stage, spark.read.parquet(r.stage).schema,
+            max_files_per_trigger=1,
         )
-        q = stream_retract_join_orc(
-            sdf,
-            state,
-            checkpoint=ckpt,
-            trigger={"availableNow": True},
-            **sink_kwargs,
+        r.run(
+            lambda: stream_retract_join_orc(
+                sdf,
+                r.out,
+                checkpoint=r.ckpt,
+                trigger={"availableNow": True},
+                **sink_kwargs,
+            ),
+            f"{tag} stream",
         )
-        q.awaitTermination()
-    shutil.rmtree(stage, ignore_errors=True)
-    return state
+    return r.out
 
 
 def stream_retract_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2099,34 +1833,19 @@ def stream_foreachbatch_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     and compared to the source rows. Restart idempotence (same
     checkpoint, crash-replayed batch) is pytest-asserted in
     tests/test_streaming_sink.py."""
-    global _STREAM_SEQ
     from flink_orc_sink_spark.streaming.orc_sink import (
-        stream_from_files,
         stream_write_orc_foreachbatch,
     )
 
-    table(spark, sf_dir, "events")  # pin nanosAsLong + UTC
-    src = os.path.join(sf_dir, "events.parquet")
-    raw_schema = spark.read.parquet(src).schema
-    stage = tempfile.mkdtemp(prefix="stream_feb_src_")
-    os.symlink(src, os.path.join(stage, "events.parquet"))
-    _STREAM_SEQ += 1
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_stream_feb_"
-        f"{os.path.basename(os.path.normpath(sf_dir))}_{_STREAM_SEQ}",
-    )
-    import shutil
-
-    shutil.rmtree(out, ignore_errors=True)
-    with tempfile.TemporaryDirectory(prefix="stream_feb_ckpt_") as ckpt, stream_partitions(spark):
-        sdf = normalize_events_ts(stream_from_files(spark, stage, raw_schema))
-        q = stream_write_orc_foreachbatch(
-            sdf, out, checkpoint=ckpt, trigger={"availableNow": True}
+    with _Replay(spark, sf_dir, "feb") as r:
+        sdf = r.events()
+        r.run(
+            lambda: stream_write_orc_foreachbatch(
+                sdf, r.out, checkpoint=r.ckpt, trigger={"availableNow": True}
+            ),
+            "foreachBatch stream",
         )
-        q.awaitTermination()
-    shutil.rmtree(stage, ignore_errors=True)
-    return spark.read.orc(out).select(
+    return spark.read.orc(r.out).select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
 
@@ -2143,34 +1862,14 @@ def stream_fanout_atomic(spark: SparkSession, sf_dir: str) -> DataFrame:
     through ``read_committed_fanout`` and reaggregates the per-batch
     decimal partials, so the result must equal the whole-input batch
     aggregate exactly."""
-    global _STREAM_SEQ
     from flink_orc_sink_spark.streaming.orc_sink import (
         read_committed_fanout,
         stream_fanout_orc,
     )
 
-    import shutil
-
     table(spark, sf_dir, "events")  # pin nanosAsLong + UTC
     src = os.path.join(sf_dir, "events.parquet")
     raw = normalize_events_ts(spark.read.parquet(src))
-    feed = tempfile.mkdtemp(prefix="stream_fan_feed_")
-    # three replayable micro-batches (flat part files, one per
-    # trigger — the module's feed-staging convention)
-    for part in range(3):
-        raw.filter(F.col("event_id") % 3 == part).coalesce(1).write.mode(
-            "append"
-        ).parquet(feed)
-    _STREAM_SEQ += 1
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_stream_fan_"
-        f"{os.path.basename(os.path.normpath(sf_dir))}_{_STREAM_SEQ}",
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    by_type = os.path.join(base, "by_type")
-    by_user = os.path.join(base, "by_user")
-    commits = os.path.join(base, "_commits")
 
     def agg_type(d: DataFrame) -> DataFrame:
         return d.groupBy("event_type").agg(
@@ -2184,24 +1883,31 @@ def stream_fanout_atomic(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(18,6)")).alias("sv"),
         )
 
-    schema = raw.schema
-    with tempfile.TemporaryDirectory(
-        prefix="stream_fan_ckpt_"
-    ) as ckpt, stream_partitions(spark):
-        q = stream_fanout_orc(
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed),
-            {
-                "by_type": (by_type, agg_type),
-                "by_user": (by_user, agg_user),
-            },
-            commits,
-            ckpt,
-            trigger={"availableNow": True},
+    with _Replay(spark, sf_dir, "fan") as r:
+        # three replayable micro-batches (flat part files, one per
+        # trigger — the module's feed-staging convention)
+        for part in range(3):
+            raw.filter(F.col("event_id") % 3 == part).coalesce(1).write.mode(
+                "append"
+            ).parquet(r.stage)
+        by_type = os.path.join(r.out, "by_type")
+        by_user = os.path.join(r.out, "by_user")
+        commits = os.path.join(r.out, "_commits")
+        r.run(
+            lambda: stream_fanout_orc(
+                spark.readStream.schema(raw.schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(r.stage),
+                {
+                    "by_type": (by_type, agg_type),
+                    "by_user": (by_user, agg_user),
+                },
+                commits,
+                r.ckpt,
+                trigger={"availableNow": True},
+            ),
+            "stream_fanout_atomic",
         )
-        _drain_or_fail(q, 180, "stream_fanout_atomic")
-    shutil.rmtree(feed, ignore_errors=True)
     # per-batch decimal partials reaggregate EXACTLY to the global sum
     t = (
         read_committed_fanout(spark, by_type, commits)
@@ -2260,16 +1966,10 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     append-mode hourly counts must equal counting every original
     event exactly once (plain tumbling oracle; the sentinel's window
     stays beyond the final watermark and never emits)."""
-    global _STREAM_SEQ
-    import glob
-    import shutil
-
     table(spark, sf_dir, "events")  # pin nanosAsLong + UTC
     e = table(spark, sf_dir, "events").select("ts", "event_type", "value")
     max_ts = e.agg(F.max("ts")).collect()[0][0]  # one scalar, bounded
     pivot = F.lit(max_ts) - F.expr("INTERVAL 4 HOURS")
-    a_rows = e.filter(F.col("ts") <= pivot)
-    m_rows = e.filter(F.col("ts") > pivot)
     late_copies = e.filter(
         F.col("ts") <= F.lit(max_ts) - F.expr("INTERVAL 8 HOURS")
     )
@@ -2278,48 +1978,25 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("sentinel").alias("event_type"),
         F.lit(0.0).alias("value"),
     )
-    b_rows = late_copies.unionByName(sentinel)
-    stage = tempfile.mkdtemp(prefix="stream_late_src_")
-
-    def _stage_one(df, name: str, mtime: int) -> None:
-        tmp = os.path.join(stage, f"_tmp_{name}")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        dst = os.path.join(stage, name)
-        shutil.move(part, dst)
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.utime(dst, (mtime, mtime))  # file source orders by mtime
-
-    _stage_one(a_rows, "a.parquet", 1_000_000_000)
-    _stage_one(m_rows, "m.parquet", 1_000_000_100)
-    _stage_one(b_rows, "b.parquet", 1_000_000_200)
-    sdf = (
-        spark.readStream.schema("ts timestamp, event_type string, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-        .withWatermark("ts", "1 hour")
-    )
-    agg = (
-        sdf.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.col("w.start").alias("window_start"), "event_type", "n_events"
+    with _Replay(spark, sf_dir, "late") as r:
+        r.write_files([
+            e.filter(F.col("ts") <= pivot),
+            e.filter(F.col("ts") > pivot),
+            late_copies.unionByName(sentinel),
+        ])
+        agg = (
+            spark.readStream.schema("ts timestamp, event_type string, value double")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(r.stage)
+            .withWatermark("ts", "1 hour")
+            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+            .agg(F.count("*").alias("n_events"))
+            .select(
+                F.col("w.start").alias("window_start"), "event_type", "n_events"
+            )
         )
-    )
-    _STREAM_SEQ += 1
-    name = f"stream_late_{_STREAM_SEQ}"
-    with tempfile.TemporaryDirectory(prefix="stream_late_ckpt_") as ckpt, stream_partitions(spark):
-        q = (
-            agg.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    shutil.rmtree(stage, ignore_errors=True)
-    return spark.table(name).filter(F.col("event_type") != "sentinel")
+        out = r.memory(agg, "append")
+    return out.filter(F.col("event_type") != "sentinel")
 
 
 STREAM_LATE_DROP_SQL = """
@@ -2340,44 +2017,26 @@ def stream_orc_pipeline_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``README.md:3``) as a value-level assertion. (Crash/restart
     idempotence is the kill/restart pytest; this query gates the
     happy path on every driver run.)"""
-    global _STREAM_SEQ
     from flink_orc_sink_spark.streaming.orc_sink import (
         read_committed_orc,
-        stream_from_files,
         stream_write_orc,
     )
 
-    table(spark, sf_dir, "events")  # pin nanosAsLong + UTC
-    src = os.path.join(sf_dir, "events.parquet")
-    raw_schema = spark.read.parquet(src).schema
-    stage = tempfile.mkdtemp(prefix="stream_pipe_src_")
-    os.symlink(src, os.path.join(stage, "events.parquet"))
-    _STREAM_SEQ += 1
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_stream_pipe_"
-        f"{os.path.basename(os.path.normpath(sf_dir))}_{_STREAM_SEQ}",
-    )
-    import shutil
-
-    # A stale run's _spark_metadata manifest under the same path would
-    # conflict with this run's fresh checkpoint (batch ids restart at
-    # 0); the sink owns the directory, so start clean.
-    shutil.rmtree(out, ignore_errors=True)
-    with tempfile.TemporaryDirectory(prefix="stream_pipe_ckpt_") as ckpt, stream_partitions(spark):
-        sdf = normalize_events_ts(
-            stream_from_files(spark, stage, raw_schema)
-        ).withColumn("dt", F.to_date("ts"))
-        q = stream_write_orc(
-            sdf,
-            out,
-            checkpoint=ckpt,
-            partition_cols=["dt"],
-            trigger={"availableNow": True},
+    # r.out starts empty: a stale run's _spark_metadata manifest would
+    # conflict with this run's fresh checkpoint (batch ids restart at 0)
+    with _Replay(spark, sf_dir, "pipe") as r:
+        sdf = r.events().withColumn("dt", F.to_date("ts"))
+        r.run(
+            lambda: stream_write_orc(
+                sdf,
+                r.out,
+                checkpoint=r.ckpt,
+                partition_cols=["dt"],
+                trigger={"availableNow": True},
+            ),
+            "ORC pipeline stream",
         )
-        q.awaitTermination()
-    shutil.rmtree(stage, ignore_errors=True)
-    return read_committed_orc(spark, out).select(
+    return read_committed_orc(spark, r.out).select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
 
@@ -2388,8 +2047,6 @@ def _bucketed_table(
     """Write ``df`` as an 8-bucket, bucket-sorted external ORC table
     at ``path`` and return it re-read through the catalog (so Spark
     knows the bucketing and can plan shuffle-free joins on ``key``)."""
-    import shutil
-
     spark.sql(f"DROP TABLE IF EXISTS {name}")
     shutil.rmtree(path, ignore_errors=True)
     (
@@ -2470,8 +2127,6 @@ def orc_snapshot_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
     pytest-asserted in tests/test_maintenance.py). This is the
     Delta VACUUM / Iceberg expire-snapshots half of the manifest
     lifecycle that ``orc_time_travel`` opens."""
-    import shutil
-
     from flink_orc_sink_spark.sources.orc_sink import (
         snapshot_expire,
         snapshot_read,
@@ -2507,10 +2162,6 @@ def stream_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     real windows (same trick as ``stream_late_data_drop``); counts
     are exact integers and must equal the batch hourly oracle.
     """
-    global _STREAM_SEQ
-    import glob
-    import shutil
-
     table(spark, sf_dir, "events")  # pin nanosAsLong + UTC
     e = table(spark, sf_dir, "events").select("ts", "event_type")
     # the sentinel only needs to outrun every real event so the final
@@ -2520,48 +2171,30 @@ def stream_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("2100-01-01 00:00:00").cast("timestamp").alias("ts"),
         F.lit("sentinel").alias("event_type"),
     )
-    stage = tempfile.mkdtemp(prefix="stream_chain_src_")
-    tmp = os.path.join(stage, "_tmp")
-    e.unionByName(sentinel).coalesce(4).write.mode("overwrite").parquet(tmp)
-    for i, part in enumerate(
-        glob.glob(os.path.join(tmp, "part-*.parquet"))
-    ):
-        shutil.move(part, os.path.join(stage, f"{i}.parquet"))
-    shutil.rmtree(tmp, ignore_errors=True)
-    sdf = (
-        spark.readStream.schema("ts timestamp, event_type string")
-        .parquet(stage)
-        .withWatermark("ts", "1 hour")
-    )
-    ten_min = (
-        sdf.groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
-        .agg(F.count("*").alias("n_10m"))
-    )
-    hourly = (
-        ten_min.groupBy(
-            F.window(F.col("w"), "1 hour").alias("h"), "event_type"
+    with _Replay(spark, sf_dir, "chain") as r:
+        e.unionByName(sentinel).coalesce(4).write.mode("overwrite").parquet(
+            r.stage
         )
-        .agg(F.sum("n_10m").alias("n_events"))
-        .select(
-            F.col("h.start").alias("window_start"),
-            "event_type",
-            "n_events",
+        ten_min = (
+            spark.readStream.schema("ts timestamp, event_type string")
+            .parquet(r.stage)
+            .withWatermark("ts", "1 hour")
+            .groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
+            .agg(F.count("*").alias("n_10m"))
         )
-    )
-    _STREAM_SEQ += 1
-    name = f"stream_chained_{_STREAM_SEQ}"
-    with tempfile.TemporaryDirectory(prefix="stream_chain_ckpt_") as ckpt, stream_partitions(spark):
-        q = (
-            hourly.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        hourly = (
+            ten_min.groupBy(
+                F.window(F.col("w"), "1 hour").alias("h"), "event_type"
+            )
+            .agg(F.sum("n_10m").alias("n_events"))
+            .select(
+                F.col("h.start").alias("window_start"),
+                "event_type",
+                "n_events",
+            )
         )
-        q.awaitTermination()
-    shutil.rmtree(stage, ignore_errors=True)
-    return spark.table(name).filter(F.col("event_type") != "sentinel")
+        out = r.memory(hourly, "append")
+    return out.filter(F.col("event_type") != "sentinel")
 
 
 STREAM_CHAINED_SQL = """
@@ -2583,8 +2216,6 @@ def orc_bloom_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter: blooms have no false negatives, so the hash match proves
     plan-time point-lookup skipping loses no rows. File-open counts
     are asserted in tests/test_scale_layouts.py."""
-    import shutil
-
     from flink_orc_sink_spark.sources.orc_sink import (
         bloom_pruned_read,
         build_bloom_index,
@@ -2627,8 +2258,6 @@ def orc_gdpr_erase(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the requested keys and disturbed nothing else. Bucket
     mtime stability (untouched buckets not rewritten) is asserted in
     tests/test_maintenance.py."""
-    import shutil
-
     from flink_orc_sink_spark.sources.orc_sink import erase_keys_orc
 
     e = table(spark, sf_dir, "events")
@@ -2667,8 +2296,6 @@ def orc_quarantine_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     split admitted exactly the clean corpus and leaked nothing.
     Quarantine completeness (all 50 bad rows present, replayable) is
     pytest-asserted in tests/test_maintenance.py."""
-    import shutil
-
     from flink_orc_sink_spark.sources.orc_sink import write_orc_validated
 
     e = table(spark, sf_dir, "events")
@@ -2753,11 +2380,8 @@ def stream_pyds_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic oracle as the batch read: the hash match proves the
     offset-ranged micro-batches covered every row exactly once —
     no gap, no replayed overlap — across 5 distinct batches."""
-    import time
-
     from flink_orc_sink_spark.sources.pydatasource import register
 
-    global _STREAM_SEQ
     register(spark)
     sdf = (
         spark.readStream.format("synthetic_events")
@@ -2770,28 +2394,8 @@ def stream_pyds_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_events"),
         F.sum("value_cents").alias("sum_cents"),
     )
-    _STREAM_SEQ += 1
-    name = f"stream_pyds_{_STREAM_SEQ}"
-    with tempfile.TemporaryDirectory(prefix="stream_pyds_ckpt_") as ckpt, stream_partitions(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            done = spark.sql(
-                f"SELECT COALESCE(SUM(n_events), 0) AS t FROM {name}"
-            ).collect()[0].t
-            if done >= 50_000:
-                break
-            time.sleep(0.5)
-        q.stop()
-        q.awaitTermination(30)
-    return spark.table(name)
+    with _Replay(spark, sf_dir, "pyds") as r:
+        return r.memory(agg, "complete", live=True, min_events=50_000)
 
 
 STREAM_PYDS_SQL = """
@@ -2821,11 +2425,8 @@ def stream_pyds_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly once — no partition starved, none replayed. The restart/
     rebalance half of the contract (resume cursors, add a partition
     mid-stream) is pytest-pinned in tests/test_pydatasource.py."""
-    import threading
-
     from flink_orc_sink_spark.sources.pydatasource import register
 
-    global _STREAM_SEQ
     register(spark)
     per_part, stride = 10_000, 1_000_000
     sdf = (
@@ -2852,41 +2453,8 @@ def stream_pyds_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("value_cents").alias("sum_cents"),
         )
     )
-    _STREAM_SEQ += 1
-    name = f"stream_pyds_part_{_STREAM_SEQ}"
-    with tempfile.TemporaryDirectory(prefix="stream_pydsp_ckpt_") as ckpt, stream_partitions(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        # Drain to exhaustion, not to a wall-clock poll: the query's
-        # micro-batches, and so its jobs, are the same in every run. A
-        # stuck stream is stopped after 120 s, which ends the wait and
-        # leaves the count short.
-        stuck = threading.Timer(120, q.stop)
-        stuck.start()
-        try:
-            q.processAllAvailable()
-        finally:
-            stuck.cancel()
-        q.stop()
-        q.awaitTermination(30)
-        done = spark.sql(
-            f"SELECT COALESCE(SUM(n_events), 0) AS t FROM {name}"
-        ).collect()[0].t
-        if done < 3 * per_part:
-            # Fail loudly: a partial complete-mode aggregate would
-            # otherwise surface as a confusing oracle hash mismatch
-            # instead of the real problem (slow/stuck stream).
-            raise TimeoutError(
-                f"stream_pyds_partitioned drained {done}/{3 * per_part} "
-                "rows within 120s"
-            )
-    return spark.table(name)
+    with _Replay(spark, sf_dir, "pyds_part") as r:
+        return r.memory(agg, "complete", live=True, min_events=3 * per_part)
 
 
 def pyds_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2901,9 +2469,6 @@ def pyds_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (invisible: the committed reader never lists the directory), then
     read back manifest-only and hash-matched against
     ``SELECT * FROM events``."""
-    import glob as _glob
-    import shutil
-
     from flink_orc_sink_spark.sources.pyds_sink import (
         read_manifest_orc,
         register_sink,
@@ -2922,7 +2487,7 @@ def pyds_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     e.repartition(4).write.format("manifest_orc_py").mode(
         "append"
     ).save(out)
-    committed = _glob.glob(os.path.join(out, "data", "task-*.orc"))
+    committed = glob.glob(os.path.join(out, "data", "task-*.orc"))
     shutil.copy(
         committed[0], os.path.join(out, "data", "task-9999-orphan.orc")
     )
@@ -2940,8 +2505,6 @@ def stream_pyds_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows; restart exactly-once and replay idempotence are
     pytest-pinned in tests/test_pydatasource.py. Read back
     manifest-only, hash-matched against ``SELECT * FROM events``."""
-    import shutil
-
     from flink_orc_sink_spark.sources.pyds_sink import (
         read_manifest_orc,
         register_sink,
@@ -2952,30 +2515,20 @@ def stream_pyds_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = normalize_events_ts(spark.read.parquet(src)).select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
-    stage = tempfile.mkdtemp(prefix="stream_pyds_sink_src_")
-    e.repartition(3, "event_id").write.mode("overwrite").parquet(stage)
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_stream_pyds_sink_"
-        f"{os.path.basename(os.path.normpath(sf_dir))}",
-    )
-    shutil.rmtree(out, ignore_errors=True)
-    with tempfile.TemporaryDirectory(
-        prefix="stream_pyds_sink_ckpt_"
-    ) as ckpt, stream_partitions(spark):
-        q = (
-            spark.readStream.schema(e.schema)
+    with _Replay(spark, sf_dir, "pyds_sink") as r:
+        e.repartition(3, "event_id").write.mode("overwrite").parquet(r.stage)
+        r.run(
+            lambda: spark.readStream.schema(e.schema)
             .option("maxFilesPerTrigger", "1")
-            .parquet(stage)
+            .parquet(r.stage)
             .writeStream.format("manifest_orc_py")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
+            .option("path", r.out)
+            .option("checkpointLocation", r.ckpt)
             .trigger(availableNow=True)
-            .start()
+            .start(),
+            "python-datasource sink stream",
         )
-        _drain_or_fail(q, 180, "python-datasource sink stream")
-    shutil.rmtree(stage, ignore_errors=True)
-    return read_manifest_orc(spark, out).select(
+    return read_manifest_orc(spark, r.out).select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
 
@@ -3000,8 +2553,6 @@ def stream_minhash_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape of continuous training-data ingest: per-trigger cost is
     batch-sized, index probe cost is pre-bucketed, nothing ever
     rescans the corpus."""
-    import shutil
-
     from flink_orc_sink_spark.operators.dedup import (
         append_to_minhash_index,
         build_minhash_index,
@@ -3014,17 +2565,8 @@ def stream_minhash_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     hi = d.agg(F.max("doc_id")).collect()[0][0] + 1
     step = -(-hi // n_ranges)
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_stream_mhidx_"
-        f"{os.path.basename(os.path.normpath(sf_dir))}",
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    feed, idx, results = (
-        os.path.join(base, "feed"),
-        os.path.join(base, "idx"),
-        os.path.join(base, "results"),
-    )
+    r = _Replay(spark, sf_dir, "mhidx")
+    idx, results = os.path.join(r.out, "idx"), os.path.join(r.out, "results")
     # range 0 bootstraps the index (build); ranges 1..3 arrive as the
     # stream — one file each, so each micro-batch is one id range
     boot = d.filter(F.col("doc_id") < step)
@@ -3037,16 +2579,6 @@ def stream_minhash_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .partitionBy("batch_id")
         .parquet(results)
     )
-    for i in range(1, n_ranges):
-        (
-            d.filter(
-                (F.col("doc_id") >= i * step)
-                & (F.col("doc_id") < (i + 1) * step)
-            )
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(feed)
-        )
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
         from flink_orc_sink_spark.operators.dedup import shingle_hash_sets
@@ -3093,7 +2625,7 @@ def stream_minhash_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             if not os.path.exists(marker):
                 append_to_minhash_index(
                     batch_df, "doc_id", "text", idx,
-                    owner=owner_cell[0], shingles=sh,
+                    owner=r.owner, shingles=sh,
                 )
                 os.makedirs(marker, exist_ok=True)
         finally:
@@ -3101,11 +2633,18 @@ def stream_minhash_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 release_local_checkpoint(sh)
             release_local_checkpoint(batch_df)
 
-    owner_cell = [None]
-    _run_feed_stream(
-        spark, feed, d.schema, on_batch, "index-ingest stream",
-        owner_cell=owner_cell,
-    )
+    with r:
+        for i in range(1, n_ranges):
+            (
+                d.filter(
+                    (F.col("doc_id") >= i * step)
+                    & (F.col("doc_id") < (i + 1) * step)
+                )
+                .coalesce(1)
+                .write.mode("append")
+                .parquet(r.stage)
+            )
+        r.feed(d.schema, on_batch, "index-ingest stream")
 
     return (
         spark.read.parquet(results)
@@ -3133,8 +2672,6 @@ def stream_gram_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep-first, so the accumulated cleaned corpus must hash-match the
     one-shot ``docs_cut_dup_spans`` oracle verbatim — the streamed
     index provably accumulates to the batch computation."""
-    import shutil
-
     from flink_orc_sink_spark.operators.dedup import (
         append_to_gram_index,
         build_gram_index,
@@ -3148,17 +2685,8 @@ def stream_gram_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     hi = d.agg(F.max("doc_id")).collect()[0][0] + 1
     step = -(-hi // n_ranges)
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_stream_gramidx_"
-        f"{os.path.basename(os.path.normpath(sf_dir))}",
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    feed, idx, results = (
-        os.path.join(base, "feed"),
-        os.path.join(base, "idx"),
-        os.path.join(base, "results"),
-    )
+    r = _Replay(spark, sf_dir, "gramidx")
+    idx, results = os.path.join(r.out, "idx"), os.path.join(r.out, "results")
     boot = d.filter(F.col("doc_id") < step)
     build_gram_index(boot, "doc_id", "text", idx, n=_DUP_NGRAM_N)
     (
@@ -3168,16 +2696,6 @@ def stream_gram_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .partitionBy("batch_id")
         .parquet(results)
     )
-    for i in range(1, n_ranges):
-        (
-            d.filter(
-                (F.col("doc_id") >= i * step)
-                & (F.col("doc_id") < (i + 1) * step)
-            )
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(feed)
-        )
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
         from flink_orc_sink_spark.operators.dedup import (
@@ -3218,18 +2736,25 @@ def stream_gram_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             append_to_gram_index(
                 batch_df, "doc_id", "text", idx, n=_DUP_NGRAM_N,
-                tag=batch_id, owner=owner_cell[0], occurrences=occ,
+                tag=batch_id, owner=r.owner, occurrences=occ,
             )
         finally:
             if occ is not None:
                 release_local_checkpoint(occ)
             release_local_checkpoint(batch_df)
 
-    owner_cell = [None]
-    _run_feed_stream(
-        spark, feed, d.schema, on_batch, "gram-ingest stream",
-        owner_cell=owner_cell,
-    )
+    with r:
+        for i in range(1, n_ranges):
+            (
+                d.filter(
+                    (F.col("doc_id") >= i * step)
+                    & (F.col("doc_id") < (i + 1) * step)
+                )
+                .coalesce(1)
+                .write.mode("append")
+                .parquet(r.stage)
+            )
+        r.feed(d.schema, on_batch, "gram-ingest stream")
 
     return spark.read.parquet(results).select(
         F.col("doc").alias("doc_id"), "clean_text", "n_kept", "n_removed"
@@ -3256,8 +2781,6 @@ def stream_bm25_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (hazard + guard pinned in pytest). 100 TB shape: per-trigger cost
     is batch-sized; the probe reads only the query terms' bucket
     directories at the file listing."""
-    import shutil
-
     from flink_orc_sink_spark.operators.retrieval import (
         append_to_bm25_index,
         bm25_probe_index,
@@ -3270,38 +2793,30 @@ def stream_bm25_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     hi = d.agg(F.max("doc_id")).collect()[0][0] + 1
     step = -(-hi // n_ranges)
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_stream_bm25idx_"
-        f"{os.path.basename(os.path.normpath(sf_dir))}",
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    feed, idx = os.path.join(base, "feed"), os.path.join(base, "idx")
+    r = _Replay(spark, sf_dir, "bm25idx")
+    idx = os.path.join(r.out, "idx")
     build_bm25_index(
         d.filter(F.col("doc_id") < step), "doc_id", "text", idx
     )
-    for i in range(1, n_ranges):
-        (
-            d.filter(
-                (F.col("doc_id") >= i * step)
-                & (F.col("doc_id") < (i + 1) * step)
-            )
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(feed)
-        )
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
         append_to_bm25_index(
             batch_df, "doc_id", "text", idx, tag=batch_id,
-            owner=owner_cell[0],
+            owner=r.owner,
         )
 
-    owner_cell = [None]
-    _run_feed_stream(
-        spark, feed, d.schema, on_batch, "bm25-ingest stream",
-        owner_cell=owner_cell,
-    )
+    with r:
+        for i in range(1, n_ranges):
+            (
+                d.filter(
+                    (F.col("doc_id") >= i * step)
+                    & (F.col("doc_id") < (i + 1) * step)
+                )
+                .coalesce(1)
+                .write.mode("append")
+                .parquet(r.stage)
+            )
+        r.feed(d.schema, on_batch, "bm25-ingest stream")
 
     return bm25_probe_index(spark, idx, list(BM25_TERMS), k=20)
 
@@ -3336,8 +2851,6 @@ def stream_emb_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: per-trigger cost is batch-sized; index reads prune
     to probed cells at the FILE LISTING; centroid drift stays a
     rebuild decision exactly as in production IVF systems."""
-    import shutil
-
     from flink_orc_sink_spark.operators.similarity import (
         append_to_ivf_index,
         build_ivf_index,
@@ -3361,17 +2874,8 @@ def stream_emb_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     half = hi // 2
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_stream_ivfidx_"
-        f"{os.path.basename(os.path.normpath(sf_dir))}",
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    feed, idx, results = (
-        os.path.join(base, "feed"),
-        os.path.join(base, "idx"),
-        os.path.join(base, "results"),
-    )
+    r = _Replay(spark, sf_dir, "ivfidx")
+    idx, results = os.path.join(r.out, "idx"), os.path.join(r.out, "results")
     # the first id range bootstraps the index (train + build); the
     # rest of the corpus and then the clone range arrive as the
     # stream, one file per micro-batch
@@ -3387,13 +2891,10 @@ def stream_emb_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .partitionBy("batch_id")
         .parquet(results)
     )
-    for rng in (
-        (F.col("vec_id") >= half) & (F.col("vec_id") < 1_000_000),
-        F.col("vec_id") >= 1_000_000,
-    ):
-        e.filter(rng).coalesce(1).write.mode("append").parquet(feed)
-    schema = e.schema
-    release_local_checkpoint(e)
+    feed = [
+        e.filter((F.col("vec_id") >= half) & (F.col("vec_id") < 1_000_000)),
+        e.filter(F.col("vec_id") >= 1_000_000),
+    ]
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.localCheckpoint(eager=True)  # consumed 3×
@@ -3424,17 +2925,17 @@ def stream_emb_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             if not os.path.exists(marker):
                 append_to_ivf_index(
                     batch_df, "vec_id", "embedding", idx,
-                    owner=owner_cell[0], centroids=centroids,
+                    owner=r.owner, centroids=centroids,
                 )
                 os.makedirs(marker, exist_ok=True)
         finally:
             release_local_checkpoint(batch_df)
 
-    owner_cell = [None]
-    _run_feed_stream(
-        spark, feed, schema, on_batch, "index-ingest stream",
-        owner_cell=owner_cell,
-    )
+    with r:
+        for part in feed:
+            part.coalesce(1).write.mode("append").parquet(r.stage)
+        release_local_checkpoint(e)
+        r.feed(e.schema, on_batch, "index-ingest stream")
 
     return (
         spark.read.parquet(results)
@@ -3462,8 +2963,6 @@ def stream_media_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     curation pipeline: per-trigger decode cost is batch-sized, the
     index carries ~70 B/image, and dedup cost scales with the batch,
     never the corpus of stored media."""
-    import shutil
-
     from flink_orc_sink_spark.operators.multimodal import (
         ahash_neardup_pairs,
         ahash_probe_index,
@@ -3496,17 +2995,8 @@ def stream_media_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_stream_mediaidx_"
-        f"{os.path.basename(os.path.normpath(sf_dir))}",
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    feed, idx, results = (
-        os.path.join(base, "feed"),
-        os.path.join(base, "idx"),
-        os.path.join(base, "results"),
-    )
+    r = _Replay(spark, sf_dir, "mediaidx")
+    idx, results = os.path.join(r.out, "idx"), os.path.join(r.out, "results")
     # first half of the originals bootstraps the index; the rest of
     # the originals and then the clone wave arrive as the stream.
     # The boot HASHES are checkpointed too (round 13): the index
@@ -3529,12 +3019,6 @@ def stream_media_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         release_local_checkpoint(boot)
-    for rng in (
-        (F.col("media_id") >= 50) & (F.col("media_id") < 1000),
-        F.col("media_id") >= 1000,
-    ):
-        blobs.filter(rng).coalesce(1).write.mode("append").parquet(feed)
-    release_local_checkpoint(blobs)
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
         hashes = image_ahash(batch_df, "media_id", "png").localCheckpoint(
@@ -3561,17 +3045,20 @@ def stream_media_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             if not os.path.exists(marker):
                 append_to_ahash_index(
                     hashes, "media_id", "ahash", idx,
-                    owner=owner_cell[0],
+                    owner=r.owner,
                 )
                 os.makedirs(marker, exist_ok=True)
         finally:
             release_local_checkpoint(hashes)
 
-    owner_cell = [None]
-    _run_feed_stream(
-        spark, feed, "media_id long, png binary", on_batch,
-        "index-ingest stream", owner_cell=owner_cell,
-    )
+    with r:
+        for rng in (
+            (F.col("media_id") >= 50) & (F.col("media_id") < 1000),
+            F.col("media_id") >= 1000,
+        ):
+            blobs.filter(rng).coalesce(1).write.mode("append").parquet(r.stage)
+        release_local_checkpoint(blobs)
+        r.feed("media_id long, png binary", on_batch, "index-ingest stream")
 
     return (
         spark.read.parquet(results)
@@ -3648,8 +3135,6 @@ def stream_index_forget_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (read-time dedup). 100 TB shape: per-trigger cost is batch-sized
     for adds and deleted-sized for tombstones; the probe's
     merge-on-read tax is one broadcast anti-join."""
-    import shutil
-
     from flink_orc_sink_spark.operators.dedup import (
         build_minhash_index,
         minhash_probe_index,
@@ -3659,57 +3144,43 @@ def stream_index_forget_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = d.filter(F.col("doc_id") % 10 != 0)
     new = d.filter(F.col("doc_id") % 10 == 0)
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_stream_fidx_"
-        f"{os.path.basename(os.path.normpath(sf_dir))}",
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    feed, idx = os.path.join(base, "feed"), os.path.join(base, "idx")
+    r = _Replay(spark, sf_dir, "fidx")
+    idx = os.path.join(r.out, "idx")
 
     boot = corpus.filter(F.col("doc_id") % 3 == 0)
     build_minhash_index(boot, "doc_id", "text", idx)
 
-    add = F.lit("add")
-    for i in (1, 2):
+    with r:
+        add = F.lit("add")
+        for i in (1, 2):
+            (
+                corpus.filter(F.col("doc_id") % 3 == i)
+                .select(add.alias("op"), "doc_id", "text")
+                .coalesce(1)
+                .write.mode("append")
+                .parquet(r.stage)
+            )
+        # control batch: forget boot∩(%7==3), re-add its odd members —
+        # one trigger, so the del→add order is ours, not the scheduler's
+        forget = boot.filter(F.col("doc_id") % 7 == 3)
         (
-            corpus.filter(F.col("doc_id") % 3 == i)
-            .select(add.alias("op"), "doc_id", "text")
+            forget.select(
+                F.lit("del").alias("op"), "doc_id", F.lit(None).cast("string").alias("text")
+            )
+            .unionByName(
+                forget.filter(F.col("doc_id") % 2 == 1).select(
+                    add.alias("op"), "doc_id", "text"
+                )
+            )
             .coalesce(1)
             .write.mode("append")
-            .parquet(feed)
+            .parquet(r.stage)
         )
-    # control batch: forget boot∩(%7==3), re-add its odd members —
-    # one trigger, so the del→add order is ours, not the scheduler's
-    forget = boot.filter(F.col("doc_id") % 7 == 3)
-    (
-        forget.select(
-            F.lit("del").alias("op"), "doc_id", F.lit(None).cast("string").alias("text")
+        r.feed(
+            "op string, doc_id long, text string",
+            _fidx_on_batch(spark, idx, r.owner),
+            "forget-ingest stream",
         )
-        .unionByName(
-            forget.filter(F.col("doc_id") % 2 == 1).select(
-                add.alias("op"), "doc_id", "text"
-            )
-        )
-        .coalesce(1)
-        .write.mode("append")
-        .parquet(feed)
-    )
-
-    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.localCheckpoint(eager=True)  # consumed 2×
-        try:
-            _apply_index_commands(
-                spark, idx, batch_df, batch_id, owner=owner_cell[0]
-            )
-        finally:
-            release_local_checkpoint(batch_df)
-
-    owner_cell = [None]
-    _run_feed_stream(
-        spark, feed, "op string, doc_id long, text string", on_batch,
-        "forget-ingest stream", owner_cell=owner_cell,
-    )
 
     return minhash_probe_index(
         spark, new, "doc_id", "text", idx, threshold=0.7
@@ -3728,7 +3199,7 @@ def stream_index_forget_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # production stream pays for a takedown, not a replay of the adds.
 
 
-def _bench_fidx_paths(sf_dir: str) -> tuple[str, str, str, str]:
+def _bench_fidx_base(sf_dir: str) -> str:
     # per-process token (round-11 advice #3): the phases chain through
     # one base dir WITHIN a run, but two concurrent runs on the same
     # scale factor (bench + pytest, or two bench invocations) must not
@@ -3738,25 +3209,19 @@ def _bench_fidx_paths(sf_dir: str) -> tuple[str, str, str, str]:
     # (set once by bench.py) lets a multi-process harness opt into one
     # shared token explicitly.
     token = os.environ.get("SPARK_GRAFT_RUN_TOKEN") or str(os.getpid())
-    base = os.path.join(
+    return os.path.join(
         tempfile.gettempdir(),
         "spark_graft_fidx_bench_"
         f"{os.path.basename(os.path.normpath(sf_dir))}_{token}",
     )
-    return (
-        base,
-        os.path.join(base, "feed"),
-        os.path.join(base, "idx"),
-        os.path.join(base, "ckpt"),
-    )
 
 
-def _fidx_on_batch(spark: SparkSession, idx: str, owner_cell: list):
+def _fidx_on_batch(spark: SparkSession, idx: str, owner: str):
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.localCheckpoint(eager=True)  # consumed 2×
         try:
             _apply_index_commands(
-                spark, idx, batch_df, batch_id, owner=owner_cell[0]
+                spark, idx, batch_df, batch_id, owner=owner
             )
         finally:
             release_local_checkpoint(batch_df)
@@ -3768,17 +3233,15 @@ def bench_fidx_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BENCH-ONLY: the bootstrap phase alone — one-time banded-LSH
     index build over the %3==0 boot corpus (the amortized cost a
     production index pays once, not per takedown)."""
-    import shutil
-
     from flink_orc_sink_spark.operators.dedup import build_minhash_index
 
-    base, _feed, idx, _ckpt = _bench_fidx_paths(sf_dir)
+    base = _bench_fidx_base(sf_dir)
     shutil.rmtree(base, ignore_errors=True)
     d = table(spark, sf_dir, "documents").select("doc_id", "text")
     boot = d.filter(
         (F.col("doc_id") % 10 != 0) & (F.col("doc_id") % 3 == 0)
     )
-    build_minhash_index(boot, "doc_id", "text", idx)
+    build_minhash_index(boot, "doc_id", "text", os.path.join(base, "idx"))
     return spark.range(1)
 
 
@@ -3787,7 +3250,8 @@ def bench_fidx_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     drained through the checkpointed feed stream (per-trigger cost is
     batch-sized; this is the number that must stay flat as the index
     grows)."""
-    _base, feed, idx, ckpt = _bench_fidx_paths(sf_dir)
+    base = _bench_fidx_base(sf_dir)
+    idx = os.path.join(base, "idx")
     if not os.path.isdir(idx):
         raise RuntimeError("stream_fidx_build must run before ingest")
     corpus = (
@@ -3795,24 +3259,20 @@ def bench_fidx_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
         .filter(F.col("doc_id") % 10 != 0)
     )
-    for i in (1, 2):
-        (
-            corpus.filter(F.col("doc_id") % 3 == i)
-            .select(F.lit("add").alias("op"), "doc_id", "text")
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(feed)
+    with _Replay(spark, sf_dir, "fidx", base=base) as r:
+        for i in (1, 2):
+            (
+                corpus.filter(F.col("doc_id") % 3 == i)
+                .select(F.lit("add").alias("op"), "doc_id", "text")
+                .coalesce(1)
+                .write.mode("append")
+                .parquet(r.stage)
+            )
+        r.feed(
+            "op string, doc_id long, text string",
+            _fidx_on_batch(spark, idx, r.owner),
+            "fidx ingest phase",
         )
-    owner_cell = [None]
-    _run_feed_stream(
-        spark,
-        feed,
-        "op string, doc_id long, text string",
-        _fidx_on_batch(spark, idx, owner_cell),
-        "fidx ingest phase",
-        owner_cell=owner_cell,
-        ckpt=ckpt,
-    )
     return spark.range(1)
 
 
@@ -3822,8 +3282,8 @@ def bench_fidx_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     resumed from the same checkpoint (the WAL cursor skips the already
     -committed add files, so this times exactly the O(deleted)
     tombstone append + the readmit)."""
-    _base, feed, idx, ckpt = _bench_fidx_paths(sf_dir)
-    if not os.path.isdir(ckpt):
+    base = _bench_fidx_base(sf_dir)
+    if not os.path.isdir(os.path.join(base, "ckpt")):
         raise RuntimeError("stream_fidx_ingest must run before forget")
     d = table(spark, sf_dir, "documents").select("doc_id", "text")
     forget = d.filter(
@@ -3831,31 +3291,27 @@ def bench_fidx_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("doc_id") % 3 == 0)
         & (F.col("doc_id") % 7 == 3)
     )
-    (
-        forget.select(
-            F.lit("del").alias("op"),
-            "doc_id",
-            F.lit(None).cast("string").alias("text"),
-        )
-        .unionByName(
-            forget.filter(F.col("doc_id") % 2 == 1).select(
-                F.lit("add").alias("op"), "doc_id", "text"
+    with _Replay(spark, sf_dir, "fidx", base=base) as r:
+        (
+            forget.select(
+                F.lit("del").alias("op"),
+                "doc_id",
+                F.lit(None).cast("string").alias("text"),
             )
+            .unionByName(
+                forget.filter(F.col("doc_id") % 2 == 1).select(
+                    F.lit("add").alias("op"), "doc_id", "text"
+                )
+            )
+            .coalesce(1)
+            .write.mode("append")
+            .parquet(r.stage)
         )
-        .coalesce(1)
-        .write.mode("append")
-        .parquet(feed)
-    )
-    owner_cell = [None]
-    _run_feed_stream(
-        spark,
-        feed,
-        "op string, doc_id long, text string",
-        _fidx_on_batch(spark, idx, owner_cell),
-        "fidx forget phase",
-        owner_cell=owner_cell,
-        ckpt=ckpt,
-    )
+        r.feed(
+            "op string, doc_id long, text string",
+            _fidx_on_batch(spark, os.path.join(base, "idx"), r.owner),
+            "fidx forget phase",
+        )
     return spark.range(1)
 
 
@@ -3864,7 +3320,7 @@ def bench_fidx_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     the steady-state query cost (tombstone anti-join included)."""
     from flink_orc_sink_spark.operators.dedup import minhash_probe_index
 
-    _base, _feed, idx, _ckpt = _bench_fidx_paths(sf_dir)
+    idx = os.path.join(_bench_fidx_base(sf_dir), "idx")
     if not os.path.isdir(idx):
         raise RuntimeError("stream_fidx_build must run before the probe")
     new = (
@@ -3902,10 +3358,6 @@ def stream_backfill_live_handoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the trigger-switch twin of ``stream_orc_pipeline_events``;
     crash/restart idempotence and the pytest variant live in
     tests/test_streaming_sink.py)."""
-    global _STREAM_SEQ
-    import shutil
-    import time
-
     from flink_orc_sink_spark.streaming.orc_sink import (
         read_committed_orc,
         stream_from_files,
@@ -3914,64 +3366,46 @@ def stream_backfill_live_handoff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = table(spark, sf_dir, "events")  # normalized µs ts, UTC
     total = d.count()
-    _STREAM_SEQ += 1
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_stream_handoff_"
-        f"{os.path.basename(os.path.normpath(sf_dir))}_{_STREAM_SEQ}",
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    feed, out = os.path.join(base, "feed"), os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    for part in (0, 1, 2):  # the backlog: one file per id class
-        d.filter(F.col("event_id") % 4 == part).coalesce(1).write.mode(
-            "append"
-        ).parquet(feed)
-
-    with stream_partitions(spark):
-        q = stream_write_orc(
-            stream_from_files(
-                spark, feed, d.schema, max_files_per_trigger=1
-            ),
-            out,
-            checkpoint=ckpt,
-            trigger={"availableNow": True},
-        )
-        _drain_or_fail(q, 120, "backfill drain")
-
-        # live phase: SAME checkpoint, continuous trigger; the tail
-        # arrives while the query runs
-        q = stream_write_orc(
-            stream_from_files(spark, feed, d.schema),
-            out,
-            checkpoint=ckpt,
-            trigger={"processingTime": "0 seconds"},
-        )
-        try:
-            d.filter(F.col("event_id") % 4 == 3).coalesce(1).write.mode(
+    with _Replay(spark, sf_dir, "handoff") as r:
+        for part in (0, 1, 2):  # the backlog: one file per id class
+            d.filter(F.col("event_id") % 4 == part).coalesce(1).write.mode(
                 "append"
-            ).parquet(feed)
-            deadline = time.time() + 120
-            done = 0
-            while time.time() < deadline:
-                done = read_committed_orc(spark, out).count()
-                if done >= total:
-                    break
-                time.sleep(0.5)
-        finally:
-            q.stop()
-            q.awaitTermination(30)
-        if done < total:
-            # the last poll can be up to one interval stale, and
-            # stop() lets an in-flight batch commit — re-read once
-            # before declaring failure so a drain finishing in the
-            # final window is not misreported
-            done = read_committed_orc(spark, out).count()
-        if done < total:
-            raise TimeoutError(
-                f"handoff drained {done}/{total} rows within 120s"
+            ).parquet(r.stage)
+        r.run(
+            lambda: stream_write_orc(
+                stream_from_files(
+                    spark, r.stage, d.schema, max_files_per_trigger=1
+                ),
+                r.out,
+                checkpoint=r.ckpt,
+                trigger={"availableNow": True},
+            ),
+            "backfill drain",
+        )
+
+        def live():
+            # SAME checkpoint, continuous trigger; the tail arrives
+            # while the query runs
+            q = stream_write_orc(
+                stream_from_files(spark, r.stage, d.schema),
+                r.out,
+                checkpoint=r.ckpt,
+                trigger={"processingTime": "0 seconds"},
             )
-    return read_committed_orc(spark, out).select(
+            try:
+                d.filter(F.col("event_id") % 4 == 3).coalesce(1).write.mode(
+                    "append"
+                ).parquet(r.stage)
+            except BaseException:
+                q.stop()
+                raise
+            return q
+
+        r.run(live, "live tail", live=True)
+    done = read_committed_orc(spark, r.out).count()
+    if done < total:
+        raise TimeoutError(f"handoff drained {done}/{total} rows")
+    return read_committed_orc(spark, r.out).select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
 
@@ -4058,10 +3492,6 @@ def stream_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the clean corpus across every micro-batch. Quarantine
     completeness + NULL routing are pytest-asserted in
     tests/test_streaming_sink.py."""
-    global _STREAM_SEQ
-    import glob
-    import shutil
-
     from flink_orc_sink_spark.streaming.orc_sink import (
         stream_quarantine_orc,
     )
@@ -4078,41 +3508,29 @@ def stream_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(-1.0).alias("value"),
         F.lit("{}").alias("props"),
     )
-    stage = tempfile.mkdtemp(prefix="stream_quar_src_")
-    tmp = os.path.join(stage, "_tmp")
-    e.unionByName(bad).coalesce(4).write.mode("overwrite").parquet(tmp)
-    for i, part in enumerate(glob.glob(os.path.join(tmp, "part-*.parquet"))):
-        shutil.move(part, os.path.join(stage, f"{i}.parquet"))
-    shutil.rmtree(tmp, ignore_errors=True)
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string"
-    )
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(stage)
-    )
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_stream_quar_"
-        f"{os.path.basename(os.path.normpath(sf_dir))}",
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    valid, quar = os.path.join(base, "valid"), os.path.join(base, "dlq")
     expectation = F.col("event_type").isNotNull() & (F.col("value") >= 0)
-    _STREAM_SEQ += 1
-    with tempfile.TemporaryDirectory(prefix="stream_quar_ckpt_") as ckpt, stream_partitions(spark):
-        q = stream_quarantine_orc(
-            sdf,
-            valid,
-            quar,
-            ckpt,
-            expectation,
-            trigger={"availableNow": True},
+    with _Replay(spark, sf_dir, "quar") as r:
+        e.unionByName(bad).coalesce(4).write.mode("overwrite").parquet(r.stage)
+        sdf = (
+            spark.readStream.schema(
+                "event_id long, ts timestamp, user_id long, event_type string,"
+                " value double, props string"
+            )
+            .option("maxFilesPerTrigger", 2)
+            .parquet(r.stage)
         )
-        q.awaitTermination()
-    shutil.rmtree(stage, ignore_errors=True)
+        valid = os.path.join(r.out, "valid")
+        r.run(
+            lambda: stream_quarantine_orc(
+                sdf,
+                valid,
+                os.path.join(r.out, "dlq"),
+                r.ckpt,
+                expectation,
+                trigger={"availableNow": True},
+            ),
+            "quarantine stream",
+        )
     return spark.read.orc(valid).select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
@@ -4130,43 +3548,21 @@ def stream_sessionize_dynamic(
     previous-event-gap semantics, so the streaming state-store
     result must hash-match the batch gaps-and-islands SQL aggregated
     to (user, session) rows."""
-    global _STREAM_SEQ
-    table(spark, sf_dir, "events")  # pin nanosAsLong + UTC
-    src = os.path.join(sf_dir, "events.parquet")
-    raw_schema = spark.read.parquet(src).schema
-    stage = tempfile.mkdtemp(prefix="stream_dsess_src_")
-    os.symlink(src, os.path.join(stage, "events.parquet"))
-    sdf = normalize_events_ts(
-        spark.readStream.schema(raw_schema).parquet(stage)
-    )
     gap = F.when(
         F.col("event_type").isin("click", "view"), F.lit("5 minutes")
     ).otherwise(F.lit("30 minutes"))
-    agg = (
-        sdf.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
+    with _Replay(spark, sf_dir, "dsess") as r:
+        agg = (
+            r.events()
+            .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+            .agg(
+                F.count("*").alias("n_events"),
+                F.min("ts").alias("session_start"),
+                F.max("ts").alias("session_end"),
+            )
+            .select("user_id", "session_start", "session_end", "n_events")
         )
-        .select("user_id", "session_start", "session_end", "n_events")
-    )
-    _STREAM_SEQ += 1
-    name = f"stream_sessionize_dynamic_{_STREAM_SEQ}"
-    with tempfile.TemporaryDirectory(prefix="stream_dsess_ckpt_") as ckpt, stream_partitions(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    import shutil
-
-    shutil.rmtree(stage, ignore_errors=True)
-    return spark.table(name)
+        return r.memory(agg, "complete")
 
 
 STREAM_SESSIONIZE_DYNAMIC_SQL = """

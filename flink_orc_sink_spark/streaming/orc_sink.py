@@ -33,6 +33,7 @@ from __future__ import annotations
 import os
 import threading
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -288,10 +289,12 @@ class _DeltaLogTable:
     ``jk_state/`` and ``view/`` before the base; the SCD2 table
     rewrites ``history/`` after it.
 
-    Crash contract: a replayed batch rewrites its own log partition,
-    and its extras read only the base and ``log[< batch]`` — neither
-    changes before the append — so they recompute identical output
-    with or without their ``applied/`` marker (a work-skip only). The
+    Crash contract: a replayed batch rewrites its own log partition.
+    Its extras read the base and ``log[< batch]``, so the retract
+    sinks' ``applied/`` marker is load-bearing, not a work-skip: once
+    the batch's own fold has run, the base already holds the batch,
+    and a replay without the marker would resolve the batch's rows as
+    their own pre-images and overwrite its deltas with zeros. The
     log append needs no atomic swap: only the last, uncommitted batch
     is ever replayed, so while its directory is deleted and rewritten
     a reader sees ``log[< N]``, a consistent earlier snapshot, and
@@ -357,7 +360,7 @@ class _DeltaLogTable:
     def read(self, spark: SparkSession) -> DataFrame:
         """Merge-on-read snapshot: resolve(base ∪ log)."""
         if not _orc_files_exist(spark, self.log_dir):
-            return spark.read.orc(self.base_dir)
+            return _read_committed(spark, self.base_dir, self.path)
         rows = self.read_log(spark)
         if _orc_files_exist(spark, self.base_dir):
             rows = rows.unionByName(spark.read.orc(self.base_dir))
@@ -674,6 +677,20 @@ def stream_cdc_apply_orc(
     )
 
 
+def _read_committed(spark: SparkSession, path: str, state_path: str) -> DataFrame:
+    """``spark.read.orc(path)`` of a state dir whose log holds no data:
+    a missing ``path`` then means no batch has committed yet. The
+    check rides the failure path, so a read makes no extra call."""
+    try:
+        return spark.read.orc(path)
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        raise FileNotFoundError(
+            f"{state_path}: no batch has committed yet (no base or log data)"
+        ) from e
+
+
 def read_cdc_table(spark: SparkSession, state_path: str) -> DataFrame:
     """Current latest-per-key table of a :func:`stream_cdc_apply_orc`
     state dir — merge-on-read over base ⊕ unfolded log, tombstones
@@ -772,7 +789,7 @@ def read_scd2_history(spark: SparkSession, state_path: str) -> DataFrame:
     table = _scd2_table(state_path)
     hist_dir = os.path.join(state_path, "history")
     if not _orc_files_exist(spark, table.log_dir):
-        return spark.read.orc(hist_dir)
+        return _read_committed(spark, hist_dir, state_path)
     touched, _, merged = table.merge_touched(spark, table.read_log(spark))
     fresh = _scd2_chains(spark, table, merged)
     if _orc_files_exist(spark, hist_dir):

@@ -16,6 +16,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from flink_orc_sink_spark.session import orc_data_files_exist
 from flink_orc_sink_spark.streaming import orc_sink
 
 SCHEMA = "k long, v long, seq long, op string"
@@ -161,3 +162,54 @@ def test_empty_batch_reads_and_folds_to_nothing(spark, tmp_path):
         "log_rows_folded": 0, "buckets_rewritten": 0,
     }
     assert orc_sink.read_cdc_table(spark, state).count() == 0
+
+
+def test_fresh_state_dir_read_names_the_dir(spark, tmp_path):
+    """Before its first committed batch a state dir, empty or holding
+    only layout markers, reads as a FileNotFoundError that names it."""
+    empty, marked = str(tmp_path / "empty"), str(tmp_path / "marked")
+    os.makedirs(empty)
+    for marker in ("kc=k", "oc=seq", "nkp=16"):
+        os.makedirs(os.path.join(marked, "layout", marker))
+    for state in (empty, marked):
+        for read in (orc_sink.read_cdc_table, orc_sink.read_scd2_history):
+            with pytest.raises(FileNotFoundError, match="no batch has committed"):
+                read(spark, state)
+            with pytest.raises(FileNotFoundError, match=state):
+                read(spark, state)
+
+
+def test_applied_marker_guards_a_replay_after_its_fold(spark, tmp_path, monkeypatch):
+    """With no fold floor every batch folds itself into the base, so a
+    replayed batch finds its own rows there: the retract agg's
+    ``applied/`` marker is what keeps the replay from overwriting the
+    batch's deltas with zeros."""
+    monkeypatch.setattr(orc_sink, "FOLD_MIN_BYTES", 0)
+    src, state, ckpt = (str(tmp_path / d) for d in ("in", "state", "ckpt"))
+    schema = "k long, grp string, v long, seq long, op string"
+    feed = [[(1, "a", 10, 1, "U"), (2, "a", 20, 1, "U")], [(1, "b", 11, 2, "U")]]
+    for i, rows in enumerate(feed):
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
+            os.path.join(src, f"f{i}")
+        )
+
+    def run_and_read():
+        q = orc_sink.stream_retract_agg_orc(
+            orc_sink.stream_from_files(
+                spark, os.path.join(src, "*"), schema, max_files_per_trigger=1
+            ),
+            state, ckpt, key_col="k", group_col="grp", val_col="v",
+            order_cols=["seq"], trigger={"availableNow": True},
+        )
+        assert q.awaitTermination(120), "stream did not drain"
+        return sorted(
+            tuple(r) for r in orc_sink.read_retract_agg(spark, state).collect()
+        )
+
+    assert run_and_read() == [("a", 20, 1), ("b", 11, 1)]
+    # both batches folded themselves: the log is empty
+    assert not orc_data_files_exist(spark, os.path.join(state, "state_log"))
+    # crash after batch 1's sink work, before its commit: it replays
+    for name in ("1", ".1.crc"):
+        os.remove(os.path.join(ckpt, "commits", name))
+    assert run_and_read() == [("a", 20, 1), ("b", 11, 1)]

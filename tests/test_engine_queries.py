@@ -64,6 +64,82 @@ def test_drain_or_fail_contract(spark):
         _drain_or_fail(Fake(False, stop_raises=True), 1, "dying stream")
 
 
+def test_replay_harness_stops_and_cleans_up(spark, monkeypatch):
+    """_Replay: when the query body raises, when an availableNow drain
+    times out, and when a processingTime query never drains, the query
+    is stopped (a stuck one is not waited on) and the stage and
+    checkpoint dirs are gone."""
+    import os
+    import threading
+    import time
+
+    import pytest
+
+    from flink_orc_sink_spark.queries import engine as eng
+
+    monkeypatch.setattr(eng, "_DRAIN_SECS", 2)
+    started = []
+
+    def kept(q):
+        started.append(q)
+        return q
+
+    def boom(df, batch_id):
+        raise RuntimeError("batch body failed")
+
+    with pytest.raises(Exception, match="batch body failed"):
+        with eng._Replay(spark, SF_DIR, "t_raise") as r:
+            spark.range(3).write.mode("overwrite").parquet(r.stage)
+            r.run(
+                lambda: kept(
+                    spark.readStream.schema("id long").parquet(r.stage)
+                    .writeStream.foreachBatch(boom)
+                    .option("checkpointLocation", r.ckpt)
+                    .trigger(availableNow=True)
+                    .start()
+                ),
+                "raising stream",
+            )
+    assert not started[-1].isActive
+    assert not os.path.exists(r.stage) and not os.path.exists(r.ckpt)
+
+    class Stuck:
+        def __init__(self):
+            self.stopped = threading.Event()
+
+        def awaitTermination(self, secs=None):
+            return self.stopped.is_set()
+
+        def stop(self):
+            self.stopped.set()
+
+    stuck = Stuck()
+    with pytest.raises(TimeoutError, match="stuck stream"):
+        with eng._Replay(spark, SF_DIR, "t_stuck") as r:
+            r.run(lambda: stuck, "stuck stream")
+    assert stuck.stopped.is_set()
+    assert not os.path.exists(r.stage) and not os.path.exists(r.ckpt)
+
+    # a source with a new micro-batch on every trigger never drains:
+    # processAllAvailable alone would wait forever
+    from flink_orc_sink_spark.sources.pydatasource import register
+
+    register(spark)
+    endless = (
+        spark.readStream.format("synthetic_events")
+        .option("n_rows", 1_000_000)
+        .option("rows_per_batch", 1)
+        .load()
+    )
+    t0 = time.monotonic()
+    with pytest.raises(TimeoutError, match="did not drain in 2s"):
+        with eng._Replay(spark, SF_DIR, "t_live") as r:
+            r.memory(endless, "append", live=True)
+    assert time.monotonic() - t0 < 30
+    assert not [q for q in spark.streams.active if q.name.startswith("stream_t_live_")]
+    assert not os.path.exists(r.stage) and not os.path.exists(r.ckpt)
+
+
 def test_release_local_checkpoint_frees_blocks(spark):
     """release_local_checkpoint must actually free the blocks
     (Dataset.unpersist silently no-ops on checkpoint blocks — the bug
