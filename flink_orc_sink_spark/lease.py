@@ -94,7 +94,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
-from flink_orc_sink_spark.session import hadoop_fs
+from flink_orc_sink_spark.session import hadoop_fs, hadoop_path, jvm_class
 
 LEASE_NAME = "_lease"
 # With heartbeats every ttl/3, a live holder's lease never ages past
@@ -146,7 +146,7 @@ def _read_lease(spark: SparkSession, path: str) -> str:
     ins = fs.open(p)
     try:
         return str(
-            spark._jvm.org.apache.commons.io.IOUtils.toString(
+            jvm_class(spark, "org.apache.commons.io.IOUtils").toString(
                 ins, "UTF-8"
             )
         )
@@ -211,8 +211,8 @@ def _try_acquire(
                 # atomically retire it. Exactly one of N concurrent
                 # stealers wins the rename; losers re-loop and (next
                 # iteration) see the winner's fresh lease.
-                tomb = spark._jvm.org.apache.hadoop.fs.Path(
-                    f"{lease}.stale.{uuid.uuid4().hex}"
+                tomb = hadoop_path(
+                    spark, f"{lease}.stale.{uuid.uuid4().hex}"
                 )
                 if not fs.rename(p, tomb):
                     raise LeaseHeldError(
@@ -308,7 +308,7 @@ def release_lease(
     try:
         if not fs.exists(p):
             return
-        tomb = spark._jvm.org.apache.hadoop.fs.Path(tomb_path)
+        tomb = hadoop_path(spark, tomb_path)
         if not fs.rename(p, tomb):
             return  # moved under us: stolen/released — not ours
         if _read_lease(spark, tomb_path) == owner:

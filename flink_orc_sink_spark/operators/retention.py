@@ -63,6 +63,7 @@ from pyspark.sql import functions as F
 from flink_orc_sink_spark.session import (
     fs_exists as _exists,
     hadoop_fs as _fs,
+    hadoop_path,
 )
 
 _TOMBSTONES = "tombstones"
@@ -357,11 +358,6 @@ def compact_index(
             raise IOError(f"compaction swap failed: {out} -> {live}")
     fs, _ = _fs(spark, index_path)
     for f in snapshot:
-        fs.delete(spark._jvm.org.apache.hadoop.fs.Path(f), False)
+        fs.delete(hadoop_path(spark, f), False)
     if not _data_files(spark, f"{index_path}/{_TOMBSTONES}"):
-        fs.delete(
-            spark._jvm.org.apache.hadoop.fs.Path(
-                f"{index_path}/{_TOMBSTONES}"
-            ),
-            True,
-        )
+        fs.delete(hadoop_path(spark, f"{index_path}/{_TOMBSTONES}"), True)

@@ -38,7 +38,11 @@ from flink_orc_sink_spark.queries.events import (
 )
 from flink_orc_sink_spark.queries.llm import BM25_SQL, CUT_DUP_SPANS_SQL
 from flink_orc_sink_spark.session import local_df, release_local_checkpoint
-from flink_orc_sink_spark.sources.catalog import normalize_events_ts, table
+from flink_orc_sink_spark.sources.catalog import (
+    normalize_events_ts,
+    pin_session,
+    table,
+)
 from flink_orc_sink_spark.sources.orc_sink import read_orc, write_orc
 
 
@@ -167,7 +171,7 @@ class _Replay:
         first call stages ``copies`` symlinks to it (each replays every
         row); a later call opens another, independent source."""
         if self._events_schema is None:
-            table(self.spark, self.sf_dir, "events")  # pin nanosAsLong + UTC
+            pin_session(self.spark)
             src = os.path.join(self.sf_dir, "events.parquet")
             for i in range(copies):
                 os.symlink(src, os.path.join(self.stage, f"events_{i}.parquet"))
@@ -855,11 +859,9 @@ def stream_dedup_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     rather than re-emitting them). Output must therefore hash-match
     plain ``SELECT * FROM events``: exactly-once survives BOTH the
     in-window duplicates and the expired-state replay."""
-    table(spark, sf_dir, "events")  # pin nanosAsLong + UTC
-    src = os.path.join(sf_dir, "events.parquet")
     # staged files carry the NORMALIZED schema (µs timestamps) — the
     # stream reads them back with e.schema, no re-normalize
-    e = normalize_events_ts(spark.read.parquet(src))
+    e = table(spark, sf_dir, "events")
     _, _, q_of = _ts_quartile(e)
     parts = []
     for i in range(4):
@@ -904,9 +906,7 @@ def stream_temporal_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     version (a static-enrich plan would weight every event with one
     version and hash-mismatch). Scale: the dim is broadcast per batch
     (dims are small by definition); events never shuffle."""
-    table(spark, sf_dir, "events")  # pin nanosAsLong + UTC
-    src = os.path.join(sf_dir, "events.parquet")
-    e = normalize_events_ts(spark.read.parquet(src)).select(
+    e = table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
     )
     _, _, q_of = _ts_quartile(e)
@@ -1352,19 +1352,18 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_from_files,
     )
 
-    table(spark, sf_dir, "events")
-    src = os.path.join(sf_dir, "events.parquet")
-    raw_schema = spark.read.parquet(src).schema
+    pin_session(spark)
+    raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
     with _Replay(spark, sf_dir, "cdc") as r:
         # 3-file stage so availableNow + maxFilesPerTrigger=1 replays
         # the feed as three genuine micro-batches (a symlinked single
         # file would merge everything in one batch and never exercise
         # the state-table read-back path).
-        spark.read.parquet(src).repartitionByRange(3, "event_id").write.mode(
+        raw.repartitionByRange(3, "event_id").write.mode(
             "overwrite"
         ).parquet(r.stage)
         sdf = normalize_events_ts(
-            stream_from_files(spark, r.stage, raw_schema, max_files_per_trigger=1)
+            stream_from_files(spark, r.stage, raw.schema, max_files_per_trigger=1)
         ).select(
             "user_id",
             F.unix_micros("ts").alias("ts_us"),
@@ -1438,18 +1437,17 @@ def stream_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_scd2_apply_orc,
     )
 
-    src = os.path.join(sf_dir, "events.parquet")
-    raw_schema = spark.read.parquet(src).schema
+    raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
     with _Replay(spark, sf_dir, "scd2") as r:
         # hash-scatter (not range-split) so micro-batches interleave
         # each key's timeline — the out-of-order arrival the sink must
         # absorb
-        spark.read.parquet(src).repartition(4, "event_id").write.mode(
+        raw.repartition(4, "event_id").write.mode(
             "overwrite"
         ).parquet(r.stage)
         sdf = normalize_events_ts(
             stream_from_files(
-                spark, r.stage, raw_schema, max_files_per_trigger=1
+                spark, r.stage, raw.schema, max_files_per_trigger=1
             )
         ).select(
             "user_id",
@@ -1501,15 +1499,14 @@ def stream_retract_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_retract_agg_orc,
     )
 
-    src = os.path.join(sf_dir, "events.parquet")
-    raw_schema = spark.read.parquet(src).schema
+    raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
     with _Replay(spark, sf_dir, "retract") as r:
-        spark.read.parquet(src).repartition(4, "event_id").write.mode(
+        raw.repartition(4, "event_id").write.mode(
             "overwrite"
         ).parquet(r.stage)
         sdf = normalize_events_ts(
             stream_from_files(
-                spark, r.stage, raw_schema, max_files_per_trigger=1
+                spark, r.stage, raw.schema, max_files_per_trigger=1
             )
         ).select(
             "user_id",
@@ -1867,9 +1864,7 @@ def stream_fanout_atomic(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_fanout_orc,
     )
 
-    table(spark, sf_dir, "events")  # pin nanosAsLong + UTC
-    src = os.path.join(sf_dir, "events.parquet")
-    raw = normalize_events_ts(spark.read.parquet(src))
+    raw = table(spark, sf_dir, "events")
 
     def agg_type(d: DataFrame) -> DataFrame:
         return d.groupBy("event_type").agg(
@@ -1966,7 +1961,6 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     append-mode hourly counts must equal counting every original
     event exactly once (plain tumbling oracle; the sentinel's window
     stays beyond the final watermark and never emits)."""
-    table(spark, sf_dir, "events")  # pin nanosAsLong + UTC
     e = table(spark, sf_dir, "events").select("ts", "event_type", "value")
     max_ts = e.agg(F.max("ts")).collect()[0][0]  # one scalar, bounded
     pivot = F.lit(max_ts) - F.expr("INTERVAL 4 HOURS")
@@ -2162,7 +2156,6 @@ def stream_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     real windows (same trick as ``stream_late_data_drop``); counts
     are exact integers and must equal the batch hourly oracle.
     """
-    table(spark, sf_dir, "events")  # pin nanosAsLong + UTC
     e = table(spark, sf_dir, "events").select("ts", "event_type")
     # the sentinel only needs to outrun every real event so the final
     # watermark flushes all real windows — a fixed far-future literal
@@ -3496,7 +3489,6 @@ def stream_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_quarantine_orc,
     )
 
-    table(spark, sf_dir, "events")  # pin nanosAsLong + UTC
     e = table(spark, sf_dir, "events")
     bad = spark.range(50).select(
         (F.col("id") + 1_000_000_000).alias("event_id"),

@@ -108,22 +108,52 @@ def get_spark(
 # remains fine (URI-safe "/" join).
 
 
+def _session_cache(spark: SparkSession) -> dict:
+    """The per-session cache of py4j handles: FileSystems keyed by
+    ``(scheme, authority)``, JVM classes by their dotted name. It
+    lives on the session object, so it dies with the session wrapper
+    and a restarted session re-resolves cleanly."""
+    cache = getattr(spark, "_fosp_py4j_cache", None)
+    if cache is None:
+        cache = spark._fosp_py4j_cache = {}
+    return cache
+
+
+def jvm_class(spark: SparkSession, name: str):
+    """The py4j handle of the JVM class ``name`` (dotted), resolved
+    once per session. Evaluating ``spark._jvm.org.apache...Path``
+    costs a py4j round trip per package level every time; a cached
+    handle costs none, so a call is one round trip. This is the one
+    place the package does such a walk (``tools/audit_plans.py``
+    flags any other)."""
+    cache = _session_cache(spark)
+    cls = cache.get(name)
+    if cls is None:
+        cls = spark._jvm
+        for part in name.split("."):
+            cls = getattr(cls, part)
+        cache[name] = cls
+    return cls
+
+
+def hadoop_path(spark: SparkSession, path: str):
+    """A JVM ``org.apache.hadoop.fs.Path`` for ``path``."""
+    return jvm_class(spark, "org.apache.hadoop.fs.Path")(path)
+
+
 def hadoop_fs(spark: SparkSession, path: str):
     """Resolved ``(FileSystem, Path)`` for ``path``.
 
-    The FileSystem handle is cached on the session object per
-    ``(scheme, authority)`` — a stateful sink probes several paths per
-    micro-batch, and re-resolving pays an extra py4j round-trip each
-    time (Hadoop's own JVM-side ``FileSystem.get`` cache doesn't help
-    the Python caller). The cache dies with the session wrapper, so a
-    restarted session re-resolves cleanly."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    Both the ``Path`` class and the FileSystem handle come from the
+    per-session cache (:func:`jvm_class`; FileSystems per
+    ``(scheme, authority)``): a stateful sink probes several paths per
+    micro-batch, and re-resolving either pays extra py4j round trips
+    each time (Hadoop's own JVM-side ``FileSystem.get`` cache doesn't
+    help the Python caller)."""
+    jpath = hadoop_path(spark, path)
     uri = jpath.toUri()
     key = (uri.getScheme(), uri.getAuthority())
-    cache = getattr(spark, "_fosp_fs_cache", None)
-    if cache is None:
-        cache = {}
-        spark._fosp_fs_cache = cache
+    cache = _session_cache(spark)
     fs = cache.get(key)
     if fs is None:
         fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -215,9 +245,7 @@ def orc_data_files_exist(spark: SparkSession, path: str) -> bool:
     # '[' would even throw from globStatus)
     esc = re.sub(r"([*?\[\]{}\\])", r"\\\1", path.rstrip("/"))
     for depth in range(3):
-        pat = spark._jvm.org.apache.hadoop.fs.Path(
-            esc + "/*" * depth + "/*.orc"
-        )
+        pat = hadoop_path(spark, esc + "/*" * depth + "/*.orc")
         if _any_data_file(fs.globStatus(pat) or [], ".orc"):
             return True
     it = fs.listFiles(p, True)  # >2-deep layout fallback

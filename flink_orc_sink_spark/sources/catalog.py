@@ -51,17 +51,28 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    # Calendar extraction (year/date_trunc/window/cast-to-date) on a
-    # Spark timestamp is session-timezone dependent, while the DuckDB
-    # oracles are timezone-naive. Pin UTC here — runtime-settable, like
-    # nanosAsLong — so results are identical under any caller's session
-    # (the driver uses its own), not just our tuned get_spark().
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    pin_session(spark, name)
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         return normalize_events_ts(spark.read.parquet(path))
     return spark.read.parquet(path)
+
+
+def pin_session(spark: SparkSession, name: str = "events") -> None:
+    """Set the runtime confs a read of table ``name`` depends on; runs
+    no Spark job. A query that reads ``events.parquet`` itself (to
+    stage it, or for its raw schema) calls this instead of a
+    :func:`table` call whose frame it would discard: each ``table``
+    call infers the parquet schema, a one-task Spark job.
+
+    Calendar extraction (year/date_trunc/window/cast-to-date) on a
+    Spark timestamp is session-timezone dependent, while the DuckDB
+    oracles are timezone-naive. UTC is pinned here — runtime-settable,
+    like nanosAsLong — so results are identical under any caller's
+    session, not just our tuned get_spark()."""
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    if name == "events":
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:

@@ -52,6 +52,7 @@ from flink_orc_sink_spark.session import (
     fs_list_names as _hfs_list_names,
     fs_mkdirs as _hfs_mkdirs,
     fs_rmtree as _hfs_rmtree,
+    jvm_class,
     local_df,
     orc_data_files_exist as _orc_files_exist,
     release_local_checkpoint,
@@ -63,7 +64,9 @@ from flink_orc_sink_spark.session import (
 # never through a reference bound at import or construction.
 # ``orcbench/trace.py`` rebinds them on this module to time and count
 # them, and the fold crash-prefix tests rebind them to inject a crash
-# at a chosen write; a captured reference would bypass both.
+# at a chosen write; a captured reference would bypass both. The core
+# no longer calls ``_orc_files_exist`` (it probes with ``_hfs_exists``,
+# :func:`_read_orc`); the name stays bound here for those rebinders.
 
 # LSM fold trigger for the retract sinks' delta logs (round 9): the
 # log is folded into the base once it exceeds max(FOLD_MIN_BYTES,
@@ -287,7 +290,22 @@ class _DeltaLogTable:
     archive, whose chains ``scd2_history`` rebuilds per bucket). The
     join table adds its image resolve as a fold step that rewrites
     ``jk_state/`` and ``view/`` before the base; the SCD2 table
-    rewrites ``history/`` after it.
+    rewrites ``history/`` after it. Reads, folds and lookups pay for
+    data, not bookkeeping:
+
+    - each directory is probed once, by ``_hfs_exists``, and then
+      listed by ``spark.read.orc`` itself (:func:`_read_orc`); a
+      directory that exists but holds no ORC data file is caught on
+      the failure path (``UNABLE_TO_INFER_SCHEMA``), so no common-path
+      probe raises, and a read of a folded table, whose log is gone,
+      makes one probe;
+    - :meth:`resolve` plans in one partition when its input's
+      optimized-plan ``sizeInBytes`` is at most
+      ``spark.sql.adaptive.coalescePartitions.minPartitionSize``
+      (1 MiB by default), the size below which AQE coalesces the
+      resolve's shuffle to one partition anyway: ``coalesce(1)`` ahead
+      of the window (or the DISTINCT) drops the map-stage job and its
+      shuffle. Above the bound the hash-partitioned plan is unchanged.
 
     Crash contract: a replayed batch rewrites its own log partition.
     Its extras read the base and ``log[< batch]``, so the retract
@@ -349,21 +367,29 @@ class _DeltaLogTable:
         return F.pmod(F.hash(F.col(self.keys(spark)[-1])), F.lit(nkp))
 
     def resolve(self, spark: SparkSession, rows: DataFrame) -> DataFrame:
+        """The table's resolve of ``rows``, in one partition when they
+        fit one AQE partition (class docstring)."""
+        if _fits_one_partition(spark, rows):
+            rows = rows.coalesce(1)
         if self._resolve is not None:
             return self._resolve(rows)
         order = [F.col(c).desc() for c in self.order(spark)]
         return _latest_per_key(rows, self.keys(spark), order)
 
-    def read_log(self, spark: SparkSession) -> DataFrame:
-        return spark.read.orc(self.log_dir).drop("batch_id")
+    def read_log(self, spark: SparkSession) -> DataFrame | None:
+        """The unfolded log without ``batch_id``; None when it holds no
+        data."""
+        log = _read_orc(spark, self.log_dir)
+        return None if log is None else log.drop("batch_id")
 
     def read(self, spark: SparkSession) -> DataFrame:
         """Merge-on-read snapshot: resolve(base ∪ log)."""
-        if not _orc_files_exist(spark, self.log_dir):
-            return _read_committed(spark, self.base_dir, self.path)
         rows = self.read_log(spark)
-        if _orc_files_exist(spark, self.base_dir):
-            rows = rows.unionByName(spark.read.orc(self.base_dir))
+        if rows is None:
+            return _read_committed(spark, self.base_dir, self.path)
+        base = _read_orc(spark, self.base_dir)
+        if base is not None:
+            rows = rows.unionByName(base)
         return self.resolve(spark, rows)
 
     def merge_touched(self, spark: SparkSession, log: DataFrame):
@@ -375,11 +401,10 @@ class _DeltaLogTable:
         per_bucket = log.groupBy(*self.parts).count().collect()
         touched = [tuple(r[c] for c in self.parts) for r in per_bucket]
         rows = log
-        if _orc_files_exist(spark, self.base_dir):
+        base = _read_orc(spark, self.base_dir)
+        if base is not None:
             rows = rows.unionByName(
-                spark.read.orc(self.base_dir).filter(
-                    _bucket_filter(self.parts, touched)
-                )
+                base.filter(_bucket_filter(self.parts, touched))
             )
         n_log = sum(r["count"] for r in per_bucket)
         return touched, n_log, self.resolve(spark, rows)
@@ -393,7 +418,8 @@ class _DeltaLogTable:
         never a shuffle of state. None when no state exists yet."""
         key_cols = self.keys(spark)
         cand = None
-        if _orc_files_exist(spark, self.base_dir):
+        base = _read_orc(spark, self.base_dir)
+        if base is not None:
             if buckets is None:
                 buckets = keys.select(
                     *self.parts[:-1], self.kp(spark).alias("kp")
@@ -404,12 +430,11 @@ class _DeltaLogTable:
             ]
             if touched:
                 cand = (
-                    spark.read.orc(self.base_dir)
-                    .filter(_bucket_filter(self.parts, touched))
+                    base.filter(_bucket_filter(self.parts, touched))
                     .join(keys, key_cols, "left_semi")
                 )
-        if _orc_files_exist(spark, self.log_dir):
-            lg = spark.read.orc(self.log_dir)
+        lg = _read_orc(spark, self.log_dir)
+        if lg is not None:
             if upto_batch is not None:
                 lg = lg.filter(F.col("batch_id") < upto_batch)
             lg = lg.drop("batch_id").join(keys, key_cols, "left_semi")
@@ -424,12 +449,12 @@ class _DeltaLogTable:
         nothing; it is kept while the base has no file to carry the
         table's schema."""
         none = {"log_rows_folded": 0, "buckets_rewritten": 0}
-        if not _orc_files_exist(spark, self.log_dir):
-            return none
         log = self.read_log(spark)
+        if log is None:
+            return none
         touched, n_log, merged = self.merge_touched(spark, log)
         if not n_log:
-            if _orc_files_exist(spark, self.base_dir):
+            if _read_orc(spark, self.base_dir) is not None:
                 _hfs_rmtree(spark, self.log_dir)
             return none
         stats = {}
@@ -468,9 +493,9 @@ class _DeltaLogTable:
         _record_replay_horizon(spark, self.path, horizon)
         # fold first so every expired tombstone sits in the base
         self.fold(spark)
-        if not _orc_files_exist(spark, self.base_dir):
+        st = _read_orc(spark, self.base_dir)
+        if st is None:
             return none
-        st = spark.read.orc(self.base_dir)
         expired = (F.col("op") == "D") & (
             F.col(self.order(spark)[0]) < F.lit(horizon)
         )
@@ -677,6 +702,37 @@ def stream_cdc_apply_orc(
     )
 
 
+def _read_orc(spark: SparkSession, path: str) -> DataFrame | None:
+    """``spark.read.orc(path)``, or None when ``path`` is missing or
+    holds no ORC data file (an all-empty partitioned write, a crashed
+    write's ``_temporary``). One ``_hfs_exists`` probe, then Spark's
+    own listing; the no-data case rides the failure path
+    (``UNABLE_TO_INFER_SCHEMA``), so a read of data makes no second
+    walk of the directory."""
+    if not _hfs_exists(spark, path):
+        return None
+    try:
+        return spark.read.orc(path)
+    except AnalysisException as e:
+        if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
+            raise
+        return None
+
+
+def _fits_one_partition(spark: SparkSession, df: DataFrame) -> bool:
+    """True when ``df``'s optimized-plan ``sizeInBytes`` is at most
+    ``spark.sql.adaptive.coalescePartitions.minPartitionSize``: AQE
+    never splits a shuffle that small across partitions, so a plan
+    over it may as well run in one."""
+    bound = jvm_class(
+        spark, "org.apache.spark.network.util.JavaUtils"
+    ).byteStringAsBytes(spark.conf.get(
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    ))
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return int(size) <= bound
+
+
 def _read_committed(spark: SparkSession, path: str, state_path: str) -> DataFrame:
     """``spark.read.orc(path)`` of a state dir whose log holds no data:
     a missing ``path`` then means no batch has committed yet. The
@@ -788,14 +844,15 @@ def read_scd2_history(spark: SparkSession, state_path: str) -> DataFrame:
     read time."""
     table = _scd2_table(state_path)
     hist_dir = os.path.join(state_path, "history")
-    if not _orc_files_exist(spark, table.log_dir):
+    log = table.read_log(spark)
+    if log is None:
         return _read_committed(spark, hist_dir, state_path)
-    touched, _, merged = table.merge_touched(spark, table.read_log(spark))
+    touched, _, merged = table.merge_touched(spark, log)
     fresh = _scd2_chains(spark, table, merged)
-    if _orc_files_exist(spark, hist_dir):
+    hist = _read_orc(spark, hist_dir)
+    if hist is not None:
         return (
-            spark.read.orc(hist_dir)
-            .filter(~_bucket_filter(table.parts, touched))
+            hist.filter(~_bucket_filter(table.parts, touched))
             .unionByName(fresh)
         )
     return fresh
@@ -1236,11 +1293,10 @@ def _rj_log_effect(
     sides = _rj_images(
         table.resolve(spark, cand).filter(F.col("op") == "U"), jb_of
     )
-    jk_dir = os.path.join(table.path, "jk_state")
-    if _orc_files_exist(spark, jk_dir):
+    jk = _read_orc(spark, os.path.join(table.path, "jk_state"))
+    if jk is not None:
         sides = (
-            spark.read.orc(jk_dir)
-            .filter(F.col("jb").isin(aff))
+            jk.filter(F.col("jb").isin(aff))
             .join(logpks, ["side", "pk"], "left_anti")
             .unionByName(sides)
         )
@@ -1292,23 +1348,18 @@ def read_retract_join_view(
     empty log this is a plain read of ``view/``; right after a
     bootstrap load it is a full join of the resolved log."""
     table = _join_table(state_path)
-    view_dir = os.path.join(state_path, "view")
-    have_view = _orc_files_exist(spark, view_dir)
-    if not _orc_files_exist(spark, table.log_dir):
-        if have_view:
-            return spark.read.orc(view_dir)
-        return spark.createDataFrame([], VIEW_SCHEMA)
     log = table.read_log(spark)
+    view = _read_orc(spark, os.path.join(state_path, "view"))
+    if log is None:
+        if view is not None:
+            return view
+        return spark.createDataFrame([], VIEW_SCHEMA)
     logpks = log.select("side", "pk").distinct()
     cand = table.lookup(spark, logpks, buckets=log)
     aff, sides = _rj_log_effect(spark, table, logpks, cand)
     view_aff = _rj_bucket_join(sides, table.layout(spark)["how"])
-    if have_view:
-        return (
-            spark.read.orc(view_dir)
-            .filter(~F.col("jb").isin(aff))
-            .unionByName(view_aff)
-        )
+    if view is not None:
+        return view.filter(~F.col("jb").isin(aff)).unionByName(view_aff)
     return view_aff
 
 
@@ -1484,12 +1535,12 @@ def stream_retract_join_orc(
         # log pks that can override the jk layer inside the affected
         # buckets: any logged pk with a row whose jk lands there
         anti_pks, imgs_P = S, None
-        if _orc_files_exist(spark, state.log_dir):
-            lg = (
-                spark.read.orc(state.log_dir)
-                .filter(F.col("batch_id") < batch_id)
-                .drop("batch_id")
-            )
+        jk = _read_orc(spark, jk_dir)
+        if jk is not None:
+            jk = jk.filter(F.col("jb").isin(aff))
+        lg = _read_orc(spark, state.log_dir)
+        if lg is not None:
+            lg = lg.filter(F.col("batch_id") < batch_id).drop("batch_id")
             logpks = lg.select("side", "pk").distinct()
             anti_pks = logpks.unionByName(S).distinct()
             # pks that can contribute to the affected buckets and were
@@ -1502,11 +1553,9 @@ def stream_retract_join_orc(
             # image of a folded pk whose only unfolded log rows hash
             # to other buckets, silently skewing the aggregate.
             P = lg.filter(in_aff).select("side", "pk")
-            if _orc_files_exist(spark, jk_dir):
+            if jk is not None:
                 P = P.unionByName(
-                    spark.read.orc(jk_dir)
-                    .filter(F.col("jb").isin(aff))
-                    .join(logpks, ["side", "pk"], "left_semi")
+                    jk.join(logpks, ["side", "pk"], "left_semi")
                     .select("side", "pk")
                 )
             P = P.distinct().join(S, ["side", "pk"], "left_anti")
@@ -1517,12 +1566,8 @@ def stream_retract_join_orc(
                     jb_of,
                 )
         base_part = None
-        if _orc_files_exist(spark, jk_dir):
-            base_part = (
-                spark.read.orc(jk_dir)
-                .filter(F.col("jb").isin(aff))
-                .join(anti_pks, ["side", "pk"], "left_anti")
-            )
+        if jk is not None:
+            base_part = jk.join(anti_pks, ["side", "pk"], "left_anti")
 
         def sides(img):
             parts = [p for p in (base_part, imgs_P) if p is not None]

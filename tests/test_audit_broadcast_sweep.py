@@ -96,3 +96,34 @@ def test_sweep_clean_on_package():
     )
     assert audit_plans._audit_forced_broadcasts(pkg) == []
     assert audit_plans._audit_checkpoint_hygiene(pkg) == []
+    assert audit_plans._audit_jvm_walks(pkg) == []
+
+
+JVM_SYNTH = textwrap.dedent(
+    """
+    def bad_path_per_call(spark, p):
+        return spark._jvm.org.apache.hadoop.fs.Path(p)
+
+    def bad_nested(spark):
+        def read(ins):
+            return spark._jvm.org.apache.commons.io.IOUtils.toString(ins)
+        return read
+
+    def good_cached(spark, p):
+        return jvm_class(spark, "org.apache.hadoop.fs.Path")(p)
+
+    def jvm_class(spark, name):
+        cls = spark._jvm
+        for part in name.split("."):
+            cls = getattr(cls, part)
+        return cls
+    """
+)
+
+
+def test_jvm_walk_audit_flags_a_walk(tmp_path):
+    (tmp_path / "synth.py").write_text(JVM_SYNTH)
+    findings = audit_plans._audit_jvm_walks(str(tmp_path))
+    assert sorted(f.split(" ")[1] for f in findings) == [
+        "bad_nested:", "bad_path_per_call:", "read:",
+    ]

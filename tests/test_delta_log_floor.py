@@ -1,9 +1,12 @@
 """The delta-log state table's per-cycle work, pinned as exact counts.
 
 A CDC stream's batch is one Spark job and one filesystem size probe;
-a restarted query records no layout marker twice; a fold is five
-Spark jobs. Jobs are counted from the DAG scheduler's next job id,
-filesystem calls by rebinding the sink module's ``_hfs_*`` helpers.
+a restarted query records no layout marker twice; a fold is four
+Spark jobs; a merge-on-read query over a state that fits one AQE
+partition is one job with no shuffle and probes each directory once.
+Jobs are counted from the DAG scheduler's next job id, filesystem
+calls by rebinding the sink module's ``_hfs_*`` and
+``_orc_files_exist`` helpers.
 The replay tests pin the log append's contract: a batch id delivered
 twice leaves exactly its replayed rows, and an empty batch reads and
 folds to nothing.
@@ -12,6 +15,7 @@ folds to nothing.
 from __future__ import annotations
 
 import os
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -20,7 +24,9 @@ from flink_orc_sink_spark.session import orc_data_files_exist
 from flink_orc_sink_spark.streaming import orc_sink
 
 SCHEMA = "k long, v long, seq long, op string"
-FS_HELPERS = [n for n in vars(orc_sink) if n.startswith("_hfs_")]
+FS_HELPERS = [n for n in vars(orc_sink) if n.startswith("_hfs_")] + [
+    "_orc_files_exist"
+]
 
 
 def _next_job(spark) -> int:
@@ -95,7 +101,7 @@ def test_cdc_cycle_work_is_exact(spark, tmp_path, fs_calls):
 
     job0 = _next_job(spark)
     out = orc_sink.fold_retract_state(spark, state)
-    assert _next_job(spark) - job0 == 5
+    assert _next_job(spark) - job0 == 4
     # keys 1-5 hash to kp 13, 8, 3, 4 and 12
     assert out == {"log_rows_folded": 8, "buckets_rewritten": 5}
     assert _rows(orc_sink.read_cdc_table(spark, state)) == [
@@ -213,3 +219,97 @@ def test_applied_marker_guards_a_replay_after_its_fold(spark, tmp_path, monkeypa
     for name in ("1", ".1.crc"):
         os.remove(os.path.join(ckpt, "commits", name))
     assert run_and_read() == [("a", 20, 1), ("b", 11, 1)]
+
+
+MIN_PART = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+
+
+def _mor_state(spark, tmp_path):
+    """A CDC state dir holding a folded base plus two log batches, and
+    the latest-per-key oracle of every row fed."""
+    state = str(tmp_path / "state")
+    apply_batch = _apply_batch(spark, state, str(tmp_path / "ckpt"))
+    feed = [
+        [(k, 10 * k, 1, "U") for k in range(1, 9)],
+        [(1, 11, 2, "U"), (2, None, 2, "D"), (9, 90, 2, "U")],
+        [(3, 31, 3, "U"), (9, None, 3, "D"), (4, 41, 3, "U"), (1, 12, 3, "U")],
+    ]
+    apply_batch(spark.createDataFrame(feed[0], SCHEMA), 0)
+    orc_sink.fold_retract_state(spark, state)
+    for i, rows in enumerate(feed[1:], start=1):
+        apply_batch(spark.createDataFrame(rows, SCHEMA), i)
+    latest = {}
+    for row in (r for rows in feed for r in rows):
+        if row[0] not in latest or row[2] > latest[row[0]][2]:
+            latest[row[0]] = row
+    return state, sorted(latest.values())
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_mor_read_of_a_small_state_runs_one_job_without_shuffle(spark, tmp_path):
+    state, oracle = _mor_state(spark, tmp_path)
+    assert os.listdir(os.path.join(state, "state_log"))  # unfolded log
+    t = orc_sink.read_cdc_table(spark, state)
+    assert "Exchange" not in _plan(t)
+    live = t.filter(F.col("op") != "D")
+    job0 = _next_job(spark)
+    assert live.count() == sum(1 for r in oracle if r[3] != "D")
+    assert _next_job(spark) - job0 == 1
+    assert _rows(t) == oracle
+
+
+def test_mor_read_above_the_bound_keeps_the_hash_exchange(spark, tmp_path):
+    state, oracle = _mor_state(spark, tmp_path)
+    spark.conf.set(MIN_PART, "1b")
+    try:
+        t = orc_sink.read_cdc_table(spark, state)
+        assert "Exchange hashpartitioning" in _plan(t)
+        assert _rows(t) == oracle
+    finally:
+        spark.conf.unset(MIN_PART)
+
+
+def _raised_in_sink(fn):
+    """``fn()``'s result and the exceptions that passed through a frame
+    of the sink module while it ran."""
+    raised = []
+
+    def local(frame, event, arg):
+        if event == "exception":
+            raised.append(arg[0])
+        return local
+
+    def tracer(frame, event, arg):
+        return local if frame.f_code.co_filename == orc_sink.__file__ else None
+
+    sys.settrace(tracer)
+    try:
+        return fn(), raised
+    finally:
+        sys.settrace(None)
+
+
+def _probes(fs_calls, before) -> tuple[int, int]:
+    return tuple(
+        fs_calls[n] - before[n] for n in ("_hfs_exists", "_orc_files_exist")
+    )
+
+
+def test_reads_probe_each_directory_once(spark, tmp_path, fs_calls):
+    state, oracle = _mor_state(spark, tmp_path)
+    # merge on read: the log, then the base
+    before = dict(fs_calls)
+    t = orc_sink.read_cdc_table(spark, state)
+    assert _probes(fs_calls, before) == (2, 0)
+    assert _rows(t) == oracle
+
+    orc_sink.fold_retract_state(spark, state)
+    assert not os.path.exists(os.path.join(state, "state_log"))
+    before = dict(fs_calls)
+    t, raised = _raised_in_sink(lambda: orc_sink.read_cdc_table(spark, state))
+    assert _probes(fs_calls, before) == (1, 0)
+    assert raised == []
+    assert _rows(t) == oracle

@@ -142,6 +142,49 @@ def _audit_checkpoint_hygiene(pkg_root: str) -> list[str]:
     return findings
 
 
+# The one function that may walk ``spark._jvm`` package by package:
+# the per-session class resolver in ``session.py``.
+JVM_CLASS_RESOLVER = "jvm_class"
+
+
+def _audit_jvm_walks(pkg_root: str) -> list[str]:
+    """Static sweep: a ``<x>._jvm.<package>...`` chain inside a function
+    costs one py4j round trip per package level on every call (1.5 ms
+    of a 2 ms ``hadoop_fs`` call, measured). Class handles come from
+    ``session.jvm_class``, which resolves each class once per session;
+    any other function that walks ``_jvm`` is a finding."""
+    import ast
+
+    findings: list[str] = []
+    for dirpath, _dirs, files in os.walk(pkg_root):
+        if "__pycache__" in dirpath:
+            continue
+        for fname in files:
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fname)
+            with open(path) as f:
+                tree = ast.parse(f.read(), filename=path)
+            for node in ast.walk(tree):
+                if (
+                    not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+                    or node.name == JVM_CLASS_RESOLVER
+                ):
+                    continue
+                for n in ast.walk(node):
+                    if (
+                        isinstance(n, ast.Attribute)
+                        and isinstance(n.value, ast.Attribute)
+                        and n.value.attr == "_jvm"
+                    ):
+                        rel = os.path.relpath(path, os.path.dirname(pkg_root))
+                        findings.append(
+                            f"{rel}:{n.lineno} {node.name}: _jvm.{n.attr}"
+                            " package walk per call (use session.jvm_class)"
+                        )
+    return findings
+
+
 # Functions allowed to call the in-memory ``build_bloom`` directly:
 # call sites that already run ON EXECUTORS over bounded per-group key
 # sets (so nothing is collected to the driver).
@@ -437,6 +480,7 @@ def main() -> int:
     findings: list[str] = _audit_checkpoint_hygiene(pkg_root)
     findings += _audit_driver_bloom_build(pkg_root)
     findings += _audit_forced_broadcasts(pkg_root)
+    findings += _audit_jvm_walks(pkg_root)
     for name, fn in entry.queries().items():
         try:
             df = fn(spark, sf_dir)
