@@ -48,6 +48,12 @@ def run(spark, sf_dir: str, out: str) -> dict[str, int]:
         minhash_dedup_pairs,
         minhash_probe_index,
     )
+    from flink_orc_sink_spark.session import (
+        fs_exists,
+        fs_mkdirs,
+        release_local_checkpoint,
+    )
+    from flink_orc_sink_spark.sources.orc_sink import write_batch
 
     d = (
         spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
@@ -97,29 +103,26 @@ def run(spark, sf_dir: str, out: str) -> dict[str, int]:
                     F.broadcast(dupes), "doc_id", "left_anti"
                 ).localCheckpoint(eager=True)
                 try:
-                    (
-                        admitted.withColumn("text", scrub_pii("text"))
-                        .withColumn("batch_id", F.lit(batch_id))
-                        .write.mode("overwrite")
-                        .option("partitionOverwriteMode", "dynamic")
-                        .partitionBy("batch_id")
-                        .orc(out)
+                    write_batch(
+                        admitted.withColumn("text", scrub_pii("text")),
+                        out,
+                        batch_id,
                     )
                     # marker makes the index append replay-idempotent
                     marker = os.path.join(
                         idx, "appended", f"batch_{batch_id}"
                     )
-                    if not os.path.exists(marker):
+                    if not fs_exists(spark, marker):
                         append_to_minhash_index(
                             admitted, "doc_id", "text", idx
                         )
-                        os.makedirs(marker, exist_ok=True)
+                        fs_mkdirs(spark, marker)
                 finally:
-                    admitted.unpersist()
+                    release_local_checkpoint(admitted)
             finally:
-                gated.unpersist()
+                release_local_checkpoint(gated)
         finally:
-            batch_df.unpersist()
+            release_local_checkpoint(batch_df)
 
     ckpt = os.path.join(work, "ckpt")
     q = (

@@ -37,13 +37,23 @@ from flink_orc_sink_spark.queries.events import (
     TUMBLING_SQL,
 )
 from flink_orc_sink_spark.queries.llm import BM25_SQL, CUT_DUP_SPANS_SQL
-from flink_orc_sink_spark.session import local_df, release_local_checkpoint
+from flink_orc_sink_spark.session import (
+    fs_exists,
+    fs_mkdirs,
+    local_df,
+    release_local_checkpoint,
+)
 from flink_orc_sink_spark.sources.catalog import (
     normalize_events_ts,
     pin_session,
     table,
 )
-from flink_orc_sink_spark.sources.orc_sink import read_orc, write_orc
+from flink_orc_sink_spark.sources.orc_sink import (
+    overwrite_partitions,
+    read_orc,
+    write_batch,
+    write_orc,
+)
 
 
 # State-store overhead is per partition per operator per micro-batch
@@ -601,18 +611,7 @@ def orc_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_orc(monthly_agg(hist), agg_path, partition_cols=["m"])
     # incremental step: scan ONLY the new month's partition, upsert it
     new_month = spark.read.orc(fact).filter(F.col("m") == F.lit(max_m))
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            monthly_agg(new_month)
-            .write.mode("overwrite")
-            .format("orc")
-            .partitionBy("m")
-            .save(agg_path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    overwrite_partitions(monthly_agg(new_month), agg_path, "m")
     return read_orc(spark, agg_path).select(
         F.to_timestamp(F.concat(F.col("m"), F.lit("-01"))).alias(
             "month_start"
@@ -923,28 +922,24 @@ def stream_temporal_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             [(t, len(t) + batch_id) for t in sorted(etypes)],
             "event_type string, rate long",
         )
-        (
-            batch_df.join(F.broadcast(dim), "event_type")
-            .select(
+        write_batch(
+            batch_df.join(F.broadcast(dim), "event_type").select(
                 "event_id",
                 "event_type",
                 (
                     F.floor(F.col("value") * 1e6 + 0.5).cast("long")
                     * F.col("rate")
                 ).alias("weighted_micro"),
-            )
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(r.out)
+            ),
+            r.out,
+            batch_id,
         )
 
     with r:
         r.write_files([e.filter(q_of == i) for i in range(4)])
         r.feed(e.schema, on_batch, "temporal-enrich stream")
     return (
-        spark.read.parquet(r.out)
+        spark.read.orc(r.out)
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -2565,12 +2560,10 @@ def stream_minhash_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     boot = d.filter(F.col("doc_id") < step)
     build_minhash_index(boot, "doc_id", "text", idx)
     # pairs wholly inside the bootstrap range still need discovering
-    (
-        minhash_dedup_pairs(boot, "doc_id", "text", threshold=0.7)
-        .withColumn("batch_id", F.lit(-1))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .parquet(results)
+    write_batch(
+        minhash_dedup_pairs(boot, "doc_id", "text", threshold=0.7),
+        results,
+        -1,
     )
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -2599,28 +2592,20 @@ def stream_minhash_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.greatest("new_doc", "match_doc").alias("doc_b"),
                 "jaccard",
             )
-            (
-                within.unionByName(cross)
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(results)
-            )
+            write_batch(within.unionByName(cross), results, batch_id)
             # crash-replay idempotence: a marker per appended batch —
             # a replayed batch recomputes (and overwrites) its pair
             # partition but never re-appends the index. (The probe's
             # self-match guard covers the crash window between append
-            # and marker.) Local-FS os.path here because the demo
-            # index is local; on a cluster the marker is the same
-            # one-element write against the DFS the index lives on.
+            # and marker.) The marker is probed and made through the
+            # Hadoop FS the index lives on, so a DFS index works too.
             marker = os.path.join(idx, "appended", f"batch_{batch_id}")
-            if not os.path.exists(marker):
+            if not fs_exists(spark, marker):
                 append_to_minhash_index(
                     batch_df, "doc_id", "text", idx,
                     owner=r.owner, shingles=sh,
                 )
-                os.makedirs(marker, exist_ok=True)
+                fs_mkdirs(spark, marker)
         finally:
             if sh is not None:
                 release_local_checkpoint(sh)
@@ -2640,7 +2625,7 @@ def stream_minhash_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         r.feed(d.schema, on_batch, "index-ingest stream")
 
     return (
-        spark.read.parquet(results)
+        spark.read.orc(results)
         .select("doc_a", "doc_b", "jaccard")
         .distinct()
     )
@@ -2682,12 +2667,8 @@ def stream_gram_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx, results = os.path.join(r.out, "idx"), os.path.join(r.out, "results")
     boot = d.filter(F.col("doc_id") < step)
     build_gram_index(boot, "doc_id", "text", idx, n=_DUP_NGRAM_N)
-    (
-        cut_dup_spans(boot, "doc_id", "text", n=_DUP_NGRAM_N)
-        .withColumn("batch_id", F.lit(-1))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .parquet(results)
+    write_batch(
+        cut_dup_spans(boot, "doc_id", "text", n=_DUP_NGRAM_N), results, -1
     )
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -2710,7 +2691,7 @@ def stream_gram_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             occ = _gram_occurrences(
                 batch_df, "doc_id", "text", _DUP_NGRAM_N
             ).localCheckpoint(eager=True)
-            (
+            write_batch(
                 cut_spans_against_index(
                     spark,
                     batch_df,
@@ -2720,12 +2701,9 @@ def stream_gram_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                     n=_DUP_NGRAM_N,
                     exclude_tag=batch_id,
                     occurrences=occ,
-                )
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(results)
+                ),
+                results,
+                batch_id,
             )
             append_to_gram_index(
                 batch_df, "doc_id", "text", idx, n=_DUP_NGRAM_N,
@@ -2749,7 +2727,7 @@ def stream_gram_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         r.feed(d.schema, on_batch, "gram-ingest stream")
 
-    return spark.read.parquet(results).select(
+    return spark.read.orc(results).select(
         F.col("doc").alias("doc_id"), "clean_text", "n_kept", "n_removed"
     )
 
@@ -2877,12 +2855,8 @@ def stream_emb_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # EXISTING quantizer), so load-once here replaces two parquet-scan
     # + collect jobs per micro-batch below
     centroids = build_ivf_index(boot, "vec_id", "embedding", idx, nlist=32)
-    (
-        embedding_neardup_pairs(boot, "vec_id", "embedding", 0.9)
-        .withColumn("batch_id", F.lit(-1))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .parquet(results)
+    write_batch(
+        embedding_neardup_pairs(boot, "vec_id", "embedding", 0.9), results, -1
     )
     feed = [
         e.filter((F.col("vec_id") >= half) & (F.col("vec_id") < 1_000_000)),
@@ -2906,21 +2880,14 @@ def stream_emb_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.greatest("qid", "cid").alias("id_b"),
                 "cos_sim",
             )
-            (
-                within.unionByName(cross)
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(results)
-            )
+            write_batch(within.unionByName(cross), results, batch_id)
             marker = os.path.join(idx, "appended", f"batch_{batch_id}")
-            if not os.path.exists(marker):
+            if not fs_exists(spark, marker):
                 append_to_ivf_index(
                     batch_df, "vec_id", "embedding", idx,
                     owner=r.owner, centroids=centroids,
                 )
-                os.makedirs(marker, exist_ok=True)
+                fs_mkdirs(spark, marker)
         finally:
             release_local_checkpoint(batch_df)
 
@@ -2931,7 +2898,7 @@ def stream_emb_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         r.feed(e.schema, on_batch, "index-ingest stream")
 
     return (
-        spark.read.parquet(results)
+        spark.read.orc(results)
         .select("id_a", "id_b", "cos_sim")
         .distinct()
     )
@@ -3003,13 +2970,7 @@ def stream_media_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=True)
     try:
         build_ahash_index(boot, "media_id", "ahash", idx)
-        (
-            ahash_neardup_pairs(boot, max_hamming=3)
-            .withColumn("batch_id", F.lit(-1))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(results)
-        )
+        write_batch(ahash_neardup_pairs(boot, max_hamming=3), results, -1)
     finally:
         release_local_checkpoint(boot)
 
@@ -3026,21 +2987,14 @@ def stream_media_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.greatest("new_id", "match_id").alias("id_b"),
                 "hamming",
             )
-            (
-                within.unionByName(cross)
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(results)
-            )
+            write_batch(within.unionByName(cross), results, batch_id)
             marker = os.path.join(idx, "appended", f"batch_{batch_id}")
-            if not os.path.exists(marker):
+            if not fs_exists(spark, marker):
                 append_to_ahash_index(
                     hashes, "media_id", "ahash", idx,
                     owner=r.owner,
                 )
-                os.makedirs(marker, exist_ok=True)
+                fs_mkdirs(spark, marker)
         finally:
             release_local_checkpoint(hashes)
 
@@ -3054,7 +3008,7 @@ def stream_media_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         r.feed("media_id long, png binary", on_batch, "index-ingest stream")
 
     return (
-        spark.read.parquet(results)
+        spark.read.orc(results)
         .select("id_a", "id_b", "hamming")
         .distinct()
     )
@@ -3096,12 +3050,12 @@ def _apply_index_commands(
     if adds.isEmpty():
         return
     marker = os.path.join(idx, "appended", f"batch_{batch_id}")
-    if not os.path.exists(marker):
+    if not fs_exists(spark, marker):
         # appends readmit their ids internally (retention.py)
         append_to_minhash_index(
             adds, "doc_id", "text", idx, owner=owner
         )
-        os.makedirs(marker, exist_ok=True)
+        fs_mkdirs(spark, marker)
     else:
         readmit_ids(adds.select("doc_id"), idx)
 

@@ -108,25 +108,30 @@ def get_spark(
 # remains fine (URI-safe "/" join).
 
 
-def _session_cache(spark: SparkSession) -> dict:
-    """The per-session cache of py4j handles: FileSystems keyed by
-    ``(scheme, authority)``, JVM classes by their dotted name. It
-    lives on the session object, so it dies with the session wrapper
-    and a restarted session re-resolves cleanly."""
-    cache = getattr(spark, "_fosp_py4j_cache", None)
+def _context_cache(spark: SparkSession) -> dict:
+    """The cache of py4j handles: FileSystems keyed by ``(scheme,
+    authority)``, JVM classes by their dotted name. It lives on the
+    ``SparkContext``, not on the session wrapper: PySpark wraps every
+    ``foreachBatch`` micro-batch in a new ``SparkSession``
+    (``ForeachBatchFunction.call``), and all of them share the
+    context. The FileSystems resolve against the context's Hadoop
+    conf, and the cache dies with the context, so a restarted context
+    re-resolves cleanly."""
+    sc = spark.sparkContext
+    cache = getattr(sc, "_fosp_py4j_cache", None)
     if cache is None:
-        cache = spark._fosp_py4j_cache = {}
+        cache = sc._fosp_py4j_cache = {}
     return cache
 
 
 def jvm_class(spark: SparkSession, name: str):
     """The py4j handle of the JVM class ``name`` (dotted), resolved
-    once per session. Evaluating ``spark._jvm.org.apache...Path``
+    once per Spark context. Evaluating ``spark._jvm.org.apache...Path``
     costs a py4j round trip per package level every time; a cached
     handle costs none, so a call is one round trip. This is the one
     place the package does such a walk (``tools/audit_plans.py``
     flags any other)."""
-    cache = _session_cache(spark)
+    cache = _context_cache(spark)
     cls = cache.get(name)
     if cls is None:
         cls = spark._jvm
@@ -145,7 +150,7 @@ def hadoop_fs(spark: SparkSession, path: str):
     """Resolved ``(FileSystem, Path)`` for ``path``.
 
     Both the ``Path`` class and the FileSystem handle come from the
-    per-session cache (:func:`jvm_class`; FileSystems per
+    per-context cache (:func:`jvm_class`; FileSystems per
     ``(scheme, authority)``): a stateful sink probes several paths per
     micro-batch, and re-resolving either pays extra py4j round trips
     each time (Hadoop's own JVM-side ``FileSystem.get`` cache doesn't
@@ -153,7 +158,7 @@ def hadoop_fs(spark: SparkSession, path: str):
     jpath = hadoop_path(spark, path)
     uri = jpath.toUri()
     key = (uri.getScheme(), uri.getAuthority())
-    cache = _session_cache(spark)
+    cache = _context_cache(spark)
     fs = cache.get(key)
     if fs is None:
         fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())

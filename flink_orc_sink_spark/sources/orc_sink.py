@@ -22,6 +22,12 @@ What the reference hand-rolls and Spark provides natively:
   output committer publishes files only on job success; for streaming
   see ``flink_orc_sink_spark.streaming.orc_sink``.
 
+Replacing a set of partitions — a batch id's output, a day's
+correction, a fold's or an erase's touched buckets — goes through
+:func:`overwrite_partitions`, :func:`write_batch` and
+:func:`overwrite_buckets` below, batch and streaming alike; no other
+module of the package chooses how a partition is replaced.
+
 Scale notes: dynamic-partition writes shuffle-free by default (each
 task writes every partition it sees). For very high-cardinality
 partition columns pass ``repartition_by_partition_cols=True`` so each
@@ -31,9 +37,13 @@ files, which is what a 100 TB table wants.
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+from flink_orc_sink_spark.session import fs_rmtree
 
 
 def write_orc(
@@ -102,6 +112,71 @@ def write_orc_table(
     writer.saveAsTable(table_name)
 
 
+def overwrite_partitions(
+    df: DataFrame, path: str, *part_cols: str, compression: str = "zstd"
+) -> None:
+    """Replace exactly the ``part_cols`` partitions of the ORC dir
+    ``path`` that ``df`` holds, leaving every other partition's files
+    untouched, so a repeated write lands in the same state. The
+    writer option ``partitionOverwriteMode=dynamic`` scopes this to
+    the one write; the session conf is never touched. This is the one
+    place in the package that sets the mode (``tools/audit_plans.py``
+    flags any other)."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .option("compression", compression)
+        .partitionBy(*part_cols)
+        .orc(path)
+    )
+
+
+def write_batch(
+    df: DataFrame, path: str, batch_id: int, compression: str = "zstd"
+) -> None:
+    """Write ``df`` as partition ``batch_id=<batch_id>`` of ``path``:
+    a replayed batch rewrites its own partition instead of
+    duplicating rows — the batch-id-keyed idempotent write of
+    *Structured Streaming*'s exactly-once sinks."""
+    overwrite_partitions(
+        df.withColumn("batch_id", F.lit(batch_id)), path, "batch_id",
+        compression=compression,
+    )
+
+
+def overwrite_buckets(
+    df: DataFrame,
+    path: str,
+    part_cols: list[str],
+    touched: list[tuple],
+    compression: str = "zstd",
+) -> None:
+    """Overwrite exactly the ``touched`` partitions of ``path`` with
+    ``df`` (whose ``part_cols`` tuples are all in ``touched``).
+
+    A dynamic overwrite only replaces partitions PRESENT in the frame,
+    so a touched bucket whose new content is EMPTY would silently keep
+    its stale files. The write observes which tuples ``df`` held
+    (``Dataset.observe``: no extra job, no second scan), and the
+    directories of touched-but-now-empty buckets are then deleted (on
+    a metastore table this is ``ALTER TABLE .. DROP PARTITION``; here
+    a recursive Hadoop-FS delete, so remote paths work). Both steps
+    are idempotent, so a crash-replay that repeats them lands in the
+    same state."""
+    seen = Observation()
+    overwrite_partitions(
+        df.observe(seen, F.collect_set(F.struct(*part_cols)).alias("p")),
+        path, *part_cols, compression=compression,
+    )
+    present = {tuple(r) for r in seen.get["p"]}
+    for vals in touched:
+        if tuple(vals) not in present:
+            sub = os.path.join(
+                *(f"{c}={v}" for c, v in zip(part_cols, vals))
+            )
+            fs_rmtree(df.sparkSession, os.path.join(path, sub))
+
+
 def upsert_orc_partitions(
     spark: SparkSession,
     base_path: str,
@@ -111,7 +186,7 @@ def upsert_orc_partitions(
     compression: str = "zstd",
 ) -> None:
     """Upsert into a partitioned ORC directory, rewriting ONLY the
-    partitions the updates touch (``partitionOverwriteMode=dynamic``).
+    partitions the updates touch (:func:`overwrite_partitions`).
 
     Semantics: within each touched partition, rows whose ``key_cols``
     match an update are replaced; everything else is carried over;
@@ -131,19 +206,10 @@ def upsert_orc_partitions(
     merged = existing.join(updates, key_cols, "left_anti").unionByName(
         updates
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            merged.repartition(*partition_cols)
-            .write.mode("overwrite")
-            .format("orc")
-            .option("compression", compression)
-            .partitionBy(*partition_cols)
-            .save(base_path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    overwrite_partitions(
+        merged.repartition(*partition_cols), base_path, *partition_cols,
+        compression=compression,
+    )
 
 
 def compact_orc(
@@ -170,7 +236,6 @@ def compact_orc(
     needs this stage regardless of sink.
     """
     import glob
-    import os
     import shutil
 
     files = [
@@ -388,8 +453,6 @@ def pruned_read(
 
 
 def _versions_dir(base_path: str) -> str:
-    import os
-
     return os.path.join(base_path, "_versions")
 
 
@@ -399,7 +462,6 @@ def snapshot_versions(base_path: str) -> list[int]:
     files alone are invisible (same visibility rule as the streaming
     sink's ``_spark_metadata`` and the reference's rename-commit)."""
     import glob
-    import os
 
     return sorted(
         int(os.path.basename(p)[1:-5])
@@ -437,7 +499,6 @@ def snapshot_write(
     version number.
     """
     import json
-    import os
     import uuid
 
     os.makedirs(_versions_dir(base_path), exist_ok=True)
@@ -480,7 +541,6 @@ def snapshot_read(
     Filters/column pruning push into the ORC scan as usual (the
     manifest only fixes the file list)."""
     import json
-    import os
 
     versions = snapshot_versions(base_path)
     if not versions:
@@ -526,7 +586,6 @@ def snapshot_diff(
     The join shuffles only the pruned sides, hashed on the key; the
     null-safe struct comparison happens entirely JVM-side."""
     import json
-    import os
 
     def _files(v: int) -> list[str]:
         with open(
@@ -592,7 +651,6 @@ def snapshot_expire(
     files_retained.
     """
     import json
-    import os
 
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
@@ -758,39 +816,33 @@ def erase_keys_orc(
     The deletion set is small by nature (a deletion request batch),
     so it broadcasts twice: once to find touched buckets, once as the
     anti-join filter. Untouched buckets are not read, not written,
-    not listed (``partitionOverwriteMode=dynamic``) — at 100 TB an
-    erasure request costs a few buckets' I/O, not a table rewrite.
+    not listed (:func:`overwrite_buckets`) — at 100 TB an erasure
+    request costs a few buckets' I/O, not a table rewrite. A touched
+    bucket the erase empties is deleted, not left with its old files.
     Mtime-stability of untouched buckets is pytest-asserted
     (tests/test_maintenance.py), same contract as the streaming CDC
     merge's pruned rewrite.
     """
-    touched = (
-        spark.read.orc(base_path)
+    base = spark.read.orc(base_path)
+    hit = (
+        base
         # bounded-broadcast: erase key set: O(deleted) by the GDPR-erase contract
         .join(F.broadcast(keys), key_col, "left_semi")
         .select(bucket_col)
         .distinct()
     )
+    touched = [tuple(r) for r in hit.collect()]
+    if not touched:
+        return
     remaining = (
-        spark.read.orc(base_path)
-        # bounded-broadcast: touched buckets: subset of the fixed bucket domain
-        .join(F.broadcast(touched), bucket_col, "left_semi")
+        base.filter(F.col(bucket_col).isin([t[0] for t in touched]))
         # bounded-broadcast: erase key set: O(deleted)
         .join(F.broadcast(keys), key_col, "left_anti")
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            remaining.repartition(bucket_col)
-            .write.mode("overwrite")
-            .format("orc")
-            .option("compression", compression)
-            .partitionBy(bucket_col)
-            .save(base_path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    overwrite_buckets(
+        remaining.repartition(bucket_col), base_path, [bucket_col], touched,
+        compression=compression,
+    )
 
 
 def write_orc_validated(

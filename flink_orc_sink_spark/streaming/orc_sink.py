@@ -58,6 +58,14 @@ from flink_orc_sink_spark.session import (
     release_local_checkpoint,
 )
 
+# How a set of partitions is replaced is decided in one place, the
+# batch sink module; these are its helpers under this module's names.
+from flink_orc_sink_spark.sources.orc_sink import (
+    overwrite_buckets as _overwrite_buckets,
+    overwrite_partitions as _dynamic_overwrite,
+    write_batch as _write_batch,
+)
+
 # The state-table core calls these helpers, and state_lease,
 # _overwrite_buckets, _latest_per_key, FOLD_MIN_BYTES and the public
 # fold/cleanup functions, through this module's globals at call time —
@@ -124,6 +132,19 @@ def stream_write_orc(
     return writer.start()
 
 
+def _start_foreach_batch(
+    df: DataFrame, fn, checkpoint: str, trigger: dict | None = None
+) -> StreamingQuery:
+    """Start ``df`` into the ``foreachBatch`` body ``fn``, checkpointed
+    at ``checkpoint``, with ``trigger`` if given."""
+    writer = df.writeStream.foreachBatch(fn).option(
+        "checkpointLocation", checkpoint
+    )
+    if trigger:
+        writer = writer.trigger(**trigger)
+    return writer.start()
+
+
 def stream_write_orc_foreachbatch(
     df: DataFrame,
     path: str,
@@ -149,12 +170,7 @@ def stream_write_orc_foreachbatch(
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         _write_batch(batch_df, path, batch_id, compression=compression)
 
-    writer = df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return _start_foreach_batch(df, write_batch, checkpoint, trigger)
 
 
 def stream_fanout_orc(
@@ -206,12 +222,7 @@ def stream_fanout_orc(
         finally:
             release_local_checkpoint(staged)
 
-    writer = df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return _start_foreach_batch(df, write_batch, checkpoint, trigger)
 
 
 def read_committed_fanout(
@@ -591,12 +602,7 @@ class _DeltaLogTable:
                 ):
                     cleanup(spark, int(horizon_fn()))
 
-        writer = changes.writeStream.foreachBatch(apply_batch).option(
-            "checkpointLocation", checkpoint
-        )
-        if trigger:
-            writer = writer.trigger(**trigger)
-        return writer.start()
+        return _start_foreach_batch(changes, apply_batch, checkpoint, trigger)
 
 
 def _latest_table(state_path: str, layout: dict | None = None):
@@ -619,33 +625,6 @@ def _join_table(state_path: str, layout: dict | None = None):
         state_path, "pk_state", "pk_log", ("side", "kp"),
         keys=("side", "pk"), order=("seq",), before_fold=_rj_fold_view,
         layout=layout,
-    )
-
-
-def _dynamic_overwrite(
-    df: DataFrame, path: str, *part_cols: str, compression: str = COMPRESSION
-) -> None:
-    """Replace exactly the ``part_cols`` partitions of the ORC dir
-    ``path`` that ``df`` holds (dynamic partition overwrite), so a
-    repeated write lands in the same state."""
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .option("compression", compression)
-        .partitionBy(*part_cols)
-        .orc(path)
-    )
-
-
-def _write_batch(
-    df: DataFrame, path: str, batch_id: int, compression: str = COMPRESSION
-) -> None:
-    """Write ``df`` as partition ``batch_id=<batch_id>`` of ``path``:
-    a replayed batch rewrites its own partition instead of
-    duplicating rows."""
-    _dynamic_overwrite(
-        df.withColumn("batch_id", F.lit(batch_id)), path, "batch_id",
-        compression=compression,
     )
 
 
@@ -1180,33 +1159,6 @@ def cleanup_retract_join_state(
     return _join_table(state_path).cleanup(spark, horizon)
 
 
-def _overwrite_buckets(
-    df: DataFrame, path: str, part_cols: list[str], touched: list[tuple]
-) -> None:
-    """Overwrite exactly the ``touched`` partitions of ``path`` with
-    ``df`` (whose ``part_cols`` tuples are all in ``touched``).
-
-    Dynamic partition overwrite only replaces partitions PRESENT in
-    the frame — a touched bucket whose new content is EMPTY would
-    silently keep its stale files. Finish the job by dropping the
-    directories of touched-but-now-empty buckets (on a metastore
-    table this is ``ALTER TABLE .. DROP PARTITION``; here a
-    recursive Hadoop-FS delete, so remote state paths work). Both
-    steps are idempotent, so a crash-replay that repeats them lands
-    in the same state."""
-    spark = df.sparkSession
-    _dynamic_overwrite(df, path, *part_cols)
-    present = {
-        tuple(r) for r in df.select(*part_cols).distinct().collect()
-    }
-    for vals in touched:
-        if tuple(vals) not in present:
-            sub = os.path.join(
-                *(f"{c}={v}" for c, v in zip(part_cols, vals))
-            )
-            _hfs_rmtree(spark, os.path.join(path, sub))
-
-
 def _bucket_filter(cols, touched: list):
     """Exact predicate for the ``touched`` partition tuples of
     ``cols`` — ``kp IN (..)``, or per side ``side = s AND kp IN
@@ -1650,12 +1602,7 @@ def stream_quarantine_orc(
             # trigger. Release them as soon as both writes land.
             release_local_checkpoint(staged)
 
-    writer = df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return _start_foreach_batch(df, write_batch, checkpoint, trigger)
 
 
 def read_committed_orc(spark: SparkSession, path: str) -> DataFrame:

@@ -97,6 +97,9 @@ def test_sweep_clean_on_package():
     assert audit_plans._audit_forced_broadcasts(pkg) == []
     assert audit_plans._audit_checkpoint_hygiene(pkg) == []
     assert audit_plans._audit_jvm_walks(pkg) == []
+    assert audit_plans._audit_partition_overwrite(pkg) == []
+    examples = os.path.join(os.path.dirname(pkg), "examples")
+    assert audit_plans._audit_partition_overwrite(examples) == []
 
 
 JVM_SYNTH = textwrap.dedent(
@@ -126,4 +129,56 @@ def test_jvm_walk_audit_flags_a_walk(tmp_path):
     findings = audit_plans._audit_jvm_walks(str(tmp_path))
     assert sorted(f.split(" ")[1] for f in findings) == [
         "bad_nested:", "bad_path_per_call:", "read:",
+    ]
+
+
+OVERWRITE_SYNTH = textwrap.dedent(
+    """
+    def bad_conf_toggle(spark, df, path):
+        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        try:
+            df.write.mode("overwrite").partitionBy("dt").orc(path)
+        finally:
+            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+
+    def bad_inline_option(df, path):
+        (
+            df.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .parquet(path)
+        )
+
+    def good_through_helper(df, path):
+        overwrite_partitions(df, path, "dt")
+    """
+)
+
+HELPER_SYNTH = textwrap.dedent(
+    """
+    def overwrite_partitions(df, path, *part_cols):
+        (
+            df.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(*part_cols)
+            .orc(path)
+        )
+
+    def bad_second_copy(df, path):
+        df.write.option("partitionOverwriteMode", "dynamic").orc(path)
+    """
+)
+
+
+def test_partition_overwrite_audit_flags_toggles_and_options(tmp_path):
+    (tmp_path / "synth.py").write_text(OVERWRITE_SYNTH)
+    (tmp_path / "sources").mkdir()
+    (tmp_path / "sources" / "orc_sink.py").write_text(HELPER_SYNTH)
+    findings = audit_plans._audit_partition_overwrite(str(tmp_path))
+    # the toggle's get, set and restore, the inline option, and a
+    # second copy beside the helper; the helper itself passes
+    assert sorted(f.split(" ")[1] for f in findings) == [
+        "bad_conf_toggle:", "bad_conf_toggle:", "bad_conf_toggle:",
+        "bad_inline_option:", "bad_second_copy:",
     ]

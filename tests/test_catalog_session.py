@@ -41,3 +41,24 @@ def test_session_defaults(spark):
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
     assert spark.conf.get("spark.sql.orc.impl") == "native"
+
+
+def test_py4j_cache_outlives_the_micro_batch_session_wrapper(spark, tmp_path):
+    """PySpark wraps every ``foreachBatch`` micro-batch in a new
+    ``SparkSession`` over the same context (``ForeachBatchFunction``),
+    so the FileSystem and class handles ``hadoop_fs`` caches must live
+    on the context: a second wrapper gets the identical cached
+    objects instead of resolving them again."""
+    from pyspark.sql import SparkSession
+
+    from flink_orc_sink_spark.session import hadoop_fs, jvm_class
+
+    path = str(tmp_path)
+    first = SparkSession(spark.sparkContext, spark._jsparkSession)
+    fs1, _ = hadoop_fs(first, path)
+    path_cls = jvm_class(first, "org.apache.hadoop.fs.Path")
+    second = SparkSession(spark.sparkContext, spark._jsparkSession)
+    fs2, jpath = hadoop_fs(second, path)
+    assert fs2 is fs1
+    assert jvm_class(second, "org.apache.hadoop.fs.Path") is path_cls
+    assert fs2.exists(jpath)

@@ -276,6 +276,39 @@ def test_erase_keys_rewrites_only_touched_buckets(spark, tmp_path):
         assert os.path.getmtime(p) == m
 
 
+
+def test_erase_of_a_whole_bucket_deletes_the_bucket(spark, tmp_path):
+    """Erasing every key of one bucket removes that bucket's directory:
+    a dynamic overwrite alone replaces only the buckets its frame still
+    holds, so the emptied bucket would keep every erased row. The
+    other buckets keep their files and mtimes."""
+    import glob
+    import os
+
+    from flink_orc_sink_spark.sources.orc_sink import erase_keys_orc
+
+    base = str(tmp_path / "tbl")
+    spark.range(20).select(
+        F.col("id").alias("k"), (F.col("id") % 7).alias("kb")
+    ).repartition("kb").write.format("orc").partitionBy("kb").save(base)
+    others = {
+        p: os.path.getmtime(p)
+        for p in glob.glob(os.path.join(base, "kb=*", "*.orc"))
+        if os.sep + "kb=3" + os.sep not in p
+    }
+    assert others
+    # 3, 10 and 17 are every key of bucket 3 (k % 7 == 3)
+    erase = spark.createDataFrame([(3,), (10,), (17,)], "k long")
+    erase_keys_orc(spark, base, erase, "k", "kb")
+    assert not os.path.exists(os.path.join(base, "kb=3"))
+    got = spark.read.orc(base)
+    assert got.filter(F.col("k").isin(3, 10, 17)).count() == 0
+    assert got.count() == 17
+    assert {
+        p: os.path.getmtime(p)
+        for p in glob.glob(os.path.join(base, "kb=*", "*.orc"))
+    } == others
+
 def test_quarantine_write_splits_exactly(spark, tmp_path):
     """write_orc_validated: every row lands on exactly one side; bad
     rows (including NULL-expectation rows) arrive unchanged."""

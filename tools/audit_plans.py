@@ -143,7 +143,7 @@ def _audit_checkpoint_hygiene(pkg_root: str) -> list[str]:
 
 
 # The one function that may walk ``spark._jvm`` package by package:
-# the per-session class resolver in ``session.py``.
+# the per-context class resolver in ``session.py``.
 JVM_CLASS_RESOLVER = "jvm_class"
 
 
@@ -151,8 +151,8 @@ def _audit_jvm_walks(pkg_root: str) -> list[str]:
     """Static sweep: a ``<x>._jvm.<package>...`` chain inside a function
     costs one py4j round trip per package level on every call (1.5 ms
     of a 2 ms ``hadoop_fs`` call, measured). Class handles come from
-    ``session.jvm_class``, which resolves each class once per session;
-    any other function that walks ``_jvm`` is a finding."""
+    ``session.jvm_class``, which resolves each class once per Spark
+    context; any other function that walks ``_jvm`` is a finding."""
     import ast
 
     findings: list[str] = []
@@ -182,6 +182,57 @@ def _audit_jvm_walks(pkg_root: str) -> list[str]:
                             f"{rel}:{n.lineno} {node.name}: _jvm.{n.attr}"
                             " package walk per call (use session.jvm_class)"
                         )
+    return findings
+
+
+# The one function that may name the partition overwrite mode: the
+# helper every partition replace in the package goes through.
+PARTITION_OVERWRITE_HELPER = ("sources/orc_sink.py", "overwrite_partitions")
+
+
+def _audit_partition_overwrite(root: str) -> list[str]:
+    """Static sweep: how a set of partitions is replaced is decided in
+    ``sources/orc_sink.py::overwrite_partitions`` alone. Any other line
+    naming ``partitionOverwriteMode`` under ``root`` (a session-conf
+    toggle around a write, an inline writer option, a comment that
+    describes one) is a finding: each copy is a place the rule can
+    drift, as an erase that never deleted the buckets it emptied
+    once did."""
+    import ast
+
+    findings: list[str] = []
+    for dirpath, _dirs, files in os.walk(root):
+        if "__pycache__" in dirpath:
+            continue
+        for fname in files:
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fname)
+            with open(path) as f:
+                src = f.read()
+            if "partitionOverwriteMode" not in src:
+                continue
+            funcs = [
+                (n.lineno, n.end_lineno, n.name)
+                for n in ast.walk(ast.parse(src, filename=path))
+                if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+            ]
+            in_root = os.path.relpath(path, root).replace(os.sep, "/")
+            for i, line in enumerate(src.splitlines(), 1):
+                if "partitionOverwriteMode" not in line:
+                    continue
+                # the innermost function holding the line
+                owner = max(
+                    (f for f in funcs if f[0] <= i <= f[1]),
+                    default=(0, 0, "<module>"),
+                )[2]
+                if (in_root, owner) == PARTITION_OVERWRITE_HELPER:
+                    continue
+                rel = os.path.relpath(path, os.path.dirname(root))
+                findings.append(
+                    f"{rel}:{i} {owner}: partitionOverwriteMode outside"
+                    " sources/orc_sink.py::overwrite_partitions"
+                )
     return findings
 
 
@@ -481,6 +532,10 @@ def main() -> int:
     findings += _audit_driver_bloom_build(pkg_root)
     findings += _audit_forced_broadcasts(pkg_root)
     findings += _audit_jvm_walks(pkg_root)
+    findings += _audit_partition_overwrite(pkg_root)
+    findings += _audit_partition_overwrite(
+        os.path.join(os.path.dirname(pkg_root), "examples")
+    )
     for name, fn in entry.queries().items():
         try:
             df = fn(spark, sf_dir)
