@@ -128,10 +128,9 @@ def _anti(df: DataFrame, ts: DataFrame, id_col: str) -> DataFrame:
     deletes-since-last-compaction (the compaction cadence is exactly
     the knob that keeps it broadcastable), and without the hint the
     aggregate-free size estimate can fall back to a sort-merge join
-    that shuffles the whole index — measured 2x probe wall at 100k
-    docs (tools/scale_probe_retention.py)."""
+    that shuffles the whole index."""
     return df.join(
-        # bounded-broadcast: tombstones: O(deletes since last compaction), bounded by the compaction cadence (hint necessity measured above)
+        # bounded-broadcast: tombstones: O(deletes since last compaction), bounded by the compaction cadence (hint necessity explained above)
         F.broadcast(ts.select(F.col("id").alias(id_col))),
         id_col,
         "left_anti",

@@ -278,10 +278,10 @@ def lsh_neardup_pairs(
     roughly constant — use ``n_planes ≈ ceil(log2(n)) - 3`` (b=8 is
     right for ~10⁴ rows; a 10¹⁰-row corpus wants b≈30). Recall at
     cosine ≥ 0.95 stays ≈1 with the OR-16 construction up to b≈16;
-    beyond that raise ``n_tables`` too. Measured in
-    ``tools/scale_probe_similarity.py``: fixed b=8 went quadratic
-    (17 s → 191 s for 10k → 50k) while log-scaled planes hold the
-    linear profile with planted-pair recall 1.0."""
+    beyond that raise ``n_tables`` too. Fixed b=8 goes quadratic;
+    ``tools/scale_probe.py similarity`` checks that log-scaled planes
+    keep jobs and stages flat and shuffle bytes linear, with
+    planted-pair recall 1.0."""
     cands = _lsh_candidates(
         df, df, id_col, id_col, vec_col, vec_col,
         n_tables, n_planes, dims, seed, ordered=True,

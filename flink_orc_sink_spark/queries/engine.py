@@ -1629,7 +1629,7 @@ def _run_retract_join_stream(
     )
 
     # bucket counts are a layout knob sized to state (see the sink's
-    # cost model + tools/scale_probe_retract_join.py); 8 suits the
+    # cost model and tools/scale_probe.py retract_join); 8 suits the
     # bounded local replays exactly as STREAM_STATE_PARTITIONS does
     # (measured 25.8 s -> 15.0 s at sf0.01 vs 16 buckets)
     sink_kwargs.setdefault("n_key_partitions", 8)

@@ -218,8 +218,7 @@ def orc_data_files_exist(spark: SparkSession, path: str) -> bool:
     must read as ABSENT: ``spark.read.orc`` on it throws an
     unable-to-infer-schema AnalysisException.
 
-    Probe cost is BOUNDED (round-6 advisory; datapoints in
-    ``tools/scale_probe_retract_join.py``): the lazy recursive
+    Probe cost is BOUNDED (round-6 advisory): the lazy recursive
     iterator early-exits on the first data file — measured FLAT
     (~15-25 ms) from 32 to 12k state files on the package's own
     layouts, whose dirs front a data file within a couple of entries

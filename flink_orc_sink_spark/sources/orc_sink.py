@@ -814,12 +814,14 @@ def erase_keys_orc(
     ``keys``, rewriting ONLY the bucket partitions those keys hash to.
 
     The deletion set is small by nature (a deletion request batch),
-    so it broadcasts twice: once to find touched buckets, once as the
-    anti-join filter. Untouched buckets are not read, not written,
-    not listed (:func:`overwrite_buckets`) — at 100 TB an erasure
-    request costs a few buckets' I/O, not a table rewrite. A touched
-    bucket the erase empties is deleted, not left with its old files.
-    Mtime-stability of untouched buckets is pytest-asserted
+    so it broadcasts ONCE: one scan finds the touched buckets and the
+    erased keys present in each (at most the request's keys reach the
+    driver), and the rewrite drops those keys by value. Untouched
+    buckets are not read, not written, not listed
+    (:func:`overwrite_buckets`) — at 100 TB an erasure request costs a
+    few buckets' I/O, not a table rewrite. A touched bucket the erase
+    empties is deleted, not left with its old files. Mtime-stability
+    of untouched buckets is pytest-asserted
     (tests/test_maintenance.py), same contract as the streaming CDC
     merge's pruned rewrite.
     """
@@ -828,20 +830,19 @@ def erase_keys_orc(
         base
         # bounded-broadcast: erase key set: O(deleted) by the GDPR-erase contract
         .join(F.broadcast(keys), key_col, "left_semi")
-        .select(bucket_col)
+        .select(bucket_col, key_col)
         .distinct()
+        .collect()
     )
-    touched = [tuple(r) for r in hit.collect()]
-    if not touched:
+    if not hit:
         return
-    remaining = (
-        base.filter(F.col(bucket_col).isin([t[0] for t in touched]))
-        # bounded-broadcast: erase key set: O(deleted)
-        .join(F.broadcast(keys), key_col, "left_anti")
-    )
+    buckets = sorted({b for b, _ in hit})
+    # a null key is in no erase set: coalesce keeps its row
+    erased = F.coalesce(F.col(key_col).isin([k for _, k in hit]), F.lit(False))
+    remaining = base.filter(F.col(bucket_col).isin(buckets) & ~erased)
     overwrite_buckets(
-        remaining.repartition(bucket_col), base_path, [bucket_col], touched,
-        compression=compression,
+        remaining.repartition(bucket_col), base_path, [bucket_col],
+        [(b,) for b in buckets], compression=compression,
     )
 
 

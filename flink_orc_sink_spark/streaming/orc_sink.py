@@ -556,16 +556,16 @@ class _DeltaLogTable:
         batch_id)`` sees the batch with ``kp``, checkpointed.
         ``check(spark)`` vets the state dir before the first batch."""
         owner = f"sink:{checkpoint}"
-        recorded = []
+        kp = []  # the bucket column, built with the first batch
 
         def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
             spark = batch_df.sparkSession
             with state_lease(spark, self.path, owner):
-                if not recorded:
+                if not kp:
                     if check is not None:
                         check(spark)
                     _record_layout(spark, self.path, **self._layout)
-                    recorded.append(True)
+                    kp.append(self.kp(spark))
                 if cleanup is not None:
                     # re-read EVERY batch (one listStatus, no Spark
                     # job): an external cleanup between triggers moves
@@ -579,7 +579,7 @@ class _DeltaLogTable:
                             F.col(self.order(spark)[0]) >= F.lit(horizon),
                             F.lit(True),
                         ))
-                ch = batch_df.withColumn("kp", self.kp(spark))
+                ch = batch_df.withColumn("kp", kp[0])
                 if extras is None:
                     self.append(ch, batch_id)
                 else:
@@ -998,8 +998,7 @@ def stream_retract_agg_orc(
 
     Under uniformly-random key churn the per-batch cost is that
     pruned scan plus the O(batch) append; the full pass happens only
-    at fold cadence (``tools/scale_probe_retract_join.py`` pins
-    per-batch wall ~flat across a 20× state growth). The aggregate
+    at fold cadence. The aggregate
     readback (:func:`read_retract_agg`) sums the delta partitions —
     O(batches × groups) rows, corpus-size-independent.
 
@@ -1397,12 +1396,14 @@ def stream_retract_join_orc(
     sink then drops rows with ``seq`` below the recorded horizon at
     ingest.
 
-    COST MODEL (measured, ``tools/scale_probe_retract_join.py``):
-    clustered churn reads only the key- and join-buckets the batch
-    touches; uniformly-random churn pays a map-side pruned scan for
-    the image lookups plus the O(batch) append, with the full pass
-    deferred to fold cadence. Per-batch wall stays ~flat across a 20×
-    state growth on BOTH key distributions. A full feed replay
+    COST MODEL: clustered churn reads only the key- and join-buckets
+    the batch touches; uniformly-random churn pays a map-side pruned
+    scan for the image lookups plus the O(batch) append, with the
+    full pass deferred to fold cadence. ``tools/scale_probe.py
+    retract_join`` checks it by plan counters: a fixed uniform batch
+    over a folded state 1×, 5× and 10× as large runs the same jobs,
+    stages and tasks, and its shuffle bytes do not grow; only the
+    rows its lookups scan do. A full feed replay
     through a fresh checkpoint against populated state also
     converges: every step is a pure function of authoritative
     (base ∪ log) state."""

@@ -7,6 +7,7 @@ partition is one job with no shuffle and probes each directory once.
 Jobs are counted from the DAG scheduler's next job id, filesystem
 calls by rebinding the sink module's ``_hfs_*`` and
 ``_orc_files_exist`` helpers.
+A query builds its bucket column once, not once per batch.
 The replay tests pin the log append's contract: a batch id delivered
 twice leaves exactly its replayed rows, and an empty batch reads and
 folds to nothing.
@@ -108,6 +109,30 @@ def test_cdc_cycle_work_is_exact(spark, tmp_path, fs_calls):
         (1, 11, 2, "U"), (2, None, 2, "D"), (3, 31, 3, "U"),
         (4, 40, 2, "U"), (5, 50, 3, "U"),
     ]
+
+
+def test_bucket_column_is_built_once_per_query(spark, tmp_path, monkeypatch):
+    """A query builds the ``kp`` bucket column with its first batch and
+    reuses it: three micro-batches, one ``kp`` call."""
+    src, state, ckpt = (str(tmp_path / d) for d in ("in", "state", "ckpt"))
+    calls = []
+    real = orc_sink._DeltaLogTable.kp
+    monkeypatch.setattr(
+        orc_sink._DeltaLogTable, "kp",
+        lambda self, spark: calls.append(1) or real(self, spark),
+    )
+    for i in range(3):
+        _feed(spark, src, f"f{i}", [(i, 10 * i, 1, "U"), (i + 5, i, 1, "U")])
+    q = orc_sink.stream_cdc_apply_orc(
+        orc_sink.stream_from_files(
+            spark, os.path.join(src, "*"), SCHEMA, max_files_per_trigger=1
+        ),
+        state, ckpt, "k", ["seq"], trigger={"availableNow": True},
+    )
+    assert q.awaitTermination(120), "stream did not drain"
+    assert sum(1 for p in q.recentProgress if p["numInputRows"] > 0) == 3
+    assert len(calls) == 1
+    assert len(_rows(orc_sink.read_cdc_table(spark, state))) == 6
 
 
 def _apply_batch(spark, state, ckpt):

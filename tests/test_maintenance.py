@@ -309,6 +309,31 @@ def test_erase_of_a_whole_bucket_deletes_the_bucket(spark, tmp_path):
         for p in glob.glob(os.path.join(base, "kb=*", "*.orc"))
     } == others
 
+def test_erase_broadcasts_the_key_set_once(spark, tmp_path):
+    """erase_keys_orc broadcasts the erase keys in one query, the scan
+    that finds the touched buckets and the erased keys in them; the
+    rewrite drops those keys by value. A second broadcast of the keys
+    would be one Spark job more. A row whose key is null survives, as
+    it did the anti-join."""
+    from flink_orc_sink_spark.sources.orc_sink import erase_keys_orc
+
+    base = str(tmp_path / "tbl")
+    spark.range(1000).select(
+        F.col("id").alias("k"), (F.col("id") % 7).alias("kb")
+    ).union(spark.createDataFrame([(None, 3)], "k long, kb long")).repartition(
+        "kb"
+    ).write.format("orc").partitionBy("kb").save(base)
+    erase = spark.createDataFrame([(3,), (10,), (11,), (5000,)], "k long")
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    job0 = dag.nextJobId()
+    erase_keys_orc(spark, base, erase, "k", "kb")
+    assert dag.nextJobId() - job0 == 5
+    got = spark.read.orc(base)
+    assert got.count() == 998
+    assert got.filter(F.col("k").isNull()).count() == 1
+    assert got.filter(F.col("k").isin(3, 10, 11)).count() == 0
+
+
 def test_quarantine_write_splits_exactly(spark, tmp_path):
     """write_orc_validated: every row lands on exactly one side; bad
     rows (including NULL-expectation rows) arrive unchanged."""

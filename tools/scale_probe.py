@@ -1,22 +1,22 @@
-"""Dedup-pipeline scale probe: does the MinHash path stay linear?
+"""Scale-shape probe: check a SCALE.md claim by plan counters.
 
-Generates seeded synthetic corpora at 1x / 5x / 10x the sf0.1 document
-count (plus ~1% planted near-dup pairs), runs the MinHash-LSH dedup
-pipeline end-to-end at each size, and prints per-stage wall times. The
-thing being verified is the SHAPE: signatures are embarrassingly
-parallel, banding is one bounded shuffle, verification touches only
-candidates — so total time should grow ~linearly in docs while planted
-pairs are still found. A quadratic blow-up here is the classic dedup
-scale failure (hot shingle / degenerate bucket), capped by ``df_cap``
-and ``bucket_cap``.
+    python tools/scale_probe.py <family> [sizes ...]
 
-Planted-pair RECALL is measured at every size: doc ``i`` with
-``i % 100 == 99`` is a 3-token perturbation of doc ``i-1``, so the
-expected pair set is known exactly and recall is a join, not an
-estimate.
+runs the family's spec (``tools/scale_specs.py``) at each size, by
+default 1×, 5× and 10× its base size. For each size it counts what
+Spark ran for the operator call, through
+``orcbench.probes.SparkLedger``: jobs, stages, tasks, shuffle bytes
+and input records. It asserts the family's correctness check at every
+size. Then it checks the claimed shape against the first size: jobs
+and stages may not change, and each counter the spec bounds may grow
+at most as (n / n1) ** exponent, with 50 % slack over a small floor.
+Wall time is printed but only advisory: steal on a shared host moves
+it, while the counters are exact. Exits 1 when the shape fails.
 
-Usage: python tools/scale_probe.py [sizes ...]   (default: 5000 25000 50000)
-100× probe: python tools/scale_probe.py 5000 50000 500000
+``python tools/scale_probe.py`` with no family lists the families.
+The 1× case of each family runs in the default pytest tier and the
+full shape check in the slow one (``pytest tests/ -m slow -k
+scale_probe``).
 """
 
 from __future__ import annotations
@@ -27,93 +27,78 @@ import sys
 import tempfile
 import time
 
-import numpy as np
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+for _p in (ROOT, os.path.join(ROOT, "tools")):
+    if _p not in sys.path:
+        sys.path.insert(0, _p)
+
+from orcbench.probes import SparkLedger  # noqa: E402
+from scale_specs import SPECS  # noqa: E402
+
+COUNTERS = ("jobs", "stages", "tasks", "shuffle_bytes", "input_records")
+FLAT = ("jobs", "stages")
+SLACK = 1.5
+FLOOR = {"tasks": 0, "shuffle_bytes": 64 << 10, "input_records": 1000}
 
 
-def make_corpus(spark, n_docs: int, path: str, seed: int = 7) -> None:
-    """Word-salad docs (~120 tokens, 500-word vocab) + planted
-    near-dups: every 100th doc is a lightly perturbed copy of its
-    predecessor (same prefix, a few tokens swapped at the tail)."""
-    rng = np.random.default_rng(seed)
-    vocab = np.array([f"w{i:03d}" for i in range(500)])
-    lengths = rng.integers(80, 160, size=n_docs)
-    rows = []
-    prev_tokens = None
-    for i in range(n_docs):
-        if prev_tokens is not None and i % 100 == 99:
-            toks = list(prev_tokens)
-            for j in rng.integers(0, len(toks), size=3):
-                toks[int(j)] = str(rng.choice(vocab))
-        else:
-            toks = [str(w) for w in rng.choice(vocab, size=int(lengths[i]))]
-        prev_tokens = toks
-        rows.append((i, " ".join(toks)))
-    spark.createDataFrame(rows, "doc_id long, text string").repartition(
-        32
-    ).write.mode("overwrite").parquet(path)
-
-
-def main() -> None:
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    from flink_orc_sink_spark.operators import dedup as dd
-    from flink_orc_sink_spark.session import get_spark
-
-    sizes = [int(a) for a in sys.argv[1:]] or [5000, 25000, 50000]
-    spark = get_spark("scale-probe")
+def measure(spark, spec, n: int) -> dict:
+    """Counters of one run of ``spec`` at size ``n``, after its check
+    passed."""
+    saved = {k: spark.conf.get(k, None) for k in spec.conf}
     work = tempfile.mkdtemp(prefix="scale_probe_")
     try:
-        for n in sizes:
-            path = os.path.join(work, f"docs_{n}")
-            make_corpus(spark, n, path)
-            df = spark.read.parquet(path)
-            df.count()  # warm the scan
-
-            t0 = time.time()
-            sigs = dd.minhash_signatures(df, "doc_id", "text")
-            sigs.count()
-            t_sig = time.time() - t0
-
-            t0 = time.time()
-            cands = dd.minhash_candidate_pairs(
-                dd.minhash_signatures(df, "doc_id", "text")
-            )
-            n_cands = cands.count()
-            t_cand = time.time() - t0
-
-            t0 = time.time()
-            pairs = dd.minhash_dedup_pairs(df, "doc_id", "text", threshold=0.7)
-            n_pairs = pairs.count()
-            t_full = time.time() - t0
-
-            # exact planted recall: pair (i-1, i) for every i%100==99
-            from pyspark.sql import functions as F
-
-            planted_df = (
-                spark.range(n)
-                .filter((F.col("id") % 100) == 99)
-                .select(
-                    (F.col("id") - 1).alias("doc_a"),
-                    F.col("id").alias("doc_b"),
-                )
-            )
-            n_planted = planted_df.count()
-            found = planted_df.join(
-                pairs.select(
-                    F.least("doc_a", "doc_b").alias("doc_a"),
-                    F.greatest("doc_a", "doc_b").alias("doc_b"),
-                ),
-                ["doc_a", "doc_b"],
-                "left_semi",
-            ).count()
-            print(
-                f"docs={n:6d}  sig={t_sig:5.1f}s  sig+cand={t_cand:5.1f}s "
-                f"full={t_full:5.1f}s  cands={n_cands}  pairs={n_pairs} "
-                f"planted_recall={found}/{n_planted}",
-                flush=True,
-            )
+        for k, v in spec.conf.items():
+            spark.conf.set(k, v)
+        ctx = spec.setup(spark, n, work)
+        ledger = SparkLedger(spark)
+        mark, t0 = ledger.mark(), time.time()
+        out = spec.run(spark, ctx)
+        wall = time.time() - t0
+        counts = ledger.since(mark)
+        if spec.check is not None:
+            spec.check(spark, ctx, out, n)
     finally:
+        for k, v in saved.items():
+            spark.conf.unset(k) if v is None else spark.conf.set(k, v)
         shutil.rmtree(work, ignore_errors=True)
+    return {"n": n, **{k: counts[k] for k in COUNTERS}, "wall_s": round(wall, 2)}
+
+
+def shape_failures(spec, rows: list[dict]) -> list[str]:
+    """Where ``rows`` (one per size, smallest first) break the shape."""
+    first, bad = rows[0], []
+    for row in rows[1:]:
+        at = f"at n={row['n']} (n={first['n']}: {first}; here: {row})"
+        for k in FLAT:
+            if row[k] != first[k]:
+                bad.append(f"{k} {first[k]} -> {row[k]} {at}")
+        for k, e in spec.growth.items():
+            limit = SLACK * max(first[k], FLOOR[k]) * (row["n"] / first["n"]) ** e
+            if row[k] > limit:
+                bad.append(f"{k} {first[k]} -> {row[k]}, over n^{e} growth ({limit:.0f}) {at}")
+    return bad
+
+
+def main(argv: list[str]) -> int:
+    if not argv or argv[0] not in SPECS:
+        print(__doc__.split("\n\n")[1].strip(), "\nfamilies:", " ".join(sorted(SPECS)))
+        return 2
+    from flink_orc_sink_spark.session import get_spark
+
+    spec = SPECS[argv[0]]
+    sizes = [int(a) for a in argv[1:]] or [spec.base * m for m in (1, 5, 10)]
+    spark = get_spark("scale-probe")
+    spark.sparkContext.setLogLevel("ERROR")
+    print(f"{argv[0]}: {spec.claim}")
+    print("".join(f"{k:>15}" for k in ("n", *COUNTERS, "wall_s")), " (wall is advisory)")
+    rows = []
+    for n in sizes:
+        rows.append(measure(spark, spec, n))
+        print("".join(f"{v:>15}" for v in rows[-1].values()), flush=True)
+    bad = shape_failures(spec, rows)
+    print("\n".join(bad) or f"shape holds: jobs and stages flat, growth {spec.growth}")
+    return 1 if bad else 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main(sys.argv[1:]))
