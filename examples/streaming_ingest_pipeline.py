@@ -52,6 +52,7 @@ def run(spark, sf_dir: str, out: str) -> dict[str, int]:
         fs_exists,
         fs_mkdirs,
         release_local_checkpoint,
+        start_stream,
     )
     from flink_orc_sink_spark.sources.orc_sink import write_batch
 
@@ -125,14 +126,15 @@ def run(spark, sf_dir: str, out: str) -> dict[str, int]:
             release_local_checkpoint(batch_df)
 
     ckpt = os.path.join(work, "ckpt")
-    q = (
+    q = start_stream(
         spark.readStream.schema(d.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(feed)
         .writeStream.foreachBatch(on_batch)
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
+        spark,
+        ckpt,
     )
     if not q.awaitTermination(180):
         # fail loudly rather than report a silently partial pair set

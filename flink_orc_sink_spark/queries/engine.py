@@ -42,6 +42,7 @@ from flink_orc_sink_spark.session import (
     fs_mkdirs,
     local_df,
     release_local_checkpoint,
+    start_stream,
 )
 from flink_orc_sink_spark.sources.catalog import (
     normalize_events_ts,
@@ -213,12 +214,15 @@ class _Replay:
             {"processingTime": "0 seconds"} if live else {"availableNow": True}
         )
         self.run(
-            lambda: df.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", self.ckpt)
-            .trigger(**trigger)
-            .start(),
+            lambda: start_stream(
+                df.writeStream.outputMode(mode)
+                .format("memory")
+                .queryName(name)
+                .option("checkpointLocation", self.ckpt)
+                .trigger(**trigger),
+                self.spark,
+                self.ckpt,
+            ),
             name,
             live=live,
         )
@@ -235,13 +239,16 @@ class _Replay:
         one file per trigger; ``on_batch`` keys its per-batch markers
         on the checkpointed batch ids."""
         self.run(
-            lambda: self.spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(self.stage)
-            .writeStream.foreachBatch(on_batch)
-            .option("checkpointLocation", self.ckpt)
-            .trigger(availableNow=True)
-            .start(),
+            lambda: start_stream(
+                self.spark.readStream.schema(schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(self.stage)
+                .writeStream.foreachBatch(on_batch)
+                .option("checkpointLocation", self.ckpt)
+                .trigger(availableNow=True),
+                self.spark,
+                self.ckpt,
+            ),
             what,
         )
 
@@ -2506,14 +2513,17 @@ def stream_pyds_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     with _Replay(spark, sf_dir, "pyds_sink") as r:
         e.repartition(3, "event_id").write.mode("overwrite").parquet(r.stage)
         r.run(
-            lambda: spark.readStream.schema(e.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(r.stage)
-            .writeStream.format("manifest_orc_py")
-            .option("path", r.out)
-            .option("checkpointLocation", r.ckpt)
-            .trigger(availableNow=True)
-            .start(),
+            lambda: start_stream(
+                spark.readStream.schema(e.schema)
+                .option("maxFilesPerTrigger", "1")
+                .parquet(r.stage)
+                .writeStream.format("manifest_orc_py")
+                .option("path", r.out)
+                .option("checkpointLocation", r.ckpt)
+                .trigger(availableNow=True),
+                spark,
+                r.ckpt,
+            ),
             "python-datasource sink stream",
         )
     return read_manifest_orc(spark, r.out).select(

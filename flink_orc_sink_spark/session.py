@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import os
 import re
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -201,6 +202,48 @@ def fs_dir_size(spark: SparkSession, path: str) -> int:
     if not fs.exists(p):
         return 0
     return int(fs.getContentSummary(p).getLength())
+
+
+# --- Streaming query start (every writeStream in the package) ---------
+# Which checkpoint manager each scheme gets, and the per-call costs
+# behind the choice, are in the ``streaming/orc_sink.py`` docstring.
+CHECKPOINT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+LOCAL_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+_START_LOCK = threading.Lock()
+
+
+def start_stream(writer, spark: SparkSession, checkpoint: str):
+    """``writer.start()`` with the checkpoint manager chosen by the
+    scheme of ``checkpoint``: ``FileSystemBasedCheckpointFileManager``
+    on ``file:``, Spark's default elsewhere. ``spark`` is the session of
+    the streamed DataFrame.
+
+    On ``file:`` the manager is set only for the ``start()`` call,
+    under a module lock, and unset in a ``finally``. Inside
+    ``start()`` the query builds its file-sink log and clones the
+    session; its offset and commit logs and its state-store files take
+    their manager from that clone. So they keep the manager after the
+    setting is gone, while the caller's session is left as found. A query another thread starts
+    on the same session during that call gets the manager too, as does
+    a file source whose log the stream thread builds before the unset.
+    A value the caller set is never overridden or removed.
+    ``tools/audit_plans.py`` flags any ``writeStream`` start made
+    elsewhere."""
+    conf = spark.conf
+    fs, _ = hadoop_fs(spark, checkpoint)
+    if fs.getScheme() != "file":
+        return writer.start()
+    with _START_LOCK:
+        if conf.get(CHECKPOINT_MANAGER_KEY, None) is not None:
+            return writer.start()
+        conf.set(CHECKPOINT_MANAGER_KEY, LOCAL_CHECKPOINT_MANAGER)
+        try:
+            return writer.start()
+        finally:
+            conf.unset(CHECKPOINT_MANAGER_KEY)
 
 
 def _any_data_file(statuses, suffix: str) -> bool:

@@ -98,8 +98,10 @@ def test_sweep_clean_on_package():
     assert audit_plans._audit_checkpoint_hygiene(pkg) == []
     assert audit_plans._audit_jvm_walks(pkg) == []
     assert audit_plans._audit_partition_overwrite(pkg) == []
+    assert audit_plans._audit_stream_starts(pkg) == []
     examples = os.path.join(os.path.dirname(pkg), "examples")
     assert audit_plans._audit_partition_overwrite(examples) == []
+    assert audit_plans._audit_stream_starts(examples) == []
 
 
 JVM_SYNTH = textwrap.dedent(
@@ -181,4 +183,59 @@ def test_partition_overwrite_audit_flags_toggles_and_options(tmp_path):
     assert sorted(f.split(" ")[1] for f in findings) == [
         "bad_conf_toggle:", "bad_conf_toggle:", "bad_conf_toggle:",
         "bad_inline_option:", "bad_second_copy:",
+    ]
+
+
+STARTS_SYNTH = textwrap.dedent(
+    """
+    import threading
+
+    def bad_chain(df, ck):
+        return df.writeStream.format("memory").option(
+            "checkpointLocation", ck
+        ).start()
+
+    def bad_via_names(df, ck):
+        writer = df.writeStream.foreachBatch(print)
+        w2 = writer.option("checkpointLocation", ck)
+        return w2.start()
+
+    def bad_in_lambda(run, df):
+        run(lambda: df.writeStream.format("console").start())
+
+    def bad_to_table(df):
+        return df.writeStream.toTable("t")
+
+    def good_through_helper(spark, df, ck):
+        return start_stream(
+            df.writeStream.option("checkpointLocation", ck), spark, ck
+        )
+
+    def good_thread():
+        t = threading.Thread(target=print)
+        t.start()
+    """
+)
+
+START_HELPER_SYNTH = textwrap.dedent(
+    """
+    def start_stream(writer, spark, checkpoint):
+        return writer.start()
+
+    def bad_second_copy(df):
+        return df.writeStream.start()
+    """
+)
+
+
+def test_stream_start_audit_flags_starts_outside_the_helper(tmp_path):
+    (tmp_path / "synth.py").write_text(STARTS_SYNTH)
+    (tmp_path / "session.py").write_text(START_HELPER_SYNTH)
+    findings = audit_plans._audit_stream_starts(str(tmp_path))
+    # a chain, a writer held in names, a lambda, a toTable, and a
+    # second start beside the helper; the helper, a start routed
+    # through it and a thread's start pass
+    assert sorted(f.split(" ")[1] for f in findings) == [
+        "bad_chain:", "bad_in_lambda:", "bad_second_copy:",
+        "bad_to_table:", "bad_via_names:",
     ]

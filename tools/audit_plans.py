@@ -236,6 +236,96 @@ def _audit_partition_overwrite(root: str) -> list[str]:
     return findings
 
 
+# The one function that may start a streaming query: the helper that
+# picks the checkpoint manager by the checkpoint's scheme.
+STREAM_START_HELPER = ("session.py", "start_stream")
+# DataStreamWriter methods that start a query.
+STREAM_STARTS = {"start", "toTable"}
+
+
+def _audit_stream_starts(root: str) -> list[str]:
+    """Static sweep: every streaming query under ``root`` starts
+    through ``session.py::start_stream``, which commits a ``file:``
+    checkpoint's offset, commit and sink logs through the Hadoop
+    FileSystem API. A ``.start()`` or ``.toTable()`` on a
+    ``writeStream`` chain, or on a name bound to one, made anywhere
+    else is a finding: that query keeps Spark's ``FileContext``
+    manager, which forks a subprocess per log rename on ``file:``."""
+    import ast
+
+    def streams(node, tainted: set[str]) -> bool:
+        return any(
+            (isinstance(n, ast.Attribute) and n.attr == "writeStream")
+            or (isinstance(n, ast.Name) and n.id in tainted)
+            for n in ast.walk(node)
+        )
+
+    findings: list[str] = []
+    for dirpath, _dirs, files in os.walk(root):
+        if "__pycache__" in dirpath:
+            continue
+        for fname in files:
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fname)
+            with open(path) as f:
+                src = f.read()
+            if "writeStream" not in src:
+                continue
+            tree = ast.parse(src, filename=path)
+            funcs = [
+                n for n in ast.walk(tree)
+                if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+            ]
+
+            def owner(node):
+                # the innermost function holding the node, else the module
+                return max(
+                    (f for f in funcs
+                     if f.lineno <= node.lineno <= f.end_lineno),
+                    key=lambda f: f.lineno,
+                    default=tree,
+                )
+
+            in_root = os.path.relpath(path, root).replace(os.sep, "/")
+            for scope in [tree, *funcs]:
+                name = getattr(scope, "name", "<module>")
+                if (in_root, name) == STREAM_START_HELPER:
+                    continue
+                # names bound, directly or through each other, to a
+                # writeStream chain
+                tainted: set[str] = set()
+                grew = True
+                while grew:
+                    grew = False
+                    for n in ast.walk(scope):
+                        if isinstance(n, ast.Assign) and streams(
+                            n.value, tainted
+                        ):
+                            for t in n.targets:
+                                if (
+                                    isinstance(t, ast.Name)
+                                    and t.id not in tainted
+                                ):
+                                    tainted.add(t.id)
+                                    grew = True
+                for n in ast.walk(scope):
+                    if (
+                        isinstance(n, ast.Call)
+                        and isinstance(n.func, ast.Attribute)
+                        and n.func.attr in STREAM_STARTS
+                        and streams(n.func.value, tainted)
+                        and owner(n) is scope
+                    ):
+                        rel = os.path.relpath(path, os.path.dirname(root))
+                        findings.append(
+                            f"{rel}:{n.lineno} {name}: writeStream"
+                            f" .{n.func.attr}() outside"
+                            " session.py::start_stream"
+                        )
+    return findings
+
+
 # Functions allowed to call the in-memory ``build_bloom`` directly:
 # call sites that already run ON EXECUTORS over bounded per-group key
 # sets (so nothing is collected to the driver).
@@ -534,6 +624,10 @@ def main() -> int:
     findings += _audit_jvm_walks(pkg_root)
     findings += _audit_partition_overwrite(pkg_root)
     findings += _audit_partition_overwrite(
+        os.path.join(os.path.dirname(pkg_root), "examples")
+    )
+    findings += _audit_stream_starts(pkg_root)
+    findings += _audit_stream_starts(
         os.path.join(os.path.dirname(pkg_root), "examples")
     )
     for name, fn in entry.queries().items():
